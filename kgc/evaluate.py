@@ -31,9 +31,3 @@ def precision_recall(got: DataFrame, golden: DataFrame) -> dict:
         "f1": f1,
     }
 
-
-def diff_triples(got: DataFrame, golden: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(false positives, false negatives) for debugging."""
-    g = got.select(*KEY).dropDuplicates()
-    x = golden.select(*KEY).dropDuplicates()
-    return g.join(x, KEY, "left_anti"), x.join(g, KEY, "left_anti")

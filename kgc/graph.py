@@ -2001,16 +2001,21 @@ def _solve_where(triples: DataFrame, q: dict, **bgp_kwargs) -> DataFrame:
             nullable.add(name)
 
     for f in q["filters"]:
-        missing = _filter_vars(f) - set(sol.columns)
+        missing = _filter_vars(f, with_bound=False) - set(sol.columns)
         if missing:
-            # a WHERE-level FILTER over a never-bound variable is a
-            # query bug every time (spec: constant error -> empty
-            # result); loud beats silently empty at 10^12 rows
+            # a WHERE-level FILTER using the value of a never-bound
+            # variable is a query bug every time (spec: constant error
+            # -> empty result); loud beats silently empty at 10^12 rows
             raise ValueError(
                 f"FILTER references variable ?{sorted(missing)[0]} "
                 "which is never bound in the group"
             )
-    return _apply_filters(sol, q["filters"]), nullable
+    unbound = set().union(*map(_filter_vars, q["filters"])) - set(sol.columns)
+    if unbound:
+        # bound(?v) over a variable nothing binds is simply false (spec):
+        # such a variable joins the solution as an all-NULL column
+        sol = sol.withColumns({v: F.lit(None).cast("string") for v in unbound})
+    return _apply_filters(sol, q["filters"]).drop(*unbound), nullable
 
 
 def _scalar_vars(ast) -> set[str]:
@@ -2034,19 +2039,23 @@ def _scalar_vars(ast) -> set[str]:
     return set()
 
 
-def _filter_vars(f) -> set[str]:
-    """Variables referenced by a boolean (FILTER) AST."""
+def _filter_vars(f, with_bound: bool = True) -> set[str]:
+    """Variables referenced by a boolean (FILTER) AST; with
+    ``with_bound=False`` only those whose value is used (not the
+    operands of bound())."""
     tag = f[0]
     if tag in ("and", "or"):
-        return _filter_vars(f[1]) | _filter_vars(f[2])
+        return _filter_vars(f[1], with_bound) | _filter_vars(f[2], with_bound)
     if tag == "not":
-        return _filter_vars(f[1])
+        return _filter_vars(f[1], with_bound)
     if tag == "cmp":
         return {t[1:] for t in (f[1], f[3]) if t.startswith("?")}
     if tag == "cmp2":
         return _scalar_vars(f[1]) | _scalar_vars(f[3])
     if tag == "strtest":
         return _scalar_vars(f[2]) | _scalar_vars(f[3])
+    if tag == "bound" and not with_bound:
+        return set()
     # ("regex", var, ...), ("bound", var, ...), ("in", var, ...)
     return {f[1]}
 

@@ -199,13 +199,6 @@ def make_shingle_band_udf(n: int = 3, k: int = 32, bands: int = 8):
 
 
 # -------------------------------------------------------------- minhash ---
-def minhash_lane(shingles: Column, i: int) -> Column:
-    """One minhash lane: min over shingles of md5(i|shingle)."""
-    return F.array_min(
-        F.transform(shingles, lambda s: F.md5(F.concat(F.lit(f"{i}|"), s)))
-    )
-
-
 def minhash_signature(shingles: Column, k: int = 32) -> Column:
     """k-permutation minhash as array<string> of md5-hex minima.
 
@@ -433,6 +426,14 @@ def link_mentions(
 ) -> DataFrame:
     """Exact first; fuzzy only for mentions with no exact hit.
 
+    The fuzzy (LSH) branch is planned only when some mention misses the
+    dictionary: one ``limit(1)`` probe over the misses decides.  The
+    probe reads the persisted mention table, so it materializes the
+    upstream parse → segment → scan chain once, up front — work moved,
+    not added.  Mentions found by the dictionary scan (kgc.mentions, as
+    in ``pipeline.run``) always hit, and then the result is the exact
+    branch alone, with no band keys, group-bys or union.
+
     Returns (doc_id, seg_id, alias, surface, tok_begin, n_toks,
     entity_id, entity_type, score, method).
     """
@@ -451,8 +452,8 @@ def link_mentions(
     exact = link_exact(mentions, alias_df).select(*cols).withColumn(
         "method", F.lit("exact")
     )
+    exact._kgc_pinned = [mentions]  # released by kgc.pipeline.release
     if not fuzzy:
-        exact._kgc_pinned = [mentions]  # released by kgc.pipeline.release
         return exact
     missed = mentions.join(
         F.broadcast(
@@ -461,6 +462,8 @@ def link_mentions(
         "alias",
         "left_anti",
     )
+    if missed.isEmpty():
+        return exact
     fz = link_fuzzy(missed, alias_df, threshold=threshold).select(*cols).withColumn(
         "method", F.lit("fuzzy")
     )

@@ -28,18 +28,10 @@ the same textops primitives as langid/quality (kgc/textops.py).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from kgc.textops import quality_score, with_language
-
-
-def quality_bucket(col: Column | str, n_buckets: int = 5) -> Column:
-    """Quality stratum id in [0, n_buckets): floor(score·n), capped so
-    score=1.0 lands in the top bucket instead of a phantom n-th one."""
-    return F.least(
-        F.floor(quality_score(col) * n_buckets), F.lit(n_buckets - 1)
-    ).cast("int")
+from kgc.textops import with_language
 
 
 def corpus_mix(

@@ -18,6 +18,7 @@ import argparse
 import json
 import time
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -234,7 +235,8 @@ def run(
     aliases = [r["alias"] for r in alias_df.select("alias").distinct().collect()]
     limit = seg_token_limit if seg_token_limit is not None else max_tokens
 
-    if "spans" not in docs.columns:
+    parsed_here = "spans" not in docs.columns
+    if parsed_here:
         src = "source" if "source" in docs.columns else None
         pdf = "payload" if "payload" in docs.columns else None
         docs = parsers.parse_documents(
@@ -247,6 +249,11 @@ def run(
 
     fp = input_fingerprint(docs) if store is not None else None
     pinned: list[DataFrame] = []
+    if parsed_here and store is None:
+        # the parse is a stage boundary too: segments and quarantine
+        # both read it, and unpersisted each would rerun the parser UDFs
+        docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
+        pinned.append(docs)
 
     def stage(name: str, make):
         if store is not None:
@@ -276,8 +283,6 @@ def run(
         # branch and sidesteps Spark 4.1's self-union re-clone leaving
         # pandas UDFs un-extracted in JVM projects.  Pinned caches are
         # released by :func:`release` once consumers materialize.
-        from pyspark import StorageLevel
-
         df = make().persist(StorageLevel.MEMORY_AND_DISK)
         pinned.append(df)
         pinned.extend(getattr(df, "_kgc_pinned", []))
@@ -352,13 +357,6 @@ def _default_alias_df(spark: SparkSession) -> DataFrame:
         [(a, e, t, w) for a, e, t, w in ALIASES],
         "alias string, entity_id string, entity_type string, weight double",
     )
-
-
-def run_metrics(stages: dict[str, DataFrame]) -> DataFrame:
-    lineage = metrics.stage_summary(
-        {k: v for k, v in stages.items() if k in ("segments", "mentions", "triples")}
-    )
-    return lineage
 
 
 def main() -> None:

@@ -374,25 +374,6 @@ def parse_props_json(df: DataFrame, json_col: str = "props_json") -> DataFrame:
 
 
 # ------------------------------------------------------------- rendering ---
-def assemble_graph(triples: DataFrame) -> DataFrame:
-    """A1 per-doc graph assembly (cmd/cli/main.go:184-208): group the
-    triple table back into one ordered @graph array per document.
-
-    collect_list gives NO ordering guarantee, so the struct is built
-    (seg_id, subj, pred, obj) and sort_array'd — deterministic output
-    under any partitioning.  One shuffle on doc_id."""
-    return triples.groupBy("doc_id").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("seg_id"), F.col("subj"), F.col("pred"),
-                    F.col("obj"), F.col("obj_type"),
-                )
-            )
-        ).alias("graph")
-    )
-
-
 # Predicates whose values are ALWAYS arrays in the reference's emitted
 # JSON-LD even when single-element (converter.go emission shape).  The
 # triple table stores scalar-list elements as repeated (s, p, item)
@@ -529,33 +510,6 @@ def render_jsonld_nested(
         )
 
     return triples.groupBy("doc_id").applyInPandas(_assemble, out_schema)
-
-
-def render_jsonld(triples: DataFrame) -> DataFrame:
-    """A2 JSON-LD text render: (doc_id, jsonld) with
-    {"@context": "https://schema.org", "@graph": [ {subj,pred,obj}... ]}.
-
-    The triple table stays the primary representation (SURVEY §1.5);
-    this render exists for fixture comparison and export sinks.  Pure
-    Catalyst: to_json over the assembled sorted struct array."""
-    g = assemble_graph(triples)
-    return g.select(
-        "doc_id",
-        F.to_json(
-            F.struct(
-                F.lit("https://schema.org").alias("@context"),
-                F.transform(
-                    F.col("graph"),
-                    lambda t: F.struct(
-                        t["subj"].alias("subj"),
-                        t["pred"].alias("pred"),
-                        t["obj"].alias("obj"),
-                        t["obj_type"].alias("obj_type"),
-                    ),
-                ).alias("@graph"),
-            )
-        ).alias("jsonld"),
-    )
 
 
 def quads_from_linked(linked: DataFrame) -> DataFrame:

@@ -727,6 +727,17 @@ def test_sparql_filter_regex_bound(spark):
         "OPTIONAL { ?e nosuchpred ?x } FILTER (bound(?x)) }",
     ).collect()
     assert rows == []
+    # over a variable nothing binds, bound() is false rather than an error
+    rows = sparql_query(
+        kg, "SELECT * WHERE { ?e name ?n FILTER (!bound(?zz)) } ORDER BY ?e"
+    ).collect()
+    assert [r.asDict() for r in rows] == [
+        {"e": "ent:1", "n": "Ada"}, {"e": "ent:2", "n": "Paris"},
+    ]
+    rows = sparql_query(
+        kg, "SELECT ?e WHERE { ?e name ?n FILTER (bound(?zz)) }"
+    ).collect()
+    assert rows == []
 
 
 def test_sparql_ask(spark):
@@ -2177,8 +2188,9 @@ def test_sparql_filter_never_bound_var_loud(spark):
 
     from kgc.graph import sparql_query
 
-    with _pt.raises(ValueError, match="never bound"):
-        sparql_query(
-            _kg(spark),
-            'SELECT ?e WHERE { ?e name ?n FILTER (?zz = "x") }',
-        )
+    for f in ('?zz = "x"', '!bound(?zz) || ?zz = "x"'):
+        with _pt.raises(ValueError, match="never bound"):
+            sparql_query(
+                _kg(spark),
+                f"SELECT ?e WHERE {{ ?e name ?n FILTER ({f}) }}",
+            )

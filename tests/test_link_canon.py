@@ -181,6 +181,16 @@ def test_link_mentions_exact_precedence(spark):
            link.link_mentions(ment, adf, threshold=0.4).collect()}
     assert out[(0, "exact")] == "E4"
     assert out[(1, "fuzzy")] == "E4"
+    # every mention a dictionary alias (as the pipeline's own scan
+    # guarantees): link_exact's rows alone, no LSH branch planned
+    hits = ment.filter(F.col("alias") == "paris")
+    only = link.link_mentions(hits, adf, fuzzy=True)
+    plan = only._jdf.queryExecution().optimizedPlan().toString()
+    assert "Union" not in plan and "_lane" not in plan
+    exact = link.link_exact(hits, adf).select(*only.columns[:-1])
+    assert sorted(only.collect()) == sorted(
+        exact.withColumn("method", F.lit("exact")).collect()
+    )
 
 
 # ----------------------------------------------------------- G5 compcc ---
@@ -364,21 +374,36 @@ def test_entity_triples_on_uncached_expression_lineage(spark):
     assert pipeline.entity_triples(linked).count() == 3 * n_linked
 
 
+def _python_evals(plan, caches=()):
+    """(node text, ids of the enclosing cache RDDs, innermost last) for
+    every ArrowEvalPython node of a physical plan, cached subplans
+    included."""
+    name = plan.nodeName()
+    out = [(plan.simpleString(100), caches)] if name == "ArrowEvalPython" else []
+    if name == "InMemoryTableScan":
+        rel = plan.relation()
+        rdd = rel.cacheBuilder().cachedColumnBuffers().id()
+        out += _python_evals(rel.cachedPlan(), (*caches, rdd))
+    kids = plan.children()
+    for i in range(kids.size()):
+        out += _python_evals(kids.apply(i), caches)
+    return out
+
+
 def test_pipeline_quarantine_and_release(spark):
     """C5/E6: token-guard violations and unparseable docs route to the
-    quarantine table; release() drops every pinned stage cache."""
+    quarantine table; the parse runs once, as a cached stage that the
+    segments and the quarantine table share; release() drops every
+    pinned stage cache."""
     rows = [
-        ("good", [("text", "alpha beta gamma", None, 0)]),
-        ("empty", []),
+        ("good", "good.md", "# Title\n\nalpha beta gamma"),
+        ("empty", "empty.txt", ""),
         # a 30-token single span with seg_token_limit=8 below forces a
         # token_limit_exceeded quarantine row (packer max_tokens=20
         # keeps the segment at 20 > 8)
-        ("toolong", [("text", " ".join(f"w{i}" for i in range(30)), None, 0)]),
+        ("toolong", "toolong.txt", " ".join(f"w{i}" for i in range(30))),
     ]
-    docs = spark.createDataFrame(
-        rows,
-        "doc_id string, spans array<struct<kind string, text string, media_ref string, offset int>>",
-    )
+    docs = spark.createDataFrame(rows, "doc_id string, source string, text string")
     jsc = spark.sparkContext._jsc.sc()
     pinned_before = jsc.getPersistentRDDs().size()
     stages = pipeline.run(spark, docs, max_tokens=20, seg_token_limit=8)
@@ -390,6 +415,19 @@ def test_pipeline_quarantine_and_release(spark):
     assert stages["segments"].filter(F.col("doc_id") == "toolong").count() == 0
     # the good doc flows through
     assert stages["segments"].filter(F.col("doc_id") == "good").count() > 0
+
+    # one parse: the markdown/html parser UDF sits only under the cached
+    # documents, both in that stage and wherever the quarantine reads it
+    def parser_caches(df):
+        plan = df._jdf.queryExecution().executedPlan()
+        return [c for text, c in _python_evals(plan)
+                if "markdown_to_spans" in text or "html_to_spans" in text]
+
+    assert stages["documents"].storageLevel.useMemory
+    (own,) = parser_caches(stages["documents"])
+    assert len(own) == 1
+    in_quar = parser_caches(stages["quarantine"])
+    assert in_quar and all(c and c[-1] == own[0] for c in in_quar)
 
     # unpersist discipline: release() drops every cache the run pinned
     # (compare against the pre-run count — session fixtures cache too)
