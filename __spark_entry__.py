@@ -19,6 +19,9 @@ from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------- shared ---
 
+# E2 priority list (converter.go:147)
+from kgc.functions import COMMON_TYPES
+
 # Alias dictionary tuned to the testdata vocabulary (deterministic
 # stand-in for the reference's LLM entity surfacing; FIXTURES.md §2).
 from kgc.synth import TESTDATA_ALIASES as ALIAS_ROWS
@@ -35,10 +38,6 @@ _TOKS = r"regexp_extract_all(lower(text), '[^\W_]+')"
 
 # score formula must match kgc.link.link_exact
 _SCORE = "weight * (1.0 + 0.1 * (n_toks - 1))"
-
-# E2 priority list (converter.go:147)
-_COMMON_TYPES = ["Article", "Person", "Event", "Organization", "Place", "CreativeWork", "Thing"]
-
 
 def _alias_df(spark: SparkSession):
     return spark.createDataFrame(
@@ -282,43 +281,13 @@ def q_main_type(spark, sf_dir):
     return classify_main_type(d, linked).select("doc_id", "main_type")
 
 
-def _triples_from_linked(linked: DataFrame) -> DataFrame:
-    """E3-shape triple unfold shared by the batch and streaming paths:
-    doc→entity edges under the reference's predicate taxonomy, plus
-    @type and name literals per entity."""
-    pred = (
-        F.when(F.col("entity_type") == "Person", F.lit("mentions"))
-        .when(F.col("entity_type") == "Place", F.lit("locations"))
-        .when(F.col("entity_type") == "Event", F.lit("events"))
-        .otherwise(F.lit("about"))
-    )
-    subj = F.concat(F.lit("doc:"), F.col("doc_id").cast("string"))
-    ent = F.concat(F.lit("ent:"), F.col("entity_id"))
-    edges = linked.select(
-        subj.alias("subj"), pred.alias("pred"), ent.alias("obj"),
-        F.lit("node").alias("obj_type"),
-    )
-    typing = linked.select(
-        ent.alias("subj"), F.lit("@type").alias("pred"),
-        F.col("entity_type").alias("obj"), F.lit("literal").alias("obj_type"),
-    )
-    naming = linked.select(
-        ent.alias("subj"), F.lit("name").alias("pred"),
-        F.col("alias").alias("obj"), F.lit("literal").alias("obj_type"),
-    )
-    return edges.unionByName(typing).unionByName(naming).dropDuplicates()
-
-
-def _quads_from_linked(linked: DataFrame) -> DataFrame:
-    """Named-graph quad unfold — kgc.triples.quads_from_linked (the
-    library API the GRAPH legs consume)."""
-    from kgc.triples import quads_from_linked
-
-    return quads_from_linked(linked)
-
-
 def q_entity_triples(spark, sf_dir):
-    return _triples_from_linked(q_link_topk(spark, sf_dir))
+    from kgc.triples import unfold_entities
+
+    doc = F.concat(F.lit("doc:"), F.col("doc_id").cast("string"))
+    return unfold_entities(
+        q_link_topk(spark, sf_dir), doc, "entity_id"
+    ).dropDuplicates()
 
 
 def q_streaming_triples(spark, sf_dir):
@@ -331,6 +300,7 @@ def q_streaming_triples(spark, sf_dir):
     entity_triples — the stream must construct the batch KG
     bit-exactly."""
     from kgc.streaming import DOCS_SCHEMA, run_available_now, stream_entity_link
+    from kgc.triples import unfold_entities
 
     src = spark.readStream.schema(DOCS_SCHEMA).parquet(
         _stage_stream_dir(sf_dir, "documents")
@@ -341,7 +311,8 @@ def q_streaming_triples(spark, sf_dir):
     drained = run_available_now(
         linked, "kgc_streaming_triples", output_mode="complete"
     )
-    return _triples_from_linked(drained)
+    doc = F.concat(F.lit("doc:"), F.col("doc_id").cast("string"))
+    return unfold_entities(drained, doc, "entity_id").dropDuplicates()
 
 
 def q_connected_components(spark, sf_dir):
@@ -1202,9 +1173,11 @@ def q_graph_suite(spark, sf_dir):
     STRENDS, ?v IN (...), scalar-expression comparisons, and the
     SUBSTR/REPLACE/IF/FLOOR scalar functions — kgc.graph._compile_
     scalar/_compile_filter) and sparql_graph (the GRAPH clause over
-    the provenance quad table from _quads_from_linked: ?g binds the
-    asserting document and both block patterns join within one
-    graph)."""
+    the provenance quad table from kgc.triples.quads_from_linked: ?g
+    binds the asserting document and both block patterns join within
+    one graph)."""
+    from kgc.triples import quads_from_linked, unfold_entities
+
     # ONE persisted entity-triple table feeds all six KG-consumer legs
     # (validate, bgp, ntriples, sparql_agg, construct — and the bgp
     # leg's five pattern scans): the link pipeline executes once, not
@@ -1213,7 +1186,8 @@ def q_graph_suite(spark, sf_dir):
     # otherwise) and is released by verify/bench via _kgc_pinned →
     # kgc.pipeline.release.
     linked = q_link_topk(spark, sf_dir).persist()
-    et = _triples_from_linked(linked).persist()
+    doc = F.concat(F.lit("doc:"), F.col("doc_id").cast("string"))
+    et = unfold_entities(linked, doc, "entity_id").dropDuplicates().persist()
 
     closure = _leg(
         q_subclass_closure(spark, sf_dir), "closure",
@@ -1497,7 +1471,7 @@ def q_graph_suite(spark, sf_dir):
         F.concat_ws("|", F.col("d"), F.col("e")),
         F.coalesce(F.col("ev"), F.lit("")),
     )
-    quads = _quads_from_linked(linked)
+    quads = quads_from_linked(linked)
     gleg = _leg(
         sparql_query(
             quads,
@@ -2740,7 +2714,7 @@ def _sql_stopword_ratio(lang: str) -> str:
 
 def oracle_sql() -> dict[str, str]:
     type_chain = " ".join(
-        f"WHEN contains(resp, '{t}') THEN '{t}'" for t in _COMMON_TYPES
+        f"WHEN contains(resp, '{t}') THEN '{t}'" for t in COMMON_TYPES
     )
     etype_chain = (
         "CASE WHEN entity_type = 'Person' THEN 'mentions' "
@@ -2748,7 +2722,7 @@ def oracle_sql() -> dict[str, str]:
         "WHEN entity_type = 'Event' THEN 'events' ELSE 'about' END"
     )
     main_type_pick = " ".join(
-        f"WHEN list_contains(types, '{t}') THEN '{t}'" for t in _COMMON_TYPES
+        f"WHEN list_contains(types, '{t}') THEN '{t}'" for t in COMMON_TYPES
     )
     # shared mention-detection CTE (max 2-token aliases)
     mentions_cte = f"""

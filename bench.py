@@ -156,61 +156,20 @@ def main() -> None:
     # same reason pagerank is.
 
     # --- SPARQL KG-consumer leg: the BGP query planner measured at KG
-    # scale, decoupled from pipeline-construction cost.  A deterministic
-    # synthetic KG (5.4M triples: 4M doc-mentions-entity edges with one
-    # hot entity in ~10% of rows, 1M doc-locations edges, 400k entity
-    # type/name dims over 200k entities) is staged to parquet ONCE at
-    # build time — the warehouse copy a consumer actually queries.  The
+    # scale, decoupled from pipeline-construction cost.  The
+    # deterministic synthetic KG (kgc.synth.synthetic_kg, 5.4M triples
+    # with one hot entity) is staged to parquet ONCE at build time —
+    # the warehouse copy a consumer actually queries.  The
     # timed dataflow is the 4-pattern chain+star SPARQL text: parse →
     # selectivity-ordered equi-joins (two broadcast dimension legs, two
     # fact legs, no cartesian) → DISTINCT.
     import tempfile
 
     from kgc.graph import sparql_query
+    from kgc.synth import synthetic_kg
 
     kg_dir = tempfile.mkdtemp(prefix="kgc_bench_kg_")
-    n_ent = 200_000
-    mentions_t = spark.range(4_000_000).select(
-        F.concat(
-            F.lit("doc:"), F.pmod(F.xxhash64("id"), F.lit(1_000_000)).cast("string")
-        ).alias("subj"),
-        F.lit("mentions").alias("pred"),
-        F.concat(
-            F.lit("ent:"),
-            F.when(F.pmod(F.col("id"), F.lit(10)) == 0, F.lit(1))
-            .otherwise(F.pmod(F.xxhash64(F.col("id") + 3), F.lit(n_ent)))
-            .cast("string"),
-        ).alias("obj"),
-    )
-    locations_t = spark.range(1_000_000).select(
-        F.concat(F.lit("doc:"), F.col("id").cast("string")).alias("subj"),
-        F.lit("locations").alias("pred"),
-        F.concat(
-            F.lit("ent:"),
-            F.pmod(F.xxhash64(F.col("id") + 11), F.lit(n_ent)).cast("string"),
-        ).alias("obj"),
-    )
-    ents_r = spark.range(n_ent)
-    types_t = ents_r.select(
-        F.concat(F.lit("ent:"), F.col("id").cast("string")).alias("subj"),
-        F.lit("@type").alias("pred"),
-        F.when(F.pmod(F.col("id"), F.lit(3)) == 0, F.lit("Person"))
-        .when(F.pmod(F.col("id"), F.lit(3)) == 1, F.lit("Place"))
-        .otherwise(F.lit("Organization"))
-        .alias("obj"),
-    )
-    names_t = ents_r.select(
-        F.concat(F.lit("ent:"), F.col("id").cast("string")).alias("subj"),
-        F.lit("name").alias("pred"),
-        F.concat(F.lit("entity "), F.col("id").cast("string")).alias("obj"),
-    )
-    (
-        mentions_t.unionByName(locations_t)
-        .unionByName(types_t)
-        .unionByName(names_t)
-        .write.mode("overwrite")
-        .parquet(kg_dir)
-    )
+    synthetic_kg(spark, 1).write.mode("overwrite").parquet(kg_dir)
     jobs.append((
         "sparql_kg",
         sparql_query(

@@ -32,7 +32,10 @@ def clean_json_response(col: Column | str) -> Column:
     return F.trim(c)
 
 
-_COMMON_TYPES = ["Article", "Person", "Event", "Organization", "Place", "CreativeWork", "Thing"]
+# The reference's commonTypes priority list (converter.go:147): T5 takes
+# the first one the text contains, E2 (kgc.pipeline.classify_main_type)
+# the first one a segment's linked entities carry.
+COMMON_TYPES = ["Article", "Person", "Event", "Organization", "Place", "CreativeWork", "Thing"]
 
 
 def extract_schema_org_type(col: Column | str) -> Column:
@@ -42,7 +45,7 @@ def extract_schema_org_type(col: Column | str) -> Column:
     c = _c(col)
     first_cap = F.regexp_extract(c, r"(?:^|\s)([A-Z]\S*)", 1)
     return F.coalesce(
-        *[F.when(c.contains(t), F.lit(t)) for t in _COMMON_TYPES],
+        *[F.when(c.contains(t), F.lit(t)) for t in COMMON_TYPES],
         F.when(first_cap != "", first_cap),
         F.lit("Thing"),
     )

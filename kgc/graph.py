@@ -710,7 +710,8 @@ def parse_sparql(text: str) -> dict:
     OPTIONAL carrying FILTERs (the left-join-condition idiom) — is a
     GROUP per the spec and lands in ``optional_groups`` as a
     (patterns, filters) pair.  ``filters``
-    entries are boolean ASTs: leaves tagged ("cmp", lhs, op, rhs) |
+    entries are boolean ASTs: leaves tagged ("cmp", lhs, op, rhs,
+    (lhs_quoted, rhs_quoted)) |
     ("regex", var, pat, flags) | ("bound", var, positive), interior
     nodes ("and"|"or", l, r) and ("not", e) from &&/||/!(...).
     ``unions`` is a list of blocks, each a
@@ -954,7 +955,8 @@ def parse_sparql(text: str) -> dict:
             if not items:
                 raise ValueError("IN needs at least one term")
             return ("in", var[1:], items, positive)
-        lhs = _sparql_unquote(take())
+        l_raw = take()
+        lhs = _sparql_unquote(l_raw)
         op = take()
         if op not in _FILTER_OPS:
             raise ValueError(f"unsupported FILTER operator {op!r}")
@@ -964,8 +966,9 @@ def parse_sparql(text: str) -> dict:
         ):
             l_ast = ("var", lhs[1:]) if lhs.startswith("?") else ("lit", lhs)
             return ("cmp2", l_ast, op, scalar_expr())
-        rhs = _sparql_unquote(take())
-        return ("cmp", lhs, op, rhs)
+        r_raw = take()
+        quoted = (l_raw.startswith('"'), r_raw.startswith('"'))
+        return ("cmp", lhs, op, _sparql_unquote(r_raw), quoted)
 
     def filter_unary():
         nonlocal pos
@@ -1533,7 +1536,7 @@ def _compile_filter(f):
     if tag == "not":
         return ~_compile_filter(f[1])
     if tag == "cmp":
-        _, lhs, op, rhs = f
+        _, lhs, op, rhs, _quoted = f
         lc = F.col(lhs[1:]) if lhs.startswith("?") else F.lit(lhs)
         rc = F.col(rhs[1:]) if rhs.startswith("?") else F.lit(rhs)
         return {
@@ -2178,11 +2181,12 @@ def _parse_scalar_fragment(fragment: str):
 
 
 def _having_numeric(f):
-    """HAVING numeric coercion: a plain comparison against a numeric
-    literal compares as DOUBLE on both sides (aggregate columns are
-    typed — long counts, double sums — and ANSI mode refuses e.g.
-    bigint vs '2.5' string casts).  Non-numeric comparisons and the
-    richer atoms pass through unchanged."""
+    """HAVING numeric coercion: a plain comparison against an UNQUOTED
+    numeric literal compares as DOUBLE on both sides (aggregate columns
+    are typed — long counts, double sums — and ANSI mode refuses e.g.
+    bigint vs '2.5' string casts).  A quoted literal stays a string
+    even when it reads as a number (``?v = "2.5"``), and non-numeric
+    comparisons and the richer atoms pass through unchanged."""
     tag = f[0]
     if tag in ("and", "or"):
         return (tag, _having_numeric(f[1]), _having_numeric(f[2]))
@@ -2190,9 +2194,11 @@ def _having_numeric(f):
         return (tag, _having_numeric(f[1]))
     if tag != "cmp":
         return f
-    _, l, op, r = f
+    _, l, op, r, quoted = f
 
-    def side(x):
+    def side(x, q):
+        if q:
+            return ("lit", x)
         if x.startswith("?"):
             return ("var", x[1:])
         try:
@@ -2200,7 +2206,7 @@ def _having_numeric(f):
         except ValueError:
             return ("lit", x)
 
-    ls, rs = side(l), side(r)
+    ls, rs = side(l, quoted[0]), side(r, quoted[1])
     if "num" in (ls[0], rs[0]):
         return ("cmp2", ("dbl", ls), op, ("dbl", rs))
     return f
@@ -2214,7 +2220,7 @@ def _sparql_aggregate_impl(
       SELECT ?g ... (AGG(expr|?v|*) AS ?alias) ... WHERE { ... } GROUP BY ?g ...
       [HAVING (bool-expr over aliases/group vars — the full FILTER
        grammar: && || !(), scalar comparisons, string tests, IN;
-       numeric literals compare as double)]
+       unquoted numeric literals compare as double)]
       [ORDER BY ...] [LIMIT n]
 
     AGG ∈ COUNT|SUM|MIN|MAX|AVG|GROUP_CONCAT|SAMPLE; the argument may
@@ -2231,8 +2237,8 @@ def _sparql_aggregate_impl(
     provenance column).  SUM/AVG
     cast the (string-typed) binding to double — the caller owns numeric
     determinism, same as SQL.  HAVING compares aggregate ALIASES
-    (numeric literals compare as doubles, anything else as strings) and
-    compiles to a post-aggregate Catalyst filter.  The WHERE group
+    (unquoted numeric literals compare as doubles, anything else as
+    strings) and compiles to a post-aggregate Catalyst filter.  The WHERE group
     reuses the full group algebra (UNION/MINUS/VALUES via _solve_where)
     plus the subset grammar (OPTIONAL/FILTER/property paths)."""
     aggs = []

@@ -76,44 +76,6 @@ def token_shingles(col: Column | str, n: int = 3) -> Column:
     return shingles_from_tokens(toks, n)
 
 
-def make_shingle_udf(n: int = 3):
-    """Arrow-batched twin of ``norm_tokens`` + ``shingles_from_tokens``
-    — text → distinct word n-gram shingles, first-occurrence order.
-
-    Higher-order functions never enter whole-stage codegen, so the
-    Catalyst shingle build (transform + array_join(slice) +
-    array_distinct, all interpreted) was the single largest stage of
-    minhash_pairs at sf0.1 (4.6 s of 8 s).  One Python loop per doc
-    under Arrow batching is several times cheaper, and the values are
-    IDENTICAL: Python's ``[^\\W_]+``/lower() tokenization equals the
-    Catalyst ``(?U)[^\\W_]+``/lower() class — the same equivalence the
-    mention scanner has relied on since round 2 (kgc/mentions
-    norm_tokens_py vs _norm_tokens_expr, oracle-green), and
-    ``dict.fromkeys`` reproduces array_distinct's first-occurrence
-    order.  Twin equality is pytest-pinned on the synthetic corpus
-    (tests/test_dataops.py)."""
-    import re as _re
-
-    tok = _re.compile(r"[^\W_]+", _re.UNICODE)
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def sh(texts: pd.Series) -> pd.Series:
-        def one(t):
-            toks = tok.findall((t or "").lower())
-            if not toks:
-                return []
-            m = len(toks) - (n - 1)
-            if m < 1:
-                m = 1
-            return list(dict.fromkeys(
-                " ".join(toks[i : i + n]) for i in range(m)
-            ))
-
-        return texts.map(one)
-
-    return sh
-
-
 MINHASH_DOC_TYPE = T.StructType(
     [
         T.StructField("sh", T.ArrayType(T.StringType())),
@@ -140,20 +102,24 @@ def make_shingle_band_udf(n: int = 3, k: int = 32, bands: int = 8):
     through a min(string) aggregation, and Spark's HashAggregate only
     takes fixed-size mutable buffers — min over strings falls back to
     SortAggregate, a full sort of the exploded table on BOTH sides of
-    the exchange (3.6 s of minhash_pairs' 5.4 s at sf0.1 after the
-    shingle UDF landed).  Here the per-lane minima fold inside the
-    Arrow batch — no explode, no shuffle, no sort; the only wide op
-    left in the band table build is the final explode of bands-per-doc
-    (consumed from a persisted cache, so the
+    the exchange (3.6 s of minhash_pairs' 5.4 s at sf0.1 once the
+    shingles were built in Python).  Here the per-lane minima fold
+    inside the Arrow batch — no explode, no shuffle, no sort; the only
+    wide op left in the band table build is the final explode of
+    bands-per-doc (consumed from a persisted cache, so the
     InferFiltersFromGenerate hazard does not apply).
 
-    Values are BIT-IDENTICAL to the Catalyst/DuckDB derivation:
-    hashlib.md5 over UTF-8 == Spark md5(concat(lane, '|', shingle)) ==
-    DuckDB md5(lane || '|' || shingle); Python min over lowercase hex
-    strings is the same lexicographic order; band key =
-    md5('|'.join(lane minima in lane order)) = md5(concat_ws('|',
-    lanes-in-band)).  Twin equality vs lsh_band_keys is pytest-pinned
-    (tests/test_dataops.py), and the oracle SQL is untouched.
+    Values are BIT-IDENTICAL to the Catalyst/DuckDB derivation.  ``sh``
+    equals ``norm_tokens`` + :func:`shingles_from_tokens`: Python's
+    ``[^\\W_]+``/lower() tokenization is the Catalyst
+    ``(?U)[^\\W_]+``/lower() class, and ``dict.fromkeys`` reproduces
+    array_distinct's first-occurrence order.  hashlib.md5 over UTF-8 ==
+    Spark md5(concat(lane, '|', shingle)) == DuckDB md5(lane || '|' ||
+    shingle); Python min over lowercase hex strings is the same
+    lexicographic order; band key = md5('|'.join(lane minima in lane
+    order)) = md5(concat_ws('|', lanes-in-band)).  Twin equality of
+    both fields is pytest-pinned (tests/test_dataops.py), and the
+    oracle SQL is untouched.
     """
     import hashlib
     import re as _re

@@ -24,15 +24,11 @@ from pyspark.sql import functions as F
 
 from kgc import canon, link, mentions, metrics, parsers, segment, triples, vocab
 from kgc.checkpoint import StageStore
+from kgc.functions import COMMON_TYPES
 from kgc.synth import ALIASES
 
 
 # ------------------------------------------------------------------- E2 ---
-# extractSchemaOrgType's priority list (converter.go:147): the FIRST of
-# these present wins, fallback "Thing".
-COMMON_TYPES = ["Article", "Person", "Event", "Organization", "Place", "CreativeWork", "Thing"]
-
-
 def classify_main_type(
     segments_df: DataFrame, linked: DataFrame
 ) -> DataFrame:
@@ -66,62 +62,23 @@ def classify_main_type(
 
 
 # -------------------------------------------------------- entity triples ---
-_TYPE_PRED = {
-    "Person": "mentions",
-    "Place": "locations",
-    "Event": "events",
-}
-
-
 def entity_triples(linked_canon: DataFrame) -> DataFrame:
-    """Linked+canonicalized mentions → KG triples.
-
-    seg --pred--> ent:<canonical_id>;  ent node gets @type + name.
-    pred follows the reference's emission vocabulary: Person→mentions,
-    Place→locations, Event→events (converter.go:252-314), everything
-    else → 'about'.  One narrow projection + a dedup shuffle (G7).
-
-    The three triples per linked mention are emitted as a single
-    array(struct)->explode projection, NOT a 3-way self-union: a union
-    plans the upstream segment→mention→link lineage once PER LEG (3×
-    the scan/UDF work when the input isn't cached — real money at
-    10^12 docs), and Spark's DeduplicateRelations re-ids each leg,
-    which in 4.1.2 can strand the pack_spans pandas UDF inside a plain
-    Project (unevaluable) when the spans column is itself a
-    lambda-bearing expression (e.g. kgc.synth's transform(sequence..)).
-    One leg → one scan, no relation dedup, no hazard.
-    """
-    pred = F.coalesce(
-        *[
-            F.when(F.col("entity_type") == t, F.lit(p))
-            for t, p in _TYPE_PRED.items()
-        ],
-        F.lit("about"),
-    )
+    """Linked+canonicalized mentions → KG triples keyed by segment:
+    ``seg:<doc>#<seg> --pred--> ent:<canonical_id>`` plus the entity's
+    @type and name (kgc.triples.unfold_entities).  Output
+    ``doc_id, seg_id, subj, pred, obj, obj_type``; the dedup shuffle
+    (G7) runs downstream in triples.dedup_triples."""
     seg_subj = F.concat(
         F.lit("seg:"), F.col("doc_id").cast("string"), F.lit("#"),
         F.col("seg_id").cast("string"),
     )
-    ent = F.concat(F.lit("ent:"), F.col("canonical_id"))
-
-    def _t(subj, pred_c, obj, obj_type):
-        return F.struct(
-            subj.alias("subj"),
-            pred_c.alias("pred"),
-            obj.alias("obj"),
-            obj_type.alias("obj_type"),
-        )
-
-    trips = F.array(
-        _t(seg_subj, pred, ent, F.lit("node")),
-        _t(ent, F.lit("@type"), F.col("entity_type"), F.lit("literal")),
-        _t(ent, F.lit("name"), F.col("alias"), F.lit("literal")),
+    return triples.unfold_entities(
+        linked_canon, seg_subj, "canonical_id",
+        keys=(
+            F.col("doc_id").cast("string").alias("doc_id"),
+            F.col("seg_id").cast("int").alias("seg_id"),
+        ),
     )
-    return linked_canon.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.col("seg_id").cast("int").alias("seg_id"),
-        F.explode(trips).alias("t"),
-    ).select("doc_id", "seg_id", "t.subj", "t.pred", "t.obj", "t.obj_type")
 
 
 # ----------------------------------------------------------- quarantine ---

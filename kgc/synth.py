@@ -146,6 +146,55 @@ def generate_documents(
     return out.repartition(n_parts or spark.sparkContext.defaultParallelism, "doc_id")
 
 
+def synthetic_kg(spark: SparkSession, scale: int) -> DataFrame:
+    """Deterministic query-side KG (subj, pred, obj) of 5.4M triples ×
+    ``scale``: 4M doc-mentions-entity edges with one HOT entity
+    (``ent:1``) in ~10% of them, 1M doc-locations edges, and @type /
+    name dimensions over 200k entities (Person / Place /
+    Organization).  Pure Catalyst over ``spark.range``; the join and
+    skew workload of the SPARQL bench legs and their 10× point."""
+    n_ent = 200_000 * scale
+
+    def ent(c):
+        return F.concat(F.lit("ent:"), c.cast("string"))
+
+    mentions_t = spark.range(4_000_000 * scale).select(
+        F.concat(
+            F.lit("doc:"),
+            F.pmod(F.xxhash64("id"), F.lit(1_000_000 * scale)).cast("string"),
+        ).alias("subj"),
+        F.lit("mentions").alias("pred"),
+        ent(
+            F.when(F.pmod(F.col("id"), F.lit(10)) == 0, F.lit(1))
+            .otherwise(F.pmod(F.xxhash64(F.col("id") + 3), F.lit(n_ent)))
+        ).alias("obj"),
+    )
+    locations_t = spark.range(1_000_000 * scale).select(
+        F.concat(F.lit("doc:"), F.col("id").cast("string")).alias("subj"),
+        F.lit("locations").alias("pred"),
+        ent(F.pmod(F.xxhash64(F.col("id") + 11), F.lit(n_ent))).alias("obj"),
+    )
+    ents_r = spark.range(n_ent)
+    types_t = ents_r.select(
+        ent(F.col("id")).alias("subj"),
+        F.lit("@type").alias("pred"),
+        F.when(F.pmod(F.col("id"), F.lit(3)) == 0, F.lit("Person"))
+        .when(F.pmod(F.col("id"), F.lit(3)) == 1, F.lit("Place"))
+        .otherwise(F.lit("Organization"))
+        .alias("obj"),
+    )
+    names_t = ents_r.select(
+        ent(F.col("id")).alias("subj"),
+        F.lit("name").alias("pred"),
+        F.concat(F.lit("entity "), F.col("id").cast("string")).alias("obj"),
+    )
+    return (
+        mentions_t.unionByName(locations_t)
+        .unionByName(types_t)
+        .unionByName(names_t)
+    )
+
+
 def alias_dict_df(spark: SparkSession) -> DataFrame:
     """The broadcast alias dictionary (FIXTURES.md §2 shape)."""
     return spark.createDataFrame(

@@ -512,39 +512,66 @@ def render_jsonld_nested(
     return triples.groupBy("doc_id").applyInPandas(_assemble, out_schema)
 
 
+# E3 emission predicate per linked entity type (converter.go:252-339);
+# any other type is emitted under 'about'.
+ENTITY_PREDICATES = {"Person": "mentions", "Place": "locations", "Event": "events"}
+
+
+def unfold_entities(
+    linked: DataFrame, subj: Column, entity_col: str,
+    keys: tuple[Column, ...] = (),
+) -> DataFrame:
+    """E3 unfold of a linked-entity table (entity_type, alias and the
+    entity id in ``entity_col``): per row, ``subj --pred--> ent:<id>``
+    under ENTITY_PREDICATES, plus the entity's ``@type`` and ``name``
+    literals.  Output ``*keys, subj, pred, obj, obj_type``, where
+    ``keys`` are leading columns carried onto every triple (the
+    pipeline's doc/segment ids, a quad table's graph).  No dedup:
+    callers with RDF set semantics add their own.
+
+    The three triples per row are emitted as a single
+    array(struct)->explode projection, NOT a 3-way self-union: a union
+    plans the upstream lineage (mention scan, link join) once PER LEG
+    (3× the scan/UDF work when the input isn't cached), and Spark's
+    DeduplicateRelations re-ids each leg, which in 4.1.2 can strand the
+    pack_spans pandas UDF inside a plain Project (unevaluable) when the
+    spans column is itself a lambda-bearing expression (e.g.
+    kgc.synth's transform(sequence..)).  One leg → one scan, no
+    relation dedup, no hazard."""
+    ent = F.concat(F.lit("ent:"), F.col(entity_col))
+    pred = F.coalesce(
+        *[
+            F.when(F.col("entity_type") == t, F.lit(p))
+            for t, p in ENTITY_PREDICATES.items()
+        ],
+        F.lit("about"),
+    )
+    trips = F.array(
+        _triple(subj, pred, ent, "node"),
+        _triple(ent, "@type", F.col("entity_type")),
+        _triple(ent, "name", F.col("alias")),
+    )
+    out = linked.select(*keys, F.explode(trips).alias("_t"))
+    return out.select(*out.columns[:-1], "_t.*")
+
+
 def quads_from_linked(linked: DataFrame) -> DataFrame:
-    """Provenance quad unfold of a linked-mention table: the E3-shape
-    doc→entity edge plus the entity's @type and name assertion, each
-    carrying its ASSERTING document as ``graph`` — real named-graph
-    provenance (every triple a linked mention produces is asserted BY
-    one document; the name quad is the alias asserted in THAT doc).
-    The input shape is the entity-link output (doc_id, entity_id,
+    """Provenance quad unfold of a linked-mention table: the
+    unfold_entities triples of each doc→entity link, each carrying its
+    ASSERTING document as ``graph`` — real named-graph provenance
+    (every triple a linked mention produces is asserted BY one
+    document; the name quad is the alias asserted in THAT doc).  The
+    input shape is the entity-link output (doc_id, entity_id,
     entity_type, alias); output (graph, subj, pred, obj), deduplicated
     per RDF dataset semantics.  Feed to kgc.graph.sparql_query with
     ``graph_col="graph"`` for GRAPH-clause queries ("which document
-    asserted this?").  Predicate taxonomy per the reference's E3 rules
-    (internal/jsonld/converter.go:252-339)."""
-    pred = (
-        F.when(F.col("entity_type") == "Person", F.lit("mentions"))
-        .when(F.col("entity_type") == "Place", F.lit("locations"))
-        .when(F.col("entity_type") == "Event", F.lit("events"))
-        .otherwise(F.lit("about"))
-    )
+    asserted this?")."""
     g = F.concat(F.lit("doc:"), F.col("doc_id").cast("string"))
-    ent = F.concat(F.lit("ent:"), F.col("entity_id"))
-    edges = linked.select(
-        g.alias("graph"), g.alias("subj"), pred.alias("pred"),
-        ent.alias("obj"),
+    return (
+        unfold_entities(linked, g, "entity_id", keys=(g.alias("graph"),))
+        .drop("obj_type")
+        .dropDuplicates()
     )
-    typing = linked.select(
-        g.alias("graph"), ent.alias("subj"), F.lit("@type").alias("pred"),
-        F.col("entity_type").alias("obj"),
-    )
-    naming = linked.select(
-        g.alias("graph"), ent.alias("subj"), F.lit("name").alias("pred"),
-        F.col("alias").alias("obj"),
-    )
-    return edges.unionByName(typing).unionByName(naming).dropDuplicates()
 
 
 def kg_diff(

@@ -127,62 +127,20 @@ def main() -> None:
     )
 
     # KG query layer at 1x and 10x: the bench's sparql_kg 4-pattern
-    # chain+star over the deterministic synthetic KG (5.4M -> 54M
-    # triples; same generator shape as bench.py — hot entity in ~10%
-    # of mention edges, type/name dims).  The pipeline points cover
+    # chain+star over kgc.synth.synthetic_kg, the bench's KG (5.4M ->
+    # 54M triples; hot entity in ~10% of mention edges, type/name
+    # dims).  The pipeline points cover
     # the Arrow stages; this point is pure join scaling.
     from kgc.graph import sparql_query
-
-    def stage_kg(scale: int, path: str) -> None:
-        n_ent = 200_000 * scale
-        mentions_t = spark.range(4_000_000 * scale).select(
-            F.concat(
-                F.lit("doc:"),
-                F.pmod(F.xxhash64("id"), F.lit(1_000_000 * scale)).cast("string"),
-            ).alias("subj"),
-            F.lit("mentions").alias("pred"),
-            F.concat(
-                F.lit("ent:"),
-                F.when(F.pmod(F.col("id"), F.lit(10)) == 0, F.lit(1))
-                .otherwise(F.pmod(F.xxhash64(F.col("id") + 3), F.lit(n_ent)))
-                .cast("string"),
-            ).alias("obj"),
-        )
-        locations_t = spark.range(1_000_000 * scale).select(
-            F.concat(F.lit("doc:"), F.col("id").cast("string")).alias("subj"),
-            F.lit("locations").alias("pred"),
-            F.concat(
-                F.lit("ent:"),
-                F.pmod(F.xxhash64(F.col("id") + 11), F.lit(n_ent)).cast("string"),
-            ).alias("obj"),
-        )
-        ents_r = spark.range(n_ent)
-        types_t = ents_r.select(
-            F.concat(F.lit("ent:"), F.col("id").cast("string")).alias("subj"),
-            F.lit("@type").alias("pred"),
-            F.when(F.pmod(F.col("id"), F.lit(3)) == 0, F.lit("Person"))
-            .when(F.pmod(F.col("id"), F.lit(3)) == 1, F.lit("Place"))
-            .otherwise(F.lit("Organization"))
-            .alias("obj"),
-        )
-        names_t = ents_r.select(
-            F.concat(F.lit("ent:"), F.col("id").cast("string")).alias("subj"),
-            F.lit("name").alias("pred"),
-            F.concat(F.lit("entity "), F.col("id").cast("string")).alias("obj"),
-        )
-        (
-            mentions_t.unionByName(locations_t)
-            .unionByName(types_t)
-            .unionByName(names_t)
-            .write.mode("overwrite")
-            .parquet(path)
-        )
+    from kgc.synth import synthetic_kg
 
     _KG_QUERY = """SELECT DISTINCT ?d ?p ?pl WHERE {
         ?d mentions ?p . ?p "@type" Person .
         ?d locations ?pl . ?pl "@type" Place }"""
-    stage_kg(1, f"{stage}/kg1")
-    stage_kg(10, f"{stage}/kg10")
+    for scale in (1, 10):
+        synthetic_kg(spark, scale).write.mode("overwrite").parquet(
+            f"{stage}/kg{scale}"
+        )
     jobs["sparqlkg_x1"] = sparql_query(
         spark.read.parquet(f"{stage}/kg1"), _KG_QUERY
     )

@@ -19,32 +19,37 @@ def emb(spark, sf_dir):
 
 
 # ----------------------------------------------------------------- dedup ---
+_SHINGLE_EDGE_ROWS = [
+    (9001, ""), (9002, "   "), (9003, "one"), (9004, "two words"),
+    (9005, "a b c a b c a b c"), (9006, "Ünïcode wörds MIXED case"),
+    (9007, "punct, only!!! ... ---"), (9008, None),
+]
+
+
 def test_shingle_udf_equals_catalyst_twin(spark, docs):
-    """make_shingle_udf (the r4 Arrow scale path inside
-    minhash_near_duplicates) must produce the EXACT arrays — values and
-    first-occurrence order — of the Catalyst norm_tokens +
-    shingles_from_tokens build the DuckDB oracle replays."""
-    from kgc.link import make_shingle_udf, shingles_from_tokens
+    """The ``sh`` field of make_shingle_band_udf (the Arrow scale path
+    inside minhash_near_duplicates) must hold the EXACT arrays — values
+    and first-occurrence order — of the Catalyst norm_tokens +
+    shingles_from_tokens build the DuckDB oracle replays.  Edge rows:
+    empty, blank, one token, Unicode, punctuation only, NULL."""
+    from kgc.link import make_shingle_band_udf, shingles_from_tokens
     from kgc.textops import norm_tokens
 
-    edge = spark.createDataFrame(
-        [(9001, ""), (9002, "   "), (9003, "one"), (9004, "two words"),
-         (9005, "a b c a b c a b c"), (9006, "Ünïcode wörds MIXED case"),
-         (9007, "punct, only!!! ... ---"), (9008, None)],
-        "doc_id long, text string",
-    )
+    edge = spark.createDataFrame(_SHINGLE_EDGE_ROWS, "doc_id long, text string")
     d = docs.select("doc_id", "text").limit(300).unionByName(edge)
     cat = d.select(
         "doc_id", norm_tokens("text").alias("_t")
     ).select("doc_id", shingles_from_tokens(F.col("_t"), 3).alias("sh"))
-    udf = d.select("doc_id", make_shingle_udf(3)(F.col("text")).alias("sh"))
+    udf = d.select(
+        "doc_id", make_shingle_band_udf(3, 16, 4)(F.col("text")).alias("_mh")
+    )
     a = {r["doc_id"]: r["sh"] for r in cat.collect()}
-    b = {r["doc_id"]: r["sh"] for r in udf.collect()}
+    b = {r["doc_id"]: r["_mh"]["sh"] for r in udf.collect()}
     assert a == b
 
 
 def test_shingle_band_udf_equals_lsh_band_keys(spark, docs):
-    """make_shingle_band_udf (the r4 single-pass minhash path) must
+    """make_shingle_band_udf (the single-pass minhash path) must
     produce the exact (doc_id, band, key) set of the lanes-as-data
     lsh_band_keys derivation the DuckDB oracle replays — md5 inputs,
     lane order inside the band key, everything."""
@@ -52,7 +57,8 @@ def test_shingle_band_udf_equals_lsh_band_keys(spark, docs):
                           shingles_from_tokens)
     from kgc.textops import norm_tokens
 
-    d = docs.select("doc_id", "text").limit(250)
+    edge = spark.createDataFrame(_SHINGLE_EDGE_ROWS, "doc_id long, text string")
+    d = docs.select("doc_id", "text").limit(250).unionByName(edge)
     sh = d.select("doc_id", norm_tokens("text").alias("_t")).select(
         "doc_id", shingles_from_tokens(F.col("_t"), 3).alias("sh")
     ).filter(F.size("sh") > 0)
@@ -60,8 +66,9 @@ def test_shingle_band_udf_equals_lsh_band_keys(spark, docs):
            for r in lsh_band_keys(sh, "sh", ["doc_id"], k=16, bands=4).collect()}
     mh = d.select(
         "doc_id", make_shingle_band_udf(3, 16, 4)(F.col("text")).alias("_mh")
-    ).select("doc_id", F.explode("_mh.bands").alias("b"))
-    got = {(r["doc_id"], r["b"]["band"], r["b"]["key"]) for r in mh.collect()}
+    ).collect()
+    got = {(r["doc_id"], b["band"], b["key"])
+           for r in mh for b in r["_mh"]["bands"]}
     assert got == ref and len(ref) > 0
 
 

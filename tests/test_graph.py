@@ -469,7 +469,7 @@ def test_parse_sparql_structure():
     assert q["select"] == ["d", "n"] and q["distinct"]
     assert q["patterns"] == [("?d", "mentions", "?e"), ("?e", "@type", "Person")]
     assert q["optional"] == [("?e", "name", "?n")]
-    assert q["filters"] == [("cmp", "?d", "!=", "doc:9")]
+    assert q["filters"] == [("cmp", "?d", "!=", "doc:9", (False, True))]
     assert q["order"] == [("d", True), ("n", False)] and q["limit"] == 5
     assert q["unions"] == [] and q["minus"] == [] and q["values"] == []
 
@@ -1955,6 +1955,29 @@ def test_sparql_having_full_boolean_grammar(spark):
         )
 
 
+def test_sparql_having_quoted_numeric_literal_is_string(spark):
+    """A quoted HAVING literal stays a string comparison even when it
+    reads as a number: "2.50" is not "2.5", and "2.5" sorts after
+    "10".  Only unquoted numeric tokens compare as double."""
+    from kgc.graph import sparql_aggregate
+
+    kg = spark.createDataFrame(
+        [("ent:1", "version", "2.5"), ("ent:2", "version", "2.50"),
+         ("ent:3", "version", "2.5"), ("ent:4", "version", "10")],
+        "subj string, pred string, obj string",
+    )
+    agg = (
+        "SELECT ?v (COUNT(?e) AS ?n) WHERE { ?e version ?v } "
+        "GROUP BY ?v HAVING (%s) ORDER BY ?v"
+    )
+    rows = sparql_aggregate(kg, agg % '?v = "2.5"').collect()
+    assert [(r.v, r.n) for r in rows] == [("2.5", 2)]
+    rows = sparql_aggregate(kg, agg % '?v < "10"').collect()
+    assert rows == []
+    rows = sparql_aggregate(kg, agg % "?n >= 2").collect()
+    assert [(r.v, r.n) for r in rows] == [("2.5", 2)]
+
+
 def test_sparql_decimal_literals_in_filters(spark):
     """Decimal literals tokenize whole (`0.5` is one token, not
     `0 . 5`) — FILTER and BIND arithmetic over fractional thresholds."""
@@ -2178,6 +2201,27 @@ def test_quads_from_linked_library_api(spark):
     assert [(r.g, r.n) for r in rows] == [
         ("doc:1", "Ada"), ("doc:2", "Ada L"),
     ]
+
+
+def test_entity_unfold_plans_one_scan(spark, sf_dir):
+    """Plan pin for the E3 unfold over the parquet-backed link table:
+    the driver's entity_triples and quads_from_linked each plan ONE
+    parquet scan and add at most the dedup exchange to the link plan
+    (a self-union unfold plans the scan and the link join once per
+    leg: 3 scans)."""
+    import __spark_entry__ as E
+    from kgc.triples import quads_from_linked
+
+    def shape(df):
+        pp = df._jdf.queryExecution().executedPlan().toString()
+        return pp.count("FileScan parquet"), pp.count("Exchange")
+
+    link = E.q_link_topk(spark, sf_dir)
+    link_scans, link_ex = shape(link)
+    assert link_scans == 1
+    for out in (E.q_entity_triples(spark, sf_dir), quads_from_linked(link)):
+        scans, ex = shape(out)
+        assert scans == 1 and ex <= link_ex + 1, (scans, ex, link_ex)
 
 
 def test_sparql_filter_never_bound_var_loud(spark):

@@ -362,7 +362,10 @@ def test_entity_triples_on_uncached_expression_lineage(spark):
     DeduplicateRelations re-id the legs and strand the pack_spans
     pandas UDF inside a plain Project → runtime INTERNAL_ERROR under
     Spark 4.1.2.  The explode form must evaluate, and emit exactly 3
-    triples per linked mention."""
+    triples per linked mention; quads_from_linked (the same unfold)
+    one quad per distinct (graph, subj, pred, obj)."""
+    from kgc.triples import ENTITY_PREDICATES, quads_from_linked
+
     docs = synth.generate_documents(spark, n_docs=200, n_parts=4)
     segs = segment.segment_documents(docs, max_tokens=60)
     aliases = [a for a, *_ in synth.ALIASES]
@@ -372,6 +375,14 @@ def test_entity_triples_on_uncached_expression_lineage(spark):
     )
     n_linked = linked.count()
     assert pipeline.entity_triples(linked).count() == 3 * n_linked
+    want = set()
+    for r in linked.select("doc_id", "entity_id", "entity_type", "alias").collect():
+        g, ent = f"doc:{r.doc_id}", f"ent:{r.entity_id}"
+        pred = ENTITY_PREDICATES.get(r.entity_type, "about")
+        want |= {(g, g, pred, ent), (g, ent, "@type", r.entity_type),
+                 (g, ent, "name", r.alias)}
+    got = [tuple(r) for r in quads_from_linked(linked).collect()]
+    assert len(got) == len(want) and set(got) == want
 
 
 def _python_evals(plan, caches=()):

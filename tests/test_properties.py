@@ -466,7 +466,8 @@ class TestSparqlDifferential:
             "select": None, "distinct": distinct,
             "patterns": required, "optional": list(optionals),
             "optional_groups": [], "filters": [
-                ("cmp", "?" + v, op, c) for v, op, c in filters
+                ("cmp", "?" + v, op, c, (False, True))
+                for v, op, c in filters
             ],
             "order": [], "limit": None, "offset": None,
             "unions": [[([b], []) for b in union_block]] if union_block else [],
