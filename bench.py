@@ -26,6 +26,7 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     import __spark_entry__ as em
+    from kgbench.run import _proc_stat as read_stat
     from kgc.session import get_spark
 
     spark = get_spark(
@@ -39,15 +40,6 @@ def main() -> None:
     steal: dict[str, list[float]] = {}
     controls: list[dict] = []
     n_triples = 0
-
-    def read_stat() -> tuple[int, int]:
-        """(total_jiffies, steal_jiffies) from the aggregate cpu line."""
-        try:
-            with open("/proc/stat") as f:
-                vals = [int(x) for x in f.readline().split()[1:]]
-            return sum(vals), (vals[7] if len(vals) > 7 else 0)
-        except OSError:
-            return 0, 0
 
     def timed_pass(df) -> tuple[float, float]:
         """One noop-sink execution → (wall sec, co-tenant steal %)."""

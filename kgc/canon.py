@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgc.link import _norm_alias
+
 DEFAULT_SALT = 16
 
 
@@ -280,12 +282,7 @@ def canonicalize_entities(
     alias surface (same surface claimed by two dictionary entries).
     The component min becomes canonical_id.
     """
-    a = alias_df.select(
-        F.array_join(
-            F.regexp_extract_all(F.lower(F.col("alias")), F.lit(r"(?U)[^\W_]+"), 0), " "
-        ).alias("alias"),
-        "entity_id",
-    ).distinct()
+    a = alias_df.select(_norm_alias("alias").alias("alias"), "entity_id").distinct()
     # entity ids sharing a surface form → edge
     shared = (
         a.alias("x")

@@ -177,9 +177,6 @@ def _tok_hash60(tok: Column) -> Column:
     return F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("bigint")
 
 
-_POW2_60 = None
-
-
 def _pow2_60() -> Column:
     """array<bigint> literal [1, 2, 4, ..., 2^59] — constant-folded to a
     single Literal by Catalyst; used to express 1<<b with a column bit

@@ -374,6 +374,7 @@ def bgp_query(
     distinct: bool = False,
     allow_product: bool = False,
     broadcast_min_consts: int = 2,
+    path_relations: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
     """SPARQL-style basic-graph-pattern query over a (subj, pred, obj)
     triple table — the downstream query primitive the reference's
@@ -409,16 +410,26 @@ def bgp_query(
     Variables repeated INSIDE one pattern (``(?x, knows, ?x)``) become
     a per-leg equality filter.  ``distinct=True`` applies SPARQL
     SELECT DISTINCT semantics (bag → set).
+
+    ``path_relations`` maps a property-path predicate to its (subj, obj)
+    relation (_path_relations); a leg with that predicate reads the
+    relation instead of the triple table, its predicate counting as one
+    constant for the join order and broadcast hint.
     """
+    path_relations = path_relations or {}
+
     def is_var(t: str) -> bool:
         return isinstance(t, str) and t.startswith("?")
 
     def compile_leg(pat):
         s, p, o = pat[:3]
-        leg = triples
-        n_consts = 0
         cols, seen = [], {}
-        slots = [(s, "subj"), (p, "pred"), (o, "obj")]
+        if p in path_relations:
+            leg, n_consts = path_relations[p], 1
+            slots = [(s, "subj"), (o, "obj")]
+        else:
+            leg, n_consts = triples, 0
+            slots = [(s, "subj"), (p, "pred"), (o, "obj")]
         if len(pat) == 4:
             # quad pattern (from a GRAPH block): the 4th term binds or
             # filters the reserved provenance column
@@ -523,16 +534,16 @@ def bgp_query(
 # identity; `^p` (inverse) swaps subject and object; `p|q`
 # (alternation) unions the alternatives' edge sets as a pushed
 # pred-IN scan; `!(p|q)` (negated property set) is the complementary
-# pushed pred-NOT-IN scan.  Each is union'd
-# into the pattern source under its own reserved predicate name — the
-# rest of the query planner is unchanged and the path leg joins like
-# any other pattern.  A SEQUENCE path `p/q[/r...]` (bare predicate
-# names — IRI-bracketed steps tokenize apart, same restriction as
-# alternation) is rewritten at parse time into a chain of patterns
-# through fresh `?__seqN` variables — exactly the intermediate-join
-# shape bgp_query already plans — and each step may itself be any of
-# the single-step path forms (`mentions/name`, `^mentions/events`,
-# `subClassOf+/label`).  The `__seq` prefix is reserved; the
+# pushed pred-NOT-IN scan.  Each path leg reads its own (subj, obj)
+# relation, built once per query (_path_relations), instead of the
+# triple table — the rest of the query planner is unchanged and the
+# path leg joins like any other pattern.  A SEQUENCE path
+# `p/q[/r...]` (bare predicate names — IRI-bracketed steps tokenize
+# apart, same restriction as alternation) is rewritten at parse time
+# into a chain of patterns through fresh `?__seqN` variables —
+# exactly the intermediate-join shape bgp_query already plans — and
+# each step may itself be any of the single-step path forms
+# (`mentions/name`, `^mentions/events`, `subClassOf+/label`).  The `__seq` prefix is reserved; the
 # intermediate columns are dropped before projection.  A GROUPED
 # sequence `(p/q)+` (also `*`, `?`) composes the sequence's edge set
 # by chaining per-step equi-joins and closes it with the same
@@ -766,7 +777,7 @@ def parse_sparql(text: str) -> dict:
                 take(")")
             elif p_raw == "(":
                 # grouped property path (p/q)+ — tokenizes apart: fold
-                # into one "(p/q)+" predicate token; the path expander
+                # into one "(p/q)+" predicate token; _path_relations
                 # composes the sequence's edge set and closes it
                 inner = take()
                 take(")")
@@ -1297,19 +1308,12 @@ def parse_sparql(text: str) -> dict:
     }
 
 
-def _union_pad(a: DataFrame, b: DataFrame) -> DataFrame:
-    """unionByName padding absent columns NULL — the quad provenance
-    column on derived path edges (see _expand_property_paths)."""
-    return a.unionByName(b, allowMissingColumns=True)
-
-
-def _expand_property_paths(
-    triples: DataFrame, patterns: list, optional: list
-) -> DataFrame:
-    """Property-path expansion: for every path predicate used in a
-    pattern, union a derived edge set into the pattern source under the
-    path's own reserved name; the rest of the planner is unchanged and
-    the path leg joins like any other pattern.
+def _path_relations(triples: DataFrame, patterns: list) -> dict[str, DataFrame]:
+    """Property paths as leaf relations: one (subj, obj) DataFrame per
+    distinct path predicate used in ``patterns``, keyed by the path
+    spec.  bgp_query reads a leg whose predicate is a key from its
+    relation, so no derived edge ever reaches a variable-predicate or
+    GRAPH quad leg over the fact table.
 
       * ``p+``  (one-or-more): the transitive closure of p's edge set
         (path doubling, log-depth joins).
@@ -1336,189 +1340,101 @@ def _expand_property_paths(
         decomposes into whole (p/q) hops.  Bare-predicate steps, one
         trailing modifier, no deeper nesting.
 
-    One closure computation per distinct path predicate; closure
-    subgraphs are tiny relative to the fact table (one predicate's
-    edges), so each union costs a scan, not a shuffle."""
-    base_cols = ["subj", "pred", "obj"]
-    if any(len(pat) > 3 for pat in (*patterns, *optional)):
-        # quad (GRAPH) patterns join on the provenance column too; the
-        # derived path-edge unions below pad it NULL (path forms are
-        # rejected inside GRAPH blocks, so no quad leg ever reads a
-        # padded row)
-        base_cols.append(_GRAPH_COL)
-    orig = triples.select(*base_cols)
-    plus_preds, star_preds, alt_preds = set(), set(), set()
-    opt_preds, inv_preds, neg_preds = set(), set(), set()
-    grp_specs: set[str] = set()
-    for pat in (*patterns, *optional):
-        p = pat[1]
+    One closure computation per distinct base predicate (``p+`` and
+    ``p*`` share it); closure subgraphs are tiny relative to the fact
+    table (one predicate's edges)."""
+    spo = triples.select("subj", "pred", "obj")
+    closures: dict[str, DataFrame] = {}
+
+    def edges(cond):
+        return spo.filter(cond).select("subj", "obj")
+
+    def closure(base):
+        if base not in closures:
+            clo = transitive_closure(
+                edges(F.col("pred") == base), "subj", "obj"
+            )
+            closures[base] = clo.select("subj", "obj")
+        return closures[base]
+
+    def with_identity(rel):
+        terms = (
+            spo.select("subj")
+            .unionByName(spo.select(F.col("obj").alias("subj")))
+            .distinct()
+        )
+        return rel.unionByName(terms.select("subj", F.col("subj").alias("obj")))
+
+    rels: dict[str, DataFrame] = {}
+    for p in sorted({pat[1] for pat in patterns}):
         if p.startswith("?"):
             continue
         if p.startswith("("):
-            grp_specs.add(p)
+            # grouped path (p/q[/r...])+|*|? — compose the sequence's
+            # edge set by chaining per-step equi-joins, then close it:
+            # every path matching the closure is a chain of composed
+            # steps, so transitive_closure(E_pq) IS (p/q)+ exactly.
+            mod, steps = p[-1], p[1:-2].split("/")
+            if mod not in "+*?" or not steps or any(
+                not st or st[-1] in "+*?^" or st[0] in "^!(?" or "|" in st
+                for st in steps
+            ):
+                raise ValueError(
+                    f"unsupported grouped property path {p!r} "
+                    "(bare-predicate sequences with one trailing +/*/? only)"
+                )
+            rel = edges(F.col("pred") == steps[0])
+            for st in steps[1:]:
+                nxt = edges(F.col("pred") == st).select(
+                    F.col("subj").alias("mid"), F.col("obj").alias("hop")
+                )
+                rel = (
+                    rel.join(nxt, F.col("obj") == F.col("mid"))
+                    .select("subj", F.col("hop").alias("obj"))
+                    .dropDuplicates()
+                )
+            if mod != "?":
+                rel = transitive_closure(rel, "subj", "obj").select("subj", "obj")
+            rels[p] = with_identity(rel) if mod in "*?" else rel
         elif p.startswith("!"):
-            neg_preds.add(p)
+            parts = p[1:].split("|")
+            if any(
+                not q or q.endswith(("+", "*", "?")) or q.startswith(("^", "!"))
+                for q in parts
+            ):
+                raise ValueError(
+                    f"unsupported property path {p!r} (negated sets take "
+                    "bare forward predicates only)"
+                )
+            rels[p] = edges(~F.col("pred").isin(parts))
         elif "|" in p:
-            alt_preds.add(p)
+            parts = p.split("|")
+            if any(
+                not q or q.endswith(("+", "*", "?")) or q.startswith("^")
+                for q in parts
+            ):
+                raise ValueError(
+                    f"unsupported property path {p!r} (alternation does "
+                    "not nest with +/*/?/^)"
+                )
+            rels[p] = edges(F.col("pred").isin(parts))
         elif p.startswith("^"):
-            inv_preds.add(p[1:])
+            base = p[1:]
+            if base.startswith("^") or base.endswith(("+", "*", "?")):
+                raise ValueError(
+                    f"unsupported property path ^{base!r} (inverse does not "
+                    "nest with other path forms)"
+                )
+            rels[p] = edges(F.col("pred") == base).select(
+                F.col("obj").alias("subj"), F.col("subj").alias("obj")
+            )
         elif p.endswith("+"):
-            plus_preds.add(p[:-1])
+            rels[p] = closure(p[:-1])
         elif p.endswith("*"):
-            star_preds.add(p[:-1])
+            rels[p] = with_identity(closure(p[:-1]))
         elif p.endswith("?") and len(p) > 1:
-            opt_preds.add(p[:-1])
-    src = orig
-    for base in sorted(plus_preds | star_preds):
-        edges = (
-            orig.filter(F.col("pred") == base)
-            .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-        )
-        clo = transitive_closure(edges).select("src", "dst")
-        if base in plus_preds:
-            src = _union_pad(src,
-                clo.select(
-                    F.col("src").alias("subj"),
-                    F.lit(base + "+").alias("pred"),
-                    F.col("dst").alias("obj"),
-                )
-            )
-        if base in star_preds:
-            terms = (
-                orig.select("subj")
-                .unionByName(orig.select(F.col("obj").alias("subj")))
-                .distinct()
-            )
-            star = clo.select(
-                F.col("src").alias("subj"),
-                F.lit(base + "*").alias("pred"),
-                F.col("dst").alias("obj"),
-            ).unionByName(
-                terms.select(
-                    "subj",
-                    F.lit(base + "*").alias("pred"),
-                    F.col("subj").alias("obj"),
-                )
-            )
-            src = src.unionByName(star, allowMissingColumns=True)
-    for base in sorted(inv_preds):
-        if base.startswith("^") or base.endswith(("+", "*", "?")):
-            raise ValueError(
-                f"unsupported property path ^{base!r} (inverse does not "
-                "nest with other path forms)"
-            )
-        src = _union_pad(src,
-            orig.filter(F.col("pred") == base).select(
-                F.col("obj").alias("subj"),
-                F.lit("^" + base).alias("pred"),
-                F.col("subj").alias("obj"),
-            )
-        )
-    for base in sorted(opt_preds):
-        terms = (
-            orig.select("subj")
-            .unionByName(orig.select(F.col("obj").alias("subj")))
-            .distinct()
-        )
-        src = _union_pad(src,
-            orig.filter(F.col("pred") == base).select(
-                "subj", F.lit(base + "?").alias("pred"), "obj"
-            ).unionByName(
-                terms.select(
-                    "subj",
-                    F.lit(base + "?").alias("pred"),
-                    F.col("subj").alias("obj"),
-                )
-            )
-        )
-    for alt in sorted(alt_preds):
-        parts = alt.split("|")
-        if any(
-            not p or p.endswith(("+", "*", "?")) or p.startswith("^")
-            for p in parts
-        ):
-            raise ValueError(
-                f"unsupported property path {alt!r} (alternation does "
-                "not nest with +/*/?/^)"
-            )
-        src = _union_pad(src,
-            orig.filter(F.col("pred").isin(parts)).select(
-                "subj", F.lit(alt).alias("pred"), "obj"
-            )
-        )
-    for neg in sorted(neg_preds):
-        parts = neg[1:].split("|")
-        if any(
-            not p or p.endswith(("+", "*", "?")) or p.startswith(("^", "!"))
-            for p in parts
-        ):
-            raise ValueError(
-                f"unsupported property path {neg!r} (negated sets take "
-                "bare forward predicates only)"
-            )
-        # SPARQL negated property set: any edge whose predicate is NOT
-        # in the set — a pushed NOT IN scan, zero extra shuffles
-        src = _union_pad(src,
-            orig.filter(~F.col("pred").isin(parts)).select(
-                "subj", F.lit(neg).alias("pred"), "obj"
-            )
-        )
-    for spec in sorted(grp_specs):
-        # grouped path (p/q[/r...])+|*|? — compose the sequence's edge
-        # set by chaining per-step equi-joins (each step's edges are
-        # one predicate's slice of the fact table), then close it:
-        # every even-decomposable path is a chain of composed steps,
-        # so transitive_closure(E_pq) IS (p/q)+ exactly.
-        mod, inner = spec[-1], spec[1:-2]
-        steps = inner.split("/")
-        if mod not in "+*?" or not steps or any(
-            not st or st[-1] in "+*?^" or st[0] in "^!(?" or "|" in st
-            for st in steps
-        ):
-            raise ValueError(
-                f"unsupported grouped property path {spec!r} "
-                "(bare-predicate sequences with one trailing +/*/? only)"
-            )
-
-        def _step(pred):
-            return orig.filter(F.col("pred") == pred).select(
-                F.col("subj").alias("src"), F.col("obj").alias("dst")
-            )
-
-        edges = _step(steps[0])
-        for st in steps[1:]:
-            nxt = (
-                _step(st)
-                .withColumnRenamed("src", "mid")
-                .withColumnRenamed("dst", "hop")
-            )
-            edges = (
-                edges.join(nxt, F.col("dst") == F.col("mid"))
-                .select("src", F.col("hop").alias("dst"))
-                .dropDuplicates()
-            )
-        if mod == "?":
-            derived = edges
-        else:
-            derived = transitive_closure(edges).select("src", "dst")
-        rows = derived.select(
-            F.col("src").alias("subj"), F.lit(spec).alias("pred"),
-            F.col("dst").alias("obj"),
-        )
-        if mod in "*?":
-            terms = (
-                orig.select("subj")
-                .unionByName(orig.select(F.col("obj").alias("subj")))
-                .distinct()
-            )
-            rows = rows.unionByName(
-                terms.select(
-                    "subj", F.lit(spec).alias("pred"),
-                    F.col("subj").alias("obj"),
-                )
-            )
-        src = _union_pad(src, rows)
-    return src
+            rels[p] = with_identity(edges(F.col("pred") == p[:-1]))
+    return rels
 
 
 def _compile_filter(f):
@@ -1643,14 +1559,14 @@ def _compat_join(
     return j.select(*out_cols)
 
 
-def _group_sol(src, pats, filts, where: str, **bgp_kwargs):
+def _group_sol(triples, paths, pats, filts, where: str, **bgp_kwargs):
     """Compile one group's (patterns, filters) to a solution.  Group
     FILTERs are scoped to the group per the spec; with the additional
     restriction that they reference only group-bound variables,
     applying them inside the group is exact for every group form
     (UNION branch / MINUS / EXISTS: the group evaluates on its own
     bindings; outer-substitution filters are refused loudly)."""
-    gsol = bgp_query(src, pats, **bgp_kwargs)
+    gsol = bgp_query(triples, pats, path_relations=paths, **bgp_kwargs)
     if filts:
         own = _pattern_vars(pats)
         for f in filts:
@@ -1690,8 +1606,8 @@ def _solve_where(triples: DataFrame, q: dict, **bgp_kwargs) -> DataFrame:
         domains remove nothing (per the SPARQL MINUS spec);
       * FILTERs last, as plain Catalyst predicates.
 
-    Property paths (`p+`) are expanded once over ALL groups' patterns
-    before compilation."""
+    Property-path relations (`p+`, ...) are built once over ALL groups'
+    patterns before compilation (_path_relations)."""
     all_pats = list(q["patterns"]) + list(q["optional"])
     for g, _gf in q.get("optional_groups", ()):
         all_pats.extend(g)
@@ -1714,7 +1630,7 @@ def _solve_where(triples: DataFrame, q: dict, **bgp_kwargs) -> DataFrame:
         triples = triples.withColumn(_GRAPH_COL, F.col(graph_col))
     else:
         bgp_kwargs.pop("graph_col", None)
-    src = _expand_property_paths(triples, all_pats, [])
+    paths = _path_relations(triples, all_pats)
 
     # ``nullable`` tracks which solution columns may hold a NULL
     # (OPTIONAL-bound, UNION-padded, or VALUES-UNDEF) — SPARQL says an
@@ -1727,7 +1643,8 @@ def _solve_where(triples: DataFrame, q: dict, **bgp_kwargs) -> DataFrame:
     sol: DataFrame | None = None
     nullable: set[str] = set()
     if q["patterns"]:
-        sol = bgp_query(src, q["patterns"], optional=q["optional"], **bgp_kwargs)
+        sol = bgp_query(triples, q["patterns"], optional=q["optional"],
+                        path_relations=paths, **bgp_kwargs)
         nullable = _pattern_vars(q["optional"]) - _pattern_vars(q["patterns"])
     elif q["optional"] or q.get("optional_groups"):
         raise ValueError("OPTIONAL requires at least one required pattern")
@@ -1746,7 +1663,7 @@ def _solve_where(triples: DataFrame, q: dict, **bgp_kwargs) -> DataFrame:
         # bindings, and on shared vars the equi/compat join makes the
         # merged binding equal B's).  A filter over an outer-only
         # variable is refused loudly.
-        gsol = bgp_query(src, blk, **bgp_kwargs)
+        gsol = bgp_query(triples, blk, path_relations=paths, **bgp_kwargs)
         if gfilts:
             gvars_own = _pattern_vars(blk)
             for gf in gfilts:
@@ -1779,7 +1696,9 @@ def _solve_where(triples: DataFrame, q: dict, **bgp_kwargs) -> DataFrame:
         if sol is None:
             padded = []
             for bp, bf in branches:
-                bsol = _group_sol(src, bp, bf, "a UNION branch", **bgp_kwargs)
+                bsol = _group_sol(
+                    triples, paths, bp, bf, "a UNION branch", **bgp_kwargs
+                )
                 padded.append(
                     bsol.select(*[
                         F.col(v) if v in bsol.columns
@@ -1806,7 +1725,9 @@ def _solve_where(triples: DataFrame, q: dict, **bgp_kwargs) -> DataFrame:
             # once per branch.
             padded = []
             for bp, bf in branches:
-                bsol = _group_sol(src, bp, bf, "a UNION branch", **bgp_kwargs)
+                bsol = _group_sol(
+                    triples, paths, bp, bf, "a UNION branch", **bgp_kwargs
+                )
                 padded.append(
                     bsol.select(*[
                         F.col(v) if v in bsol.columns
@@ -1830,7 +1751,9 @@ def _solve_where(triples: DataFrame, q: dict, **bgp_kwargs) -> DataFrame:
         out_vars = sorted(set(sol.columns) | block_vars)
         parts = []
         for (bp, bf), bvars in zip(branches, branch_vars):
-            bsol = _group_sol(src, bp, bf, "a UNION branch", **bgp_kwargs)
+            bsol = _group_sol(
+                triples, paths, bp, bf, "a UNION branch", **bgp_kwargs
+            )
             shared = sorted(set(sol.columns) & set(bsol.columns))
             if not shared:
                 raise ValueError(
@@ -1855,7 +1778,7 @@ def _solve_where(triples: DataFrame, q: dict, **bgp_kwargs) -> DataFrame:
 
     for sub_text in q.get("subqueries", ()):
         # { SELECT ... } compiles independently (its own parse, path
-        # expansion, projection — inner vars are hidden) and joins the
+        # relations, projection — inner vars are hidden) and joins the
         # group on shared visible variables: plain hash equi-join when
         # every shared var is definitely bound on both sides,
         # _compat_join (unbound matches anything) otherwise.
@@ -1919,7 +1842,7 @@ def _solve_where(triples: DataFrame, q: dict, **bgp_kwargs) -> DataFrame:
         raise ValueError("WHERE group binds nothing")
 
     for mpats, mfilts in q["minus"]:
-        msol = _group_sol(src, mpats, mfilts, "MINUS", **bgp_kwargs)
+        msol = _group_sol(triples, paths, mpats, mfilts, "MINUS", **bgp_kwargs)
         shared = sorted(set(sol.columns) & set(msol.columns))
         null_shared = sorted(set(shared) & nullable)
         if shared and null_shared:
@@ -1952,7 +1875,7 @@ def _solve_where(triples: DataFrame, q: dict, **bgp_kwargs) -> DataFrame:
             )
 
     for positive, epats, efilts in q["exists"]:
-        esol = _group_sol(src, epats, efilts, "EXISTS", **bgp_kwargs)
+        esol = _group_sol(triples, paths, epats, efilts, "EXISTS", **bgp_kwargs)
         shared = sorted(set(sol.columns) & set(esol.columns))
         null_shared = sorted(set(shared) & nullable)
         if shared and null_shared:
@@ -2124,7 +2047,7 @@ def _compile_subselect(
 
 def sparql_query(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     """Run a SPARQL-subset query string against a (subj, pred, obj[,
-    obj_type]) triple table.  parse_sparql → property-path expansion →
+    obj_type]) triple table.  parse_sparql → property-path relations →
     group algebra (_solve_where: BGP joins + UNION/VALUES/MINUS/
     subqueries + FILTER) → projection/ORDER/LIMIT as plain Catalyst
     ops.  ORDER BY is required for a deterministic LIMIT and that
@@ -2136,7 +2059,13 @@ def sparql_query(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     engine's asserting-document lineage).  Pass a quad table (one row
     per graph×triple) for named-graph semantics; the column becomes an
     ordinary join key, so a constant graph pushes into the scan and a
-    ?g variable rides the equi-joins like any other binding."""
+    ?g variable rides the equi-joins like any other binding.
+
+    Multiplicity over a quad table: a default-graph (non-GRAPH) pattern
+    matches once per (graph, triple) row, so a triple asserted in two
+    graphs yields two solutions — a non-DISTINCT SELECT or COUNT counts
+    it twice.  Use DISTINCT (or COUNT(DISTINCT ...)) for the merged
+    default graph's set semantics."""
     q = parse_sparql(text)
     out, nullable = _solve_where(triples, q, **bgp_kwargs)
     return _finish_select(out, q, nullable)[0]

@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kgc.textops import norm_tokens
+
 
 # ------------------------------------------------------------- shingles ---
 def char_shingles(col: Column | str, n: int = 3) -> Column:
@@ -70,10 +72,7 @@ def token_shingles(col: Column | str, n: int = 3) -> Column:
 
     Column-API convenience; on large scans prefer a two-step select
     with ``shingles_from_tokens`` (see its docstring)."""
-    toks = F.regexp_extract_all(
-        F.lower(F.col(col) if isinstance(col, str) else col), F.lit(r"(?U)[^\W_]+"), 0
-    )
-    return shingles_from_tokens(toks, n)
+    return shingles_from_tokens(norm_tokens(col), n)
 
 
 MINHASH_DOC_TYPE = T.StructType(
@@ -109,7 +108,8 @@ def make_shingle_band_udf(n: int = 3, k: int = 32, bands: int = 8):
     bands-per-doc (consumed from a persisted cache, so the
     InferFiltersFromGenerate hazard does not apply).
 
-    Values are BIT-IDENTICAL to the Catalyst/DuckDB derivation.  ``sh``
+    Values are BIT-IDENTICAL to :func:`lsh_band_keys` and the DuckDB
+    oracle SQL (``__spark_entry__._sql_minhash_sig``).  ``sh``
     equals ``norm_tokens`` + :func:`shingles_from_tokens`: Python's
     ``[^\\W_]+``/lower() tokenization is the Catalyst
     ``(?U)[^\\W_]+``/lower() class, and ``dict.fromkeys`` reproduces
@@ -165,50 +165,6 @@ def make_shingle_band_udf(n: int = 3, k: int = 32, bands: int = 8):
 
 
 # -------------------------------------------------------------- minhash ---
-def minhash_signature(shingles: Column, k: int = 32) -> Column:
-    """k-permutation minhash as array<string> of md5-hex minima.
-
-    Hash family i = md5(i || '|' || shingle); the min over shingles of a
-    uniform hash is the classic minhash estimator (Broder 1997).  Using
-    the hex string directly keeps the computation engine-portable
-    (identical in DuckDB for the oracle) at the cost of 32 bytes per
-    lane — fine, signatures are tiny next to the shingle sets.
-
-    CODEGEN NOTE (round-2 rewrite): lanes are DATA, not code — one
-    transform over sequence(0, k-1) with a single md5 call site, so the
-    generated/interpreted expression is O(1) in k.  Round 1 unrolled
-    the k lanes into one giant projection; the resulting classes
-    exhausted the JIT code cache and bench times degraded 30-80×
-    mid-session (VERDICT r1 "Performance").  `shingles` should be an
-    attribute from a previous projection (a cheap per-row array ref),
-    so per-lane re-reference costs nothing; the md5 work is identical
-    either way.  Hot scans should prefer :func:`lsh_band_keys`, which
-    additionally pushes the lane loop into a map-side-combining
-    aggregate.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda i: F.array_min(
-            F.transform(
-                shingles, lambda s: F.md5(F.concat(i.cast("string"), F.lit("|"), s))
-            )
-        ),
-    )
-
-
-def lsh_bands(sig: Column, bands: int, rows: int) -> Column:
-    """Signature → array<struct<band:int, key:string>> for the block
-    join.  Bands as data (sequence+transform), O(1) codegen in
-    ``bands`` — see minhash_signature's codegen note."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.cast("int").alias("band"),
-            F.md5(F.concat_ws("|", F.slice(sig, b * rows + 1, F.lit(rows)))).alias("key"),
-        ),
-    )
-
-
 def lsh_band_keys(
     df: DataFrame,
     shingle_col: str,
@@ -221,10 +177,10 @@ def lsh_band_keys(
 
     Lanes ride as DATA: explode the shingle array, cross with
     sequence(0, k-1), and take groupBy(min) per (id, lane).  Hash
-    values are bit-identical to :func:`minhash_signature` /
-    :func:`lsh_bands` (md5(lane || '|' || shingle), band key =
-    md5(concat_ws('|', lanes-in-band))), so the DuckDB oracle SQL is
-    unchanged.  Plan properties at scale:
+    values are bit-identical to the DuckDB oracle SQL
+    (``__spark_entry__._sql_minhash_sig``: md5(lane || '|' || shingle),
+    band key = md5(concat_ws('|', lanes-in-band))).  Plan properties at
+    scale:
 
     * generated code is O(1) in k — one tiny md5 expression; no JIT
       code-cache pressure (the round-1 scale killer).
@@ -278,13 +234,8 @@ def jaccard(a: Column, b: Column) -> Column:
 
 # ---------------------------------------------------------- exact link ----
 def _norm_alias(colname: str) -> Column:
-    # (?U): Java regex defaults \w to ASCII; the pandas-UDF scanner
-    # (kgc.mentions) tokenizes with Python re.UNICODE.  Without the
-    # flag, non-ASCII surfaces ('Müller') normalize differently on the
-    # two paths and exact links silently drop (ADVICE r1).
-    return F.array_join(
-        F.regexp_extract_all(F.lower(F.col(colname)), F.lit(r"(?U)[^\W_]+"), 0), " "
-    )
+    """Normalized alias key: the norm_tokens run joined by spaces."""
+    return F.array_join(norm_tokens(colname), " ")
 
 
 def link_exact(

@@ -35,9 +35,12 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from kgc.link import _norm_alias
+from kgc.textops import norm_tokens
 
 _TOKEN_RE = re.compile(r"[^\W_]+", re.UNICODE)
 
@@ -265,15 +268,6 @@ def detect_mentions(
 
 
 # --------------------------------------------------- pure-Catalyst twin ---
-def _norm_tokens_expr(colname: str) -> Column:
-    """Catalyst twin of norm_tokens_py: lowercase word-char runs.
-
-    regexp_extract_all keeps only the matched runs — identical to the
-    Python finditer loop, and whole-stage-codegen'd.
-    """
-    return F.regexp_extract_all(F.lower(F.col(colname)), F.lit(r"(?U)[^\W_]+"), 0)
-
-
 def detect_mentions_ngram(
     df: DataFrame,
     alias_df: DataFrame,
@@ -289,7 +283,7 @@ def detect_mentions_ngram(
     rows by max_n — acceptable for the oracle path; the UDF scanner is
     the 100 TB path.
     """
-    toks = _norm_tokens_expr(text_col)
+    toks = norm_tokens(text_col)
     t = df.select(*id_cols, toks.alias("toks"))
     t = t.select(
         *id_cols,
@@ -318,7 +312,7 @@ def detect_mentions_ngram(
         ).alias("g"),
     ).select(*id_cols, "pos", F.col("g.gram").alias("gram"), F.col("g.n_toks").alias("n_toks"))
     adf = alias_df.select(
-        F.array_join(_norm_tokens_expr("alias"), " ").alias("gram"),
+        _norm_alias("alias").alias("gram"),
         F.col("entity_id"),
         F.col("entity_type"),
         F.col("weight"),

@@ -1,35 +1,16 @@
-"""C4/G9 — per-partition lineage + triple-count metrics.
+"""C4/G9 — triple-count metrics.
 
 The reference's observability is a mutex-guarded logger with doc/chunk
 progress counters (internal/logger/logger.go:73-106).  The distributed
-analog the north rule asks for: a metrics *table* per stage — row counts
-per physical partition (lineage: which task produced what), triple
-counts per predicate, and distinct-subject cardinalities — cheap
-aggregates computed on the same pass cache.
+analog: a metrics *table* — triple counts per predicate and
+distinct-subject cardinalities — cheap aggregates computed on the same
+pass cache.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def partition_lineage(df: DataFrame, stage: str) -> DataFrame:
-    """Row count per physical partition: (stage, partition_id, rows).
-
-    spark_partition_id() is evaluated task-side — zero extra shuffle
-    beyond the final tiny groupBy.
-    """
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .select(
-            F.lit(stage).alias("stage"),
-            F.col("_pid").alias("partition_id"),
-            "rows",
-        )
-    )
 
 
 def triple_metrics(triples: DataFrame) -> DataFrame:
@@ -43,12 +24,3 @@ def triple_metrics(triples: DataFrame) -> DataFrame:
         F.approx_count_distinct("subj", 0.01).alias("approx_subjects"),
         F.approx_count_distinct("obj", 0.01).alias("approx_objects"),
     )
-
-
-def stage_summary(dfs: dict[str, DataFrame]) -> DataFrame:
-    """Union of partition lineage across named stages."""
-    out = None
-    for stage, df in dfs.items():
-        part = partition_lineage(df, stage)
-        out = part if out is None else out.unionByName(part)
-    return out

@@ -38,7 +38,6 @@ SPAN_TYPE = T.ArrayType(
         ]
     )
 )
-SPAN_DDL = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 
 
 # ------------------------------------------------------------------ text ---

@@ -28,7 +28,13 @@ STOPWORDS = {
 
 
 def norm_tokens(col: Column | str) -> Column:
-    """Lowercased word-char token array (matching normalization)."""
+    """Lowercased word-char token array (matching normalization) — the
+    one Catalyst alias/token normalizer (kgc.link._norm_alias joins it
+    into an alias key)."""
+    # (?U): Java regex defaults \w to ASCII; the pandas-UDF scanner
+    # (kgc.mentions) tokenizes with Python re.UNICODE.  Without the
+    # flag, non-ASCII surfaces ('Müller') normalize differently on the
+    # two paths and exact links silently drop (ADVICE r1).
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_extract_all(F.lower(c), F.lit(r"(?U)[^\W_]+"), 0)
 

@@ -22,9 +22,6 @@ import unicodedata
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Java regex, UNICODE_CHARACTER_CLASS so \s == Unicode whitespace (Go
-# strings.Fields uses unicode.IsSpace).
-_WS_RE = r"(?U)\s+"
 # Go: unicode.IsSpace(r) || unicode.IsPunct(r)  → Unicode \s or category P.
 _WS_PUNCT_RE = r"(?U)[\s\p{P}]+"
 

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgc.textops import norm_tokens
+
 SCHEMA_NS = "https://schema.org/"
 
 # (label, comment, subclass_of) — the emission vocabulary of the
@@ -302,11 +304,7 @@ def suggest_properties_prejoin(
     toks = segments.withColumn(
         "_tok",
         F.explode(
-            F.array_distinct(
-                F.regexp_extract_all(
-                    F.lower(F.col(text_col)), F.lit(r"(?U)[^\W_]+"), 0
-                )
-            )
+            F.array_distinct(norm_tokens(text_col))
         ),
     )
     p = props_df.select(

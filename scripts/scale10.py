@@ -42,15 +42,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REPLICAS = 10
 
 
-def read_stat() -> tuple[int, int]:
-    try:
-        with open("/proc/stat") as f:
-            vals = [int(x) for x in f.readline().split()[1:]]
-        return sum(vals), (vals[7] if len(vals) > 7 else 0)
-    except OSError:
-        return 0, 0
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -59,6 +50,7 @@ def main() -> None:
     import __spark_entry__ as em
     from pyspark.sql import functions as F
 
+    from kgbench.run import _proc_stat as read_stat
     from kgc import pipeline
     from kgc.dedup import minhash_near_duplicates
     from kgc.session import get_spark

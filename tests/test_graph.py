@@ -2152,9 +2152,9 @@ def test_sparql_values_rejects_commas_loudly(spark):
 
 def test_sparql_path_outside_graph_block_composes(spark):
     """A closure path in the default graph composes with a GRAPH block
-    in the same query: the derived path edges carry a NULL provenance
-    pad (never read — path legs are 3-term) while quad legs join the
-    real column."""
+    in the same query: the path leg reads its own (subj, obj) relation
+    while quad legs read the fact table, so a variable-predicate leg
+    never binds a path spec as ?p and a quad leg never binds ?g NULL."""
     from kgc.graph import sparql_query
 
     rows = sparql_query(
@@ -2165,6 +2165,47 @@ def test_sparql_path_outside_graph_block_composes(spark):
     assert [(r.g, r.e, r.x) for r in rows] == [
         ("d1", "ent:1", "ent:1"), ("d2", "ent:1", "ent:1"),
     ]
+
+    quads = spark.createDataFrame(
+        [("g1", "Person", "subClassOf", "Agent"),
+         ("g1", "Agent", "subClassOf", "Thing"),
+         ("g2", "Person", "label", "person")],
+        "doc_id string, subj string, pred string, obj string",
+    )
+    facts = [
+        ("g1", "Person", "subClassOf", "Agent", "Agent"),
+        ("g1", "Person", "subClassOf", "Agent", "Thing"),
+        ("g1", "Agent", "subClassOf", "Thing", "Thing"),
+        ("g2", "Person", "label", "person", "Agent"),
+        ("g2", "Person", "label", "person", "Thing"),
+    ]
+    rows = sparql_query(
+        quads, "SELECT ?s ?p ?o ?x WHERE { ?s ?p ?o . ?s subClassOf+ ?x }"
+    ).collect()
+    assert sorted((r.s, r.p, r.o, r.x) for r in rows) == sorted(
+        f[1:] for f in facts
+    )
+    rows = sparql_query(
+        quads,
+        "SELECT ?g ?s ?p ?o ?x WHERE { "
+        "GRAPH ?g { ?s ?p ?o } ?s subClassOf+ ?x }",
+    ).collect()
+    assert sorted((r.g, r.s, r.p, r.o, r.x) for r in rows) == sorted(facts)
+
+
+def test_sparql_default_graph_counts_once_per_graph_triple(spark):
+    """Multiplicity contract over a quad table: a default-graph pattern
+    matches once per (graph, triple), so a non-DISTINCT COUNT over a
+    triple asserted in 2 graphs is 2 (DISTINCT gives the triple set)."""
+    from kgc.graph import sparql_aggregate
+
+    def count(text):
+        return sparql_aggregate(_quads(spark), text).collect()[0].n
+
+    assert count("SELECT (COUNT(*) AS ?n) WHERE { ent:1 name ?v }") == 2
+    assert count(
+        "SELECT (COUNT(DISTINCT ?v) AS ?n) WHERE { ent:1 name ?v }"
+    ) == 1
 
 
 def test_sparql_aggregate_group_by_bind_var(spark):
