@@ -1593,7 +1593,7 @@ def q_pipeline_triples(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     stages = pipeline.run(
-        spark, docs, alias_df=_alias_df(spark), max_tokens=200, fuzzy=False
+        spark, docs, alias_df=_alias_df(spark), max_tokens=200
     )
     return stages["triples"]
 
@@ -1618,7 +1618,6 @@ def q_pipeline_triples_sql(spark, sf_dir):
         _docs(spark, sf_dir).select("doc_id", "text"),
         alias_df=_alias_df(spark),
         max_tokens=200,
-        fuzzy=False,
     )
     return stages["triples"].select("subj", "pred", "obj", "obj_type")
 
@@ -1639,7 +1638,6 @@ def q_pipeline_interleaved(spark, sf_dir):
         _interleaved_docs(spark, sf_dir),
         alias_df=_alias_df(spark),
         max_tokens=_IL_MAX,
-        fuzzy=False,
     )
     return stages["triples"].select("subj", "pred", "obj", "obj_type")
 
@@ -1684,7 +1682,7 @@ def q_pipeline_interleaved_media(spark, sf_dir):
 
     docs = _interleaved_docs(spark, sf_dir)
     stages = pipeline.run(
-        spark, docs, alias_df=_alias_df(spark), max_tokens=_IL_MAX, fuzzy=False
+        spark, docs, alias_df=_alias_df(spark), max_tokens=_IL_MAX
     )
     media = media_triples(decode_media(media_table_from_spans(docs)))
     return (
@@ -1930,7 +1928,7 @@ def q_jsonld_render(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     stages = pipeline.run(
-        spark, docs, alias_df=_alias_df(spark), max_tokens=200, fuzzy=False
+        spark, docs, alias_df=_alias_df(spark), max_tokens=200
     )
     # doc_triples (doc-scoped dedup): each rendered document is
     # self-contained — entity nodes repeat per referencing doc
@@ -2921,7 +2919,8 @@ FROM state GROUP BY doc_id, seg"""
     # chain = recursive replay of the leftmost-longest non-overlapping
     # dictionary scan (mentions.scan_text_py: try bigram, else unigram,
     # else advance 1); reach = transitive closure over surface-sharing
-    # dictionary entries (canon.canonicalize_entities).
+    # dictionary entries (canon.resolve_dictionary, which pipeline.run
+    # links through).
     _pts_prefix = (
         "WITH RECURSIVE "
         + _ALIAS_CTE

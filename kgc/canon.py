@@ -33,14 +33,23 @@ Scale mechanics (the genuinely distributed-systems part):
 On a cluster the per-iteration materialization would be an Iceberg
 snapshot write (resume = restart from last round's table, G8);
 locally localCheckpoint stands in.
+
+``kgc.pipeline.run`` runs no Spark connected components: its alias
+graph is the dictionary's, broadcast-sized, so :func:`resolve_dictionary` closes it
+on the driver together with the exact-link top-1, and the pipeline
+links each mention with one broadcast lookup (:func:`link_resolved`).
 """
 
 from __future__ import annotations
 
+import hashlib
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgc.link import _norm_alias
+from kgc.link import _norm_alias, exact_score
+from kgc.mentions import norm_tokens_py
 
 DEFAULT_SALT = 16
 
@@ -301,4 +310,84 @@ def canonicalize_entities(
         F.broadcast(comps.withColumnRenamed("node", "entity_id")), "entity_id", "left"
     ).withColumn("canonical_id", F.coalesce(F.col("component"), F.col("entity_id"))).drop(
         "component"
+    )
+
+
+# ------------------------------------------------- resolved dictionary ---
+class ResolvedDictionary(NamedTuple):
+    table: DataFrame  # alias, entity_id, entity_type, weight, canonical_id
+    aliases: list[str]  # raw alias surfaces, for the mention scanner
+    fingerprint: str  # content hash of the dictionary rows
+
+
+def resolve_dictionary(alias_df: DataFrame) -> ResolvedDictionary:
+    """G4 + G5 resolved once, on the driver: one row per normalized
+    alias key with its exact-link winner and that winner's canonical id.
+
+    Both are pure functions of the dictionary.  The mention scanner
+    emits whole dictionary keys only, so a key fixes its token count n
+    and :func:`kgc.link.link_exact`'s top-1 per mention is top-1 per
+    key: the highest ``weight * (1 + 0.1*(n-1))`` (the same float
+    expression), ties to the lowest entity_id (then entity_type and
+    weight, where the window left duplicate (key, entity_id) rows
+    arbitrary).  canonical_id is the component minimum over entity ids
+    that share a key — :func:`canonicalize_entities`' graph, closed by
+    the driver union-find.
+
+    The key is ``" ".join(norm_tokens_py(alias))``, the accept string of
+    :func:`kgc.mentions.build_alias_trie`, so every scanned mention
+    joins by construction.  Empty keys (punctuation-only aliases) are
+    dropped: the scanner never emits one, and sharing one must not
+    merge entities.  Rows with a null entity_id are dropped too.
+
+    One collect; driver memory is O(dictionary), which the scanner pays
+    anyway since it broadcasts every alias.  Returns the resolved table
+    (built on the driver, broadcast-sized), the raw alias list for the
+    scanner and a content hash of the dictionary for stage fingerprints.
+    """
+    rows = [
+        tuple(r)
+        for r in alias_df.select("alias", "entity_id", "entity_type", "weight").collect()
+    ]
+    fingerprint = hashlib.sha1(
+        "\n".join(sorted(map(repr, rows))).encode()
+    ).hexdigest()
+    best: dict = {}
+    ids_by_key: dict = {}
+    for alias, eid, etype, w in rows:
+        toks = norm_tokens_py(alias)
+        if not toks or eid is None:
+            continue
+        key = " ".join(toks)
+        score = None if w is None else w * (1.0 + 0.1 * (len(toks) - 1))
+        # Spark's score DESC puts NULL last
+        rank = (score is None, -(score or 0.0), eid, etype or "", w or 0.0)
+        if key not in best or rank < best[key][0]:
+            best[key] = (rank, eid, etype, w)
+        ids_by_key.setdefault(key, set()).add(eid)
+    edges = [(min(ids), e) for ids in ids_by_key.values() for e in ids]
+    nodes = sorted({e for ids in ids_by_key.values() for e in ids})
+    canonical = dict(_union_find_local(edges, nodes))
+    types = {f.name: f.dataType.simpleString() for f in alias_df.schema.fields}
+    table = alias_df.sparkSession.createDataFrame(
+        [(k, e, t, w, canonical[e]) for k, (_, e, t, w) in sorted(best.items())],
+        f"alias string, entity_id {types['entity_id']}, "
+        f"entity_type {types['entity_type']}, weight {types['weight']}, "
+        f"canonical_id {types['entity_id']}",
+    )
+    aliases = sorted({r[0] for r in rows if r[0] is not None})
+    return ResolvedDictionary(table, aliases, fingerprint)
+
+
+def link_resolved(mentions: DataFrame, resolved: DataFrame) -> DataFrame:
+    """Scanned mentions ⨝ broadcast(:func:`resolve_dictionary` table):
+    the exact link and canonicalization as one narrow map — no window,
+    no shuffle.  Output is ``link_mentions(fuzzy=False)`` +
+    ``canonicalize_entities``' columns: (doc_id, seg_id, alias, surface,
+    tok_begin, n_toks, entity_id, entity_type, score, method,
+    canonical_id)."""
+    return mentions.join(F.broadcast(resolved), "alias").select(
+        "doc_id", "seg_id", "alias", "surface", "tok_begin", "n_toks",
+        "entity_id", "entity_type", exact_score().alias("score"),
+        F.lit("exact").alias("method"), "canonical_id",
     )

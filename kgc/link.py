@@ -238,6 +238,12 @@ def _norm_alias(colname: str) -> Column:
     return F.array_join(norm_tokens(colname), " ")
 
 
+def exact_score() -> Column:
+    """weight * (1 + 0.1*(n_toks-1)) — longer surface forms are more
+    specific."""
+    return F.col("weight") * (F.lit(1.0) + F.lit(0.1) * (F.col("n_toks") - 1))
+
+
 def link_exact(
     mentions: DataFrame,
     alias_df: DataFrame,
@@ -245,17 +251,12 @@ def link_exact(
 ) -> DataFrame:
     """G4 exact path: broadcast join + window top-1 per mention.
 
-    Score = weight * (1 + 0.1*(n_toks-1)) — longer surface forms are
-    more specific.  Deterministic tie-break on entity_id.
+    Score = :func:`exact_score`.  Deterministic tie-break on entity_id.
     """
     adf = alias_df.select(
         _norm_alias("alias").alias("alias"), "entity_id", "entity_type", "weight"
     ).dropDuplicates(["alias", "entity_id"])
-    j = mentions.join(F.broadcast(adf), "alias")
-    j = j.withColumn(
-        "score",
-        F.col("weight") * (F.lit(1.0) + F.lit(0.1) * (F.col("n_toks") - 1)),
-    )
+    j = mentions.join(F.broadcast(adf), "alias").withColumn("score", exact_score())
     w = Window.partitionBy(*[F.col(c) for c in mention_key]).orderBy(
         F.col("score").desc(), F.col("entity_id").asc()
     )
@@ -347,9 +348,10 @@ def link_mentions(
     dictionary: one ``limit(1)`` probe over the misses decides.  The
     probe reads the persisted mention table, so it materializes the
     upstream parse → segment → scan chain once, up front — work moved,
-    not added.  Mentions found by the dictionary scan (kgc.mentions, as
-    in ``pipeline.run``) always hit, and then the result is the exact
-    branch alone, with no band keys, group-bys or union.
+    not added.  Mentions found by the dictionary scan (kgc.mentions)
+    always hit, and then the result is the exact branch alone, with no
+    band keys, group-bys or union.  ``pipeline.run`` links scanned
+    mentions without this operator (kgc.canon.resolve_dictionary).
 
     Returns (doc_id, seg_id, alias, surface, tok_begin, n_toks,
     entity_id, entity_type, score, method).

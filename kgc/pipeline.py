@@ -2,7 +2,8 @@
 re-expressed as one staged Spark job — SURVEY §3 lifecycle).
 
     docs → spans (parse) → segments (pack) → mentions (dict scan)
-         → link (exact + LSH fuzzy) → canonicalize (connected comps)
+         → linked (mentions ⨝ broadcast resolved dictionary: exact
+           top-1 entity + canonical id, kgc.canon.resolve_dictionary)
          → triples (+ @context table) → metrics
 
 Each stage optionally lands in a StageStore (parquet + manifest locally,
@@ -22,10 +23,10 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgc import canon, link, mentions, metrics, parsers, segment, triples, vocab
+from kgc import canon, mentions, metrics, parsers, segment, triples, vocab
 from kgc.checkpoint import StageStore
 from kgc.functions import COMMON_TYPES
-from kgc.synth import ALIASES
+from kgc.synth import alias_dict_df
 
 
 # ------------------------------------------------------------------- E2 ---
@@ -170,10 +171,21 @@ def run(
 ) -> dict[str, DataFrame]:
     """Full pipeline.  ``docs`` needs (doc_id, spans) or (doc_id, text).
 
+    Linking and canonicalization are resolved once per dictionary on
+    the driver (:func:`kgc.canon.resolve_dictionary`); the ``linked``
+    stage is the scanned mentions joined with that broadcast table,
+    carrying ``canonical_id``.  The scanner only emits dictionary keys,
+    so every mention hits and no fuzzy (LSH) link is ever needed:
+    ``fuzzy`` is accepted for existing callers and ignored
+    (:func:`kgc.link.link_mentions` keeps the fuzzy path as a library
+    operator).
+
     Returns every stage DataFrame; with a StageStore, stages already
-    committed AND fingerprint-matching the current input are read back
+    committed AND fingerprint-matching the current inputs are read back
     instead of recomputed (resume path — a changed input invalidates
     the stage rather than silently serving stale output; ADVICE r1).
+    ``segments`` is keyed on the documents and the token limits; every
+    later stage also on a hash of the dictionary.
     Segments violating the token guard (E6) and unparseable docs land
     in stages['quarantine'] instead of the healthy flow.  Call
     :func:`release` when done with the outputs to drop the stage
@@ -185,11 +197,13 @@ def run(
     shuffle exchange, the Iceberg bucket-partitioning posture
     (StageStore.write_bucketed).
     """
-    alias_df = alias_df if alias_df is not None else _default_alias_df(spark)
-    # one driver-side distinct of the dictionary; detect_mentions ships
-    # it back out as a real sc.broadcast (once per worker), and the scan
-    # trie is built once per Python worker process (kgc/mentions.py)
-    aliases = [r["alias"] for r in alias_df.select("alias").distinct().collect()]
+    # one driver-side collect of the dictionary; detect_mentions ships
+    # the aliases back out as a real sc.broadcast (once per worker), and
+    # the scan trie is built once per Python worker process
+    # (kgc/mentions.py)
+    resolved = canon.resolve_dictionary(
+        alias_df if alias_df is not None else alias_dict_df(spark)
+    )
     limit = seg_token_limit if seg_token_limit is not None else max_tokens
 
     parsed_here = "spans" not in docs.columns
@@ -204,7 +218,10 @@ def run(
         keep.append(F.col("parse_error"))
     docs = docs.select(*keep)
 
-    fp = input_fingerprint(docs) if store is not None else None
+    seg_fp = dict_fp = None
+    if store is not None:
+        seg_fp = f"{input_fingerprint(docs)};tokens={max_tokens}/{limit}"
+        dict_fp = f"{seg_fp};dictionary={resolved.fingerprint}"
     pinned: list[DataFrame] = []
     if parsed_here and store is None:
         # the parse is a stage boundary too: segments and quarantine
@@ -212,7 +229,7 @@ def run(
         docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
         pinned.append(docs)
 
-    def stage(name: str, make):
+    def stage(name: str, make, fp: str | None):
         if store is not None:
             if store.is_valid(name, fp):
                 if bucket_stages:
@@ -227,12 +244,6 @@ def run(
                 )
             else:
                 out = store.write(made, name, extra={"fingerprint": fp})
-            # the stage is on disk now — drop any caches the operator
-            # pinned internally (e.g. link_mentions' mention table)
-            for p in getattr(made, "_kgc_pinned", []):
-                p.unpersist()
-            if made.storageLevel.useMemory or made.storageLevel.useDisk:
-                made.unpersist()
             return out
         # No store: persist as the stage boundary.  Stage outputs are
         # consumed by several downstream branches (typing + triples);
@@ -242,7 +253,6 @@ def run(
         # released by :func:`release` once consumers materialize.
         df = make().persist(StorageLevel.MEMORY_AND_DISK)
         pinned.append(df)
-        pinned.extend(getattr(df, "_kgc_pinned", []))
         return df
 
     segs_all = stage(
@@ -250,25 +260,22 @@ def run(
         lambda: segment.token_guard(
             segment.segment_documents(docs, max_tokens=max_tokens), limit
         ),
+        seg_fp,
     )
     quar = quarantine_table(docs, segs_all, limit)
     segs = segs_all.filter(F.col("ok")).drop("ok")
     ment = stage(
         "mentions",
         lambda: mentions.detect_mentions(
-            segs.select("doc_id", "seg_id", "seg_text"), aliases
+            segs.select("doc_id", "seg_id", "seg_text"), resolved.aliases
         ),
+        dict_fp,
     )
     linked = stage(
-        "linked", lambda: link.link_mentions(ment, alias_df, fuzzy=fuzzy)
+        "linked", lambda: canon.link_resolved(ment, resolved.table), dict_fp
     )
-    linked_canon = stage(
-        "canonical", lambda: canon.canonicalize_entities(linked, alias_df)
-    )
-    typed_segs = classify_main_type(
-        segs.select("doc_id", "seg_id"), linked_canon
-    )
-    ents = entity_triples(linked_canon)
+    typed_segs = classify_main_type(segs.select("doc_id", "seg_id"), linked)
+    ents = entity_triples(linked)
     seg_types = typed_segs.select(
         "doc_id", "seg_id",
         F.concat(
@@ -281,6 +288,7 @@ def run(
     trip = stage(
         "triples",
         lambda: triples.dedup_triples(ents.unionByName(seg_types)),
+        dict_fp,
     )
     # per-document view for the JSON-LD sink: dedup scoped to the doc so
     # every rendered file is self-contained (an entity's @type/name node
@@ -298,7 +306,6 @@ def run(
         "segments": segs,
         "mentions": ment,
         "linked": linked,
-        "canonical": linked_canon,
         "triples": trip,
         "doc_triples": doc_trip,
         "context": ctx,
@@ -309,19 +316,11 @@ def run(
     return out
 
 
-def _default_alias_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(a, e, t, w) for a, e, t, w in ALIASES],
-        "alias string, entity_id string, entity_type string, weight double",
-    )
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
     ap.add_argument("--out", default=None, help="StageStore dir (enables resume)")
     ap.add_argument("--max-tokens", type=int, default=200)
-    ap.add_argument("--no-fuzzy", action="store_true")
     args = ap.parse_args()
 
     from kgc.session import get_spark
@@ -334,7 +333,7 @@ def main() -> None:
     t0 = time.time()
     stages = run(
         spark, docs, alias_df=alias_df, store=store,
-        max_tokens=args.max_tokens, fuzzy=not args.no_fuzzy,
+        max_tokens=args.max_tokens,
     )
     n_triples = stages["triples"].count()
     elapsed = time.time() - t0

@@ -364,8 +364,19 @@ def props_to_triples(
 
 def dedup_triples(df: DataFrame) -> DataFrame:
     """G7: global (subj,pred,obj) dedup — the one wide shuffle of the
-    emit stage; AQE coalesces the post-shuffle partitions."""
-    return df.dropDuplicates(["subj", "pred", "obj"])
+    emit stage; AQE coalesces the post-shuffle partitions.
+
+    A triple asserted by several rows keeps the least of their other
+    columns (min over a struct, in column order), not an arbitrary one
+    as ``dropDuplicates`` would: the output does not depend on how the
+    input is partitioned.  Same plan shape as ``dropDuplicates``: one
+    exchange between a partial and a final SortAggregate."""
+    key = ["subj", "pred", "obj"]
+    rest = [c for c in df.columns if c not in key]
+    first = df.groupBy(*key).agg(F.min(F.struct(*rest)).alias("_first"))
+    return first.select(
+        *[c if c in key else F.col(f"_first.{c}").alias(c) for c in df.columns]
+    )
 
 
 def parse_props_json(df: DataFrame, json_col: str = "props_json") -> DataFrame:

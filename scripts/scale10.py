@@ -102,14 +102,13 @@ def main() -> None:
     # dataflow (same protocol + rationale as bench.py)
     jobs: dict[str, object] = {}
     jobs["pipeline_sf01"] = pipeline.run(
-        spark, docs, alias_df=em._alias_df(spark), max_tokens=200, fuzzy=False
+        spark, docs, alias_df=em._alias_df(spark), max_tokens=200
     )["triples"]
     jobs["pipeline_x10"] = pipeline.run(
         spark,
         spark.read.parquet(f"{stage}/pipe10"),
         alias_df=em._alias_df(spark),
         max_tokens=200,
-        fuzzy=False,
     )["triples"]
     jobs["minhash_sf01"] = minhash_near_duplicates(
         aug, k=16, bands=4, threshold=0.5

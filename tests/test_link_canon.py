@@ -471,6 +471,100 @@ def test_pipeline_resume_invalidates_on_input_change(spark, tmp_path):
     assert t2.count() != n1
 
 
+def _spo(df):
+    return sorted(tuple(r) for r in df.select("subj", "pred", "obj").collect())
+
+
+def test_pipeline_resume_invalidates_on_dictionary_change(spark, tmp_path):
+    """Same documents, a smaller dictionary: every stage from mentions
+    on is keyed on the dictionary too, so the resume recomputes them
+    and equals a fresh run (instead of serving the old triples)."""
+    from kgc.checkpoint import StageStore
+
+    docs = synth.generate_documents(spark, n_docs=40)
+    store = StageStore(tmp_path / "st")
+    first = _spo(pipeline.run(spark, docs, max_tokens=50, store=store)["triples"])
+    smaller = synth.alias_dict_df(spark).filter(
+        ~F.col("alias").isin("paris", "france")
+    )
+    resumed = pipeline.run(spark, docs, alias_df=smaller, max_tokens=50, store=store)
+    fresh = pipeline.run(spark, docs, alias_df=smaller, max_tokens=50)
+    assert _spo(resumed["triples"]) == _spo(fresh["triples"])
+    assert _spo(resumed["triples"]) != first
+    pipeline.release(fresh)
+
+
+def test_pipeline_resume_invalidates_on_token_limit_change(spark, tmp_path):
+    """Same documents, a smaller max_tokens: the segments stage is keyed
+    on the token limits, so the resume re-segments and equals a fresh
+    run."""
+    from kgc.checkpoint import StageStore
+
+    docs = synth.generate_documents(spark, n_docs=40)
+    store = StageStore(tmp_path / "st")
+    pipeline.run(spark, docs, max_tokens=50, store=store)
+    resumed = pipeline.run(spark, docs, max_tokens=20, store=store)
+    fresh = pipeline.run(spark, docs, max_tokens=20)
+    segs = lambda st: sorted(
+        tuple(r) for r in st["segments"].select("doc_id", "seg_id", "seg_text").collect()
+    )
+    assert segs(resumed) == segs(fresh)
+    assert _spo(resumed["triples"]) == _spo(fresh["triples"])
+    pipeline.release(fresh)
+
+
+def test_resolve_dictionary_drops_punctuation_only_aliases(spark):
+    """'!!!' and '???' both normalize to the empty key.  The scanner
+    never emits it, so it resolves no mention and must not merge X1 and
+    X2 into one component."""
+    adf = spark.createDataFrame(
+        [("!!!", "X1", "Thing", 1.0), ("???", "X2", "Thing", 1.0),
+         ("x two", "X2", "Thing", 1.0)],
+        "alias string, entity_id string, entity_type string, weight double",
+    )
+    got = [tuple(r) for r in canon.resolve_dictionary(adf).table.collect()]
+    assert got == [("x two", "X2", "Thing", 1.0, "X2")]
+
+
+def _plan_nodes(plan, caches=1):
+    """Physical node names, descending into the first ``caches`` levels
+    of cached subplans (a stage's own cache, not its inputs')."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _plan_nodes(plan.executedPlan(), caches)
+    if name == "InMemoryTableScan":
+        if not caches:
+            return [name]
+        return [name, *_plan_nodes(plan.relation().cachedPlan(), caches - 1)]
+    out = [name]
+    kids = plan.children()
+    for i in range(kids.size()):
+        out += _plan_nodes(kids.apply(i), caches)
+    return out
+
+
+def test_pipeline_run_submits_one_job_and_links_by_lookup(spark):
+    """pipeline.run with no store runs one Spark job itself (the
+    dictionary collect) and plans the linked stage as one broadcast
+    join over the mentions: no window, no union, no shuffle."""
+    import uuid
+
+    docs = synth.generate_documents(spark, n_docs=20)
+    sc = spark.sparkContext
+    group = f"pipeline-run-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "pipeline.run")
+    try:
+        stages = pipeline.run(spark, docs, max_tokens=50)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    nodes = _plan_nodes(stages["linked"]._jdf.queryExecution().executedPlan())
+    assert "BroadcastHashJoin" in nodes, nodes
+    assert not {"Window", "Union", "Exchange"} & set(nodes), nodes
+    assert "canonical" not in stages
+    pipeline.release(stages)
+
+
 def test_exact_link_non_ascii_alias(spark):
     """ADVICE r1: the pandas-UDF scanner (Python re.UNICODE) and the
     Catalyst dictionary normalization ((?U) Java regex) must agree on

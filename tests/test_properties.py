@@ -756,3 +756,84 @@ class TestSubqueryConstructDifferential:
                 trip.add((a, "derived", v))
                 trip.add((v, "origin", a))
         assert got == sorted(trip), (rows, got, trip)
+
+
+class TestResolvedLinkDifferential:
+    """pipeline.run's linked stage — the dictionary resolved once
+    (kgc.canon.resolve_dictionary) and looked up per mention
+    (link_resolved) — vs the operator pair it replaces,
+    link_mentions(fuzzy=False) + canonicalize_entities, over random
+    dictionaries scanned against text made of their own surfaces.
+    Compared as multisets of the linked columns."""
+
+    # case and punctuation variants of shared keys, non-ASCII surfaces,
+    # multi-token keys overlapping single-token ones
+    _SURFACES = [
+        "Müller", "müller", "MÜLLER", "café", "Café!", "paris", "Paris",
+        "paris nord", "Paris-Nord", "nord", "a.b", "a b", "b", "x_y", "y",
+    ]
+    _TYPES = {"E1": "Person", "E2": "Place", "E3": "Thing", "E4": "Event"}
+    _COLS = ["doc_id", "seg_id", "tok_begin", "alias", "entity_id",
+             "entity_type", "score", "canonical_id"]
+
+    @classmethod
+    def _both(cls, spark, rows, texts):
+        from kgc import canon, link, mentions
+
+        adf = spark.createDataFrame(
+            rows, "alias string, entity_id string, entity_type string, weight double"
+        )
+        segs = spark.createDataFrame(
+            [("d", i, t) for i, t in enumerate(texts)],
+            "doc_id string, seg_id int, seg_text string",
+        )
+        ment = mentions.detect_mentions(segs, [r[0] for r in rows]).persist()
+        linked = link.link_mentions(ment, adf, fuzzy=False)
+        try:
+            old = canon.canonicalize_entities(linked, adf)
+            new = canon.link_resolved(ment, canon.resolve_dictionary(adf).table)
+            bag = lambda df: sorted(tuple(r) for r in df.select(*cls._COLS).collect())
+            return bag(old), bag(new)
+        finally:
+            for df in [ment, *linked._kgc_pinned]:
+                df.unpersist()
+
+    @given(st.data())
+    @settings(max_examples=15, deadline=None)
+    def test_resolved_lookup_equals_link_then_canonicalize(self, spark, data):
+        from kgc.mentions import norm_tokens_py
+
+        draw = data.draw
+        drawn = draw(st.lists(
+            st.tuples(
+                st.sampled_from(self._SURFACES),
+                st.sampled_from(sorted(self._TYPES)),
+                st.sampled_from([0.5, 0.7, 1.0]),
+            ),
+            min_size=1, max_size=10,
+        ))
+        # duplicate (key, entity) rows repeat one weight: link_exact
+        # keeps an arbitrary one of them, which no lookup can match
+        weight: dict = {}
+        rows = [
+            (a, e, self._TYPES[e],
+             weight.setdefault((" ".join(norm_tokens_py(a)), e), w))
+            for a, e, w in drawn
+        ]
+        texts = draw(st.lists(
+            st.lists(st.sampled_from(self._SURFACES + ["zz", "."]), max_size=8)
+            .map(" ".join),
+            min_size=1, max_size=3,
+        ))
+        old, new = self._both(spark, rows, texts)
+        assert new == old, (rows, texts)
+
+    def test_testdata_dictionary(self, spark):
+        # 'scan': E03 beats E11 on weight; 'query': E12/E13 merge
+        from kgc.synth import TESTDATA_ALIASES
+
+        text = "a table scan then a scan of the query, hash join, join window"
+        texts = [text, "query spark data sort stream customer scan"]
+        old, new = self._both(spark, TESTDATA_ALIASES, texts)
+        assert new == old and len(new) == 13
+        assert {r[3]: (r[4], r[7]) for r in new}["query"] == ("E12", "E12")
