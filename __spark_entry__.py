@@ -1155,7 +1155,7 @@ def q_graph_suite(spark, sf_dir):
     instantiation → serialization end-to-end) + SPARQL group algebra
     (leg sparql_ops: three-branch UNION over the doc→entity predicate
     taxonomy, a VALUES type probe, MINUS negation on docs with a
-    locations edge — kgc.graph._solve_where) + the JSON-LD round trip
+    locations edge — kgc.graph._compile_group) + the JSON-LD round trip
     (leg jsonld_rt: render_jsonld_nested(include_ids=True) →
     from_jsonld must reproduce the KG bit-for-bit; the oracle is the
     triple table itself) + DESCRIBE (subject-CBD of every mentioned

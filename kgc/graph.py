@@ -503,22 +503,30 @@ def bgp_query(
 # table —
 #
 #   SELECT [DISTINCT] (?v | (expr AS ?v)) ... | *
-#   WHERE { tp . tp ...
-#           [OPTIONAL { tp ... }]
-#           [FILTER (bool-expr)]      — &&, ||, !, parens over
+#   WHERE group
+#   [ORDER BY (?v | ASC(?v) | DESC(?v) | expr) ...] [LIMIT n] [OFFSET n]
+#
+#   group := { element ... }, the elements in any order and nesting:
+#           tp . tp ...
+#           OPTIONAL group
+#           group [UNION group ...]   — a lone group joins as is
+#           MINUS group
+#           GRAPH (?g | <iri>) group  — named-graph scope over the quad
+#             table's provenance column (graph_col)
+#           VALUES ?v { t ... } | VALUES (?a ?b) { (t t) ... }
+#           BIND (expr AS ?v)
+#           FILTER (bool-expr)        — &&, ||, !, parens over
 #             (?x op term) | (scalar op scalar) | ?v [NOT] IN (t, ...)
 #             | CONTAINS/STRSTARTS/STRENDS(s, t)
 #             | regex(?x, "pat"[, "i"]) | [!]bound(?x)
-#           [BIND (expr AS ?v)]
-#           [GRAPH (?g | <iri>) { tp ... }]  — named-graph scope over
-#             the quad table's provenance column (graph_col)
-#           [{ tp ... } UNION { tp ... } [UNION ...]]
-#           [MINUS { tp ... }]
-#           [VALUES ?v { t ... } | VALUES (?a ?b) { (t t) ... }]
-#           [{ SELECT ... }]      — subquery (plain or aggregate),
-#             compiled independently and joined on shared visible vars
-#           ... }
-#   [ORDER BY (?v | ASC(?v) | DESC(?v)) ...] [LIMIT n] [OFFSET n]
+#           FILTER [NOT] EXISTS group
+#           { SELECT ... }            — subquery (plain or aggregate),
+#             joined on its projected variables
+#
+# parse_sparql turns every group into an ordered element list (SPARQL
+# 1.1 algebra, spec §18.2) and _compile_group folds it in text order:
+# Join, LeftJoin, Minus and Extend where the text puts them, the
+# group's FILTER and EXISTS at its end.
 #
 # expr (BIND / SELECT expressions) is the scalar subset a KG consumer
 # renames and derives with: ?v, "literal", numbers, + - * / (double
@@ -712,31 +720,42 @@ def _sparql_unquote(tok: str) -> str:
 
 
 def parse_sparql(text: str) -> dict:
-    """Parse the SPARQL subset to a plain dict:
-    {select, distinct, patterns, optional, optional_groups, filters,
-    order, limit, offset, unions, minus, values, binds}.  ``select``
-    items are plain var names or ("expr", name, ast) for (expr AS ?v).
-    ``optional`` holds single-pattern OPTIONALs (independent left
-    joins); a multi-pattern ``OPTIONAL { tp . tp ... }`` — or any
-    OPTIONAL carrying FILTERs (the left-join-condition idiom) — is a
-    GROUP per the spec and lands in ``optional_groups`` as a
-    (patterns, filters) pair.  ``filters``
-    entries are boolean ASTs: leaves tagged ("cmp", lhs, op, rhs,
-    (lhs_quoted, rhs_quoted)) |
-    ("regex", var, pat, flags) | ("bound", var, positive), interior
-    nodes ("and"|"or", l, r) and ("not", e) from &&/||/!(...).
-    ``unions`` is a list of blocks, each a
-    list of (branch-patterns, branch-filters) pairs; ``minus`` a list
-    of (patterns, filters) pairs; ``exists`` entries are
-    (positive, patterns, filters) — every group form carries its own
-    FILTERs, scoped to the group;
-    ``values`` a list of (vars, rows) with None for UNDEF; ``binds`` a
-    list of (var, scalar-ast) from BIND(expr AS ?v).  Sequence
-    property paths ``p/q`` are rewritten here into pattern chains
-    through reserved ?__seqN intermediates.  Raises
-    ValueError with position context on anything outside the subset —
-    a silent mis-parse against a 10^12-row table is a far worse
-    failure than a loud one."""
+    """Parse the SPARQL subset to a plain dict {select, distinct, where,
+    order, limit, offset}.  ``select`` items are plain var names or
+    ("expr", name, ast) for (expr AS ?v).  ``where`` is the WHERE group
+    as SPARQL 1.1 algebra (spec §18.2): an ordered element list, in
+    query-text order.  Every ``{ ... }`` parses with the one group rule,
+    so a nested group is again an element list:
+
+      ("bgp", [tp, ...])           triple patterns (s, p, o); inside
+                                   GRAPH, quads (s, p, o, graph-term)
+      ("optional", group)          LeftJoin
+      ("union", [group, ...])      Union (one branch: a plain { ... })
+      ("minus", group)             Minus
+      ("graph", term, group)       GRAPH ?g / <iri> { ... }
+      ("values", vars, rows)       inline table, None for UNDEF
+      ("bind", var, ast)           Extend by a scalar-expression AST
+      ("filter", ast)              boolean AST
+      ("exists", positive, group)  FILTER [NOT] EXISTS
+      ("subquery", text)           { SELECT ... }, compiled on its own
+
+    Filter ASTs have leaves ("cmp", lhs, op, rhs, (lhs_quoted,
+    rhs_quoted)) | ("cmp2", lhs-ast, op, rhs-ast) | ("strtest", fn, a, b)
+    | ("in", var, items, positive) | ("regex", var, pat, flags) |
+    ("bound", var, positive), and interior nodes ("and"|"or", l, r) and
+    ("not", e) from &&/||/!(...).  Sequence property paths ``p/q`` are
+    rewritten here into pattern chains through reserved ?__seqN
+    intermediates.  Raises ValueError with position context on anything
+    outside the subset, nesting too deep for the recursive-descent
+    parser included — a silent mis-parse against a 10^12-row table is a
+    far worse failure than a loud one."""
+    try:
+        return _parse_sparql(text)
+    except RecursionError:
+        raise ValueError("query nests too deeply to parse") from None
+
+
+def _parse_sparql(text: str) -> dict:
     toks = _SPARQL_TOKEN.findall(re.sub(r"#[^\n]*", " ", text))
     pos = 0
     seq_n = 0  # fresh-variable counter for sequence-path rewriting
@@ -760,9 +779,23 @@ def parse_sparql(text: str) -> dict:
             "UNION", "MINUS", "VALUES", "UNDEF", "BIND", "GRAPH",
         )
 
-    def triple_block():
+    def triple_block(graph):
         nonlocal seq_n
         pats = []
+
+        def add(s, p, o):
+            if graph is None:
+                pats.append((s, p, o))
+                return
+            # a closure computed globally would leak edges across graphs
+            if not p.startswith("?") and (
+                p[-1:] in "+*?" or p[:1] in "^!" or "|" in p
+            ):
+                raise ValueError(
+                    f"property path {p!r} inside GRAPH is outside the "
+                    "subset (plain and sequence paths only)"
+                )
+            pats.append((s, p, o, graph))
         while is_term(peek()):
             s_raw, p_raw = take(), take()
             if p_raw == "!":
@@ -827,10 +860,10 @@ def parse_sparql(text: str) -> dict:
                     else:
                         nxt = f"?__seq{seq_n}"
                         seq_n += 1
-                    pats.append((prev, _map_a(_sparql_unquote(st)), nxt))
+                    add(prev, _map_a(_sparql_unquote(st)), nxt)
                     prev = nxt
             else:
-                pats.append((s, _map_a(_sparql_unquote(p_raw)), o))
+                add(s, _map_a(_sparql_unquote(p_raw)), o)
             if peek() == ".":
                 take()
         return pats
@@ -1062,27 +1095,6 @@ def parse_sparql(text: str) -> dict:
                 select.append(take()[1:])
         if not select:
             raise ValueError("SELECT needs ?vars, (expr AS ?v), or *")
-    take("WHERE")
-    take("{")
-    patterns, optional, filters = [], [], []
-    optional_groups: list[list] = []
-    unions, minus, values, exists, binds = [], [], [], [], []
-    subqueries: list[str] = []
-
-    def braced_block():
-        # { tp ... [FILTER (...)] ... } — every group form may carry
-        # FILTERs, scoped to the group (patterns and filters may
-        # interleave per the spec's group grammar)
-        take("{")
-        pats = triple_block()
-        filts = []
-        while peek() is not None and peek().upper() == "FILTER":
-            take()
-            filts.append(filter_expr())
-            pats.extend(triple_block())
-        take("}")
-        return pats, filts
-
     def values_block():
         """VALUES ?v { t ... }  |  VALUES (?a ?b) { (t t) ... }"""
         if peek() == "(":
@@ -1135,47 +1147,26 @@ def parse_sparql(text: str) -> dict:
             take("}")
         return vars_, rows
 
-    while peek() != "}":
-        t = peek()
-        if t is None:
-            raise ValueError("unterminated WHERE group")
-        if t.upper() == "OPTIONAL":
-            take()
-            # OPTIONAL { tp ... [FILTER (...)] ... } — group FILTERs
-            # are the left-join-condition idiom
-            blk, gfilts = braced_block()
-            if not blk:
-                raise ValueError("empty OPTIONAL group")
-            if len(blk) == 1 and not gfilts:
-                optional.extend(blk)
-            else:
-                # multi-pattern OPTIONAL is a GROUP per the spec: its
-                # patterns bind all-or-nothing (and its FILTERs join
-                # the LeftJoin condition), so it cannot ride the flat
-                # per-pattern left-join list
-                optional_groups.append((blk, gfilts))
-        elif t.upper() == "FILTER":
-            take()
-            nxt = peek()
-            if nxt is not None and nxt.upper() in ("EXISTS", "NOT"):
-                neg = nxt.upper() == "NOT"
-                take()
-                if neg:
-                    take("EXISTS")
-                pats, efilts = braced_block()
-                if not pats:
-                    raise ValueError("empty EXISTS group")
-                exists.append((not neg, pats, efilts))
-            else:
-                filters.append(filter_expr())
-        elif t == "{" and pos + 1 < len(toks) and (
-            toks[pos + 1].upper() == "SELECT"
-        ):
+    def nonempty(group, what):
+        if all(el[0] in ("filter", "exists") for el in group):
+            raise ValueError(f"empty {what}")
+        return group
+
+    def group(graph=None):
+        """{ ... } -> ordered element list (see parse_sparql).  ``graph``
+        is the enclosing GRAPH term: every triple pattern inside
+        carries it as a 4th term."""
+        nonlocal pos
+        take("{")
+        if peek() is not None and peek().upper() == "SELECT":
             # { SELECT ... } — a subquery: capture its token span
-            # verbatim (matching-brace scan) and compile it later in
-            # _solve_where via the ordinary SELECT / aggregate
-            # front-ends, projected and joined into this group.
-            depth, j = 1, pos + 1
+            # verbatim (matching-brace scan); it compiles through the
+            # ordinary SELECT / aggregate front-ends
+            if graph is not None:
+                raise ValueError(
+                    "subqueries inside GRAPH are outside the subset"
+                )
+            depth, j = 1, pos
             while j < len(toks) and depth:
                 if toks[j] == "{":
                     depth += 1
@@ -1184,85 +1175,82 @@ def parse_sparql(text: str) -> dict:
                 j += 1
             if depth:
                 raise ValueError("unterminated subquery")
-            subqueries.append(" ".join(toks[pos + 1 : j - 1]))
+            sub = " ".join(toks[pos : j - 1])
             pos = j
-            if peek() is not None and peek().upper() == "UNION":
-                raise ValueError(
-                    "subqueries inside UNION branches are outside the "
-                    "subset"
-                )
-        elif t == "{":
-            # { tp... } UNION { tp... } [UNION { tp... }]*
-            branches = [braced_block()]
-            if peek() is None or peek().upper() != "UNION":
-                raise ValueError("braced group must continue with UNION")
-            while peek() is not None and peek().upper() == "UNION":
+            return [("subquery", sub)]
+        els: list = []
+        while peek() != "}":
+            t = peek()
+            if t is None:
+                raise ValueError("unterminated group")
+            up = t.upper()
+            if up in ("OPTIONAL", "MINUS"):
                 take()
-                branches.append(braced_block())
-            if any(not bp for bp, _bf in branches):
-                raise ValueError("empty UNION branch")
-            unions.append(branches)
-        elif t.upper() == "MINUS":
-            take()
-            got, mfilts = braced_block()
-            if not got:
-                raise ValueError("empty MINUS group")
-            minus.append((got, mfilts))
-        elif t.upper() == "VALUES":
-            take()
-            values.append(values_block())
-        elif t.upper() == "BIND":
-            # BIND (expr AS ?v) — computed binding over the solved
-            # group (applied after the group joins, before FILTERs,
-            # so FILTER may reference a BIND var)
-            take()
-            take("(")
-            ast = scalar_expr()
-            take("AS")
-            v = take()
-            if not v.startswith("?"):
-                raise ValueError(f"BIND ... AS needs a ?var, got {v!r}")
-            take(")")
-            binds.append((v[1:], ast))
-        elif t.upper() == "GRAPH":
-            # GRAPH (?g | <iri>) { tp ... } — named-graph scope: every
-            # pattern in the block additionally binds/filters the quad
-            # table's provenance column (sparql_query's graph_col).
-            # Patterns become 4-tuples (s, p, o, g); sequence paths
-            # rewrite as usual and each step stays in the same graph
-            # (per spec); closure/alternation path forms are outside
-            # the GRAPH subset (a closure computed globally would leak
-            # edges across graphs) and fail loudly.
-            take()
-            g_raw = take()
-            gterm = _sparql_unquote(g_raw)
-            if gterm.startswith("?__seq"):
-                raise ValueError(
-                    f"variable name {gterm!r} uses the reserved __seq prefix"
-                )
-            blk, gfilts2 = braced_block()
-            if not blk:
-                raise ValueError("empty GRAPH group")
-            # a GRAPH block is part of the required (inner-join) group,
-            # so its FILTERs are exactly WHERE-level filters
-            filters.extend(gfilts2)
-            for s, p, o in blk:
-                if p.startswith("?"):
-                    pass  # variable predicate is fine
-                elif p[-1:] in "+*?" or p[:1] in "^!" or "|" in p:
+                els.append((up.lower(), nonempty(group(graph), f"{up} group")))
+            elif up == "FILTER":
+                take()
+                nxt = peek()
+                if nxt is not None and nxt.upper() in ("EXISTS", "NOT"):
+                    if take().upper() == "NOT":
+                        take("EXISTS")
+                    els.append((
+                        "exists", nxt.upper() == "EXISTS",
+                        nonempty(group(graph), "EXISTS group"),
+                    ))
+                else:
+                    els.append(("filter", filter_expr()))
+            elif t == "{":
+                # { ... } [UNION { ... }]* — a lone { SELECT ... } is a
+                # subquery element, a lone { ... } a one-branch union
+                branches = [group(graph)]
+                while peek() is not None and peek().upper() == "UNION":
+                    take()
+                    branches.append(group(graph))
+                if [[el[0] for el in br] for br in branches] == [["subquery"]]:
+                    els.append(branches[0][0])
+                else:
+                    for br in branches:
+                        nonempty(br, "UNION branch")
+                    els.append(("union", branches))
+            elif up == "VALUES":
+                take()
+                els.append(("values", *values_block()))
+            elif up == "BIND":
+                # BIND (expr AS ?v) — Extend at this point of the group
+                take()
+                take("(")
+                ast = scalar_expr()
+                take("AS")
+                v = take()
+                if not v.startswith("?"):
+                    raise ValueError(f"BIND ... AS needs a ?var, got {v!r}")
+                take(")")
+                els.append(("bind", v[1:], ast))
+            elif up == "GRAPH":
+                # GRAPH (?g | <iri>) { ... } — named-graph scope: every
+                # pattern inside binds/filters the quad table's
+                # provenance column (sparql_query's graph_col);
+                # sequence paths rewrite as usual and each step stays
+                # in the graph (per spec)
+                take()
+                gterm = _sparql_unquote(take())
+                if gterm.startswith("?__seq"):
                     raise ValueError(
-                        f"property path {p!r} inside GRAPH is outside "
-                        "the subset (plain and sequence paths only)"
+                        f"variable name {gterm!r} uses the reserved __seq prefix"
                     )
-                patterns.append((s, p, o, gterm))
-        else:
-            got = triple_block()
-            if not got:
-                raise ValueError(f"unexpected token {t!r} in WHERE group")
-            patterns.extend(got)
-        if peek() == ".":
-            take()
-    take("}")
+                els.append(("graph", gterm, nonempty(group(gterm), "GRAPH group")))
+            else:
+                got = triple_block(graph)
+                if not got:
+                    raise ValueError(f"unexpected token {t!r} in WHERE group")
+                els.append(("bgp", got))
+            if peek() == ".":
+                take()
+        take("}")
+        return els
+
+    take("WHERE")
+    where = group()
     order: list[tuple[str, bool]] = []
     limit = None
     offset = None
@@ -1299,12 +1287,8 @@ def parse_sparql(text: str) -> dict:
         else:
             raise ValueError(f"unexpected trailing token {t!r}")
     return {
-        "select": select, "distinct": distinct, "patterns": patterns,
-        "optional": optional, "optional_groups": optional_groups,
-        "filters": filters, "order": order,
-        "limit": limit, "offset": offset, "unions": unions, "minus": minus,
-        "values": values, "exists": exists, "binds": binds,
-        "subqueries": subqueries,
+        "select": select, "distinct": distinct, "where": where,
+        "order": order, "limit": limit, "offset": offset,
     }
 
 
@@ -1496,18 +1480,6 @@ def _compile_filter(f):
     return c.isNotNull() if positive else c.isNull()
 
 
-def _apply_filters(out: DataFrame, filters: list) -> DataFrame:
-    """FILTER compilation shared by the SELECT and aggregate paths.
-    Comparisons are string-typed (matching the triple table);
-    regex(?v, pat[, "i"]) compiles to Catalyst rlike (case folded into
-    the pattern for the "i" flag); bound/!bound become null tests —
-    the OPTIONAL-negation idiom; &&, ||, !() compile to Column
-    &, |, ~ (_compile_filter)."""
-    for f in filters:
-        out = out.filter(_compile_filter(f))
-    return out
-
-
 def _pattern_vars(patterns) -> set[str]:
     return {
         t[1:] for pat in patterns for t in pat
@@ -1515,433 +1487,304 @@ def _pattern_vars(patterns) -> set[str]:
     }
 
 
-def _compat_join(
+def _connected(patterns) -> list[list]:
+    """Split triple patterns into variable-connected parts (text order
+    kept within a part)."""
+    parts: list[tuple[set, list]] = []
+    for pat in patterns:
+        vars_, pats = _pattern_vars([pat]), [pat]
+        for part in [p for p in parts if p[0] & vars_]:
+            parts.remove(part)
+            vars_, pats = vars_ | part[0], part[1] + pats
+        parts.append((vars_, pats))
+    return [pats for _, pats in parts]
+
+
+def _triple_patterns(group):
+    """Every triple pattern of a WHERE tree in text order, nested groups
+    and subqueries included (a subquery's text is parsed again)."""
+    for el in group:
+        if el[0] == "bgp":
+            yield from el[1]
+        elif el[0] == "union":
+            for branch in el[1]:
+                yield from _triple_patterns(branch)
+        elif el[0] == "subquery":
+            yield from _triple_patterns(_parse_subselect(el[1])["where"])
+        elif el[0] in ("optional", "minus", "graph", "exists"):
+            yield from _triple_patterns(el[-1])
+
+
+def _join(
     sol: DataFrame,
+    sol_null: set[str],
     other: DataFrame,
-    shared: list[str],
-    sol_nullable: set[str],
-    other_nullable: set[str],
-    broadcast_other: bool = False,
+    other_null: set[str],
     how: str = "inner",
-) -> DataFrame:
-    """SPARQL-compatibility join: two solutions are compatible when
-    every shared variable is equal OR unbound on either side, and the
-    merged binding is the bound one.  Compiled as one join whose
-    condition mixes plain equalities (definitely-bound vars) with
-    eq-or-null clauses (nullable vars) — Catalyst still extracts the
-    equality conjuncts as hash-join keys, so as long as ONE shared var
-    is definitely bound this stays a hash join with a residual
-    condition; the all-keys-nullable case degenerates to a (broadcast)
-    nested loop, the honest price of unbound-matches-anything.
-    Merged bindings come back via coalesce.  ``how="left"`` gives the
-    spec's LeftJoin over the same compatibility condition (OPTIONAL
-    groups sharing a nullable var)."""
-    ren = other
-    for v in shared:
-        ren = ren.withColumnRenamed(v, f"__c_{v}")
-    if broadcast_other:
-        ren = F.broadcast(ren)
-    cond = None
-    for v in shared:
-        c = F.col(v) == F.col(f"__c_{v}")
-        if v in sol_nullable:
-            c = c | F.col(v).isNull()
-        if v in other_nullable:
-            c = c | F.col(f"__c_{v}").isNull()
-        cond = c if cond is None else cond & c
-    j = sol.join(ren, on=cond, how=how)
-    out_cols = [
-        F.coalesce(F.col(c), F.col(f"__c_{c}")).alias(c)
-        if c in shared and c in sol_nullable else F.col(c)
-        for c in sol.columns
-    ]
-    out_cols += [F.col(c) for c in other.columns if c not in shared]
-    return j.select(*out_cols)
+    what: str = "group",
+    broadcast: bool = False,
+) -> tuple[DataFrame, set[str]]:
+    """The one join of two solutions, for every group operator: ``how``
+    is "inner" (Join), "left" (LeftJoin), "minus" (Minus), or
+    "left_semi" / "left_anti" (FILTER EXISTS / NOT EXISTS).  ``*_null``
+    name each side's possibly-unbound (NULL) columns: OPTIONAL-bound,
+    UNION-padded or VALUES UNDEF.  Returns (solution, nullable).
+
+    With no nullable shared variable it is a plain hash equi-join on the
+    shared variables (MINUS and EXISTS against the other side's distinct
+    keys).  Otherwise it is the SPARQL compatibility join: solutions are
+    compatible when every shared variable is equal OR unbound on either
+    side, and the merged binding is the bound one (coalesce) — an
+    equi-join on NULL would silently drop the row.  The condition mixes
+    plain equalities with eq-or-null clauses; Catalyst still extracts
+    the equalities as hash-join keys, so as long as ONE shared var is
+    bound on both sides this stays a hash join with a residual
+    condition, and the all-keys-nullable case degenerates to a nested
+    loop, the honest price of unbound-matches-anything.  MINUS adds the
+    spec's dom(μ1) ∩ dom(μ2) ≠ ∅ condition (some shared var bound on
+    both sides); EXISTS takes the substitution reading, where an unbound
+    var is not substituted and matches anything.
+
+    No shared variable: MINUS removes nothing (disjoint domains, per
+    spec); EXISTS is uncorrelated, a 1-row existence scalar broadcast
+    onto every row; a ``broadcast`` side (VALUES, query-text sized) is
+    a cross join; any other join would be a cross product, a query bug
+    at KG scale, and is refused."""
+    shared = sorted(set(sol.columns) & set(other.columns))
+    if not shared:
+        if how == "minus":
+            return sol, sol_null
+        if how in ("left_semi", "left_anti"):
+            flag = (
+                other.select(F.lit(1).alias("_e"))
+                .limit(1)
+                .agg((F.count("_e") > 0).alias("_has"))
+            )
+            keep = F.col("_has") if how == "left_semi" else ~F.col("_has")
+            out = sol.crossJoin(F.broadcast(flag)).filter(keep).drop("_has")
+            return out, sol_null
+        if not broadcast:
+            raise ValueError(
+                f"{what} shares no variable with the rest of the group "
+                "(cross product)"
+            )
+        return sol.crossJoin(F.broadcast(other)), sol_null | other_null
+    if how in ("minus", "left_semi", "left_anti"):
+        other = other.select(*shared).dropDuplicates()
+    jhow = "left_anti" if how == "minus" else how
+    if not set(shared) & (sol_null | other_null):
+        out = sol.join(
+            F.broadcast(other) if broadcast else other, on=shared, how=jhow
+        )
+    else:
+        ren = other.select(*[
+            F.col(c).alias(f"__c_{c}") if c in shared else F.col(c)
+            for c in other.columns
+        ])
+        if broadcast:
+            ren = F.broadcast(ren)
+        cond = overlap = None
+        for v in shared:
+            c = F.col(v) == F.col(f"__c_{v}")
+            if v in sol_null:
+                c = c | F.col(v).isNull()
+            if v in other_null:
+                c = c | F.col(f"__c_{v}").isNull()
+            cond = c if cond is None else cond & c
+            o = F.col(v).isNotNull() & F.col(f"__c_{v}").isNotNull()
+            overlap = o if overlap is None else overlap | o
+        if how == "minus":
+            cond = cond & overlap
+        out = sol.join(ren, on=cond, how=jhow)
+        if jhow in ("inner", "left"):
+            out = out.select(
+                *[
+                    F.coalesce(F.col(c), F.col(f"__c_{c}")).alias(c)
+                    if c in shared and c in sol_null else F.col(c)
+                    for c in sol.columns
+                ],
+                *[F.col(c) for c in other.columns if c not in shared],
+            )
+    if how == "inner":
+        # a shared var is bound after the merge unless both sides may
+        # leave it unbound
+        merged = {v for v in shared if v not in sol_null or v not in other_null}
+        return out, (sol_null | other_null) - merged
+    if how == "left":
+        return out, sol_null | (set(other.columns) - set(shared))
+    return out, sol_null
 
 
-def _group_sol(triples, paths, pats, filts, where: str, **bgp_kwargs):
-    """Compile one group's (patterns, filters) to a solution.  Group
-    FILTERs are scoped to the group per the spec; with the additional
-    restriction that they reference only group-bound variables,
-    applying them inside the group is exact for every group form
-    (UNION branch / MINUS / EXISTS: the group evaluates on its own
-    bindings; outer-substitution filters are refused loudly)."""
-    gsol = bgp_query(triples, pats, path_relations=paths, **bgp_kwargs)
-    if filts:
-        own = _pattern_vars(pats)
-        for f in filts:
-            extra = _filter_vars(f) - own
-            if extra:
-                raise ValueError(
-                    f"FILTER inside {where} may only reference the "
-                    f"group's own variables (got ?{sorted(extra)[0]})"
+def _compile_group(
+    triples: DataFrame, paths: dict, group: list, where: str | None = None,
+    **bgp_kwargs,
+) -> tuple[DataFrame, set[str]]:
+    """Compile one WHERE group (a parse_sparql element list) to
+    (solution, nullable vars) by folding its elements in text order, as
+    spec §18.2.2 does: Join for triple patterns, UNION, GRAPH, VALUES
+    and subqueries, LeftJoin for OPTIONAL, Minus, Extend for BIND; the
+    group's FILTER and EXISTS elements apply at its end.  Nested groups
+    compile with this same function; ``where`` names one for the
+    filter-scope rule (None: a query's own WHERE).
+
+    Joins commute, so a run of inner-join elements that no OPTIONAL,
+    MINUS or BIND interrupts compiles as one bgp_query call over all the
+    run's triple patterns (selectivity-ordered equi-joins, broadcast
+    dimension legs), which the run's other elements then join in text
+    order.  After an earlier element has bound variables, the run's
+    patterns go in one call per variable-connected part, each joined to
+    the solution.  A UNION block NULL-pads its branches to the block's
+    variables and unions them; a VALUES block is an inline literal table,
+    broadcast.  Every join goes through _join.
+
+    A group FILTER sees only the group's own bindings (spec).  Inside a
+    nested group, a FILTER over a variable the group does not bind means
+    an outer substitution the spec does not do, so it is refused
+    loudly; in a query's own WHERE, using the value of a never-bound
+    variable is refused, and bound(?v) over one is false."""
+    sol: DataFrame | None = None
+    nullable: set[str] = set()
+    run: list = []  # the current run's triple patterns
+    rest: list = []  # ... and its other inner-join elements
+    tail: list = []  # FILTER and EXISTS, applied at the end
+
+    def fold(other, other_null, how="inner", what="group", broadcast=False):
+        nonlocal sol, nullable
+        if sol is None:
+            sol, nullable = other, set(other_null)
+        else:
+            sol, nullable = _join(
+                sol, nullable, other, other_null, how, what, broadcast
+            )
+
+    def sub(g, name):
+        return _compile_group(triples, paths, g, name, **bgp_kwargs)
+
+    def close_run():
+        if run:
+            for pats in [list(run)] if sol is None else _connected(run):
+                fold(
+                    bgp_query(triples, pats, path_relations=paths, **bgp_kwargs),
+                    set(), what=f"pattern group {pats}",
                 )
-        gsol = _apply_filters(gsol, filts)
-    return gsol
+        for el in rest:
+            if el[0] == "union":
+                parts = [sub(b, "a UNION branch") for b in el[1]]
+                cols = sorted(set().union(*(set(d.columns) for d, _ in parts)))
+                block, block_null = None, set()
+                for d, d_null in parts:
+                    block_null |= d_null | (set(cols) - set(d.columns))
+                    d = d.select(*[
+                        F.col(v) if v in d.columns
+                        else F.lit(None).cast("string").alias(v)
+                        for v in cols
+                    ])
+                    block = d if block is None else block.unionByName(d)
+                fold(block, block_null, what="UNION block")
+            elif el[0] == "graph":
+                fold(*sub(el[2], "GRAPH"), what="GRAPH group")
+            elif el[0] == "subquery":
+                fold(
+                    *_compile_subselect(triples, paths, el[1], **bgp_kwargs),
+                    what="subquery",
+                )
+            else:  # values
+                _, vars_, rows = el
+                vdf = triples.sparkSession.createDataFrame(
+                    rows, ", ".join(f"`{v}` string" for v in vars_)
+                )
+                undef = {
+                    v for i, v in enumerate(vars_)
+                    if any(r[i] is None for r in rows)
+                }
+                fold(vdf, undef, broadcast=True)
+        run.clear()
+        rest.clear()
+
+    for el in group:
+        kind = el[0]
+        if kind == "bgp":
+            run.extend(el[1])
+        elif kind in ("union", "graph", "subquery", "values"):
+            rest.append(el)
+        elif kind in ("filter", "exists"):
+            tail.append(el)
+        else:  # optional, minus, bind: their place in the text matters
+            close_run()
+            if kind == "bind":
+                _, name, ast = el
+                if sol is None:  # Extend of the empty solution: one row
+                    sol = triples.sparkSession.range(1).drop("id")
+                if name in sol.columns:
+                    raise ValueError(f"BIND target ?{name} is already bound")
+                # a var not bound at this point is unbound (NULL) in the
+                # expression — spec: error, so ?name stays unbound
+                unbound = _scalar_vars(ast) - set(sol.columns)
+                if unbound:
+                    sol = sol.withColumns(
+                        {v: F.lit(None).cast("string") for v in unbound}
+                    )
+                sol = sol.withColumn(name, _compile_scalar(ast)).drop(*unbound)
+                if _scalar_vars(ast) & (nullable | unbound):
+                    nullable.add(name)
+            elif sol is None:
+                raise ValueError(f"{kind.upper()} needs a pattern before it")
+            elif kind == "optional":
+                fold(*sub(el[1], "OPTIONAL"), how="left", what="OPTIONAL group")
+            else:
+                fold(*sub(el[1], "MINUS"), how="minus")
+    close_run()
+    if sol is None:
+        raise ValueError("WHERE group binds nothing")
+
+    for el in tail:
+        if el[0] == "exists":
+            sol, nullable = _join(
+                sol, nullable, *sub(el[2], "EXISTS"),
+                "left_semi" if el[1] else "left_anti",
+            )
+            continue
+        f = el[1]
+        unbound = _filter_vars(f) - set(sol.columns)
+        if unbound and where is not None:
+            raise ValueError(
+                f"FILTER inside {where} may only reference the group's "
+                f"own variables (got ?{sorted(unbound)[0]})"
+            )
+        used = _filter_vars(f, with_bound=False) & unbound
+        if used:
+            raise ValueError(
+                f"FILTER references variable ?{sorted(used)[0]} which is "
+                "never bound in the group"
+            )
+        if unbound:
+            # bound(?v) over a variable nothing binds is false (spec):
+            # it joins the solution as an all-NULL column for the test
+            sol = sol.withColumns(
+                {v: F.lit(None).cast("string") for v in unbound}
+            )
+        sol = sol.filter(_compile_filter(f)).drop(*unbound)
+    return sol, nullable
 
 
-def _solve_where(triples: DataFrame, q: dict, **bgp_kwargs) -> DataFrame:
-    """Compile a parsed WHERE group to a solution DataFrame (one column
-    per bound variable).  Group algebra, Spark-first:
-
-      * the required patterns compile through bgp_query (selectivity-
-        ordered equi-joins, broadcast dimension legs);
-      * each ``{A} UNION {B}`` block compiles every branch through
-        bgp_query; a leading block NULL-pads each branch to the block's
-        variable set and unions them (SPARQL union semantics).  A block
-        joining into an existing solution distributes the join over the
-        branches — Join(A ∪ B, C) = Join(A, C) ∪ Join(B, C) — so each
-        branch equi-joins on ITS OWN shared variables: a variable a
-        branch does not bind is simply not a join key there (SPARQL
-        compatibility: unbound matches anything) and the solution's
-        binding survives into the output instead of a NULL-padded row
-        being dropped by an equi-join on NULL.  The solution subtree is
-        referenced once per branch — persist upstream if it is
-        expensive (the suite legs pin the entity-triple table);
-      * each ``VALUES`` block becomes an inline literal DataFrame —
-        broadcast-joined (it is query text, definitionally tiny): the
-        parameterized batch-probe shape a warehouse consumer runs;
-      * each ``MINUS`` group compiles through bgp_query and is removed
-        with a left_anti join on the shared variables; disjoint
-        domains remove nothing (per the SPARQL MINUS spec);
-      * FILTERs last, as plain Catalyst predicates.
-
-    Property-path relations (`p+`, ...) are built once over ALL groups'
-    patterns before compilation (_path_relations)."""
-    all_pats = list(q["patterns"]) + list(q["optional"])
-    for g, _gf in q.get("optional_groups", ()):
-        all_pats.extend(g)
-    for branches in q["unions"]:
-        for b, _bf in branches:
-            all_pats.extend(b)
-    for m, _mf in q["minus"]:
-        all_pats.extend(m)
-    for _, e, _ef in q["exists"]:
-        all_pats.extend(e)
-    if any(len(pat) > 3 for pat in all_pats):
-        # GRAPH (quad) patterns: expose the caller-named provenance
-        # column under the reserved name the quad legs read
-        graph_col = bgp_kwargs.pop("graph_col", "doc_id")
+def _solve(
+    triples: DataFrame, q: dict, graph_col: str = "doc_id", **bgp_kwargs
+) -> tuple[DataFrame, set[str]]:
+    """A parsed query's WHERE tree → (solution, nullable vars).  Done
+    once per query, over every triple pattern the tree holds
+    (subqueries included): GRAPH quad patterns expose the caller-named
+    provenance column under the reserved name the quad legs read, and
+    every property path gets its leaf relation (_path_relations)."""
+    pats = list(_triple_patterns(q["where"]))
+    if any(len(pat) > 3 for pat in pats):
         if graph_col not in triples.columns:
             raise ValueError(
                 f"GRAPH needs a quad table with a {graph_col!r} column "
                 "(pass graph_col= to name the provenance column)"
             )
         triples = triples.withColumn(_GRAPH_COL, F.col(graph_col))
-    else:
-        bgp_kwargs.pop("graph_col", None)
-    paths = _path_relations(triples, all_pats)
-
-    # ``nullable`` tracks which solution columns may hold a NULL
-    # (OPTIONAL-bound, UNION-padded, or VALUES-UNDEF) — SPARQL says an
-    # unbound variable is compatible with ANYTHING, so a nullable
-    # column must never silently become an equi-join key (an equi-join
-    # on NULL drops the row).  Joins over nullable shared vars go
-    # through _compat_join; MINUS gets the spec's dom(μ)-overlap
-    # condition and EXISTS the substitution-compatibility condition
-    # (see their loops below).
-    sol: DataFrame | None = None
-    nullable: set[str] = set()
-    if q["patterns"]:
-        sol = bgp_query(triples, q["patterns"], optional=q["optional"],
-                        path_relations=paths, **bgp_kwargs)
-        nullable = _pattern_vars(q["optional"]) - _pattern_vars(q["patterns"])
-    elif q["optional"] or q.get("optional_groups"):
-        raise ValueError("OPTIONAL requires at least one required pattern")
-
-    for blk, gfilts in q.get("optional_groups", ()):
-        # multi-pattern OPTIONAL group: spec LeftJoin — the group's
-        # patterns join each other first (all-or-nothing binding), then
-        # left-join the solution; a solution row with no compatible
-        # group row survives with every group-only var unbound.  A
-        # nullable shared var takes the compat form of the left join
-        # (unbound matches anything, merged binding via coalesce).
-        # Group FILTERs are the LeftJoin condition; restricted to the
-        # group's own variables, applying them INSIDE the group before
-        # the left join is exactly the spec's LeftJoin(A, Filter(expr,
-        # B)) = LeftJoin(A, B, expr) equivalence (expr sees only B's
-        # bindings, and on shared vars the equi/compat join makes the
-        # merged binding equal B's).  A filter over an outer-only
-        # variable is refused loudly.
-        gsol = bgp_query(triples, blk, path_relations=paths, **bgp_kwargs)
-        if gfilts:
-            gvars_own = _pattern_vars(blk)
-            for gf in gfilts:
-                outer_only = _filter_vars(gf) - gvars_own
-                if outer_only:
-                    raise ValueError(
-                        "FILTER inside OPTIONAL may only reference the "
-                        f"group's own variables (got ?{sorted(outer_only)[0]})"
-                    )
-            gsol = _apply_filters(gsol, gfilts)
-        gvars = set(gsol.columns)
-        shared = sorted(set(sol.columns) & gvars)
-        if not shared:
-            raise ValueError(
-                f"OPTIONAL group {blk} shares no variable with the "
-                "required group — its left join would be a cross product"
-            )
-        if set(shared) & nullable:
-            sol = _compat_join(
-                sol, gsol, shared, nullable, set(), how="left"
-            )
-        else:
-            sol = sol.join(gsol, on=shared, how="left")
-        nullable |= gvars - set(shared)
-
-    for branches in q["unions"]:
-        branch_vars = [_pattern_vars(bp) for bp, _bf in branches]
-        block_vars = set().union(*branch_vars)
-        bound_in_all = set.intersection(*branch_vars)
-        if sol is None:
-            padded = []
-            for bp, bf in branches:
-                bsol = _group_sol(
-                    triples, paths, bp, bf, "a UNION branch", **bgp_kwargs
-                )
-                padded.append(
-                    bsol.select(*[
-                        F.col(v) if v in bsol.columns
-                        else F.lit(None).cast("string").alias(v)
-                        for v in sorted(block_vars)
-                    ])
-                )
-            sol = padded[0]
-            for p in padded[1:]:
-                sol = sol.unionByName(p)
-            nullable = block_vars - bound_in_all
-            continue
-        join_vars = set(sol.columns) & block_vars
-        if not join_vars:
-            raise ValueError(
-                "UNION block shares no variable with the rest of the "
-                "group (cross product)"
-            )
-        if join_vars <= bound_in_all and not (join_vars & nullable):
-            # Fast path: every branch binds every join variable AND no
-            # join variable is solution-side nullable, so no join key
-            # can be a NULL on either side — pad-then-union-then-join
-            # is exact AND joins the solution subtree ONCE instead of
-            # once per branch.
-            padded = []
-            for bp, bf in branches:
-                bsol = _group_sol(
-                    triples, paths, bp, bf, "a UNION branch", **bgp_kwargs
-                )
-                padded.append(
-                    bsol.select(*[
-                        F.col(v) if v in bsol.columns
-                        else F.lit(None).cast("string").alias(v)
-                        for v in sorted(block_vars)
-                    ])
-                )
-            block = padded[0]
-            for p in padded[1:]:
-                block = block.unionByName(p)
-            sol = sol.join(block, on=sorted(join_vars))
-            nullable = (nullable | (block_vars - bound_in_all)) - bound_in_all
-            continue
-        # General path — Join(A ∪ B, C) = Join(A, C) ∪ Join(B, C):
-        # per-branch joins on the branch's own bound variables (a var
-        # a branch does not bind is not a join key there — SPARQL
-        # compatibility), outputs padded to the combined set.  A
-        # shared var that is solution-side nullable joins
-        # compatibility-style (_compat_join: unbound matches anything,
-        # merged binding via coalesce) instead of dropping NULL rows.
-        out_vars = sorted(set(sol.columns) | block_vars)
-        parts = []
-        for (bp, bf), bvars in zip(branches, branch_vars):
-            bsol = _group_sol(
-                triples, paths, bp, bf, "a UNION branch", **bgp_kwargs
-            )
-            shared = sorted(set(sol.columns) & set(bsol.columns))
-            if not shared:
-                raise ValueError(
-                    f"UNION branch {bp} shares no variable with the rest "
-                    "of the group (cross product)"
-                )
-            if set(shared) & nullable:
-                j = _compat_join(sol, bsol, shared, nullable, set())
-            else:
-                j = sol.join(bsol, on=shared)
-            parts.append(
-                j.select(*[
-                    F.col(v) if v in j.columns
-                    else F.lit(None).cast("string").alias(v)
-                    for v in out_vars
-                ])
-            )
-        sol = parts[0]
-        for p in parts[1:]:
-            sol = sol.unionByName(p)
-        nullable = (nullable | (block_vars - bound_in_all)) - bound_in_all
-
-    for sub_text in q.get("subqueries", ()):
-        # { SELECT ... } compiles independently (its own parse, path
-        # relations, projection — inner vars are hidden) and joins the
-        # group on shared visible variables: plain hash equi-join when
-        # every shared var is definitely bound on both sides,
-        # _compat_join (unbound matches anything) otherwise.
-        sub_df, sub_null = _compile_subselect(triples, sub_text, **bgp_kwargs)
-        if sol is None:
-            sol = sub_df
-            nullable = set(sub_null)
-            continue
-        shared = sorted(set(sol.columns) & set(sub_df.columns))
-        if not shared:
-            raise ValueError(
-                "subquery shares no variable with the rest of the group "
-                "(cross product)"
-            )
-        if set(shared) & (nullable | sub_null):
-            sol = _compat_join(sol, sub_df, shared, nullable, sub_null)
-        else:
-            sol = sol.join(sub_df, on=shared)
-        # a compat-merged shared var stays nullable only if BOTH sides
-        # could be unbound; everything else keeps its side's status
-        merged_bound = {
-            v for v in shared if v not in nullable or v not in sub_null
-        }
-        nullable = (nullable | sub_null) - merged_bound
-
-    for vars_, rows in q["values"]:
-        spark = triples.sparkSession
-        vdf = spark.createDataFrame(
-            rows, ", ".join(f"`{v}` string" for v in vars_)
-        )
-        if sol is None:
-            sol = vdf
-            continue
-        shared = [v for v in vars_ if v in sol.columns]
-        new = [v for v in vars_ if v not in sol.columns]
-        undef_vars = {
-            v for i, v in enumerate(vars_) if any(r[i] is None for r in rows)
-        }
-        if not shared:
-            sol = sol.crossJoin(F.broadcast(vdf))
-        elif not (undef_vars & set(shared)) and not (set(shared) & nullable):
-            sol = sol.join(F.broadcast(vdf), on=shared)
-        else:
-            # UNDEF in a shared var, or a solution-side nullable
-            # shared var: SPARQL compatibility — an unbound binding
-            # (either side) matches anything, and the merged binding
-            # is the bound one.  The values table is query text
-            # (tiny), so the theta-join broadcasts.
-            sol = _compat_join(
-                sol, vdf, shared, nullable, undef_vars, broadcast_other=True
-            )
-        # a shared var the VALUES table always binds is now definitely
-        # bound (compat merge coalesces the solution NULL away); new
-        # vars with an UNDEF row join the nullable set
-        for v in shared:
-            if v not in undef_vars:
-                nullable.discard(v)
-        nullable |= undef_vars & set(new)
-
-    if sol is None:
-        raise ValueError("WHERE group binds nothing")
-
-    for mpats, mfilts in q["minus"]:
-        msol = _group_sol(triples, paths, mpats, mfilts, "MINUS", **bgp_kwargs)
-        shared = sorted(set(sol.columns) & set(msol.columns))
-        null_shared = sorted(set(shared) & nullable)
-        if shared and null_shared:
-            # Unbound-domain MINUS, exactly per spec: drop μ1 iff some
-            # μ2 is compatible (equal on every shared var BOUND in μ1 —
-            # pattern-solution μ2 vars are always bound) AND dom(μ1) ∩
-            # dom(μ2) ≠ ∅ (at least one shared var bound in μ1; a row
-            # with every shared var unbound survives).  The equality
-            # conjuncts on definitely-bound vars remain hash-join keys;
-            # the all-shared-nullable case degenerates to a nested
-            # loop — the honest price of unbound-matches-anything.
-            ren = msol.select(
-                *[F.col(v).alias(f"__m_{v}") for v in shared]
-            ).dropDuplicates()
-            compat = None
-            for v in shared:
-                c = F.col(v) == F.col(f"__m_{v}")
-                if v in nullable:
-                    c = c | F.col(v).isNull()
-                compat = c if compat is None else compat & c
-            overlap = None
-            for v in shared:
-                c = F.col(v).isNotNull()
-                overlap = c if overlap is None else overlap | c
-            sol = sol.join(ren, on=compat & overlap, how="left_anti")
-        elif shared:  # disjoint domains: MINUS removes nothing (per spec)
-            sol = sol.join(
-                msol.select(*shared).dropDuplicates(), on=shared,
-                how="left_anti",
-            )
-
-    for positive, epats, efilts in q["exists"]:
-        esol = _group_sol(triples, paths, epats, efilts, "EXISTS", **bgp_kwargs)
-        shared = sorted(set(sol.columns) & set(esol.columns))
-        null_shared = sorted(set(shared) & nullable)
-        if shared and null_shared:
-            # Substitution semantics with possibly-unbound vars: an
-            # unbound shared var is NOT substituted, stays a free
-            # variable inside the EXISTS group, and matches anything —
-            # a compat semi/anti join (equality required only where the
-            # solution side is bound).  Same join-key note as MINUS.
-            ren = esol.select(
-                *[F.col(v).alias(f"__e_{v}") for v in shared]
-            ).dropDuplicates()
-            compat = None
-            for v in shared:
-                c = F.col(v) == F.col(f"__e_{v}")
-                if v in nullable:
-                    c = c | F.col(v).isNull()
-                compat = c if compat is None else compat & c
-            sol = sol.join(
-                ren, on=compat, how="left_semi" if positive else "left_anti"
-            )
-        elif shared:
-            # correlated: substitution over the shared variables is an
-            # exact semi/anti hash join on NULL-free solutions
-            sol = sol.join(
-                esol.select(*shared).dropDuplicates(), on=shared,
-                how="left_semi" if positive else "left_anti",
-            )
-        else:
-            # uncorrelated: keep everything iff the group has (no)
-            # solutions — a 1-row existence scalar, broadcast
-            flag = (
-                esol.select(F.lit(1).alias("_e"))
-                .limit(1)
-                .agg((F.count("_e") > 0).alias("_has"))
-            )
-            sol = (
-                sol.crossJoin(F.broadcast(flag))
-                .filter(F.col("_has") if positive else ~F.col("_has"))
-                .drop("_has")
-            )
-
-    for name, ast in q.get("binds", ()):
-        if name in sol.columns:
-            raise ValueError(f"BIND target ?{name} is already bound")
-        sol = sol.withColumn(name, _compile_scalar(ast))
-        if _scalar_vars(ast) & nullable:
-            # an expression over a possibly-unbound var may itself be
-            # NULL (SPARQL: error → unbound) — conservative is safe
-            nullable.add(name)
-
-    for f in q["filters"]:
-        missing = _filter_vars(f, with_bound=False) - set(sol.columns)
-        if missing:
-            # a WHERE-level FILTER using the value of a never-bound
-            # variable is a query bug every time (spec: constant error
-            # -> empty result); loud beats silently empty at 10^12 rows
-            raise ValueError(
-                f"FILTER references variable ?{sorted(missing)[0]} "
-                "which is never bound in the group"
-            )
-    unbound = set().union(*map(_filter_vars, q["filters"])) - set(sol.columns)
-    if unbound:
-        # bound(?v) over a variable nothing binds is simply false (spec):
-        # such a variable joins the solution as an all-NULL column
-        sol = sol.withColumns({v: F.lit(None).cast("string") for v in unbound})
-    return _apply_filters(sol, q["filters"]).drop(*unbound), nullable
+    paths = _path_relations(triples, pats)
+    return _compile_group(triples, paths, q["where"], **bgp_kwargs)
 
 
 def _scalar_vars(ast) -> set[str]:
@@ -2033,25 +1876,29 @@ def _finish_select(
 
 
 def _compile_subselect(
-    triples: DataFrame, text: str, **bgp_kwargs
+    triples: DataFrame, paths: dict, text: str, **bgp_kwargs
 ) -> tuple[DataFrame, set[str]]:
-    """Compile a { SELECT ... } subquery to (solution, nullable-vars).
-    Routes to the aggregate front-end when the SELECT list carries an
-    (AGG(...) AS ?x); otherwise the ordinary SELECT pipeline."""
-    if _SELECT_AGG.search(text):
-        return _sparql_aggregate_impl(triples, text, **bgp_kwargs)
-    q = parse_sparql(text)
-    sol, nullable = _solve_where(triples, q, **bgp_kwargs)
-    return _finish_select(sol, q, nullable)
+    """Compile a { SELECT ... } subquery to (solution, nullable vars)
+    over the enclosing query's prepared table and path relations: its
+    WHERE tree, then the aggregate tail when the SELECT list carries an
+    (AGG(...) AS ?x), else the plain SELECT tail; inner variables are
+    hidden by the projection."""
+    q = _parse_subselect(text)
+    sol, nullable = _compile_group(triples, paths, q["where"], **bgp_kwargs)
+    return (_aggregate if "aggregate" in q else _finish_select)(sol, q, nullable)
+
+
+def _parse_subselect(text: str) -> dict:
+    return _parse_aggregate(text) if _SELECT_AGG.search(text) else parse_sparql(text)
 
 
 def sparql_query(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     """Run a SPARQL-subset query string against a (subj, pred, obj[,
-    obj_type]) triple table.  parse_sparql → property-path relations →
-    group algebra (_solve_where: BGP joins + UNION/VALUES/MINUS/
-    subqueries + FILTER) → projection/ORDER/LIMIT as plain Catalyst
-    ops.  ORDER BY is required for a deterministic LIMIT and that
-    contract is the caller's (same as SQL).
+    obj_type]) triple table.  parse_sparql → the WHERE algebra tree →
+    property-path relations → _compile_group (one recursive fold, text
+    order) → projection/ORDER/LIMIT as plain Catalyst ops.  ORDER BY is
+    required for a deterministic LIMIT and that contract is the
+    caller's (same as SQL).
 
     ``GRAPH (?g | <iri>) { ... }`` runs the block against the quad
     reading of the table: every pattern additionally binds/filters the
@@ -2067,8 +1914,8 @@ def sparql_query(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     it twice.  Use DISTINCT (or COUNT(DISTINCT ...)) for the merged
     default graph's set semantics."""
     q = parse_sparql(text)
-    out, nullable = _solve_where(triples, q, **bgp_kwargs)
-    return _finish_select(out, q, nullable)[0]
+    sol, nullable = _solve(triples, q, **bgp_kwargs)
+    return _finish_select(sol, q, nullable)[0]
 
 
 # SPARQL aggregates + CONSTRUCT + ASK + DESCRIBE — the rest of the
@@ -2141,35 +1988,11 @@ def _having_numeric(f):
     return f
 
 
-def _sparql_aggregate_impl(
-    triples: DataFrame, text: str, **bgp_kwargs
-) -> tuple[DataFrame, set[str]]:
-    """SPARQL GROUP BY aggregation over a triple table.  Grammar:
-
-      SELECT ?g ... (AGG(expr|?v|*) AS ?alias) ... WHERE { ... } GROUP BY ?g ...
-      [HAVING (bool-expr over aliases/group vars — the full FILTER
-       grammar: && || !(), scalar comparisons, string tests, IN;
-       unquoted numeric literals compare as double)]
-      [ORDER BY ...] [LIMIT n]
-
-    AGG ∈ COUNT|SUM|MIN|MAX|AVG|GROUP_CONCAT|SAMPLE; the argument may
-    be any BIND-grammar scalar expression (SUM(STRLEN(?n)),
-    AVG(?a + 1) — parsed by the same scalar grammar, compiled to one
-    Catalyst column inside the hash aggregate);
-    COUNT(DISTINCT ?v) and GROUP_CONCAT(DISTINCT ?v) supported —
-    GROUP_CONCAT emits sorted with the spec-default ' ' separator or
-    an explicit ``GROUP_CONCAT(?v; SEPARATOR="...")``
-    (deterministic under any partitioning); SAMPLE is MIN (any
-    value is conformant, MIN is the deterministic one).  The WHERE
-    group runs through the full group algebra, so GRAPH blocks
-    compose with aggregation (pass graph_col= for a non-doc_id
-    provenance column).  SUM/AVG
-    cast the (string-typed) binding to double — the caller owns numeric
-    determinism, same as SQL.  HAVING compares aggregate ALIASES
-    (unquoted numeric literals compare as doubles, anything else as
-    strings) and compiles to a post-aggregate Catalyst filter.  The WHERE group
-    reuses the full group algebra (UNION/MINUS/VALUES via _solve_where)
-    plus the subset grammar (OPTIONAL/FILTER/property paths)."""
+def _parse_aggregate(text: str) -> dict:
+    """parse_sparql for an aggregate SELECT (grammar: sparql_aggregate):
+    the (AGG(...) AS ?x) items, GROUP BY and HAVING are lifted out of the
+    text first and ride in ``q["aggregate"]`` as (aggs, having_ast,
+    group_vars)."""
     aggs = []
 
     def lift(m):
@@ -2203,7 +2026,7 @@ def _sparql_aggregate_impl(
         hq = parse_sparql(
             "SELECT ?__h WHERE { FILTER (" + mh.group(1) + ") }"
         )
-        having_ast = _having_numeric(hq["filters"][0])
+        having_ast = _having_numeric(hq["where"][0][1])
     mg = re.search(r"GROUP\s+BY((?:\s+\?[A-Za-z_]\w*)+)", lifted, re.IGNORECASE)
     if mg:
         lifted = lifted[: mg.start()] + " " + lifted[mg.end():]
@@ -2215,7 +2038,17 @@ def _sparql_aggregate_impl(
                     r"\g<1>* ", lifted)
 
     q = parse_sparql(lifted)
-    out, sub_null = _solve_where(triples, q, **bgp_kwargs)
+    q["aggregate"] = (aggs, having_ast, group_vars)
+    return q
+
+
+def _aggregate(
+    out: DataFrame, q: dict, sub_null: set[str]
+) -> tuple[DataFrame, set[str]]:
+    """Aggregate tail over a solved WHERE group: GROUP BY + aggregates
+    (one Catalyst hash aggregate), HAVING, ORDER BY, OFFSET, LIMIT —
+    plus the output's nullable set."""
+    aggs, having_ast, group_vars = q["aggregate"]
     exprs = []
     for fn, dist, arg, alias, sep in aggs:
         col = _compile_scalar(arg) if arg is not None else F.lit(1)
@@ -2271,9 +2104,33 @@ def _sparql_aggregate_impl(
 
 
 def sparql_aggregate(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
-    """Public aggregate front-end — see _sparql_aggregate_impl for the
-    grammar; returns just the result DataFrame."""
-    return _sparql_aggregate_impl(triples, text, **bgp_kwargs)[0]
+    """SPARQL GROUP BY aggregation over a triple table.  Grammar:
+
+      SELECT ?g ... (AGG(expr|?v|*) AS ?alias) ... WHERE { ... } GROUP BY ?g ...
+      [HAVING (bool-expr over aliases/group vars — the full FILTER
+       grammar: && || !(), scalar comparisons, string tests, IN;
+       unquoted numeric literals compare as double)]
+      [ORDER BY ...] [LIMIT n]
+
+    AGG ∈ COUNT|SUM|MIN|MAX|AVG|GROUP_CONCAT|SAMPLE; the argument may
+    be any BIND-grammar scalar expression (SUM(STRLEN(?n)),
+    AVG(?a + 1) — parsed by the same scalar grammar, compiled to one
+    Catalyst column inside the hash aggregate);
+    COUNT(DISTINCT ?v) and GROUP_CONCAT(DISTINCT ?v) supported —
+    GROUP_CONCAT emits sorted with the spec-default ' ' separator or
+    an explicit ``GROUP_CONCAT(?v; SEPARATOR="...")``
+    (deterministic under any partitioning); SAMPLE is MIN (any
+    value is conformant, MIN is the deterministic one).  The WHERE
+    group runs through the full group algebra, so GRAPH blocks
+    compose with aggregation (pass graph_col= for a non-doc_id
+    provenance column).  SUM/AVG
+    cast the (string-typed) binding to double — the caller owns numeric
+    determinism, same as SQL.  HAVING compares aggregate ALIASES
+    (unquoted numeric literals compare as doubles, anything else as
+    strings) and compiles to a post-aggregate Catalyst filter."""
+    q = _parse_aggregate(text)
+    sol, nullable = _solve(triples, q, **bgp_kwargs)
+    return _aggregate(sol, q, nullable)[0]
 
 
 def sparql_construct(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
@@ -2282,9 +2139,10 @@ def sparql_construct(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     obj_type) KG (RDF set semantics — deduplicated).  Template terms
     may be variables or constants; a variable bound to NULL (via
     OPTIONAL) drops that instantiation row, per spec.  obj_type is
-    'node' when the template object is a variable that was bound from
-    a subject position or an explicit <iri> constant, else 'literal' —
-    documented approximation over an untyped triple table."""
+    'node' when the template object is a variable that is the subject of
+    some WHERE triple pattern (nested groups and subqueries included),
+    else 'literal' — documented approximation over an untyped triple
+    table.  The WHERE group is parsed once."""
     mw = re.match(
         r"\s*CONSTRUCT\s+WHERE\s*\{(.*)\}\s*([^{}]*)$", text,
         re.IGNORECASE | re.DOTALL,
@@ -2319,24 +2177,18 @@ def sparql_construct(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
             cur = []
     if cur or not tmpl:
         raise ValueError("CONSTRUCT template must be whole triples")
-    sols = sparql_query(triples, "SELECT * " + m.group(2), **bgp_kwargs)
-
-    subj_vars = {p[0][1:] for p in tmpl if p[0].startswith("?")}
-    where_subj_vars = set()
     wq = parse_sparql("SELECT * " + m.group(2))
-    union_pats = [
-        p for block in wq["unions"] for bp, _bf in block for p in bp
-    ]
-    group_pats = [p for g, _gf in wq.get("optional_groups", ()) for p in g]
-    for pat in (*wq["patterns"], *wq["optional"], *union_pats, *group_pats):
-        # pat may be a 4-tuple (GRAPH quad); the subject is pat[0]
-        if pat[0].startswith("?"):
-            where_subj_vars.add(pat[0][1:])
+    sol, nullable = _solve(triples, wq, **bgp_kwargs)
+    sols = _finish_select(sol, wq, nullable)[0]
+    subj_vars = {
+        pat[0][1:] for pat in _triple_patterns(wq["where"])
+        if pat[0].startswith("?")
+    }
 
     def term(t, pos):
         if t.startswith("?"):
             c = F.col(t[1:])
-            is_node = t[1:] in where_subj_vars
+            is_node = t[1:] in subj_vars
         else:
             c, is_node = F.lit(t), False
         if pos == "obj":
@@ -2376,7 +2228,7 @@ def sparql_ask(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     if not m:
         raise ValueError("expected ASK [WHERE] { ... }")
     q = parse_sparql("SELECT * WHERE " + m.group(1))
-    sol, _ = _solve_where(triples, q, **bgp_kwargs)
+    sol, _ = _solve(triples, q, **bgp_kwargs)
     return (
         sol.select(F.lit(1).alias("_one"))
         .limit(1)
@@ -2410,7 +2262,7 @@ def sparql_describe(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     res: DataFrame | None = None
     if m.group(2):
         q = parse_sparql("SELECT * " + m.group(2))
-        sol, _ = _solve_where(triples, q, **bgp_kwargs)
+        sol, _ = _solve(triples, q, **bgp_kwargs)
         missing = [v for v in vars_ if v not in sol.columns]
         if missing:
             raise ValueError(f"DESCRIBE vars not bound by WHERE: {missing}")

@@ -467,11 +467,13 @@ def test_parse_sparql_structure():
         " ORDER BY ?d DESC(?n) LIMIT 5"
     )
     assert q["select"] == ["d", "n"] and q["distinct"]
-    assert q["patterns"] == [("?d", "mentions", "?e"), ("?e", "@type", "Person")]
-    assert q["optional"] == [("?e", "name", "?n")]
-    assert q["filters"] == [("cmp", "?d", "!=", "doc:9", (False, True))]
+    # the WHERE group is an ordered algebra element list, in text order
+    assert q["where"] == [
+        ("bgp", [("?d", "mentions", "?e"), ("?e", "@type", "Person")]),
+        ("optional", [("bgp", [("?e", "name", "?n")])]),
+        ("filter", ("cmp", "?d", "!=", "doc:9", (False, True))),
+    ]
     assert q["order"] == [("d", True), ("n", False)] and q["limit"] == 5
-    assert q["unions"] == [] and q["minus"] == [] and q["values"] == []
 
 
 def test_parse_sparql_union_minus_values():
@@ -484,18 +486,17 @@ def test_parse_sparql_union_minus_values():
         'FILTER (regex(?e, "^ent:", "i")) FILTER (bound(?d)) '
         "FILTER (!bound(?x)) }"
     )
-    assert q["unions"] == [
-        [([("?d", "mentions", "?e")], []), ([("?d", "locations", "?e")], [])]
-    ]
-    assert q["minus"] == [([("?d", "about", "?x")], [])]
-    assert q["values"] == [
-        (["t"], [("Person",), (None,), ("two words",)]),
-        (["a", "b"], [("x", "y"), (None, "z")]),
-    ]
-    assert q["filters"] == [
-        ("regex", "e", "^ent:", "i"),
-        ("bound", "d", True),
-        ("bound", "x", False),
+    assert q["where"] == [
+        ("union", [
+            [("bgp", [("?d", "mentions", "?e")])],
+            [("bgp", [("?d", "locations", "?e")])],
+        ]),
+        ("minus", [("bgp", [("?d", "about", "?x")])]),
+        ("values", ["t"], [("Person",), (None,), ("two words",)]),
+        ("values", ["a", "b"], [("x", "y"), (None, "z")]),
+        ("filter", ("regex", "e", "^ent:", "i")),
+        ("filter", ("bound", "d", True)),
+        ("filter", ("bound", "x", False)),
     ]
 
 
@@ -1298,7 +1299,7 @@ def test_sparql_subquery_select(spark):
 def test_sparql_subquery_loud_failures(spark):
     import pytest as _pt
 
-    from kgc.graph import parse_sparql, sparql_query
+    from kgc.graph import sparql_query
 
     kg = _kg(spark)
     # no shared variable with the rest of the group
@@ -1308,12 +1309,15 @@ def test_sparql_subquery_loud_failures(spark):
             "SELECT ?x WHERE { ?x name ?n . "
             "{ SELECT ?q WHERE { ?q mentions ?z } } }",
         )
-    # subquery inside a UNION branch is out of subset
-    with _pt.raises(ValueError, match="UNION"):
-        parse_sparql(
-            "SELECT ?x WHERE { { SELECT ?x WHERE { ?x name ?n } } "
-            "UNION { ?x events ?y } }"
-        )
+    # a subquery is a whole UNION branch (spec: a group), no longer
+    # refused
+    kg = _algebra_kg(spark)
+    rows = sparql_query(
+        kg,
+        "SELECT ?e WHERE { { SELECT ?e WHERE { ?e name ?n } } "
+        "UNION { ?e alias ?n } }",
+    ).collect()
+    assert sorted(r.e for r in rows) == ["a1", "e1", "e2"]
 
 
 def test_sparql_subquery_nullable_compat(spark):
@@ -1733,7 +1737,9 @@ def test_sparql_graph_sequence_path_stays_in_graph(spark):
     from kgc.graph import parse_sparql, sparql_query
 
     q = parse_sparql("SELECT ?g ?n WHERE { GRAPH ?g { ?d mentions/name ?n } }")
-    assert all(len(p) == 4 and p[3] == "?g" for p in q["patterns"])
+    [(kind, gterm, [(bgp, pats)])] = q["where"]
+    assert (kind, gterm, bgp, len(pats)) == ("graph", "?g", "bgp", 2)
+    assert all(len(p) == 4 and p[3] == "?g" for p in pats)
     rows = sparql_query(
         _quads(spark),
         "SELECT DISTINCT ?g ?n WHERE { GRAPH ?g { ?d mentions/name ?n } } "
@@ -2279,3 +2285,187 @@ def test_sparql_filter_never_bound_var_loud(spark):
                 _kg(spark),
                 f"SELECT ?e WHERE {{ ?e name ?n FILTER ({f}) }}",
             )
+
+
+# ---- WHERE groups as one ordered algebra tree (spec §18.2.2) ----
+
+
+def _algebra_kg(spark):
+    rows = [
+        ("e1", "name", "ann"), ("e2", "name", "bob"), ("a1", "alias", "ann"),
+        ("e1", "tag", "x"), ("e2", "tag", "y"), ("t1", "kind", "x"),
+        ("d1", "mentions", "e1"),
+    ]
+    return spark.createDataFrame(
+        [r + ("literal",) for r in rows],
+        "subj string, pred string, obj string, obj_type string",
+    )
+
+
+def test_sparql_group_folds_in_text_order(spark):
+    """BIND, MINUS, VALUES and FILTER [NOT] EXISTS act where the query
+    text puts them: a MINUS or EXISTS after a BIND sees the BIND
+    variable, a VALUES after a MINUS does not shield rows from it, and a
+    BIND before a pattern feeds its variable into that pattern's join."""
+    from kgc.graph import sparql_query
+
+    kg = _algebra_kg(spark)
+
+    def es(text):
+        return sorted(r.e for r in sparql_query(kg, text).collect())
+
+    assert es(
+        "SELECT ?e WHERE { ?e name ?n . BIND (?n AS ?m) "
+        "MINUS { ?z alias ?m } }"
+    ) == ["e2"]
+    assert es(
+        "SELECT ?e WHERE { ?e name ?n . BIND (?n AS ?m) "
+        "FILTER NOT EXISTS { ?z alias ?m } }"
+    ) == ["e2"]
+    assert es(
+        "SELECT ?e WHERE { ?e tag ?t . MINUS { ?e name ?k } "
+        "VALUES ?k { zzz } }"
+    ) == []
+    assert es('SELECT ?e WHERE { BIND ("x" AS ?t) ?e tag ?t }') == ["e1"]
+
+
+def test_sparql_optional_composes_with_union(spark):
+    """OPTIONAL after a UNION left-joins the union's solutions; an
+    OPTIONAL inside a UNION branch stays inside that branch."""
+    from kgc.graph import sparql_query
+
+    kg = _algebra_kg(spark)
+    rows = sparql_query(
+        kg,
+        "SELECT ?e ?t ?q WHERE { ?e name ?n . { ?e tag ?t } UNION "
+        "{ ?e alias ?t } OPTIONAL { ?q kind ?t } }",
+    ).collect()
+    assert sorted(tuple(r) for r in rows) == [
+        ("e1", "x", "t1"), ("e2", "y", None),
+    ]
+    rows = sparql_query(
+        kg,
+        "SELECT ?e ?t WHERE { { ?e name ?n OPTIONAL { ?e tag ?t } } "
+        "UNION { ?e alias ?n } }",
+    ).collect()
+    assert sorted(tuple(r) for r in rows) == [
+        ("a1", None), ("e1", "x"), ("e2", "y"),
+    ]
+    # patterns after an OPTIONAL that connect only through variables
+    # bound before it join the solution one connected part at a time
+    rows = sparql_query(
+        kg,
+        "SELECT ?e ?t ?a WHERE { ?e name ?n OPTIONAL { ?q kind ?n } "
+        "?e tag ?t . ?a alias ?n }",
+    ).collect()
+    assert [tuple(r) for r in rows] == [("e1", "x", "a1")]
+
+
+def test_sparql_graph_nests_in_groups(spark):
+    """GRAPH is a group like any other: it nests inside UNION branches
+    and OPTIONAL groups.  A subquery inside GRAPH stays refused (it
+    would silently read the default graph)."""
+    import pytest as _pt
+
+    from kgc.graph import sparql_query
+
+    quads = _quads(spark)
+    rows = sparql_query(
+        quads,
+        "SELECT DISTINCT ?g ?e WHERE { { GRAPH ?g { ?d events ?e } } "
+        'UNION { GRAPH ?g { ?e name "Ada" } } }',
+    ).collect()
+    assert sorted(tuple(r) for r in rows) == [
+        ("d1", "ent:1"), ("d2", "ent:1"), ("d2", "ent:3"),
+    ]
+    rows = sparql_query(
+        quads,
+        "SELECT DISTINCT ?d ?g WHERE { ?d mentions ?e "
+        "OPTIONAL { GRAPH ?g { ?d events ?x } } }",
+    ).collect()
+    assert sorted(tuple(r) for r in rows) == [("doc:1", None), ("doc:2", "d2")]
+    with _pt.raises(ValueError, match="inside GRAPH"):
+        sparql_query(
+            quads,
+            "SELECT ?e WHERE { GRAPH ?g { { SELECT ?e WHERE { ?e name ?n } } } }",
+        )
+
+
+def test_sparql_construct_types_subquery_subjects_as_nodes(spark):
+    """CONSTRUCT types an object variable 'node' when it is a pattern
+    subject anywhere in the WHERE tree, a subquery's patterns included
+    — the same triple as without the subquery."""
+    from kgc.graph import sparql_construct
+
+    kg = _algebra_kg(spark)
+    for where in (
+        "?d mentions ?e2 . { SELECT ?d ?e WHERE { ?d mentions ?e . "
+        "?e name ?n } }",
+        "?d mentions ?e . ?e name ?n",
+    ):
+        rows = sparql_construct(
+            kg, f"CONSTRUCT {{ ?d rel ?e }} WHERE {{ {where} }}"
+        ).collect()
+        assert [tuple(r) for r in rows] == [("d1", "rel", "e1", "node")]
+
+
+def test_parse_sparql_deep_nesting_is_value_error():
+    """Nesting deeper than the recursive-descent parser can follow is a
+    loud ValueError, like any other query outside the subset."""
+    import sys
+
+    import pytest as _pt
+
+    from kgc.graph import parse_sparql
+
+    # 2,000 at the interpreter's default limit; other tooling in the
+    # same process may have raised it
+    n = 2 * sys.getrecursionlimit()
+    for text in (
+        "SELECT ?a WHERE { ?a p ?b FILTER " + "(" * n + "?b = 1" + ")" * n
+        + " }",
+        "SELECT ?a WHERE { ?a p ?b BIND (" + "STR(" * n + "?b" + ")" * n
+        + " AS ?c) }",
+        "SELECT ?a WHERE " + "{ " * n + "?a p ?b" + " }" * n,
+    ):
+        with _pt.raises(ValueError):
+            parse_sparql(text)
+
+
+def test_sparql_benchmark_shapes_plan_pin(spark):
+    """The five query-benchmark shapes keep their join plans: Join,
+    Union and Aggregate node counts of each optimized logical plan over
+    _kg, as measured before WHERE groups became an algebra tree."""
+    import re
+
+    from kgc.graph import sparql_aggregate, sparql_query
+
+    shapes = {
+        "bgp": ("""SELECT DISTINCT ?d ?p ?pl WHERE {
+                ?d mentions ?p . ?p "@type" Person .
+                ?d locations ?pl . ?pl "@type" Place }""", (3, 0, 1)),
+        "algebra": ("""SELECT DISTINCT ?d ?p ?t WHERE {
+                { ?d mentions ?p } UNION { ?d locations ?p }
+                ?p "@type" ?t .
+                VALUES ?t { Person Place }
+                MINUS { ?d mentions ent:1 } }""", (4, 1, 3)),
+        "scalar": ("""SELECT DISTINCT ?e ?tag WHERE {
+                ?e "@type" ?t . ?e name ?n .
+                FILTER (?t IN ("Person", "Place") && CONTAINS(?n, "1"))
+                BIND (IF(STRLEN(?n) > 8, "long", "short") AS ?tag) }""",
+                   (1, 0, 1)),
+        "path": ("""SELECT DISTINCT ?d ?c WHERE { ?d mentions/a/subClassOf+ ?c }""",
+                 (2, 0, 1)),
+        "agg": ("""SELECT ?t (COUNT(DISTINCT ?d) AS ?nd) WHERE {
+                ?d mentions ?e . ?e "@type" ?t }
+              GROUP BY ?t HAVING (?nd > 10)""", (1, 0, 1)),
+    }
+    kg = _kg(spark)
+    for shape, (text, want) in shapes.items():
+        fn = sparql_aggregate if shape == "agg" else sparql_query
+        plan = fn(kg, text)._jdf.queryExecution().optimizedPlan().toString()
+        got = tuple(
+            len(re.findall(rf"^[\s:+\-|]*{node}\b", plan, re.M))
+            for node in ("Join", "Union", "Aggregate")
+        )
+        assert got == want, (shape, got, plan)

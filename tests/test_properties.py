@@ -180,13 +180,17 @@ class TestSparqlParserTotality:
 
 class TestSparqlDifferential:
     """Differential testing of the SPARQL ALGEBRA: random tiny KGs and
-    random connected queries, evaluated by the engine (_solve_where on
-    a hand-built q dict — the parser has its own totality fuzz) AND by
+    random connected queries, evaluated by the engine (_solve on a
+    hand-built WHERE tree — the parser has its own totality fuzz) AND by
     a naive nested-loop reference evaluator with spec bag semantics.
-    Covers the join planner's selectivity reorder, flat-OPTIONAL left
-    joins, UNION distribution (fast and general paths), the
-    compatibility join over possibly-unbound shared variables (the
-    r4-advice fix), and FILTER error-propagation (unbound → drop)."""
+    The OPTIONAL / UNION / VALUES / MINUS / BIND elements come in a drawn
+    text order, and FILTER / EXISTS elements at drawn positions; the
+    reference folds the elements in that same order with FILTER and
+    EXISTS at the group's end (spec §18.2.2).  Covers the join
+    planner's selectivity reorder, left joins, UNION padding, the
+    compatibility join over possibly-unbound shared variables, BIND
+    over a not-yet-bound variable, and FILTER error-propagation
+    (unbound → drop)."""
 
     _SUBS = ["s0", "s1", "s2"]
     _PREDS = ["p0", "p1"]
@@ -195,20 +199,14 @@ class TestSparqlDifferential:
     # ---- naive reference evaluator (bag semantics) ----
 
     @staticmethod
-    def _match(pat, row, binding, unbound_matches=False):
+    def _match(pat, row, binding):
         b = dict(binding)
         for term, val in zip(pat, row):
             if term.startswith("?"):
                 name = term[1:]
-                if name in b:
-                    if b[name] is None:
-                        if not unbound_matches:
-                            return None
-                        b[name] = val
-                    elif b[name] != val:
-                        return None
-                else:
-                    b[name] = val
+                if name in b and b[name] != val:
+                    return None
+                b[name] = val
             elif term != val:
                 return None
         return b
@@ -223,6 +221,36 @@ class TestSparqlDifferential:
             ]
         return sols
 
+    @staticmethod
+    def _merge(b, u):
+        """Spec compatibility (None = unbound matches anything): the
+        merged solution, or None when some shared var disagrees."""
+        if any(
+            b[v] is not None and u[v] is not None and b[v] != u[v]
+            for v in b.keys() & u.keys()
+        ):
+            return None
+        merged = dict(b)
+        for v, x in u.items():
+            if merged.get(v) is None:
+                merged[v] = x
+        return merged
+
+    @classmethod
+    def _naive_join(cls, sols, others):
+        return [
+            m for b in sols for u in others
+            if (m := cls._merge(b, u)) is not None
+        ]
+
+    @classmethod
+    def _naive_left_join(cls, sols, others, ovars):
+        out = []
+        for b in sols:
+            ms = [m for u in others if (m := cls._merge(b, u)) is not None]
+            out.extend(ms or [{**{v: None for v in ovars}, **b}])
+        return out
+
     @classmethod
     def _naive_minus(cls, rows, sols, mpat):
         mvars = {t[1:] for t in mpat if t.startswith("?")}
@@ -230,9 +258,6 @@ class TestSparqlDifferential:
         out = []
         for b in sols:
             shared = [v for v in mvars if v in b]
-            if not shared:
-                out.append(b)  # disjoint domains: MINUS removes nothing
-                continue
             hit = any(
                 all(b[v] is None or b[v] == m[v] for v in shared)
                 and any(b[v] is not None for v in shared)  # dom overlap
@@ -257,76 +282,46 @@ class TestSparqlDifferential:
         return out
 
     @classmethod
-    def _naive(cls, rows, required, optionals, union_block, values_spec,
-               minus_pat, exists_spec, binds, distinct, filters):
+    def _naive(cls, rows, required, elements, distinct):
+        """Fold the elements in text order; FILTER and EXISTS last."""
         sols = cls._solve_bgp(rows, required)
-        for opt in optionals:
-            ovars = [t[1:] for t in opt if t.startswith("?")]
-            nxt = []
-            for b in sols:
-                ms = [
-                    m for row in rows
-                    if (m := cls._match(opt, row, b)) is not None
+        tail = [el for el in elements if el[0] in ("exists", "filter")]
+        for kind, arg in elements:
+            if kind == "optional":
+                ovars = {t[1:] for t in arg if t.startswith("?")}
+                sols = cls._naive_left_join(
+                    sols, cls._solve_bgp(rows, [arg]), ovars
+                )
+            elif kind == "union":
+                block_vars = sorted({
+                    t[1:] for bp in arg for t in bp if t.startswith("?")
+                })
+                block = [
+                    {v: u.get(v) for v in block_vars}
+                    for bp in arg for u in cls._solve_bgp(rows, [bp])
                 ]
-                if ms:
-                    nxt.extend(ms)
-                else:
-                    b2 = dict(b)
-                    for v in ovars:
-                        b2.setdefault(v, None)
-                    nxt.append(b2)
-            sols = nxt
-        if union_block:
-            block_vars = sorted({
-                t[1:] for bp in union_block for t in bp if t.startswith("?")
-            })
-            block = []
-            for bp in union_block:
-                for u in cls._solve_bgp(rows, [bp]):
-                    block.append({v: u.get(v) for v in block_vars})
-            nxt = []
-            for b in sols:
-                for u in block:
-                    shared = [v for v in block_vars if v in b]
-                    if all(
-                        b[v] is None or u[v] is None or b[v] == u[v]
-                        for v in shared
-                    ):
-                        merged = dict(b)
-                        for v in block_vars:
-                            if merged.get(v) is None:
-                                merged[v] = u[v]
-                        nxt.append(merged)
-            sols = nxt
-        if values_spec is not None:
-            vvars, vrows = values_spec
-            nxt = []
-            for b in sols:
-                for vr in vrows:
-                    u = dict(zip(vvars, vr))
-                    if all(
-                        b.get(v) is None or u[v] is None or b[v] == u[v]
-                        for v in vvars if v in b
-                    ):
-                        merged = dict(b)
-                        for v in vvars:
-                            if merged.get(v) is None:
-                                merged[v] = u[v]
-                        nxt.append(merged)
-            sols = nxt
-        if minus_pat is not None:
-            sols = cls._naive_minus(rows, sols, minus_pat)
-        if exists_spec is not None:
-            sols = cls._naive_exists(rows, sols, *exists_spec)
-        for new_var, src_var, suffix in binds:
-            sols = [
-                {**b, new_var: (None if b.get(src_var) is None
-                                else b[src_var] + suffix)}
-                for b in sols
-            ]
-        for var, op, const in filters:
+                sols = cls._naive_join(sols, block)
+            elif kind == "values":
+                vvars, vrows = arg
+                sols = cls._naive_join(
+                    sols, [dict(zip(vvars, vr)) for vr in vrows]
+                )
+            elif kind == "minus":
+                sols = cls._naive_minus(rows, sols, arg)
+            elif kind == "bind":
+                new_var, src_var, suffix = arg
+                sols = [
+                    {**b, new_var: (None if b.get(src_var) is None
+                                    else b[src_var] + suffix)}
+                    for b in sols
+                ]
+        for kind, arg in tail:
+            if kind == "exists":
+                sols = cls._naive_exists(rows, sols, *arg)
+                continue
             import operator as _op
 
+            var, op, const = arg
             f = {"=": _op.eq, "!=": _op.ne, "<": _op.lt, ">": _op.gt}[op]
             sols = [
                 b for b in sols
@@ -355,7 +350,7 @@ class TestSparqlDifferential:
     @given(st.data())
     @settings(max_examples=40, deadline=None)
     def test_engine_equals_naive(self, spark, data):
-        from kgc.graph import _finish_select, _solve_where
+        from kgc.graph import _finish_select, _solve
 
         draw = data.draw
         rows = draw(
@@ -391,70 +386,83 @@ class TestSparqlDifferential:
             req_vars = sorted({
                 t[1:] for p in required for t in p if t.startswith("?")
             })
-        optionals = []
-        if draw(st.booleans()):
-            shared = draw(st.sampled_from(req_vars))
-            optionals.append((
-                "?" + shared, draw(st.sampled_from(self._PREDS)), "?optv",
-            ))
-        all_vars = req_vars + (["optv"] if optionals else [])
-        union_block = None
-        if draw(st.booleans()):
-            # each branch shares >= 1 var with the solution; the shared
-            # var may be the OPTIONAL one (nullable -> compat join)
-            branches = []
-            for _ in range(2):
-                shared = draw(st.sampled_from(all_vars))
-                branches.append((
-                    "?" + shared,
-                    draw(st.sampled_from(self._PREDS)),
-                    self._term(draw, self._OBJS, ["u"], 0.5),
-                ))
-            union_block = branches
-        values_spec = None
-        if draw(st.booleans()):
-            vvars = [draw(st.sampled_from(all_vars))]
-            vrows = draw(
-                st.lists(
-                    st.tuples(
-                        st.one_of(st.none(), st.sampled_from(self._OBJS))
-                    ),
-                    min_size=1, max_size=3,
+        kinds = [
+            k for k in ("optional", "union", "values", "minus", "bind",
+                        "exists", "filter")
+            if draw(st.booleans())
+        ]
+        kinds = draw(st.permutations(kinds))  # the text order
+        # variables an element may mention; joins that need a shared
+        # variable draw it from those bound at their point in the text
+        all_vars = req_vars + ["optv"] * ("optional" in kinds) + (
+            ["u"] * ("union" in kinds)
+        )
+        later = [v for v in all_vars if v not in req_vars]
+
+        def order_var():
+            # half the time a var some OTHER element binds: where it
+            # sits in the text then changes the answer
+            pool = later if later and draw(st.booleans()) else all_vars
+            return draw(st.sampled_from(pool))
+
+        bound = set(req_vars)
+        elements = []
+        for kind in kinds:
+            if kind == "optional":
+                shared = draw(st.sampled_from(req_vars))
+                arg = ("?" + shared, draw(st.sampled_from(self._PREDS)), "?optv")
+            elif kind == "union":
+                # each branch shares a var bound at this point; it may be
+                # a nullable one (OPTIONAL / VALUES UNDEF → compat join)
+                arg = [
+                    (
+                        "?" + draw(st.sampled_from(sorted(bound))),
+                        draw(st.sampled_from(self._PREDS)),
+                        self._term(draw, self._OBJS, ["u"], 0.5),
+                    )
+                    for _ in range(2)
+                ]
+            elif kind == "values":
+                vrows = draw(
+                    st.lists(
+                        st.tuples(
+                            st.one_of(st.none(), st.sampled_from(self._OBJS))
+                        ),
+                        min_size=1, max_size=3,
+                    )
                 )
-            )
-            values_spec = (vvars, vrows)
-        binds = []
-        if draw(st.booleans()):
-            binds.append((
-                "bv", draw(st.sampled_from(all_vars)), "_sfx",
-            ))
-        distinct = draw(st.booleans())
-        minus_pat = None
-        if draw(st.booleans()):
-            shared = draw(st.sampled_from(all_vars))
-            minus_pat = (
-                "?" + shared,
-                draw(st.sampled_from(self._PREDS)),
-                self._term(draw, self._OBJS, ["m"], 0.5),
-            )
-        exists_spec = None
-        if draw(st.booleans()):
-            shared = draw(st.sampled_from(all_vars))
-            exists_spec = (
-                draw(st.booleans()),
-                (
-                    "?" + shared,
+                arg = ([order_var()], vrows)
+            elif kind == "minus":
+                arg = (
+                    "?" + order_var(),
                     draw(st.sampled_from(self._PREDS)),
-                    self._term(draw, self._OBJS, ["x"], 0.5),
-                ),
-            )
-        filters = []
-        if draw(st.booleans()):
-            filters.append((
-                draw(st.sampled_from(req_vars)),
-                draw(st.sampled_from(["=", "!=", "<", ">"])),
-                draw(st.sampled_from(self._OBJS)),
-            ))
+                    self._term(draw, self._OBJS, ["m"], 0.5),
+                )
+            elif kind == "bind":
+                # the source var may not be bound yet at this point
+                arg = ("bv", order_var(), "_sfx")
+            elif kind == "exists":
+                arg = (
+                    draw(st.booleans()),
+                    (
+                        "?" + order_var(),
+                        draw(st.sampled_from(self._PREDS)),
+                        self._term(draw, self._OBJS, ["x"], 0.5),
+                    ),
+                )
+            else:  # filter
+                arg = (
+                    draw(st.sampled_from(req_vars)),
+                    draw(st.sampled_from(["=", "!=", "<", ">"])),
+                    draw(st.sampled_from(self._OBJS)),
+                )
+            elements.append((kind, arg))
+            if kind in ("optional", "union"):
+                pats = [arg] if kind == "optional" else arg
+                bound |= {t[1:] for p in pats for t in p if t.startswith("?")}
+            elif kind == "values":
+                bound |= set(arg[0])
+        distinct = draw(st.booleans())
 
         df = spark.createDataFrame(
             rows or [("zz", "zz", "zz")],  # createDataFrame needs >=1 row
@@ -462,27 +470,28 @@ class TestSparqlDifferential:
         )
         if not rows:
             df = df.filter("subj <> 'zz'")
+
+        def tree(kind, arg):
+            if kind in ("optional", "minus"):
+                return (kind, [("bgp", [arg])])
+            if kind == "union":
+                return ("union", [[("bgp", [b])] for b in arg])
+            if kind == "values":
+                return ("values", *arg)
+            if kind == "bind":
+                nv, sv, sfx = arg
+                return ("bind", nv, ("fn", "CONCAT", [("var", sv), ("lit", sfx)]))
+            if kind == "exists":
+                return ("exists", arg[0], [("bgp", [arg[1]])])
+            v, op, c = arg
+            return ("filter", ("cmp", "?" + v, op, c, (False, True)))
+
         q = {
             "select": None, "distinct": distinct,
-            "patterns": required, "optional": list(optionals),
-            "optional_groups": [], "filters": [
-                ("cmp", "?" + v, op, c, (False, True))
-                for v, op, c in filters
-            ],
+            "where": [("bgp", required)] + [tree(*el) for el in elements],
             "order": [], "limit": None, "offset": None,
-            "unions": [[([b], []) for b in union_block]] if union_block else [],
-            "minus": [([minus_pat], [])] if minus_pat is not None else [],
-            "values": [values_spec] if values_spec is not None else [],
-            "exists": [
-                (exists_spec[0], [exists_spec[1]], [])
-            ] if exists_spec is not None else [],
-            "binds": [
-                (nv, ("fn", "CONCAT", [("var", sv), ("lit", sfx)]))
-                for nv, sv, sfx in binds
-            ],
-            "subqueries": [],
         }
-        sol, nullable = _solve_where(df, q)
+        sol, nullable = _solve(df, q)
         sol, _ = _finish_select(sol, q, nullable)
         def keyed(rows_):
             return sorted(
@@ -493,10 +502,7 @@ class TestSparqlDifferential:
         got = keyed(
             tuple(sorted(r.asDict().items())) for r in sol.collect()
         )
-        want_rows = self._naive(
-            rows, required, optionals, union_block, values_spec,
-            minus_pat, exists_spec, binds, distinct, filters,
-        )
+        want_rows = self._naive(rows, required, elements, distinct)
         cols = set(sol.columns)
         want = keyed(
             tuple(sorted((k, v) for k, v in b.items() if k in cols))
