@@ -1066,8 +1066,8 @@ def q_metrics_suite(spark, sf_dir):
 
 def q_subclass_closure(spark, sf_dir):
     """RDFS subClassOf* materialization over the real schema.org dump:
-    every (type, ancestor, path-length) pair, computed by the
-    path-doubling iterative closure (kgc.graph.transitive_closure) —
+    every (type, ancestor, path-length) pair, computed by
+    kgc.graph.transitive_closure (a driver BFS at this size) —
     what a triple store entails at load time so "?x a Person" also
     answers "?x a Thing".  The reference keeps only the DIRECT parent
     (internal/schema/schema.go:85-90) and never walks the chain."""
@@ -1131,7 +1131,7 @@ def q_validate_triples(spark, sf_dir, trip=None):
 
 
 def q_graph_suite(spark, sf_dir):
-    """KG-graph operator family: subClassOf* closure (path-doubling
+    """KG-graph operator family: subClassOf* closure (the
     transitive closure over the ~1,400-edge schema.org class DAG,
     depths 1..7) + entity co-citation (the 2-hop doc—entity—doc
     pattern) + RDFS domain validation of the emitted triples +
@@ -1484,8 +1484,8 @@ def q_graph_suite(spark, sf_dir):
         F.col("n"),
     )
     # grouped property path (p/q)+ over the real schema.org class DAG:
-    # the composed subClassOf∘subClassOf edge set closed by path
-    # doubling = every even-length ancestor chain — checked against
+    # the composed subClassOf∘subClassOf edge set closed by
+    # transitive_closure = every even-length ancestor chain — checked against
     # the oracle's recursive closure restricted to even depths.
     from kgc.vocab import load_schemaorg
 

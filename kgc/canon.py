@@ -107,6 +107,20 @@ def _small_star(edges: DataFrame, salt: int) -> DataFrame:
 SMALL_GRAPH_THRESHOLD = 100_000
 
 
+def collect_if_small(df: DataFrame, threshold: int) -> list | None:
+    """``df``'s rows when it has at most ``threshold`` of them, else None.
+
+    One ``limit(threshold + 1).collect()`` probe: a relation that fits
+    the driver comes back whole from the job that measured it, so the
+    caller finishes it in Python instead of paying an iterative
+    algorithm's fixed per-round Spark overhead.  ``threshold <= 0``
+    probes nothing (the caller's distributed path is forced)."""
+    if threshold <= 0:
+        return None
+    rows = df.limit(threshold + 1).collect()
+    return rows if len(rows) <= threshold else None
+
+
 def _union_find_local(edge_rows, node_rows):
     """Driver-side union-find for broadcast-sized graphs."""
     parent: dict = {}
@@ -171,17 +185,15 @@ def connected_components(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    if small_graph_threshold > 0:
-        head = e.limit(small_graph_threshold + 1).collect()
-        if len(head) <= small_graph_threshold:
-            edge_rows = [(r["u"], r["v"]) for r in head]
-            nodes = sorted({x for uv in edge_rows for x in uv})
-            mapping = _union_find_local(edge_rows, nodes)
-            schema_src = edges.select(F.col(src).alias("node")).schema
-            out_type = schema_src["node"].dataType.simpleString()
-            return edges.sparkSession.createDataFrame(
-                mapping, f"node {out_type}, component {out_type}"
-            )
+    head = collect_if_small(e, small_graph_threshold)
+    if head is not None:
+        edge_rows = [(r["u"], r["v"]) for r in head]
+        nodes = sorted({x for uv in edge_rows for x in uv})
+        mapping = _union_find_local(edge_rows, nodes)
+        out_type = e.schema["u"].dataType.simpleString()
+        return edges.sparkSession.createDataFrame(
+            mapping, f"node {out_type}, component {out_type}"
+        )
     nodes = (
         e.select(F.col("u").alias("node"))
         .union(e.select(F.col("v").alias("node")))

@@ -37,6 +37,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgc.canon import SMALL_GRAPH_THRESHOLD, collect_if_small
+
 DEFAULT_SCALE = 10**12
 
 
@@ -165,46 +167,132 @@ def comention_edges(doc_entities: DataFrame, doc_col: str = "doc_id",
     return out
 
 
+# The driver closes a small relation by BFS only while it relaxes at
+# most this many edges per edge of the small-graph threshold; each
+# relaxation yields at most one pair, so this also bounds the pairs it
+# materializes.  Past the budget (a dense DAG) path doubling takes over.
+# On local[4], a 97k-edge tree with 660k closure pairs takes ~9 s on
+# either route, so the driver stops short of that.
+DRIVER_PAIR_FACTOR = 4
+
+
 def transitive_closure(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_depth: int = 16,
     checkpoint: bool = True,
+    small_graph_threshold: int = SMALL_GRAPH_THRESHOLD,
 ) -> DataFrame:
     """(src, dst, depth) — all pairs connected by a directed path of
-    length 1..max_depth, with depth = path length.  The KG use case is
-    RDFS ``subClassOf*`` materialization (type inference: an entity
-    typed Person is also a Thing), where the reference keeps only the
-    DIRECT parent per type (internal/schema/schema.go:85-90,
-    `_first_ref` semantics in kgc.vocab.load_schemaorg) and never
-    walks the chain; materializing the closure is what a triple store
-    does at load time.
+    length 1..max_depth, with depth = the SHORTEST path length (string
+    ids; pairs on a cycle included, a node on one paired with itself).
+    The KG use case is RDFS ``subClassOf*`` materialization (type
+    inference: an entity typed Person is also a Thing), where the
+    reference keeps only the DIRECT parent per type
+    (internal/schema/schema.go:85-90, `_first_ref` semantics in
+    kgc.vocab.load_schemaorg) and never walks the chain; materializing
+    the closure is what a triple store does at load time.
 
-    Algorithm: path doubling.  Round k holds every path of length
-    ≤ 2^k; one self-join per round extends paths by paths, so depth D
-    closes in ⌈log2 D⌉ shuffles instead of D for the naive frontier
-    walk — at 10^12-triple scale the join count is the dominant cost
-    and log-depth wins.  Each round shuffles on the junction column
-    only; `dropDuplicates` keeps the SHORTEST depth per (src, dst)
-    (min-aggregated), which is well-defined on DAGs and terminates on
-    cycles because depth is capped by ``max_depth``.
+    Two routes, split by relation size (the threshold
+    :func:`kgc.canon.connected_components` uses):
 
-    Assumes a DAG (schema.org's single-parent tree qualifies); on a
-    cyclic input the cap still guarantees termination, and pairs on a
-    cycle report the shortest path length.
-    """
-    paths = (
+      * at most ``small_graph_threshold`` distinct edges: the probe job
+        that counts them brings them to the driver, a depth-capped BFS
+        from every source closes them, and the pairs come back as one
+        ``createDataFrame`` — no per-round Spark jobs.  A BFS that would
+        relax more than ``DRIVER_PAIR_FACTOR`` × threshold edges gives
+        up and the relation takes the distributed route instead.
+      * otherwise (or ``small_graph_threshold=0``): path doubling.
+        Round k holds every path of length ≤ 2^k; one self-join per
+        round extends paths by paths, so depth D closes in ⌈log2 D⌉
+        shuffles instead of D for the naive frontier walk — at
+        10^12-triple scale the join count is the dominant cost and
+        log-depth wins.  Each round shuffles on the junction column
+        only and keeps the min depth per (src, dst); the cap on depth
+        makes it terminate on cycles.  Convergence (the pair count
+        stopped growing) is read off an Observation of the round's
+        eager ``localCheckpoint`` — no extra count job.
+
+    Both routes return the same rows (pytest-pinned)."""
+    e = (
         edges.select(
             F.col(src).cast("string").alias("s"),
             F.col(dst).cast("string").alias("d"),
-            F.lit(1).alias("depth"),
         )
         .filter(F.col("s").isNotNull() & F.col("d").isNotNull())
-        .dropDuplicates(["s", "d"])
-        .persist()
+        .distinct()
     )
-    pinned = [paths]
+    head = collect_if_small(e, small_graph_threshold)
+    if head is not None:
+        rows = _closure_bfs(
+            [(r["s"], r["d"]) for r in head], max(max_depth, 1),
+            DRIVER_PAIR_FACTOR * small_graph_threshold,
+        )
+        if rows is not None:
+            import pyarrow as pa
+
+            # an Arrow table ships to the JVM in one batch; a row list
+            # pickles row by row (~4x slower for a handful of rows)
+            cols = list(zip(*rows)) or [(), (), ()]
+            return edges.sparkSession.createDataFrame(pa.table({
+                src: pa.array(cols[0], pa.string()),
+                dst: pa.array(cols[1], pa.string()),
+                "depth": pa.array(cols[2], pa.int32()),
+            }))
+    return _closure_doubling(e, src, dst, max_depth, checkpoint)
+
+
+def _closure_bfs(edge_rows, max_depth: int, budget: int):
+    """Driver route of transitive_closure: (s, d, depth) rows by a BFS of
+    at most ``max_depth`` levels from every source, or None once the
+    BFS has relaxed more than ``budget`` edges."""
+    adj: dict[str, list[str]] = {}
+    for s, d in edge_rows:
+        adj.setdefault(s, []).append(d)
+    out = []
+    for s in adj:
+        seen: dict[str, int] = {}
+        frontier = [s]
+        for depth in range(1, max_depth + 1):
+            nxt = []
+            for u in frontier:
+                succ = adj.get(u, ())
+                budget -= len(succ)
+                for v in succ:
+                    if v not in seen:
+                        seen[v] = depth
+                        nxt.append(v)
+            if budget < 0:
+                return None
+            if not nxt:
+                break
+            frontier = nxt
+        out.extend((s, v, k) for v, k in seen.items())
+    return out
+
+
+def _checkpoint_count(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eager localCheckpoint of ``df`` and its row count, observed on
+    the checkpoint job itself."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return df, obs.get["n"]
+
+
+def _closure_doubling(
+    e: DataFrame, src: str, dst: str, max_depth: int, checkpoint: bool
+) -> DataFrame:
+    """Distributed route of transitive_closure: path doubling over the
+    distinct (s, d) edge set ``e``."""
+    paths = e.withColumn("depth", F.lit(1))
+    if checkpoint:
+        paths, n = _checkpoint_count(paths)
+    else:
+        paths = paths.persist()
+        n = paths.count()
     reach = 1
     while reach < max_depth:
         left, right = paths.alias("l"), paths.alias("r")
@@ -223,17 +311,19 @@ def transitive_closure(
             .agg(F.min("depth").alias("depth"))
         )
         if checkpoint:
-            new_paths = new_paths.localCheckpoint(eager=True)
-        grew = new_paths.count() > paths.count()
+            new_paths, n_new = _checkpoint_count(new_paths)
+        else:
+            n_new = new_paths.count()
         paths.unpersist()
-        pinned[0] = paths = new_paths
-        if not grew:
+        paths = new_paths
+        if n_new <= n:
             break
+        n = n_new
         reach *= 2
     out = paths.select(
         F.col("s").alias(src), F.col("d").alias(dst), "depth"
     )
-    out._kgc_pinned = pinned  # released by kgc.pipeline.release
+    out._kgc_pinned = [paths]  # released by kgc.pipeline.release
     return out
 
 
@@ -535,9 +625,9 @@ def bgp_query(
 # to plain Catalyst Columns (_compile_scalar), zero UDFs.
 #
 # plus the property-path forms that matter for RDFS-style KGs: a
-# predicate written `p+` (one-or-more) expands to the path-doubling
-# transitive closure of that predicate's edge set (transitive_closure
-# above, log-depth joins); `p*` (zero-or-more) adds the identity
+# predicate written `p+` (one-or-more) expands to the transitive
+# closure of that predicate's edge set (transitive_closure above: a
+# driver BFS or log-depth path doubling); `p*` (zero-or-more) adds the identity
 # relation over every graph term; `p?` (zero-or-one) is edges plus
 # identity; `^p` (inverse) swaps subject and object; `p|q`
 # (alternation) unions the alternatives' edge sets as a pushed
@@ -555,8 +645,8 @@ def bgp_query(
 # intermediate columns are dropped before projection.  A GROUPED
 # sequence `(p/q)+` (also `*`, `?`) composes the sequence's edge set
 # by chaining per-step equi-joins and closes it with the same
-# path-doubling closure — bare-predicate steps, one trailing
-# modifier, no further nesting.
+# transitive closure — bare-predicate steps, one trailing modifier, no
+# further nesting.
 #
 # No triple store, no dedicated engine: parse → bgp_query → Catalyst.
 # The reference emits the KG (internal/jsonld/converter.go:52-94) but
@@ -746,8 +836,9 @@ def parse_sparql(text: str) -> dict:
     ("not", e) from &&/||/!(...).  Sequence property paths ``p/q`` are
     rewritten here into pattern chains through reserved ?__seqN
     intermediates.  Raises ValueError with position context on anything
-    outside the subset, nesting too deep for the recursive-descent
-    parser included — a silent mis-parse against a 10^12-row table is a
+    outside the subset, groups nested more than MAX_GROUP_DEPTH deep
+    and anything else too deep for the recursive-descent parser
+    included — a silent mis-parse against a 10^12-row table is a
     far worse failure than a loud one."""
     try:
         return _parse_sparql(text)
@@ -755,8 +846,24 @@ def parse_sparql(text: str) -> dict:
         raise ValueError("query nests too deeply to parse") from None
 
 
+# WHERE groups (subqueries and EXISTS included) nest at most this deep.
+# The compiler recurses about four Python frames per group and Spark's
+# analyzer a plan level per join, so a much deeper tree overflows one of
+# those stacks mid-compile (a Python RecursionError can even be
+# swallowed inside a py4j call); refusing it here fails loudly, before
+# any work.
+MAX_GROUP_DEPTH = 64
+
+
 def _parse_sparql(text: str) -> dict:
     toks = _SPARQL_TOKEN.findall(re.sub(r"#[^\n]*", " ", text))
+    depth = 0
+    for t in toks:
+        depth += (t == "{") - (t == "}")
+        if depth > MAX_GROUP_DEPTH:
+            raise ValueError(
+                f"query nests too deeply (more than {MAX_GROUP_DEPTH} nested groups)"
+            )
     pos = 0
     seq_n = 0  # fresh-variable counter for sequence-path rewriting
 
@@ -1300,7 +1407,9 @@ def _path_relations(triples: DataFrame, patterns: list) -> dict[str, DataFrame]:
     GRAPH quad leg over the fact table.
 
       * ``p+``  (one-or-more): the transitive closure of p's edge set
-        (path doubling, log-depth joins).
+        (transitive_closure: closed on the driver by one collect and a
+        BFS when it has at most SMALL_GRAPH_THRESHOLD edges, else by
+        path doubling, log-depth joins).
       * ``p*``  (zero-or-more): the closure PLUS the identity relation
         over every term of the graph (distinct subj ∪ obj — SPARQL's
         zero-length path binds any term to itself).  The term set is
@@ -1319,10 +1428,10 @@ def _path_relations(triples: DataFrame, patterns: list) -> dict[str, DataFrame]:
         the same does-not-nest rule).
       * ``(p/q)+`` / ``(p/q)*`` / ``(p/q)?`` (grouped sequence): the
         sequence's composed edge set (chained per-step equi-joins)
-        closed by path doubling for ``+``/``*`` (identity added for
-        ``*``/``?``) — exact, because every path matching the closure
-        decomposes into whole (p/q) hops.  Bare-predicate steps, one
-        trailing modifier, no deeper nesting.
+        closed by transitive_closure (same two routes) for ``+``/``*``
+        (identity added for ``*``/``?``) — exact, because every path
+        matching the closure decomposes into whole (p/q) hops.
+        Bare-predicate steps, one trailing modifier, no deeper nesting.
 
     One closure computation per distinct base predicate (``p+`` and
     ``p*`` share it); closure subgraphs are tiny relative to the fact
@@ -1774,7 +1883,9 @@ def _solve(
     once per query, over every triple pattern the tree holds
     (subqueries included): GRAPH quad patterns expose the caller-named
     provenance column under the reserved name the quad legs read, and
-    every property path gets its leaf relation (_path_relations)."""
+    every property path gets its leaf relation (_path_relations).  Like
+    parse_sparql, it raises ValueError on a tree nested too deeply for
+    the recursive compiler (every query form comes through here)."""
     pats = list(_triple_patterns(q["where"]))
     if any(len(pat) > 3 for pat in pats):
         if graph_col not in triples.columns:
@@ -1784,7 +1895,10 @@ def _solve(
             )
         triples = triples.withColumn(_GRAPH_COL, F.col(graph_col))
     paths = _path_relations(triples, pats)
-    return _compile_group(triples, paths, q["where"], **bgp_kwargs)
+    try:
+        return _compile_group(triples, paths, q["where"], **bgp_kwargs)
+    except RecursionError:
+        raise ValueError("query nests too deeply to compile") from None
 
 
 def _scalar_vars(ast) -> set[str]:
@@ -1889,7 +2003,8 @@ def _compile_subselect(
 
 
 def _parse_subselect(text: str) -> dict:
-    return _parse_aggregate(text) if _SELECT_AGG.search(text) else parse_sparql(text)
+    outer = " ".join(chunk for top, chunk in _brace_pieces(text) if top)
+    return _parse_aggregate(text) if _SELECT_AGG.search(outer) else parse_sparql(text)
 
 
 def sparql_query(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
@@ -1988,11 +2103,34 @@ def _having_numeric(f):
     return f
 
 
+_BRACE_OR_STRING = re.compile(r'"(?:[^"\\]|\\.)*"|[{}]')
+
+
+def _brace_pieces(text: str) -> list[tuple[bool, str]]:
+    """``text`` cut into (top level?, chunk) pieces: a chunk is top
+    level when it lies outside every ``{ }`` group (braces inside string
+    literals do not count).  The pieces concatenate back to ``text``."""
+    pieces, depth, start = [], 0, 0
+    for m in _BRACE_OR_STRING.finditer(text):
+        if m.group() == "{":
+            if depth == 0:
+                pieces.append((True, text[start : m.start()]))
+                start = m.start()
+            depth += 1
+        elif m.group() == "}" and depth:
+            depth -= 1
+            if depth == 0:
+                pieces.append((False, text[start : m.end()]))
+                start = m.end()
+    pieces.append((depth == 0, text[start:]))
+    return pieces
+
+
 def _parse_aggregate(text: str) -> dict:
     """parse_sparql for an aggregate SELECT (grammar: sparql_aggregate):
     the (AGG(...) AS ?x) items, GROUP BY and HAVING are lifted out of the
-    text first and ride in ``q["aggregate"]`` as (aggs, having_ast,
-    group_vars)."""
+    query's own top-level text first (a nested subquery keeps its own)
+    and ride in ``q["aggregate"]`` as (aggs, having_ast, group_vars)."""
     aggs = []
 
     def lift(m):
@@ -2013,13 +2151,23 @@ def _parse_aggregate(text: str) -> dict:
         aggs.append((fn, dist, ast, alias, sep))
         return ""  # remove from the SELECT list the base parser sees
 
-    lifted = _SELECT_AGG.sub(lift, text)
-    mh = re.search(
-        r"HAVING\s*\(((?:[^()]|\([^()]*\))*)\)", lifted, re.IGNORECASE
-    )
+    pieces = [
+        (top, _SELECT_AGG.sub(lift, chunk) if top else chunk)
+        for top, chunk in _brace_pieces(text)
+    ]
+
+    def cut(pattern):
+        """The first top-level match of ``pattern``, cut out of the text."""
+        for i, (top, chunk) in enumerate(pieces):
+            m = re.search(pattern, chunk, re.IGNORECASE) if top else None
+            if m:
+                pieces[i] = (top, chunk[: m.start()] + " " + chunk[m.end():])
+                return m
+        return None
+
+    mh = cut(r"HAVING\s*\(((?:[^()]|\([^()]*\))*)\)")
     having_ast = None
     if mh:
-        lifted = lifted[: mh.start()] + " " + lifted[mh.end():]
         # HAVING reuses the ONE boolean grammar (&&/||/!(), scalar
         # comparisons, string tests, IN) by parsing its body as a
         # FILTER; variables are aggregate aliases / group vars.
@@ -2027,15 +2175,13 @@ def _parse_aggregate(text: str) -> dict:
             "SELECT ?__h WHERE { FILTER (" + mh.group(1) + ") }"
         )
         having_ast = _having_numeric(hq["where"][0][1])
-    mg = re.search(r"GROUP\s+BY((?:\s+\?[A-Za-z_]\w*)+)", lifted, re.IGNORECASE)
-    if mg:
-        lifted = lifted[: mg.start()] + " " + lifted[mg.end():]
+    mg = cut(r"GROUP\s+BY((?:\s+\?[A-Za-z_]\w*)+)")
     group_vars = re.findall(r"\?([A-Za-z_]\w*)", mg.group(1)) if mg else []
     if not aggs:
         raise ValueError("sparql_aggregate needs at least one (AGG(...) AS ?x)")
     # a SELECT of only aggregates leaves no projection vars — bind all
     lifted = re.sub(r"(?i)^(\s*SELECT\s+(?:DISTINCT\s+)?)(?=WHERE\b)",
-                    r"\g<1>* ", lifted)
+                    r"\g<1>* ", "".join(chunk for _, chunk in pieces))
 
     q = parse_sparql(lifted)
     q["aggregate"] = (aggs, having_ast, group_vars)

@@ -170,6 +170,123 @@ def test_transitive_closure_matches_driver_walk_on_schemaorg(spark):
     release_vocab()
 
 
+def test_transitive_closure_pair_bound_falls_back(spark, monkeypatch):
+    """A relation small enough to probe but whose closure outgrows the
+    driver budget (DRIVER_PAIR_FACTOR x threshold relaxations) takes the
+    path-doubling route, with the same rows."""
+    import kgc.graph as G
+
+    chain = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(25)]
+    edges = spark.createDataFrame(chain, "src string, dst string")
+    calls = []
+    doubling = G._closure_doubling
+    monkeypatch.setattr(
+        G, "_closure_doubling", lambda *a: calls.append(a) or doubling(*a)
+    )
+    # 25 edges fit the threshold, but the 325 closure pairs need 325
+    # relaxations > 4 x 25
+    def closure():
+        return sorted(G.transitive_closure(
+            edges, max_depth=32, small_graph_threshold=25
+        ).collect())
+
+    got = closure()
+    assert len(calls) == 1
+    want = sorted(
+        (f"n{i:02d}", f"n{j:02d}", j - i) for i in range(25) for j in range(i + 1, 26)
+    )
+    assert [tuple(r) for r in got] == want
+    # a budget that fits keeps the closure on the driver
+    monkeypatch.setattr(G, "DRIVER_PAIR_FACTOR", 13)
+    assert closure() == got and len(calls) == 1
+
+
+def test_sparql_path_closure_is_one_collect(spark, monkeypatch):
+    """The path shape of the kgbench query round over a small KG: its
+    subClassOf+ relation closes with one collect (the size probe) and no
+    localCheckpoint round."""
+    from kgc.graph import sparql_query
+
+    kg = spark.createDataFrame(
+        [("d1", "mentions", "e1"), ("d2", "mentions", "e2"),
+         ("e1", "@type", "Person"), ("e2", "@type", "Place"),
+         ("Person", "subClassOf", "Agent"), ("Agent", "subClassOf", "Thing"),
+         ("Place", "subClassOf", "Thing")],
+        "subj string, pred string, obj string",
+    )
+    counts = {"collect": 0, "localCheckpoint": 0}
+    cls = type(kg)
+    for name in counts:
+        orig = getattr(cls, name)
+
+        def spy(self, *a, _orig=orig, _name=name, **kw):
+            counts[_name] += 1
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(cls, name, spy)
+    sol = sparql_query(
+        kg, "SELECT DISTINCT ?d ?c WHERE { ?d mentions/a/subClassOf+ ?c }"
+    )
+    assert counts == {"collect": 1, "localCheckpoint": 0}
+    assert sorted((r.d, r.c) for r in sol.collect()) == [
+        ("d1", "Agent"), ("d1", "Thing"), ("d2", "Thing"),
+    ]
+    assert counts["localCheckpoint"] == 0
+
+
+def test_sparql_deep_nesting_fails_loudly(spark):
+    """400 nested groups would overflow the recursive compiler (about
+    four Python frames a level) or Spark's analyzer: every query form
+    refuses them with the front-end's ValueError before compiling, and
+    the session keeps answering."""
+    import pytest as _pt
+
+    from kgc.graph import sparql_aggregate, sparql_construct, sparql_query
+
+    one = spark.createDataFrame([("a", "p", "b")], "subj string, pred string, obj string")
+    where = "WHERE " + "{ ?s ?p ?o " * 400 + "}" * 400
+    for fn, head in (
+        (sparql_query, "SELECT *"),
+        (sparql_aggregate, "SELECT (COUNT(?s) AS ?n)"),
+        (sparql_construct, "CONSTRUCT { ?s ?p ?o }"),
+    ):
+        with _pt.raises(ValueError, match="nests too deeply"):
+            fn(one, f"{head} {where}")
+    assert sparql_query(one, "SELECT * WHERE { ?s ?p ?o }").count() == 1
+
+
+def test_sparql_aggregate_lifts_top_level_only(spark):
+    """A nested aggregate subquery keeps its own (AGG AS ?x) items and
+    GROUP BY: the outer query counts ?d once per (mention, named entity)
+    solution, the inner query takes MAX per entity."""
+    from kgc.graph import sparql_aggregate, sparql_query
+
+    kg = spark.createDataFrame(
+        [("d1", "mentions", "e1"), ("d2", "mentions", "e1"),
+         ("d1", "mentions", "e2"), ("d3", "mentions", "e3"),
+         ("e1", "name", "a"), ("e1", "name", "b"), ("e2", "name", "c")],
+        "subj string, pred string, obj string",
+    )
+    inner = "{ SELECT ?e (MAX(?x) AS ?m) WHERE { ?e name ?x } GROUP BY ?e }"
+    rows = sparql_aggregate(
+        kg, f"SELECT (COUNT(?d) AS ?n) WHERE {{ ?d mentions ?e {inner} }}"
+    ).collect()
+    assert [r.n for r in rows] == [3]
+    rows = sparql_aggregate(
+        kg,
+        f"SELECT ?m (COUNT(?d) AS ?n) WHERE {{ ?d mentions ?e {inner} }} "
+        "GROUP BY ?m HAVING (?n > 1)",
+    ).collect()
+    assert [(r.m, r.n) for r in rows] == [("b", 2)]
+    # a plain subquery holding an aggregate one stays a plain SELECT
+    rows = sparql_query(
+        kg,
+        "SELECT DISTINCT ?d ?m WHERE { ?d mentions ?e "
+        f"{{ SELECT ?e ?m WHERE {{ ?e name ?x {inner} }} }} }}",
+    ).collect()
+    assert sorted((r.d, r.m) for r in rows) == [("d1", "b"), ("d1", "c"), ("d2", "b")]
+
+
 def test_entity_cocitation_counts_and_hub_cap(spark):
     from kgc.graph import entity_cocitation
 

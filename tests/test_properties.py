@@ -629,6 +629,51 @@ class TestPathDifferential:
         assert got == sorted(proj), (rows, form, s_t, o_t, got, proj)
 
 
+class TestClosureDifferential:
+    """transitive_closure's two routes — driver BFS (default threshold)
+    and path doubling (small_graph_threshold=0) — vs a naive evaluator
+    that grows walks of exactly k edges, on the full (src, dst, depth)
+    multiset: cycles, self-loops, duplicate edges, NULL endpoints, and a
+    chain longer than max_depth so the depth cap bites."""
+
+    _NODES = st.sampled_from(["a", "b", "c", "d", "e", None])
+
+    @staticmethod
+    def _naive(edges, max_depth):
+        adj = {(s, d) for s, d in edges if s is not None and d is not None}
+        out, walks = {}, adj
+        for k in range(1, max(max_depth, 1) + 1):
+            for pair in walks:
+                out.setdefault(pair, k)
+            walks = {(s, d2) for s, d in walks for d1, d2 in adj if d == d1}
+        return sorted((s, d, k) for (s, d), k in out.items())
+
+    @given(
+        st.lists(st.tuples(_NODES, _NODES), max_size=12),
+        st.integers(0, 5),
+        st.booleans(),
+    )
+    @settings(max_examples=25, deadline=None)
+    def test_routes_equal_naive(self, spark, edges, max_depth, chain):
+        from kgc.graph import transitive_closure
+
+        if chain:  # one edge longer than the cap, joined to the graph
+            edges = edges + [(f"c{i}", f"c{i + 1}") for i in range(max_depth + 2)]
+            edges.append(("a", "c0"))
+        df = spark.createDataFrame(edges or [("zz", "zz")], "u string, v string")
+        if not edges:
+            df = df.filter("u <> 'zz'")
+        want = self._naive(edges, max_depth)
+        for threshold in (None, 0):
+            kw = {} if threshold is None else {"small_graph_threshold": threshold}
+            got = sorted(
+                tuple(r) for r in transitive_closure(
+                    df, "u", "v", max_depth=max_depth, **kw
+                ).collect()
+            )
+            assert got == want, (edges, max_depth, threshold, got, want)
+
+
 class TestAggregateDifferential:
     """Differential testing of sparql_aggregate: random rows, one
     grouped pattern, the full aggregate menu (incl. COUNT DISTINCT,
