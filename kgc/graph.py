@@ -37,7 +37,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgc.canon import SMALL_GRAPH_THRESHOLD, collect_if_small
+from kgc.canon import SMALL_GRAPH_THRESHOLD, collect_if_small, local_frame
 
 DEFAULT_SCALE = 10**12
 
@@ -200,7 +200,8 @@ def transitive_closure(
       * at most ``small_graph_threshold`` distinct edges: the probe job
         that counts them brings them to the driver, a depth-capped BFS
         from every source closes them, and the pairs come back as one
-        ``createDataFrame`` — no per-round Spark jobs.  A BFS that would
+        Arrow-built frame (:func:`kgc.canon.local_frame`) — no per-round
+        Spark jobs.  A BFS that would
         relax more than ``DRIVER_PAIR_FACTOR`` × threshold edges gives
         up and the relation takes the distributed route instead.
       * otherwise (or ``small_graph_threshold=0``): path doubling.
@@ -230,16 +231,9 @@ def transitive_closure(
             DRIVER_PAIR_FACTOR * small_graph_threshold,
         )
         if rows is not None:
-            import pyarrow as pa
-
-            # an Arrow table ships to the JVM in one batch; a row list
-            # pickles row by row (~4x slower for a handful of rows)
-            cols = list(zip(*rows)) or [(), (), ()]
-            return edges.sparkSession.createDataFrame(pa.table({
-                src: pa.array(cols[0], pa.string()),
-                dst: pa.array(cols[1], pa.string()),
-                "depth": pa.array(cols[2], pa.int32()),
-            }))
+            return local_frame(
+                edges.sparkSession, rows, f"`{src}` string, `{dst}` string, depth int"
+            )
     return _closure_doubling(e, src, dst, max_depth, checkpoint)
 
 
@@ -592,9 +586,16 @@ def bgp_query(
 # a warehouse KG consumer actually runs against a (subj, pred, obj)
 # table —
 #
-#   SELECT [DISTINCT] (?v | (expr AS ?v)) ... | *
-#   WHERE group
-#   [ORDER BY (?v | ASC(?v) | DESC(?v) | expr) ...] [LIMIT n] [OFFSET n]
+#   query := head [WHERE] group modifiers    — one token stream, one
+#                                              recursive-descent parser
+#   head  := SELECT [DISTINCT] (?v | (expr AS ?v)
+#                               | (AGG([DISTINCT] expr|*[; SEPARATOR="s"]) AS ?v)) ... | *
+#          | CONSTRUCT { s p o . ... } | CONSTRUCT WHERE (group = template)
+#          | ASK | DESCRIBE (?v | term) ...   (DESCRIBE's group is optional)
+#   modifiers := [GROUP BY ?v ...] [HAVING (bool-expr)]
+#                [ORDER BY (?v | ASC(?v) | DESC(?v) | expr) ...] [LIMIT n] [OFFSET n]
+#   # comment                    — to the end of the line, outside IRIs
+#                                  and literals
 #
 #   group := { element ... }, the elements in any order and nesting:
 #           tp . tp ...
@@ -610,8 +611,8 @@ def bgp_query(
 #             | CONTAINS/STRSTARTS/STRENDS(s, t)
 #             | regex(?x, "pat"[, "i"]) | [!]bound(?x)
 #           FILTER [NOT] EXISTS group
-#           { SELECT ... }            — subquery (plain or aggregate),
-#             joined on its projected variables
+#           { SELECT ... }            — subquery: the query rule again
+#             (plain or aggregate), joined on its projected variables
 #
 # parse_sparql turns every group into an ordered element list (SPARQL
 # 1.1 algebra, spec §18.2) and _compile_group folds it in text order:
@@ -655,13 +656,16 @@ def bgp_query(
 
 _SPARQL_TOKEN = re.compile(
     r"""\?[A-Za-z_]\w*      # variable
-      | <[^>]*>[+*]?        # IRI ref, optional +/* path
+      | <[^\s<>"{}|^`\\]*>[+*]?  # IRI ref (no spaces: a "<" comparison
+                            #   is not one), optional +/* path
       | "(?:[^"\\]|\\.)*"   # quoted literal
+      | \#[^\n]*            # comment, after IRIs and literals so a "#"
+                            #   inside one stays text; the parser drops it
       | -?\d+\.\d+          # decimal literal (before "." punctuation —
                             #   the pattern separator never has digits
                             #   on BOTH sides)
       | [{}(),.]            # punctuation (comma separates arg/IN lists)
-      | [^\s{}(),."]+       # bare term / keyword
+      | [^\s{}(),."\#]+     # bare term / keyword
     """,
     re.VERBOSE,
 )
@@ -810,12 +814,31 @@ def _sparql_unquote(tok: str) -> str:
 
 
 def parse_sparql(text: str) -> dict:
-    """Parse the SPARQL subset to a plain dict {select, distinct, where,
-    order, limit, offset}.  ``select`` items are plain var names or
-    ("expr", name, ast) for (expr AS ?v).  ``where`` is the WHERE group
-    as SPARQL 1.1 algebra (spec §18.2): an ordered element list, in
-    query-text order.  Every ``{ ... }`` parses with the one group rule,
-    so a nested group is again an element list:
+    """Parse a query of any of the four forms to a plain dict.  One
+    token stream and one recursive-descent grammar read the head, the
+    WHERE group and the solution modifiers; ``#`` comments are tokens
+    the parser drops.  Every form's dict has
+
+      form        "select" | "construct" | "ask" | "describe"
+      select      None (``*``; every non-SELECT form) or a list of var
+                  names and ("expr", name, ast) for (expr AS ?v)
+      distinct    SELECT DISTINCT
+      aggregates  [(fn, distinct, arg-ast | None for *, alias, separator)]
+                  from the SELECT list's (AGG(...) AS ?x) items, in order
+      where       the WHERE group (below); None for a DESCRIBE without one
+      group_by    [var, ...]
+      having      boolean AST over aliases and group vars, unquoted
+                  numbers compared as double (_having_numeric), or None
+      order       [(var | ("expr", ast), ascending), ...]
+      limit, offset   int or None
+
+    plus ``template`` [(s, p, o), ...] for CONSTRUCT (the WHERE group's
+    patterns for ``CONSTRUCT WHERE { ... }``) and ``describe`` [term,
+    ...] for DESCRIBE (constants unquoted, variables as "?v").
+
+    ``where`` is SPARQL 1.1 algebra (spec §18.2): an ordered element
+    list, in query-text order.  Every ``{ ... }`` parses with the one
+    group rule, so a nested group is again an element list:
 
       ("bgp", [tp, ...])           triple patterns (s, p, o); inside
                                    GRAPH, quads (s, p, o, graph-term)
@@ -827,7 +850,7 @@ def parse_sparql(text: str) -> dict:
       ("bind", var, ast)           Extend by a scalar-expression AST
       ("filter", ast)              boolean AST
       ("exists", positive, group)  FILTER [NOT] EXISTS
-      ("subquery", text)           { SELECT ... }, compiled on its own
+      ("subquery", q)              { SELECT ... }, q its parsed dict
 
     Filter ASTs have leaves ("cmp", lhs, op, rhs, (lhs_quoted,
     rhs_quoted)) | ("cmp2", lhs-ast, op, rhs-ast) | ("strtest", fn, a, b)
@@ -856,7 +879,7 @@ MAX_GROUP_DEPTH = 64
 
 
 def _parse_sparql(text: str) -> dict:
-    toks = _SPARQL_TOKEN.findall(re.sub(r"#[^\n]*", " ", text))
+    toks = [t for t in _SPARQL_TOKEN.findall(text) if t[0] != "#"]
     depth = 0
     for t in toks:
         depth += (t == "{") - (t == "}")
@@ -879,6 +902,16 @@ def _parse_sparql(text: str) -> dict:
             raise ValueError(f"expected {expect}, got {t!r} at token {pos}")
         pos += 1
         return t
+
+    def kw(*words):
+        return peek() is not None and peek().upper() in words
+
+    def as_var(what):
+        take("AS")
+        v = take()
+        if not v.startswith("?"):
+            raise ValueError(f"{what} needs a ?var, got {v!r}")
+        return v[1:]
 
     def is_term(t):
         return t is not None and t not in "{}(),." and t.upper() not in (
@@ -1175,33 +1208,6 @@ def _parse_sparql(text: str) -> dict:
         take(")")
         return e
 
-    take("SELECT")
-    distinct = peek() is not None and peek().upper() == "DISTINCT"
-    if distinct:
-        take()
-    select: list | None = []
-    if peek() == "*":
-        take()
-        select = None
-    else:
-        while peek() is not None and (
-            peek().startswith("?") or peek() == "("
-        ):
-            if peek() == "(":
-                # (expr AS ?v) — computed projection, same scalar
-                # subset as BIND
-                take()
-                ast = scalar_expr()
-                take("AS")
-                v = take()
-                if not v.startswith("?"):
-                    raise ValueError(f"AS needs a ?var, got {v!r}")
-                take(")")
-                select.append(("expr", v[1:], ast))
-            else:
-                select.append(take()[1:])
-        if not select:
-            raise ValueError("SELECT needs ?vars, (expr AS ?v), or *")
     def values_block():
         """VALUES ?v { t ... }  |  VALUES (?a ?b) { (t t) ... }"""
         if peek() == "(":
@@ -1263,27 +1269,15 @@ def _parse_sparql(text: str) -> dict:
         """{ ... } -> ordered element list (see parse_sparql).  ``graph``
         is the enclosing GRAPH term: every triple pattern inside
         carries it as a 4th term."""
-        nonlocal pos
         take("{")
-        if peek() is not None and peek().upper() == "SELECT":
-            # { SELECT ... } — a subquery: capture its token span
-            # verbatim (matching-brace scan); it compiles through the
-            # ordinary SELECT / aggregate front-ends
+        if kw("SELECT"):
+            # { SELECT ... } — a subquery: the same query rule, nested
             if graph is not None:
                 raise ValueError(
                     "subqueries inside GRAPH are outside the subset"
                 )
-            depth, j = 1, pos
-            while j < len(toks) and depth:
-                if toks[j] == "{":
-                    depth += 1
-                elif toks[j] == "}":
-                    depth -= 1
-                j += 1
-            if depth:
-                raise ValueError("unterminated subquery")
-            sub = " ".join(toks[pos : j - 1])
-            pos = j
+            sub = query()
+            take("}")
             return [("subquery", sub)]
         els: list = []
         while peek() != "}":
@@ -1327,12 +1321,9 @@ def _parse_sparql(text: str) -> dict:
                 take()
                 take("(")
                 ast = scalar_expr()
-                take("AS")
-                v = take()
-                if not v.startswith("?"):
-                    raise ValueError(f"BIND ... AS needs a ?var, got {v!r}")
+                v = as_var("BIND ... AS")
                 take(")")
-                els.append(("bind", v[1:], ast))
+                els.append(("bind", v, ast))
             elif up == "GRAPH":
                 # GRAPH (?g | <iri>) { ... } — named-graph scope: every
                 # pattern inside binds/filters the quad table's
@@ -1356,47 +1347,189 @@ def _parse_sparql(text: str) -> dict:
         take("}")
         return els
 
-    take("WHERE")
-    where = group()
-    order: list[tuple[str, bool]] = []
-    limit = None
-    offset = None
-    while peek() is not None:
-        t = take()
-        if t.upper() == "ORDER":
-            take("BY")
-
-            def order_key():
-                # ?v stays a plain name (back-compat with alias-based
-                # ORDER in aggregates); an expression rides as
-                # ("expr", ast) and compiles via _compile_scalar
-                ast = scalar_expr()
-                return ast[1] if ast[0] == "var" else ("expr", ast)
-
-            while peek() is not None and (
-                peek().startswith("?")
-                or peek().upper() in ("ASC", "DESC", "IF")
-                or peek().upper() in _SCALAR_FNS
-                or peek() == "("
+    def template():
+        """CONSTRUCT's { s p o . ... } -> [(s, p, o), ...]: whole triples
+        of plain terms (a path form in a template is meaningless, and in
+        the WHERE shorthand it would silently diverge from the
+        sequence-rewritten pattern — refused loudly)."""
+        take("{")
+        tmpl, cur = [], []
+        while peek() != "}":
+            t = take()
+            if t == ".":
+                continue
+            if len(cur) == 1 and not t.startswith("<") and (
+                t[-1] in "+*?" or t[0] in "^!(" or "|" in t or "/" in t
             ):
-                d = peek()
-                if d.upper() in ("ASC", "DESC"):
-                    take()
-                    take("(")
-                    order.append((order_key(), d.upper() == "ASC"))
-                    take(")")
-                else:
-                    order.append((order_key(), True))
-        elif t.upper() == "LIMIT":
-            limit = int(take())
-        elif t.upper() == "OFFSET":
-            offset = int(take())
+                raise ValueError(f"property path {t!r} in a CONSTRUCT template")
+            if t in ("{", "(", ")", ","):
+                raise ValueError("CONSTRUCT template must be whole triples")
+            t = _sparql_unquote(t)
+            cur.append(_map_a(t) if len(cur) == 1 else t)
+            if len(cur) == 3:
+                tmpl.append(tuple(cur))
+                cur = []
+        take("}")
+        if cur or not tmpl:
+            raise ValueError("CONSTRUCT template must be whole triples")
+        return tmpl
+
+    def aggregate():
+        """AGG([DISTINCT] expr | *[; SEPARATOR="s"]) AS ?x) after a
+        SELECT item's "(" -> (fn, distinct, arg-ast or None, alias, sep);
+        the argument is any scalar expression."""
+        fn = take().upper()
+        take("(")
+        dist = kw("DISTINCT")
+        if dist:
+            take()
+        arg = None
+        if peek() == "*":
+            if fn != "COUNT":
+                raise ValueError(f"{fn}(*) is outside the subset (only COUNT(*))")
+            take()
         else:
-            raise ValueError(f"unexpected trailing token {t!r}")
-    return {
-        "select": select, "distinct": distinct, "where": where,
-        "order": order, "limit": limit, "offset": offset,
-    }
+            arg = scalar_expr()
+        sep = " "
+        if peek() is not None and peek().startswith(";"):
+            # "; SEPARATOR=" tokenizes apart wherever the text has spaces
+            head = ""
+            while peek() is not None and ";SEPARATOR=".startswith(
+                (head + peek()).upper()
+            ):
+                head += take()
+            if head.upper() != ";SEPARATOR=" or not (peek() or "").startswith('"'):
+                raise ValueError('expected ; SEPARATOR="..." in an aggregate')
+            if fn != "GROUP_CONCAT":
+                raise ValueError("SEPARATOR= only applies to GROUP_CONCAT")
+            sep = _sparql_unquote(take())
+        take(")")
+        alias = as_var("AS")
+        take(")")
+        return fn, dist, arg, alias, sep
+
+    def modifiers(q):
+        """GROUP BY, HAVING, ORDER BY, LIMIT, OFFSET, in any order."""
+        while kw("GROUP", "HAVING", "ORDER", "LIMIT", "OFFSET"):
+            t = take().upper()
+            if t == "GROUP":
+                take("BY")
+                while peek() is not None and peek().startswith("?"):
+                    q["group_by"].append(take()[1:])
+                if not q["group_by"]:
+                    raise ValueError("GROUP BY needs ?vars")
+            elif t == "HAVING":
+                # the one FILTER grammar over aliases and group vars
+                q["having"] = _having_numeric(filter_expr())
+            elif t == "ORDER":
+                take("BY")
+
+                def order_key():
+                    # ?v stays a plain name (back-compat with alias-based
+                    # ORDER in aggregates); an expression rides as
+                    # ("expr", ast) and compiles via _compile_scalar
+                    ast = scalar_expr()
+                    return ast[1] if ast[0] == "var" else ("expr", ast)
+
+                while peek() is not None and (
+                    peek().startswith("?")
+                    or peek().upper() in ("ASC", "DESC", "IF")
+                    or peek().upper() in _SCALAR_FNS
+                    or peek() == "("
+                ):
+                    d = peek()
+                    if d.upper() in ("ASC", "DESC"):
+                        take()
+                        take("(")
+                        q["order"].append((order_key(), d.upper() == "ASC"))
+                        take(")")
+                    else:
+                        q["order"].append((order_key(), True))
+            elif t == "LIMIT":
+                q["limit"] = int(take())
+            else:
+                q["offset"] = int(take())
+        if q["aggregates"]:
+            # the aggregate output is the group vars, then the aliases
+            for item in q["select"]:
+                if isinstance(item, tuple) or item not in q["group_by"]:
+                    name = item[1] if isinstance(item, tuple) else item
+                    raise ValueError(
+                        f"SELECT ?{name} beside aggregates must be a GROUP BY variable"
+                    )
+        elif q["group_by"] or q["having"] is not None:
+            raise ValueError("GROUP BY and HAVING need at least one (AGG(...) AS ?x)")
+
+    def query():
+        """The one query rule, subqueries included: the form's head, an
+        optional WHERE keyword, the group, the solution modifiers."""
+        nonlocal pos
+        if not kw("SELECT", "CONSTRUCT", "ASK", "DESCRIBE"):
+            raise ValueError(
+                f"expected SELECT, CONSTRUCT, ASK or DESCRIBE, got {peek()!r}"
+            )
+        q = {
+            "form": take().lower(), "select": None, "distinct": False,
+            "aggregates": [], "where": None, "group_by": [], "having": None,
+            "order": [], "limit": None, "offset": None,
+        }
+        if q["form"] == "select":
+            q["distinct"] = kw("DISTINCT")
+            if q["distinct"]:
+                take()
+            if peek() == "*":
+                take()
+            else:
+                select = q["select"] = []
+                while peek() is not None and (
+                    peek().startswith("?") or peek() == "("
+                ):
+                    t = take()
+                    if t.startswith("?"):
+                        select.append(t[1:])
+                    elif kw(*_AGG_FNS, "GROUP_CONCAT", "SAMPLE"):
+                        q["aggregates"].append(aggregate())
+                    else:
+                        # (expr AS ?v) — computed projection, same
+                        # scalar subset as BIND
+                        ast = scalar_expr()
+                        select.append(("expr", as_var("AS"), ast))
+                        take(")")
+                if not select and not q["aggregates"]:
+                    raise ValueError(
+                        "SELECT needs ?vars, (expr AS ?v), (AGG(...) AS ?v) or *"
+                    )
+        elif q["form"] == "construct":
+            if kw("WHERE"):
+                # CONSTRUCT WHERE { tp ... } shorthand (spec: simple
+                # triple patterns only): the group's tokens read as the
+                # template, then again as the group
+                take()
+                start = pos
+                q["template"] = template()
+                pos = start
+            else:
+                q["template"] = template()
+        elif q["form"] == "describe":
+            q["describe"] = []
+            while is_term(peek()):
+                q["describe"].append(_sparql_unquote(take()))
+            if not q["describe"]:
+                raise ValueError("expected DESCRIBE term ... [WHERE { ... }]")
+            if not kw("WHERE") and peek() != "{":
+                if any(t.startswith("?") for t in q["describe"]):
+                    raise ValueError("DESCRIBE ?var needs a WHERE group")
+                return q
+        if kw("WHERE"):
+            take()
+        q["where"] = group()
+        modifiers(q)
+        return q
+
+    q = query()
+    if peek() is not None:
+        raise ValueError(f"unexpected trailing token {peek()!r}")
+    return q
 
 
 def _path_relations(triples: DataFrame, patterns: list) -> dict[str, DataFrame]:
@@ -1611,7 +1744,7 @@ def _connected(patterns) -> list[list]:
 
 def _triple_patterns(group):
     """Every triple pattern of a WHERE tree in text order, nested groups
-    and subqueries included (a subquery's text is parsed again)."""
+    and subqueries included."""
     for el in group:
         if el[0] == "bgp":
             yield from el[1]
@@ -1619,7 +1752,7 @@ def _triple_patterns(group):
             for branch in el[1]:
                 yield from _triple_patterns(branch)
         elif el[0] == "subquery":
-            yield from _triple_patterns(_parse_subselect(el[1])["where"])
+            yield from _triple_patterns(el[1]["where"])
         elif el[0] in ("optional", "minus", "graph", "exists"):
             yield from _triple_patterns(el[-1])
 
@@ -1793,10 +1926,10 @@ def _compile_group(
             elif el[0] == "graph":
                 fold(*sub(el[2], "GRAPH"), what="GRAPH group")
             elif el[0] == "subquery":
-                fold(
-                    *_compile_subselect(triples, paths, el[1], **bgp_kwargs),
-                    what="subquery",
-                )
+                # its own WHERE, then its tail; the projection hides
+                # the inner variables
+                q = el[1]
+                fold(*_finish_query(q, *sub(q["where"], None)), what="subquery")
             else:  # values
                 _, vars_, rows = el
                 vdf = triples.sparkSession.createDataFrame(
@@ -1949,6 +2082,20 @@ def _order_col(v):
     return _compile_scalar(v[1]) if isinstance(v, tuple) else F.col(v)
 
 
+def _order_slice(out: DataFrame, q: dict) -> DataFrame:
+    """ORDER BY, OFFSET, LIMIT — the last steps of every tail."""
+    if q["order"]:
+        out = out.orderBy(
+            *[_order_col(v).asc() if asc else _order_col(v).desc()
+              for v, asc in q["order"]]
+        )
+    if q["offset"] is not None:
+        out = out.offset(q["offset"])
+    if q["limit"] is not None:
+        out = out.limit(q["limit"])
+    return out
+
+
 def _finish_select(
     out: DataFrame, q: dict, nullable: set[str]
 ) -> tuple[DataFrame, set[str]]:
@@ -1977,43 +2124,33 @@ def _finish_select(
         vis_null = nullable & set(out.columns)
     if q["distinct"]:
         out = out.dropDuplicates()
-    if q["order"]:
-        out = out.orderBy(
-            *[_order_col(v).asc() if asc else _order_col(v).desc()
-              for v, asc in q["order"]]
-        )
-    if q["offset"] is not None:
-        out = out.offset(q["offset"])
-    if q["limit"] is not None:
-        out = out.limit(q["limit"])
-    return out, vis_null
+    return _order_slice(out, q), vis_null
 
 
-def _compile_subselect(
-    triples: DataFrame, paths: dict, text: str, **bgp_kwargs
+def _finish_query(
+    q: dict, sol: DataFrame, nullable: set[str]
 ) -> tuple[DataFrame, set[str]]:
-    """Compile a { SELECT ... } subquery to (solution, nullable vars)
-    over the enclosing query's prepared table and path relations: its
-    WHERE tree, then the aggregate tail when the SELECT list carries an
-    (AGG(...) AS ?x), else the plain SELECT tail; inner variables are
-    hidden by the projection."""
-    q = _parse_subselect(text)
-    sol, nullable = _compile_group(triples, paths, q["where"], **bgp_kwargs)
-    return (_aggregate if "aggregate" in q else _finish_select)(sol, q, nullable)
+    """The one tail of every parsed query, subqueries included, over its
+    solved WHERE group: _aggregate when the SELECT list holds
+    aggregates, else _finish_select.  Returns (solutions, nullable)."""
+    return (_aggregate if q["aggregates"] else _finish_select)(sol, q, nullable)
 
 
-def _parse_subselect(text: str) -> dict:
-    outer = " ".join(chunk for top, chunk in _brace_pieces(text) if top)
-    return _parse_aggregate(text) if _SELECT_AGG.search(outer) else parse_sparql(text)
+def _parse_form(text: str, form: str) -> dict:
+    """parse_sparql, refusing a query of another form than ``form``."""
+    q = parse_sparql(text)
+    if q["form"] != form:
+        raise ValueError(f"expected a {form.upper()} query, got {q['form'].upper()}")
+    return q
 
 
 def sparql_query(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
-    """Run a SPARQL-subset query string against a (subj, pred, obj[,
-    obj_type]) triple table.  parse_sparql → the WHERE algebra tree →
+    """Run a SPARQL-subset SELECT query string against a (subj, pred,
+    obj[, obj_type]) triple table.  parse_sparql → the WHERE algebra tree →
     property-path relations → _compile_group (one recursive fold, text
-    order) → projection/ORDER/LIMIT as plain Catalyst ops.  ORDER BY is
-    required for a deterministic LIMIT and that contract is the
-    caller's (same as SQL).
+    order) → the aggregate or projection tail, ORDER/LIMIT as plain
+    Catalyst ops.  ORDER BY is required for a deterministic LIMIT and
+    that contract is the caller's (same as SQL).
 
     ``GRAPH (?g | <iri>) { ... }`` runs the block against the quad
     reading of the table: every pattern additionally binds/filters the
@@ -2028,18 +2165,18 @@ def sparql_query(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     graphs yields two solutions — a non-DISTINCT SELECT or COUNT counts
     it twice.  Use DISTINCT (or COUNT(DISTINCT ...)) for the merged
     default graph's set semantics."""
-    q = parse_sparql(text)
-    sol, nullable = _solve(triples, q, **bgp_kwargs)
-    return _finish_select(sol, q, nullable)[0]
+    q = _parse_form(text, "select")
+    return _finish_query(q, *_solve(triples, q, **bgp_kwargs))[0]
 
 
 # SPARQL aggregates + CONSTRUCT + ASK + DESCRIBE — the rest of the
-# consumer surface (all four SPARQL 1.1 query forms).
+# consumer surface (all four SPARQL 1.1 query forms), read by the same
+# parse_sparql:
 #
 #   SELECT ?g (COUNT(?x) AS ?n) ... WHERE {...} GROUP BY ?g [HAVING (...)]
-#   CONSTRUCT { tp . tp ... } WHERE {...}
+#   CONSTRUCT { tp . tp ... } WHERE {...}  |  CONSTRUCT WHERE { tp ... }
 #   ASK [WHERE] { ... }
-#   DESCRIBE (?v | <iri>) ... [WHERE { ... }]
+#   DESCRIBE (?v | <iri>) ... [[WHERE] { ... }]
 #
 # Aggregates compile to one Catalyst groupBy (hash aggregate with
 # map-side partials — the scale shape); CONSTRUCT instantiates each
@@ -2050,25 +2187,6 @@ def sparql_query(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
 
 _AGG_FNS = {"COUNT": F.count, "SUM": F.sum, "MIN": F.min, "MAX": F.max,
             "AVG": F.avg}
-
-_SELECT_AGG = re.compile(
-    r"\(\s*(COUNT|SUM|MIN|MAX|AVG|GROUP_CONCAT|SAMPLE)"
-    # argument: * | ?var | a scalar expression (strings and one level
-    # of nested parens allowed — enough for STRLEN(?n), (?a + 1) * 2)
-    r"\s*\(\s*(DISTINCT\s+)?"
-    r"((?:[^();\"]|\"(?:[^\"\\]|\\.)*\"|\([^()]*\))+?)"
-    r"(?:\s*;\s*SEPARATOR\s*=\s*(\"(?:[^\"\\]|\\.)*\"))?\s*\)"
-    r"\s+AS\s+(\?[A-Za-z_]\w*)\s*\)",
-    re.IGNORECASE,
-)
-
-
-def _parse_scalar_fragment(fragment: str):
-    """Parse a scalar-expression fragment (an aggregate's argument) to
-    the same AST BIND bodies use — by wrapping it in a minimal SELECT
-    so the one scalar grammar in parse_sparql serves both."""
-    q = parse_sparql(f"SELECT ({fragment} AS ?__agg) WHERE {{ }}")
-    return q["select"][0][2]
 
 
 def _having_numeric(f):
@@ -2103,98 +2221,14 @@ def _having_numeric(f):
     return f
 
 
-_BRACE_OR_STRING = re.compile(r'"(?:[^"\\]|\\.)*"|[{}]')
-
-
-def _brace_pieces(text: str) -> list[tuple[bool, str]]:
-    """``text`` cut into (top level?, chunk) pieces: a chunk is top
-    level when it lies outside every ``{ }`` group (braces inside string
-    literals do not count).  The pieces concatenate back to ``text``."""
-    pieces, depth, start = [], 0, 0
-    for m in _BRACE_OR_STRING.finditer(text):
-        if m.group() == "{":
-            if depth == 0:
-                pieces.append((True, text[start : m.start()]))
-                start = m.start()
-            depth += 1
-        elif m.group() == "}" and depth:
-            depth -= 1
-            if depth == 0:
-                pieces.append((False, text[start : m.end()]))
-                start = m.end()
-    pieces.append((depth == 0, text[start:]))
-    return pieces
-
-
-def _parse_aggregate(text: str) -> dict:
-    """parse_sparql for an aggregate SELECT (grammar: sparql_aggregate):
-    the (AGG(...) AS ?x) items, GROUP BY and HAVING are lifted out of the
-    query's own top-level text first (a nested subquery keeps its own)
-    and ride in ``q["aggregate"]`` as (aggs, having_ast, group_vars)."""
-    aggs = []
-
-    def lift(m):
-        fn, dist, frag, sep_raw, alias = (
-            m.group(1).upper(), bool(m.group(2)), m.group(3).strip(),
-            m.group(4), m.group(5)[1:],
-        )
-        if sep_raw is not None and fn != "GROUP_CONCAT":
-            raise ValueError("SEPARATOR= only applies to GROUP_CONCAT")
-        sep = _sparql_unquote(sep_raw) if sep_raw is not None else " "
-        if frag == "*":
-            ast = None  # COUNT(*)
-        elif re.fullmatch(r"\?[A-Za-z_]\w*", frag):
-            ast = ("var", frag[1:])
-        else:
-            # aggregate over a scalar expression — same grammar as BIND
-            ast = _parse_scalar_fragment(frag)
-        aggs.append((fn, dist, ast, alias, sep))
-        return ""  # remove from the SELECT list the base parser sees
-
-    pieces = [
-        (top, _SELECT_AGG.sub(lift, chunk) if top else chunk)
-        for top, chunk in _brace_pieces(text)
-    ]
-
-    def cut(pattern):
-        """The first top-level match of ``pattern``, cut out of the text."""
-        for i, (top, chunk) in enumerate(pieces):
-            m = re.search(pattern, chunk, re.IGNORECASE) if top else None
-            if m:
-                pieces[i] = (top, chunk[: m.start()] + " " + chunk[m.end():])
-                return m
-        return None
-
-    mh = cut(r"HAVING\s*\(((?:[^()]|\([^()]*\))*)\)")
-    having_ast = None
-    if mh:
-        # HAVING reuses the ONE boolean grammar (&&/||/!(), scalar
-        # comparisons, string tests, IN) by parsing its body as a
-        # FILTER; variables are aggregate aliases / group vars.
-        hq = parse_sparql(
-            "SELECT ?__h WHERE { FILTER (" + mh.group(1) + ") }"
-        )
-        having_ast = _having_numeric(hq["where"][0][1])
-    mg = cut(r"GROUP\s+BY((?:\s+\?[A-Za-z_]\w*)+)")
-    group_vars = re.findall(r"\?([A-Za-z_]\w*)", mg.group(1)) if mg else []
-    if not aggs:
-        raise ValueError("sparql_aggregate needs at least one (AGG(...) AS ?x)")
-    # a SELECT of only aggregates leaves no projection vars — bind all
-    lifted = re.sub(r"(?i)^(\s*SELECT\s+(?:DISTINCT\s+)?)(?=WHERE\b)",
-                    r"\g<1>* ", "".join(chunk for _, chunk in pieces))
-
-    q = parse_sparql(lifted)
-    q["aggregate"] = (aggs, having_ast, group_vars)
-    return q
-
-
 def _aggregate(
     out: DataFrame, q: dict, sub_null: set[str]
 ) -> tuple[DataFrame, set[str]]:
     """Aggregate tail over a solved WHERE group: GROUP BY + aggregates
     (one Catalyst hash aggregate), HAVING, ORDER BY, OFFSET, LIMIT —
-    plus the output's nullable set."""
-    aggs, having_ast, group_vars = q["aggregate"]
+    plus the output's nullable set.  The output is the group vars, then
+    the aggregates in SELECT order."""
+    aggs, having_ast, group_vars = q["aggregates"], q["having"], q["group_by"]
     exprs = []
     for fn, dist, arg, alias, sep in aggs:
         col = _compile_scalar(arg) if arg is not None else F.lit(1)
@@ -2227,15 +2261,6 @@ def _aggregate(
                 f"HAVING references unknown alias ?{sorted(unknown)[0]}"
             )
         out = out.filter(_compile_filter(having_ast))
-    if q["order"]:
-        out = out.orderBy(
-            *[_order_col(v).asc() if asc else _order_col(v).desc()
-              for v, asc in q["order"]]
-        )
-    if q["offset"] is not None:
-        out = out.offset(q["offset"])
-    if q["limit"] is not None:
-        out = out.limit(q["limit"])
     # nullability of the aggregate output (consumed by the subquery
     # join): a group var stays nullable if it was; a value aggregate
     # (SUM/AVG/MIN/MAX/SAMPLE) over a possibly-unbound var can be NULL
@@ -2246,11 +2271,12 @@ def _aggregate(
         if fn in ("SUM", "AVG", "MIN", "MAX", "SAMPLE")
         and arg is not None and (_scalar_vars(arg) & sub_null)
     }
-    return out, nullable
+    return _order_slice(out, q), nullable
 
 
 def sparql_aggregate(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
-    """SPARQL GROUP BY aggregation over a triple table.  Grammar:
+    """SPARQL GROUP BY aggregation over a triple table: sparql_query for
+    a SELECT whose list holds at least one aggregate.  Grammar:
 
       SELECT ?g ... (AGG(expr|?v|*) AS ?alias) ... WHERE { ... } GROUP BY ?g ...
       [HAVING (bool-expr over aliases/group vars — the full FILTER
@@ -2266,7 +2292,9 @@ def sparql_aggregate(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     GROUP_CONCAT emits sorted with the spec-default ' ' separator or
     an explicit ``GROUP_CONCAT(?v; SEPARATOR="...")``
     (deterministic under any partitioning); SAMPLE is MIN (any
-    value is conformant, MIN is the deterministic one).  The WHERE
+    value is conformant, MIN is the deterministic one).  A plain SELECT
+    variable must be a GROUP BY variable; the output is the group vars,
+    then the aggregates in SELECT order.  The WHERE
     group runs through the full group algebra, so GRAPH blocks
     compose with aggregation (pass graph_col= for a non-doc_id
     provenance column).  SUM/AVG
@@ -2274,9 +2302,10 @@ def sparql_aggregate(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     determinism, same as SQL.  HAVING compares aggregate ALIASES
     (unquoted numeric literals compare as doubles, anything else as
     strings) and compiles to a post-aggregate Catalyst filter."""
-    q = _parse_aggregate(text)
-    sol, nullable = _solve(triples, q, **bgp_kwargs)
-    return _aggregate(sol, q, nullable)[0]
+    q = _parse_form(text, "select")
+    if not q["aggregates"]:
+        raise ValueError("sparql_aggregate needs at least one (AGG(...) AS ?x)")
+    return _finish_query(q, *_solve(triples, q, **bgp_kwargs))[0]
 
 
 def sparql_construct(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
@@ -2288,46 +2317,11 @@ def sparql_construct(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     'node' when the template object is a variable that is the subject of
     some WHERE triple pattern (nested groups and subqueries included),
     else 'literal' — documented approximation over an untyped triple
-    table.  The WHERE group is parsed once."""
-    mw = re.match(
-        r"\s*CONSTRUCT\s+WHERE\s*\{(.*)\}\s*([^{}]*)$", text,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if mw:
-        # CONSTRUCT WHERE { tp ... } shorthand (spec: simple triple
-        # patterns only) — template = pattern list, verbatim
-        body, trailer = mw.group(1), mw.group(2)
-        text = f"CONSTRUCT {{ {body} }} WHERE {{ {body} }} {trailer}"
-    m = re.match(r"\s*CONSTRUCT\s*\{(.*?)\}\s*(WHERE\s*\{.*)", text,
-                 re.IGNORECASE | re.DOTALL)
-    if not m:
-        raise ValueError("expected CONSTRUCT { template } WHERE { ... }")
-    tmpl_toks = _SPARQL_TOKEN.findall(m.group(1))
-    tmpl, cur = [], []
-    for t in tmpl_toks:
-        if t == ".":
-            continue
-        if len(cur) == 1 and not t.startswith("<") and (
-            t[-1] in "+*?" or t[0] in "^!(" or "|" in t or "/" in t
-        ):
-            # a path form in a template is meaningless (and in the
-            # WHERE-shorthand it would silently diverge from the
-            # sequence-rewritten pattern) — refuse loudly
-            raise ValueError(
-                f"property path {t!r} in a CONSTRUCT template"
-            )
-        cur.append(_map_a(_sparql_unquote(t)) if len(cur) == 1
-                   else _sparql_unquote(t))
-        if len(cur) == 3:
-            tmpl.append(tuple(cur))
-            cur = []
-    if cur or not tmpl:
-        raise ValueError("CONSTRUCT template must be whole triples")
-    wq = parse_sparql("SELECT * " + m.group(2))
-    sol, nullable = _solve(triples, wq, **bgp_kwargs)
-    sols = _finish_select(sol, wq, nullable)[0]
+    table."""
+    q = _parse_form(text, "construct")
+    sols = _finish_query(q, *_solve(triples, q, **bgp_kwargs))[0]
     subj_vars = {
-        pat[0][1:] for pat in _triple_patterns(wq["where"])
+        pat[0][1:] for pat in _triple_patterns(q["where"])
         if pat[0].startswith("?")
     }
 
@@ -2342,7 +2336,7 @@ def sparql_construct(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
         return c
 
     parts = []
-    for s, p, o in tmpl:
+    for s, p, o in q["template"]:
         oc, ot = term(o, "obj")
         row = sols.select(
             term(s, "subj").alias("subj"),
@@ -2369,12 +2363,8 @@ def sparql_ask(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     first match (the LocalLimit short-circuits each task and the
     CollectLimit takes one partition's hit) — an existence probe, not
     a full evaluation."""
-    m = re.match(r"\s*ASK\s*(?:WHERE\s*)?(\{.*)", text,
-                 re.IGNORECASE | re.DOTALL)
-    if not m:
-        raise ValueError("expected ASK [WHERE] { ... }")
-    q = parse_sparql("SELECT * WHERE " + m.group(1))
-    sol, _ = _solve(triples, q, **bgp_kwargs)
+    q = _parse_form(text, "ask")
+    sol = _finish_query(q, *_solve(triples, q, **bgp_kwargs))[0]
     return (
         sol.select(F.lit(1).alias("_one"))
         .limit(1)
@@ -2386,29 +2376,20 @@ def sparql_describe(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     """SPARQL DESCRIBE: every triple whose SUBJECT is a described
     resource (the minimal symmetric-free Concise Bounded Description —
     subject-outbound edges only, the standard-allowed simple form).
-    Grammar: ``DESCRIBE (?v | <iri> | term) ... [WHERE { ... }]``;
+    Grammar: ``DESCRIBE (?v | <iri> | term) ... [[WHERE] { ... }]``;
     variables require a WHERE group and describe every binding.
 
     Scale shape: the resource set (explicit constants ∪ distinct
     solution bindings) is deduped and semi-joined against the triple
     table on subj — one hash join, the fact table moves once;
     DESCRIBE of a handful of constants is a pushed isin filter."""
-    m = re.match(
-        r"\s*DESCRIBE\s+(.*?)\s*(WHERE\s*\{.*)?$", text,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if not m or not m.group(1).strip():
-        raise ValueError("expected DESCRIBE term ... [WHERE { ... }]")
-    terms = [_sparql_unquote(t) for t in _SPARQL_TOKEN.findall(m.group(1))]
-    consts = [t for t in terms if not t.startswith("?")]
-    vars_ = [t[1:] for t in terms if t.startswith("?")]
-    if vars_ and not m.group(2):
-        raise ValueError("DESCRIBE ?var needs a WHERE group")
+    q = _parse_form(text, "describe")
+    consts = [t for t in q["describe"] if not t.startswith("?")]
+    vars_ = [t[1:] for t in q["describe"] if t.startswith("?")]
 
     res: DataFrame | None = None
-    if m.group(2):
-        q = parse_sparql("SELECT * " + m.group(2))
-        sol, _ = _solve(triples, q, **bgp_kwargs)
+    if q["where"] is not None:
+        sol = _finish_query(q, *_solve(triples, q, **bgp_kwargs))[0]
         missing = [v for v in vars_ if v not in sol.columns]
         if missing:
             raise ValueError(f"DESCRIBE vars not bound by WHERE: {missing}")
@@ -2425,6 +2406,4 @@ def sparql_describe(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
             [(c,) for c in consts], "subj string"
         )
         res = cdf if res is None else res.unionByName(cdf)
-    if res is None:
-        raise ValueError("DESCRIBE resolved no resources")
     return triples.join(res.dropDuplicates(), on="subj", how="left_semi")

@@ -15,8 +15,11 @@ import argparse
 import io
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# this checkout's root, so a run from any copy dumps that copy's plans
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 HEADLINE = [
     "graph_suite",
@@ -104,7 +107,7 @@ def audit(plan: str) -> list[str]:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--out", default="/root/repo/PLANS.md")
+    ap.add_argument("--out", default=str(ROOT / "PLANS.md"))
     args = ap.parse_args()
 
     import __spark_entry__ as em

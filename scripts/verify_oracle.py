@@ -14,8 +14,10 @@ import decimal
 import math
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# this checkout's root, so a run from any copy tests that copy's code
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",

@@ -591,6 +591,25 @@ def test_parse_sparql_structure():
         ("filter", ("cmp", "?d", "!=", "doc:9", (False, True))),
     ]
     assert q["order"] == [("d", True), ("n", False)] and q["limit"] == 5
+    # aggregates, GROUP BY and HAVING parse into the same dict; a
+    # subquery element holds its own parsed dict
+    q = parse_sparql(
+        "SELECT ?m (COUNT(DISTINCT ?d) AS ?n) WHERE { ?d mentions ?e "
+        "{ SELECT ?e (MAX(?x) AS ?m) WHERE { ?e name ?x } GROUP BY ?e } } "
+        "GROUP BY ?m HAVING (?n > 1) ORDER BY DESC(?n)"
+    )
+    assert q["form"] == "select" and q["select"] == ["m"]
+    assert q["aggregates"] == [("COUNT", True, ("var", "d"), "n", " ")]
+    assert q["group_by"] == ["m"] and q["order"] == [("n", False)]
+    assert q["having"] == (
+        "cmp2", ("dbl", ("var", "n")), ">", ("dbl", ("num", 1.0))
+    )
+    (kind, bgp), (sub_kind, sub) = q["where"]
+    assert (kind, bgp) == ("bgp", [("?d", "mentions", "?e")])
+    assert sub_kind == "subquery" and isinstance(sub, dict)
+    assert sub["select"] == ["e"] and sub["group_by"] == ["e"]
+    assert sub["aggregates"] == [("MAX", False, ("var", "x"), "m", " ")]
+    assert sub["where"] == [("bgp", [("?e", "name", "?x")])]
 
 
 def test_parse_sparql_union_minus_values():
@@ -2586,3 +2605,90 @@ def test_sparql_benchmark_shapes_plan_pin(spark):
             for node in ("Join", "Union", "Aggregate")
         )
         assert got == want, (shape, got, plan)
+
+
+def test_sparql_hash_inside_literal_is_text(spark):
+    """A "#" inside a quoted literal is part of the literal, not the
+    start of a comment."""
+    from kgc.graph import sparql_query
+
+    kg = spark.createDataFrame(
+        [("d1", "label", "x#y"), ("d1", "p", "z"),
+         ("d2", "label", "x"), ("d2", "p", "z")],
+        "subj string, pred string, obj string",
+    )
+    rows = sparql_query(
+        kg, 'SELECT ?d WHERE { ?d label "x#y" .\n ?d p ?z }'
+    ).collect()
+    assert [r.d for r in rows] == ["d1"]
+
+
+def test_parse_sparql_comments_are_tokens():
+    """A "#" inside an IRI is part of the IRI; a comment runs to the end
+    of its line, wherever it starts; a "<" comparison is not an IRI."""
+    from kgc.graph import parse_sparql
+
+    q = parse_sparql(
+        "# leading comment\nSELECT ?d # the subject\n"
+        "WHERE { ?d label <http://s.org/#t> } # trailing }"
+    )
+    assert q["select"] == ["d"]
+    assert q["where"] == [("bgp", [("?d", "label", "http://s.org/#t")])]
+    q = parse_sparql("SELECT ?a WHERE { ?a p ?b . ?a q ?c FILTER (?b < 3 && ?c > 1) }")
+    assert q["where"][1] == ("filter", (
+        "and", ("cmp", "?b", "<", "3", (False, False)),
+        ("cmp", "?c", ">", "1", (False, False)),
+    ))
+    q = parse_sparql("SELECT ?a WHERE { ?a p ?b FILTER (?b < 3) # not b > 3\n}")
+    assert q["where"][1] == ("filter", ("cmp", "?b", "<", "3", (False, False)))
+
+
+def test_sparql_aggregate_grammar_reads_tokens(spark):
+    """Aggregates, GROUP BY and HAVING parse in the one grammar: a
+    commented-out item is not an item, an aggregate argument nests like
+    any scalar expression, HAVING takes any FILTER expression."""
+    from kgc.graph import sparql_aggregate, sparql_query
+
+    kg = spark.createDataFrame(
+        [("g1", "p", "ab"), ("g1", "p", "c"), ("g2", "p", "d"),
+         ("g1", "q", "xy"), ("g1", "q", "z"), ("g2", "q", "w"),
+         ("ggg", "p", "a"), ("ggg", "p", "b"), ("ggg", "q", "c")],
+        "subj string, pred string, obj string",
+    )
+    df = sparql_aggregate(
+        kg,
+        "SELECT ?d (COUNT(?x) AS ?n) # (COUNT(?d) AS ?m)\n"
+        "WHERE { ?d p ?x } GROUP BY ?d ORDER BY ?d",
+    )
+    assert df.columns == ["d", "n"]
+    assert [tuple(r) for r in df.collect()] == [("g1", 2), ("g2", 1), ("ggg", 2)]
+    rows = sparql_aggregate(
+        kg,
+        "SELECT ?g (SUM(STRLEN(CONCAT(?a, ?b))) AS ?s) "
+        "WHERE { ?g p ?a . ?g q ?b } GROUP BY ?g ORDER BY ?g",
+    ).collect()
+    # g1: (ab|c) x (xy|z) -> 4 + 3 + 3 + 2; g2: dw; ggg: ac + bc
+    assert [(r.g, r.s) for r in rows] == [("g1", 12.0), ("g2", 2.0), ("ggg", 4.0)]
+    rows = sparql_query(
+        kg,
+        "SELECT ?g (COUNT(?x) AS ?n) WHERE { ?g p ?x } GROUP BY ?g "
+        "HAVING ((?n > 1) && (STRLEN(?g) > 2))",
+    ).collect()
+    assert [(r.g, r.n) for r in rows] == [("ggg", 2)]
+
+
+def test_sparql_query_forms_take_leading_comments(spark):
+    """Every query form reads the same token stream, comments
+    included."""
+    from kgc.graph import sparql_ask, sparql_construct
+
+    kg = _kg(spark)
+    assert sparql_ask(
+        kg, "# does any document mention anything?\nASK { ?d mentions ?e }"
+    ).collect()[0].ask is True
+    got = sparql_construct(
+        kg,
+        "# who cites whom\nCONSTRUCT { ?d cites ?e } # the template\n"
+        "WHERE { ?d mentions ?e . ?e name \"Ada\" }",
+    ).collect()
+    assert [(r.subj, r.pred, r.obj) for r in got] == [("doc:1", "cites", "ent:1")]

@@ -526,6 +526,37 @@ def test_resolve_dictionary_drops_punctuation_only_aliases(spark):
     assert got == [("x two", "X2", "Thing", 1.0, "X2")]
 
 
+def test_driver_built_frames_are_local_scans(spark):
+    """The resolved dictionary and CC's small-graph output are built on
+    the driver as Arrow tables (kgc.canon.local_frame): their plans read
+    a LocalTableScan, not a Scan ExistingRDD whose every read runs a
+    Python-worker job.  An empty dictionary and an all-NULL weight
+    column keep the DDL schema."""
+    ddl = "alias string, entity_id string, entity_type string, weight double"
+    adf = spark.createDataFrame(
+        [("Ada", "E2", "Person", None), ("Ada", "E1", "Person", None),
+         ("Ada L", "E2", "Person", None)],
+        ddl,
+    )
+    resolved = canon.resolve_dictionary(adf).table
+    cc = canon.connected_components(
+        spark.createDataFrame([("b", "a"), ("b", "c")], "src string, dst string")
+    )
+    for df in (resolved, cc):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan and "LocalTableScan" in plan, plan
+    assert sorted(tuple(r) for r in resolved.collect()) == [
+        ("ada", "E1", "Person", None, "E1"), ("ada l", "E2", "Person", None, "E1"),
+    ]
+    assert sorted(tuple(r) for r in cc.collect()) == [("a", "a"), ("b", "a"), ("c", "a")]
+    empty = canon.resolve_dictionary(spark.createDataFrame([], ddl)).table
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == (
+        "struct<alias:string,entity_id:string,entity_type:string,"
+        "weight:double,canonical_id:string>"
+    )
+
+
 def _plan_nodes(plan, caches=1):
     """Physical node names, descending into the first ``caches`` levels
     of cached subplans (a stage's own cache, not its inputs')."""

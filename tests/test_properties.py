@@ -153,17 +153,26 @@ class TestSparqlParserTotality:
     grammar's own punctuation) and assert totality."""
 
     @given(
+        st.sampled_from([
+            "", "SELECT ", "SELECT ?g (COUNT(", "SELECT (SUM(STRLEN(?x)) AS ?s) ",
+            "SELECT ?g (GROUP_CONCAT(?x; SEPARATOR=",
+            "SELECT ?g (COUNT(?x) AS ?n) WHERE { ?g p ?x } GROUP BY ",
+            "SELECT ?g (COUNT(?x) AS ?n) WHERE { ?g p ?x } GROUP BY ?g HAVING ",
+            "CONSTRUCT ", "CONSTRUCT { ?a p ?b } ", "CONSTRUCT WHERE ",
+            "ASK ", "ASK WHERE ", "DESCRIBE ", "DESCRIBE ?a ",
+        ]),
         st.text(
-            alphabet=_CHARS + '{}()?<>"*+|.,;!&=/^' + "SELECTWHEREUNIONVALUESGRAPHBINDFILTERINF",
+            alphabet=_CHARS + '{}()?<>"*+|.,;!&=/^#\n'
+            + "SELECTWHEREUNIONVALUESGRAPHBINDFILTERINFCONSTRUCTASKDESCRIBEGROUPBYHAVINGCOUNT",
             max_size=120,
-        )
+        ),
     )
     @settings(max_examples=500, deadline=None)
-    def test_parse_sparql_never_crashes(self, s):
+    def test_parse_sparql_never_crashes(self, head, s):
         from kgc.graph import parse_sparql
 
         try:
-            parse_sparql(s)
+            parse_sparql(head + s)
         except ValueError:
             pass
 
