@@ -184,49 +184,6 @@ def _pow2_60() -> Column:
     return F.array(*[F.lit(1 << i).cast("bigint") for i in range(60)])
 
 
-def simhash60(col: Column | str) -> Column:
-    """60-bit SimHash over word tokens (Charikar 2002), as one Column.
-
-    bit_b(doc) = majority vote of bit_b over all token hashes.  Bits
-    ride as DATA (transform over sequence(0,59) with a single bit_get
-    call site — O(1) codegen; round 1's 60 unrolled tallies were a JIT
-    code-cache bomb).  The hashed-token array is let-bound via a
-    single-element array transform so the per-token md5 runs once, not
-    once per bit.  For large scans prefer :func:`with_simhash` (the
-    explode+aggregate form with map-side combine).
-    """
-    from kgc.textops import norm_tokens
-
-    toks = norm_tokens(col)
-    pow2 = _pow2_60()
-
-    def _all_bits(hs: Column) -> Column:
-        return F.aggregate(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(59)),
-                lambda b: F.when(
-                    F.aggregate(
-                        hs,
-                        F.lit(0).cast("bigint"),
-                        lambda acc, h: acc
-                        + F.when(F.bit_get(h, b) == 1, 1).otherwise(-1),
-                    )
-                    > 0,
-                    F.element_at(pow2, (b + F.lit(1)).cast("int")),
-                ).otherwise(F.lit(0).cast("bigint")),
-            ),
-            F.lit(0).cast("bigint"),
-            lambda a, v: a + v,
-        )
-
-    # let-bind the hashed array: transform over a 1-element array
-    # evaluates `hashed` exactly once, then the lambda var `hs` is a
-    # cheap reference inside all 60 bit tallies.
-    hashed = F.transform(toks, _tok_hash60)
-    total = F.element_at(F.transform(F.array(hashed), _all_bits), 1)
-    return F.when(F.size(toks) > 0, total).otherwise(F.lit(0).cast("bigint"))
-
-
 def with_simhash(
     df: DataFrame,
     text_col: str = "text",

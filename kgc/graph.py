@@ -34,7 +34,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kgc.canon import SMALL_GRAPH_THRESHOLD, collect_if_small, local_frame
@@ -468,7 +468,8 @@ def bgp_query(
     copy of the KG, not in a triple store it can't fit).
 
     ``patterns`` are (s, p, o) terms; a term starting with ``?`` is a
-    variable, anything else is a constant.  Returns one column per
+    variable, anything else is a constant (parse_sparql's tagged term
+    tuples pass through as they are).  Returns one column per
     variable.  ``optional`` patterns are SPARQL OPTIONAL: left-joined
     after the required ones, unmatched bindings NULL.
 
@@ -500,10 +501,17 @@ def bgp_query(
     relation instead of the triple table, its predicate counting as one
     constant for the join order and broadcast hint.
     """
-    path_relations = path_relations or {}
 
-    def is_var(t: str) -> bool:
-        return isinstance(t, str) and t.startswith("?")
+    def as_term(t):
+        if isinstance(t, tuple):
+            return t
+        if isinstance(t, str) and t.startswith("?"):
+            return ("var", t[1:])
+        return ("lit", t)
+
+    patterns = [tuple(map(as_term, pat)) for pat in patterns]
+    optional = [tuple(map(as_term, pat)) for pat in optional]
+    path_relations = {as_term(k): v for k, v in (path_relations or {}).items()}
 
     def compile_leg(pat):
         s, p, o = pat[:3]
@@ -518,9 +526,8 @@ def bgp_query(
             # quad pattern (from a GRAPH block): the 4th term binds or
             # filters the reserved provenance column
             slots.append((pat[3], _GRAPH_COL))
-        for term, col in slots:
-            if is_var(term):
-                name = term[1:]
+        for (kind, name), col in slots:
+            if kind == "var":
                 if not name:
                     raise ValueError(f"empty variable name in pattern {pat}")
                 if name in seen:  # repeated var inside one pattern
@@ -529,7 +536,7 @@ def bgp_query(
                     seen[name] = col
                     cols.append(F.col(col).alias(name))
             else:
-                leg = leg.filter(F.col(col) == F.lit(term))
+                leg = leg.filter(F.col(col) == F.lit(name))
                 n_consts += 1
         leg = leg.select(*cols)
         if n_consts >= broadcast_min_consts:
@@ -619,6 +626,17 @@ def bgp_query(
 # Join, LeftJoin, Minus and Extend where the text puts them, the
 # group's FILTER and EXISTS at its end.
 #
+# Terms carry their kind from the parser.  _term reads each token's
+# kind once: ("var", name), ("lit", value) for a quoted literal, an IRI
+# or a bare name, ("num", text) for an unquoted number, and in predicate
+# position ("path", op, names) for a property path it has validated.
+# Patterns, VALUES cells, IN items, GRAPH and DESCRIBE terms, CONSTRUCT
+# templates and expression leaves all hold these tuples, and the
+# compiler dispatches on the tag, never on the text: a quoted "?x" or
+# "p+" is a literal.  Every FILTER and HAVING comparison is one leaf,
+# ("cmp", lhs, op, rhs), whose sides are terms or scalar ASTs;
+# _cmp_operands is the one coercion rule.
+#
 # expr (BIND / SELECT expressions) is the scalar subset a KG consumer
 # renames and derives with: ?v, "literal", numbers, + - * / (double
 # arithmetic), CONCAT, STR, STRLEN, UCASE, LCASE, COALESCE, SUBSTR,
@@ -665,10 +683,18 @@ _SPARQL_TOKEN = re.compile(
                             #   the pattern separator never has digits
                             #   on BOTH sides)
       | [{}(),.]            # punctuation (comma separates arg/IN lists)
-      | [^\s{}(),."\#]+     # bare term / keyword
+      | [<>!]?=|[<>]        # comparison operator, so "?y>1" splits; "!"
+                            #   alone ("!bound", "!(p|q)") stays a term
+      | (?:[^\s{}(),."\#<>=!]|!(?!=))+  # bare term / keyword
     """,
     re.VERBOSE,
 )
+
+# an unquoted SPARQL integer, decimal or double
+_NUMBER = re.compile(r"[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?")
+
+# an IRI token: its text, then an optional +/* path marker
+_IRI = re.compile(r"<([^<>]*)>([+*]?)")
 
 _FILTER_OPS = {"=", "!=", "<", ">", "<=", ">="}
 
@@ -702,7 +728,7 @@ def _compile_scalar(ast):
     if kind == "lit":
         return F.lit(ast[1])
     if kind == "num":
-        return F.lit(ast[1])
+        return F.lit(float(ast[1]))
     if kind == "bin":
         _, op, left, right = ast
         lc = _compile_scalar(left).cast("double")
@@ -717,10 +743,6 @@ def _compile_scalar(ast):
         return F.when(
             _compile_filter(ast[1]), _compile_scalar(ast[2])
         ).otherwise(_compile_scalar(ast[3]))
-    if kind == "dbl":
-        # internal: force a double comparison side (HAVING numeric
-        # literals against typed aggregate columns under ANSI mode)
-        return _compile_scalar(ast[1]).cast("double")
     _, fn, args = ast
     cols = [_compile_scalar(a) for a in args]
     if fn == "CONCAT":
@@ -784,33 +806,83 @@ def _need_args(fn: str, cols: list, n: int) -> None:
         raise ValueError(f"{fn} takes exactly {n} argument(s), got {len(cols)}")
 
 
-def _map_a(pred: str) -> str:
-    """The SPARQL ``a`` keyword: rdf:type sugar in predicate position,
-    mapped onto this KG's type predicate ``@type`` (lowercase bare
-    ``a`` only, per the spec's case-sensitive keyword)."""
-    return "@type" if pred == "a" else pred
+_ESCAPES = {"n": "\n", "r": "\r", "t": "\t"}
 
 
-def _sparql_unquote(tok: str) -> str:
-    """Constant term normalization: strip <> from IRIs (keeping a
-    trailing +/* path marker), decode \\-escapes in quoted literals."""
-    path = ""
-    if tok.startswith("<") and tok[-1:] in "+*":
-        path, tok = tok[-1], tok[:-1]
-    if tok.startswith("<") and tok.endswith(">"):
-        tok = tok[1:-1]
-    elif tok.startswith('"') and tok.endswith('"') and len(tok) >= 2:
-        body, out, i = tok[1:-1], [], 0
-        sub = {"n": "\n", "r": "\r", "t": "\t", '"': '"', "\\": "\\"}
-        while i < len(body):
-            if body[i] == "\\" and i + 1 < len(body):
-                out.append(sub.get(body[i + 1], body[i + 1]))
-                i += 2
-            else:
-                out.append(body[i])
-                i += 1
-        tok = "".join(out)
-    return tok + path
+def _term(tok: str, pred: bool = False) -> tuple:
+    """Classify one query-text token as a term: the one place a token's
+    kind is read from its text.
+
+      ?v                        ("var", "v")
+      "quoted"  (escapes decoded), <iri>, bare name   ("lit", value)
+      unquoted number           ("num", text)
+
+    In predicate position (``pred``) a bare ``a`` is ("lit", "@type")
+    (the rdf:type keyword, lowercase only as the spec has it, mapped
+    onto this KG's type predicate), property-path syntax is a validated
+    ("path", op, names) term (_path_term), and a sequence ``p/q`` is
+    ("path", "/", step terms), which the parser rewrites into a pattern
+    chain.  An IRI with a ``+``/``*`` marker is a path there and a
+    literal elsewhere.  Raises ValueError on an empty or reserved
+    (``__seq``) variable name and on an unsupported path."""
+    if tok[0] == "?":
+        if not tok[1:]:
+            raise ValueError("empty variable name '?'")
+        if tok[1:].startswith("__seq"):
+            raise ValueError(f"variable name {tok!r} uses the reserved __seq prefix")
+        return ("var", tok[1:])
+    if tok[0] == '"':  # the tokenizer only emits whole literals
+        return ("lit", re.sub(
+            r"\\(.)", lambda m: _ESCAPES.get(m[1], m[1]), tok[1:-1], flags=re.S
+        ))
+    iri = _IRI.fullmatch(tok)
+    if iri:
+        if pred and iri[2]:
+            return ("path", iri[2], (iri[1],))
+        return ("lit", iri[1] + iri[2])
+    if pred:
+        if "/" in tok and tok[0] != "(":
+            steps = tok.split("/")
+            if not all(steps):
+                raise ValueError(f"empty step in sequence property path {tok!r}")
+            return ("path", "/", tuple(_term(st, pred=True) for st in steps))
+        if tok[0] in "^!(" or tok[-1] in "+*?" or "|" in tok:
+            return _path_term(tok)
+        if tok == "a":
+            return ("lit", "@type")
+    if _NUMBER.fullmatch(tok):
+        return ("num", tok)
+    return ("lit", tok)
+
+
+def _path_term(tok: str) -> tuple:
+    """A bare predicate with path syntax → ("path", op, names), ``names``
+    a tuple of bare predicate names (``a`` mapped to ``@type``):
+
+      p+ p* p?         op "+" "*" "?" over (p,)
+      (p/q)+ (p/q)* (p/q)?   the same ops over the sequence (p, q)
+      ^p               op "^"
+      p|q              op "|"
+      !p  !(p|q)       op "!" (the parser folds "!(p|q)" into "!p|q")
+
+    Path forms do not nest: every name must be a bare predicate."""
+    if tok[0] == "(":
+        op, names, what = tok[-1], tok[1:-2].split("/"), "grouped property path"
+    elif tok[0] == "!":
+        op, names, what = "!", tok[1:].split("|"), "negated property set"
+    elif "|" in tok:
+        op, names, what = "|", tok.split("|"), "alternation"
+    elif tok[0] == "^":
+        op, names, what = "^", [tok[1:]], "inverse path"
+    else:
+        op, names, what = tok[-1], [tok[:-1]], "property path"
+    for n in names:
+        if not n or n[0] in "^!?<\"(" or n[-1] in "+*?^" or set(n) & set("|/()"):
+            raise ValueError(
+                f"unsupported {what} {tok!r} ({what} does not nest with "
+                "other path forms: bare predicate names only)"
+            )
+    return ("path", op, tuple(_term(n, pred=True)[1] for n in names))
 
 
 def parse_sparql(text: str) -> dict:
@@ -827,36 +899,44 @@ def parse_sparql(text: str) -> dict:
                   from the SELECT list's (AGG(...) AS ?x) items, in order
       where       the WHERE group (below); None for a DESCRIBE without one
       group_by    [var, ...]
-      having      boolean AST over aliases and group vars, unquoted
-                  numbers compared as double (_having_numeric), or None
+      having      boolean AST over aliases and group vars (the FILTER
+                  grammar; _cmp_operands states its number rule), or None
       order       [(var | ("expr", ast), ascending), ...]
       limit, offset   int or None
 
     plus ``template`` [(s, p, o), ...] for CONSTRUCT (the WHERE group's
     patterns for ``CONSTRUCT WHERE { ... }``) and ``describe`` [term,
-    ...] for DESCRIBE (constants unquoted, variables as "?v").
+    ...] for DESCRIBE.
+
+    Every term is a tagged tuple from _term, the one classifier:
+    ("var", name), ("lit", value) for quoted literals, IRIs and bare
+    names, ("num", text) for unquoted numbers, and, as a predicate,
+    ("path", op, names) for a property path.
 
     ``where`` is SPARQL 1.1 algebra (spec §18.2): an ordered element
     list, in query-text order.  Every ``{ ... }`` parses with the one
     group rule, so a nested group is again an element list:
 
-      ("bgp", [tp, ...])           triple patterns (s, p, o); inside
-                                   GRAPH, quads (s, p, o, graph-term)
+      ("bgp", [tp, ...])           triple patterns (s, p, o) of terms;
+                                   inside GRAPH, quads (s, p, o, graph)
       ("optional", group)          LeftJoin
       ("union", [group, ...])      Union (one branch: a plain { ... })
       ("minus", group)             Minus
       ("graph", term, group)       GRAPH ?g / <iri> { ... }
-      ("values", vars, rows)       inline table, None for UNDEF
+      ("values", vars, rows)       inline table of constant terms,
+                                   None for UNDEF
       ("bind", var, ast)           Extend by a scalar-expression AST
       ("filter", ast)              boolean AST
       ("exists", positive, group)  FILTER [NOT] EXISTS
       ("subquery", q)              { SELECT ... }, q its parsed dict
 
-    Filter ASTs have leaves ("cmp", lhs, op, rhs, (lhs_quoted,
-    rhs_quoted)) | ("cmp2", lhs-ast, op, rhs-ast) | ("strtest", fn, a, b)
-    | ("in", var, items, positive) | ("regex", var, pat, flags) |
-    ("bound", var, positive), and interior nodes ("and"|"or", l, r) and
-    ("not", e) from &&/||/!(...).  Sequence property paths ``p/q`` are
+    Filter ASTs have leaves ("cmp", lhs, op, rhs), each side a term or
+    a scalar-expression AST | ("strtest", fn, a, b) | ("in", var,
+    [term, ...], positive) | ("regex", var, pat, flags) | ("bound",
+    var, positive), and interior nodes ("and"|"or", l, r) and ("not",
+    e) from &&/||/!(...).  Scalar ASTs share the term tuples as leaves
+    and add ("bin", op, l, r), ("fn", name, args) and ("if", test,
+    then, else).  Sequence property paths ``p/q`` are
     rewritten here into pattern chains through reserved ?__seqN
     intermediates.  Raises ValueError with position context on anything
     outside the subset, groups nested more than MAX_GROUP_DEPTH deep
@@ -906,12 +986,31 @@ def _parse_sparql(text: str) -> dict:
     def kw(*words):
         return peek() is not None and peek().upper() in words
 
+    def at_var():
+        return peek() is not None and _term(peek())[0] == "var"
+
+    def take_var(what):
+        t = take()
+        term = _term(t)
+        if term[0] != "var":
+            raise ValueError(f"{what} needs a ?var, got {t!r}")
+        return term[1]
+
+    def take_const(what):
+        t = take()
+        term = _term(t)
+        if term[0] == "var":
+            raise ValueError(f"{what} takes constants, got {t!r}")
+        return term
+
     def as_var(what):
         take("AS")
-        v = take()
-        if not v.startswith("?"):
-            raise ValueError(f"{what} needs a ?var, got {v!r}")
-        return v[1:]
+        return take_var(what)
+
+    def starts_scalar(t):
+        return t is not None and (
+            t.upper() in _SCALAR_FNS or t.upper() == "IF" or t == "("
+        )
 
     def is_term(t):
         return t is not None and t not in "{}(),." and t.upper() not in (
@@ -926,18 +1025,17 @@ def _parse_sparql(text: str) -> dict:
         def add(s, p, o):
             if graph is None:
                 pats.append((s, p, o))
-                return
-            # a closure computed globally would leak edges across graphs
-            if not p.startswith("?") and (
-                p[-1:] in "+*?" or p[:1] in "^!" or "|" in p
-            ):
+            elif p[0] == "path":
+                # a closure computed globally would leak edges across graphs
                 raise ValueError(
-                    f"property path {p!r} inside GRAPH is outside the "
+                    f"property path {p_raw!r} inside GRAPH is outside the "
                     "subset (plain and sequence paths only)"
                 )
-            pats.append((s, p, o, graph))
+            else:
+                pats.append((s, p, o, graph))
+
         while is_term(peek()):
-            s_raw, p_raw = take(), take()
+            s, p_raw = _term(take()), take()
             if p_raw == "!":
                 # negated property set !(p|q) tokenizes apart: fold it
                 # back into one "!p|q" predicate token
@@ -950,60 +1048,29 @@ def _parse_sparql(text: str) -> dict:
                 take(")")
             elif p_raw == "(":
                 # grouped property path (p/q)+ — tokenizes apart: fold
-                # into one "(p/q)+" predicate token; _path_relations
-                # composes the sequence's edge set and closes it
+                # into one "(p/q)+" predicate token for _term
                 inner = take()
                 take(")")
-                mod = peek()
-                if mod not in ("+", "*", "?"):
+                if peek() not in ("+", "*", "?"):
                     raise ValueError(
                         "grouped property path needs a +, * or ? modifier"
                     )
-                take()
-                steps = inner.split("/")
-                if any(
-                    not st or st[-1] in "+*?" or st[0] in "^!<?" or "|" in st
-                    for st in steps
-                ):
-                    raise ValueError(
-                        f"unsupported grouped property path ({inner}){mod} "
-                        "(bare-predicate sequences only)"
-                    )
-                p_raw = f"({inner}){mod}"
-            o_raw = take()
-            s, o = _sparql_unquote(s_raw), _sparql_unquote(o_raw)
-            for t in (s, o):
-                if t.startswith("?__seq"):
-                    raise ValueError(
-                        f"variable name {t!r} uses the reserved __seq prefix"
-                    )
-            if (
-                "/" in p_raw
-                and not p_raw.startswith("<")
-                and not p_raw.startswith("?")
-                and not p_raw.startswith('"')
-                and not p_raw.startswith("(")
-            ):
+                p_raw = f"({inner}){take()}"
+            p, o = _term(p_raw, pred=True), _term(take())
+            if p[:2] == ("path", "/"):
                 # sequence property path p/q[/r...] → a chain of
                 # patterns through fresh intermediate variables: the
                 # exact join shape bgp_query plans anyway.  Bare-name
                 # steps only (IRI-bracketed steps tokenize apart).
-                steps = p_raw.split("/")
-                if any(not st for st in steps):
-                    raise ValueError(
-                        f"empty step in sequence property path {p_raw!r}"
-                    )
-                prev = s
-                for i, st in enumerate(steps):
-                    if i == len(steps) - 1:
-                        nxt = o
-                    else:
-                        nxt = f"?__seq{seq_n}"
-                        seq_n += 1
-                    add(prev, _map_a(_sparql_unquote(st)), nxt)
-                    prev = nxt
+                *steps, last = p[2]
+                for st in steps:
+                    nxt = ("var", f"__seq{seq_n}")
+                    seq_n += 1
+                    add(s, st, nxt)
+                    s = nxt
+                add(s, last, o)
             else:
-                add(s, _map_a(_sparql_unquote(p_raw)), o)
+                add(s, p, o)
             if peek() == ".":
                 take()
         return pats
@@ -1023,8 +1090,6 @@ def _parse_sparql(text: str) -> dict:
                 e = additive()
                 take(")")
                 return e
-            if t.startswith("?"):
-                return ("var", take()[1:])
             if t.upper() == "IF":
                 # IF(test, then, else) — test is a boolean expression
                 # (the FILTER grammar incl. CONTAINS/STRSTARTS/...);
@@ -1052,14 +1117,10 @@ def _parse_sparql(text: str) -> dict:
                 take(")")
                 return ("fn", fn, fn_args)
             tok = take()
-            if tok.startswith('"'):
-                return ("lit", _sparql_unquote(tok))
-            try:
-                return ("num", float(tok))
-            except ValueError:
-                raise ValueError(
-                    f"unsupported term {tok!r} in scalar expression"
-                ) from None
+            term = _term(tok)
+            if term[0] == "lit" and tok[0] != '"':
+                raise ValueError(f"unsupported term {tok!r} in scalar expression")
+            return term
 
         def mult():
             e = primary()
@@ -1083,21 +1144,19 @@ def _parse_sparql(text: str) -> dict:
         if up in ("REGEX", "BOUND", "!BOUND"):
             fn = take().upper()
             take("(")
-            var = take()
-            if not var.startswith("?"):
-                raise ValueError(f"{fn} needs a ?var, got {var!r}")
+            var = take_var(fn)
             if fn == "REGEX":
                 if take() != ",":
                     raise ValueError("regex(?v, \"pat\") needs a comma")
-                pat = _sparql_unquote(take())
+                pat = take_const("regex")[1]
                 flags = ""
                 if peek() == ",":
                     take()
-                    flags = _sparql_unquote(take())
+                    flags = take_const("regex")[1]
                 take(")")
-                return ("regex", var[1:], pat, flags)
+                return ("regex", var, pat, flags)
             take(")")
-            return ("bound", var[1:], fn == "BOUND")
+            return ("bound", var, fn == "BOUND")
         if up in _STRTEST_FNS:
             # CONTAINS / STRSTARTS / STRENDS (expr, expr) — boolean
             # string-test atoms, one Catalyst predicate each
@@ -1109,21 +1168,12 @@ def _parse_sparql(text: str) -> dict:
             b = scalar_expr()
             take(")")
             return ("strtest", fn, a, b)
-        if up in _SCALAR_FNS or up == "IF" or head == "(":
-            # scalar-expression comparison: STRLEN(?n) > 5,
-            # (?a + 1) = 2 — both sides full scalar expressions
-            lhs = scalar_expr()
-            op = take()
-            if op not in _FILTER_OPS:
-                raise ValueError(f"unsupported FILTER operator {op!r}")
-            return ("cmp2", lhs, op, scalar_expr())
         if (
-            head is not None and head.startswith("?")
-            and pos + 1 < len(toks)
+            at_var() and pos + 1 < len(toks)
             and toks[pos + 1].upper() in ("IN", "NOT")
         ):
             # ?v IN (t, ...) / ?v NOT IN (t, ...)
-            var = take()
+            var = take_var("IN")
             positive = True
             if peek() is not None and peek().upper() == "NOT":
                 take()
@@ -1132,27 +1182,23 @@ def _parse_sparql(text: str) -> dict:
             take("(")
             items = []
             while peek() is not None and peek() != ")":
-                items.append(_sparql_unquote(take()))
+                items.append(_term(take()))
                 if peek() == ",":
                     take()
             take(")")
             if not items:
                 raise ValueError("IN needs at least one term")
-            return ("in", var[1:], items, positive)
-        l_raw = take()
-        lhs = _sparql_unquote(l_raw)
+            return ("in", var, items, positive)
+        # comparison: a side that opens a scalar expression (STRLEN(?n),
+        # (?a + 1), IF(...)) parses as one — after a scalar left side the
+        # right side does too — and any other side is one term
+        lhs = scalar_expr() if starts_scalar(head) else _term(take())
         op = take()
         if op not in _FILTER_OPS:
             raise ValueError(f"unsupported FILTER operator {op!r}")
-        nxt = peek()
-        if nxt is not None and (
-            nxt.upper() in _SCALAR_FNS or nxt.upper() == "IF" or nxt == "("
-        ):
-            l_ast = ("var", lhs[1:]) if lhs.startswith("?") else ("lit", lhs)
-            return ("cmp2", l_ast, op, scalar_expr())
-        r_raw = take()
-        quoted = (l_raw.startswith('"'), r_raw.startswith('"'))
-        return ("cmp", lhs, op, _sparql_unquote(r_raw), quoted)
+        if starts_scalar(head) or starts_scalar(peek()):
+            return ("cmp", lhs, op, scalar_expr())
+        return ("cmp", lhs, op, _term(take()))
 
     def filter_unary():
         nonlocal pos
@@ -1210,11 +1256,23 @@ def _parse_sparql(text: str) -> dict:
 
     def values_block():
         """VALUES ?v { t ... }  |  VALUES (?a ?b) { (t t) ... }"""
+
+        def cell(where, bad):
+            if peek() in bad:
+                raise ValueError(
+                    f"unexpected {peek()!r} in {where} (terms are "
+                    "space-separated)"
+                )
+            if kw("UNDEF"):
+                take()
+                return None
+            return take_const(where)
+
         if peek() == "(":
             take()
             vars_ = []
-            while peek() is not None and peek().startswith("?"):
-                vars_.append(take()[1:])
+            while at_var():
+                vars_.append(take_var("VALUES"))
             take(")")
             if not vars_:
                 raise ValueError("VALUES needs at least one ?var")
@@ -1224,15 +1282,7 @@ def _parse_sparql(text: str) -> dict:
                 take()
                 row = []
                 while peek() is not None and peek() != ")":
-                    tok = take()
-                    if tok in "(,{.":
-                        raise ValueError(
-                            f"unexpected {tok!r} in VALUES row (terms are "
-                            "space-separated)"
-                        )
-                    row.append(
-                        None if tok.upper() == "UNDEF" else _sparql_unquote(tok)
-                    )
+                    row.append(cell("VALUES row", ("(", ",", "{", ".")))
                 take(")")
                 if len(row) != len(vars_):
                     raise ValueError(
@@ -1241,22 +1291,11 @@ def _parse_sparql(text: str) -> dict:
                 rows.append(tuple(row))
             take("}")
         else:
-            v = take()
-            if not v.startswith("?"):
-                raise ValueError("VALUES needs ?var or (?var ...)")
-            vars_ = [v[1:]]
+            vars_ = [take_var("VALUES")]
             take("{")
             rows = []
             while peek() is not None and peek() != "}":
-                tok = take()
-                if tok in "(),.":
-                    raise ValueError(
-                        f"unexpected {tok!r} in VALUES block (terms are "
-                        "space-separated)"
-                    )
-                rows.append(
-                    (None if tok.upper() == "UNDEF" else _sparql_unquote(tok),)
-                )
+                rows.append((cell("VALUES block", ("(", ")", ",", ".")),))
             take("}")
         return vars_, rows
 
@@ -1331,11 +1370,7 @@ def _parse_sparql(text: str) -> dict:
                 # sequence paths rewrite as usual and each step stays
                 # in the graph (per spec)
                 take()
-                gterm = _sparql_unquote(take())
-                if gterm.startswith("?__seq"):
-                    raise ValueError(
-                        f"variable name {gterm!r} uses the reserved __seq prefix"
-                    )
+                gterm = _term(take())
                 els.append(("graph", gterm, nonempty(group(gterm), "GRAPH group")))
             else:
                 got = triple_block(graph)
@@ -1358,14 +1393,12 @@ def _parse_sparql(text: str) -> dict:
             t = take()
             if t == ".":
                 continue
-            if len(cur) == 1 and not t.startswith("<") and (
-                t[-1] in "+*?" or t[0] in "^!(" or "|" in t or "/" in t
-            ):
-                raise ValueError(f"property path {t!r} in a CONSTRUCT template")
             if t in ("{", "(", ")", ","):
                 raise ValueError("CONSTRUCT template must be whole triples")
-            t = _sparql_unquote(t)
-            cur.append(_map_a(t) if len(cur) == 1 else t)
+            term = _term(t, pred=len(cur) == 1)
+            if term[0] == "path":
+                raise ValueError(f"property path {t!r} in a CONSTRUCT template")
+            cur.append(term)
             if len(cur) == 3:
                 tmpl.append(tuple(cur))
                 cur = []
@@ -1402,7 +1435,7 @@ def _parse_sparql(text: str) -> dict:
                 raise ValueError('expected ; SEPARATOR="..." in an aggregate')
             if fn != "GROUP_CONCAT":
                 raise ValueError("SEPARATOR= only applies to GROUP_CONCAT")
-            sep = _sparql_unquote(take())
+            sep = _term(take())[1]
         take(")")
         alias = as_var("AS")
         take(")")
@@ -1414,13 +1447,13 @@ def _parse_sparql(text: str) -> dict:
             t = take().upper()
             if t == "GROUP":
                 take("BY")
-                while peek() is not None and peek().startswith("?"):
-                    q["group_by"].append(take()[1:])
+                while at_var():
+                    q["group_by"].append(take_var("GROUP BY"))
                 if not q["group_by"]:
                     raise ValueError("GROUP BY needs ?vars")
             elif t == "HAVING":
                 # the one FILTER grammar over aliases and group vars
-                q["having"] = _having_numeric(filter_expr())
+                q["having"] = filter_expr()
             elif t == "ORDER":
                 take("BY")
 
@@ -1431,12 +1464,7 @@ def _parse_sparql(text: str) -> dict:
                     ast = scalar_expr()
                     return ast[1] if ast[0] == "var" else ("expr", ast)
 
-                while peek() is not None and (
-                    peek().startswith("?")
-                    or peek().upper() in ("ASC", "DESC", "IF")
-                    or peek().upper() in _SCALAR_FNS
-                    or peek() == "("
-                ):
+                while at_var() or starts_scalar(peek()) or kw("ASC", "DESC"):
                     d = peek()
                     if d.upper() in ("ASC", "DESC"):
                         take()
@@ -1481,13 +1509,12 @@ def _parse_sparql(text: str) -> dict:
                 take()
             else:
                 select = q["select"] = []
-                while peek() is not None and (
-                    peek().startswith("?") or peek() == "("
-                ):
-                    t = take()
-                    if t.startswith("?"):
-                        select.append(t[1:])
-                    elif kw(*_AGG_FNS, "GROUP_CONCAT", "SAMPLE"):
+                while at_var() or peek() == "(":
+                    if at_var():
+                        select.append(take_var("SELECT"))
+                        continue
+                    take()
+                    if kw(*_AGG_FNS, "GROUP_CONCAT", "SAMPLE"):
                         q["aggregates"].append(aggregate())
                     else:
                         # (expr AS ?v) — computed projection, same
@@ -1513,11 +1540,11 @@ def _parse_sparql(text: str) -> dict:
         elif q["form"] == "describe":
             q["describe"] = []
             while is_term(peek()):
-                q["describe"].append(_sparql_unquote(take()))
+                q["describe"].append(_term(take()))
             if not q["describe"]:
                 raise ValueError("expected DESCRIBE term ... [WHERE { ... }]")
             if not kw("WHERE") and peek() != "{":
-                if any(t.startswith("?") for t in q["describe"]):
+                if any(t[0] == "var" for t in q["describe"]):
                     raise ValueError("DESCRIBE ?var needs a WHERE group")
                 return q
         if kw("WHERE"):
@@ -1532,12 +1559,13 @@ def _parse_sparql(text: str) -> dict:
     return q
 
 
-def _path_relations(triples: DataFrame, patterns: list) -> dict[str, DataFrame]:
+def _path_relations(triples: DataFrame, patterns: list) -> dict[tuple, DataFrame]:
     """Property paths as leaf relations: one (subj, obj) DataFrame per
-    distinct path predicate used in ``patterns``, keyed by the path
-    spec.  bgp_query reads a leg whose predicate is a key from its
-    relation, so no derived edge ever reaches a variable-predicate or
-    GRAPH quad leg over the fact table.
+    distinct ("path", op, names) predicate term in ``patterns`` (the
+    parser has validated each), keyed by that term.  bgp_query reads a
+    leg whose predicate is a key from its relation, so no derived edge
+    ever reaches a variable-predicate or GRAPH quad leg over the fact
+    table.
 
       * ``p+``  (one-or-more): the transitive closure of p's edge set
         (transitive_closure: closed on the driver by one collect and a
@@ -1566,22 +1594,36 @@ def _path_relations(triples: DataFrame, patterns: list) -> dict[str, DataFrame]:
         matching the closure decomposes into whole (p/q) hops.
         Bare-predicate steps, one trailing modifier, no deeper nesting.
 
-    One closure computation per distinct base predicate (``p+`` and
-    ``p*`` share it); closure subgraphs are tiny relative to the fact
-    table (one predicate's edges)."""
+    One closure computation per distinct predicate sequence (``p+``,
+    ``p*`` and ``(p)+`` share it); closure subgraphs are tiny relative
+    to the fact table (one predicate's edges)."""
     spo = triples.select("subj", "pred", "obj")
-    closures: dict[str, DataFrame] = {}
+    closures: dict[tuple, DataFrame] = {}
 
     def edges(cond):
         return spo.filter(cond).select("subj", "obj")
 
-    def closure(base):
-        if base not in closures:
-            clo = transitive_closure(
-                edges(F.col("pred") == base), "subj", "obj"
+    def sequence(names):
+        # the composed edge set of p1/p2/...: chained per-step equi-joins
+        rel = edges(F.col("pred") == names[0])
+        for st in names[1:]:
+            nxt = edges(F.col("pred") == st).select(
+                F.col("subj").alias("mid"), F.col("obj").alias("hop")
             )
-            closures[base] = clo.select("subj", "obj")
-        return closures[base]
+            rel = (
+                rel.join(nxt, F.col("obj") == F.col("mid"))
+                .select("subj", F.col("hop").alias("obj"))
+                .dropDuplicates()
+            )
+        return rel
+
+    def closure(names):
+        # every path matching the closure of a sequence is a chain of
+        # whole sequence hops, so transitive_closure(E_pq) IS (p/q)+
+        if names not in closures:
+            clo = transitive_closure(sequence(names), "subj", "obj")
+            closures[names] = clo.select("subj", "obj")
+        return closures[names]
 
     def with_identity(rel):
         terms = (
@@ -1591,106 +1633,70 @@ def _path_relations(triples: DataFrame, patterns: list) -> dict[str, DataFrame]:
         )
         return rel.unionByName(terms.select("subj", F.col("subj").alias("obj")))
 
-    rels: dict[str, DataFrame] = {}
-    for p in sorted({pat[1] for pat in patterns}):
-        if p.startswith("?"):
-            continue
-        if p.startswith("("):
-            # grouped path (p/q[/r...])+|*|? — compose the sequence's
-            # edge set by chaining per-step equi-joins, then close it:
-            # every path matching the closure is a chain of composed
-            # steps, so transitive_closure(E_pq) IS (p/q)+ exactly.
-            mod, steps = p[-1], p[1:-2].split("/")
-            if mod not in "+*?" or not steps or any(
-                not st or st[-1] in "+*?^" or st[0] in "^!(?" or "|" in st
-                for st in steps
-            ):
-                raise ValueError(
-                    f"unsupported grouped property path {p!r} "
-                    "(bare-predicate sequences with one trailing +/*/? only)"
-                )
-            rel = edges(F.col("pred") == steps[0])
-            for st in steps[1:]:
-                nxt = edges(F.col("pred") == st).select(
-                    F.col("subj").alias("mid"), F.col("obj").alias("hop")
-                )
-                rel = (
-                    rel.join(nxt, F.col("obj") == F.col("mid"))
-                    .select("subj", F.col("hop").alias("obj"))
-                    .dropDuplicates()
-                )
-            if mod != "?":
-                rel = transitive_closure(rel, "subj", "obj").select("subj", "obj")
-            rels[p] = with_identity(rel) if mod in "*?" else rel
-        elif p.startswith("!"):
-            parts = p[1:].split("|")
-            if any(
-                not q or q.endswith(("+", "*", "?")) or q.startswith(("^", "!"))
-                for q in parts
-            ):
-                raise ValueError(
-                    f"unsupported property path {p!r} (negated sets take "
-                    "bare forward predicates only)"
-                )
-            rels[p] = edges(~F.col("pred").isin(parts))
-        elif "|" in p:
-            parts = p.split("|")
-            if any(
-                not q or q.endswith(("+", "*", "?")) or q.startswith("^")
-                for q in parts
-            ):
-                raise ValueError(
-                    f"unsupported property path {p!r} (alternation does "
-                    "not nest with +/*/?/^)"
-                )
-            rels[p] = edges(F.col("pred").isin(parts))
-        elif p.startswith("^"):
-            base = p[1:]
-            if base.startswith("^") or base.endswith(("+", "*", "?")):
-                raise ValueError(
-                    f"unsupported property path ^{base!r} (inverse does not "
-                    "nest with other path forms)"
-                )
-            rels[p] = edges(F.col("pred") == base).select(
+    rels: dict[tuple, DataFrame] = {}
+    for p in sorted({pat[1] for pat in patterns if pat[1][0] == "path"}):
+        _, op, names = p
+        if op == "!":
+            rels[p] = edges(~F.col("pred").isin(list(names)))
+        elif op == "|":
+            rels[p] = edges(F.col("pred").isin(list(names)))
+        elif op == "^":
+            rels[p] = edges(F.col("pred") == names[0]).select(
                 F.col("obj").alias("subj"), F.col("subj").alias("obj")
             )
-        elif p.endswith("+"):
-            rels[p] = closure(p[:-1])
-        elif p.endswith("*"):
-            rels[p] = with_identity(closure(p[:-1]))
-        elif p.endswith("?") and len(p) > 1:
-            rels[p] = with_identity(edges(F.col("pred") == p[:-1]))
+        else:
+            rel = sequence(names) if op == "?" else closure(names)
+            rels[p] = with_identity(rel) if op in "*?" else rel
     return rels
 
 
-def _compile_filter(f):
-    """One FILTER AST node → one Catalyst boolean Column.  Leaves are
-    the tagged atoms parse_sparql emits; interior nodes are
-    ("and"|"or", l, r) and ("not", e) from the &&/||/!() grammar.
-    Spark's 3-valued logic reproduces SPARQL's error propagation:
-    a NULL-valued (type-error / unbound) condition drops the row,
-    true || error is true, false && error is false."""
+def _term_col(t) -> Column:
+    """A plain term as a Column: a variable's binding, else the
+    constant's text (a number's as written)."""
+    return F.col(t[1]) if t[0] == "var" else F.lit(t[1])
+
+
+def _cmp_operands(lhs, rhs, having: bool = False) -> tuple[Column, Column]:
+    """The one coercion rule of a comparison leaf, over its two sides:
+
+      * two plain sides (variable, literal or number) compare as strings
+        over the string-typed triple table — a number by its text;
+      * in HAVING, a plain comparison with an unquoted-number side
+        compares both sides as double (aggregate columns are typed —
+        long counts, double sums — and ANSI mode refuses e.g. bigint vs
+        '2.5'); a quoted literal stays a string even when it reads as a
+        number (``?v = "2.5"``);
+      * once a side is a scalar expression, both sides keep their
+        Catalyst types (arithmetic is double, string functions string,
+        a number double; mixed sides coerce per Spark rules)."""
+    plain = ("var", "lit", "num")  # any other side is a scalar AST
+    if lhs[0] in plain and rhs[0] in plain:
+        if having and "num" in (lhs[0], rhs[0]):
+            return (
+                _compile_scalar(lhs).cast("double"),
+                _compile_scalar(rhs).cast("double"),
+            )
+        return _term_col(lhs), _term_col(rhs)
+    return _compile_scalar(lhs), _compile_scalar(rhs)
+
+
+def _compile_filter(f, having: bool = False):
+    """One FILTER (or, with ``having``, HAVING) AST node → one Catalyst
+    boolean Column.  Leaves are the tagged atoms parse_sparql emits;
+    interior nodes are ("and"|"or", l, r) and ("not", e) from the
+    &&/||/!() grammar.  Spark's 3-valued logic reproduces SPARQL's
+    error propagation: a NULL-valued (type-error / unbound) condition
+    drops the row, true || error is true, false && error is false."""
     tag = f[0]
     if tag == "and":
-        return _compile_filter(f[1]) & _compile_filter(f[2])
+        return _compile_filter(f[1], having) & _compile_filter(f[2], having)
     if tag == "or":
-        return _compile_filter(f[1]) | _compile_filter(f[2])
+        return _compile_filter(f[1], having) | _compile_filter(f[2], having)
     if tag == "not":
-        return ~_compile_filter(f[1])
+        return ~_compile_filter(f[1], having)
     if tag == "cmp":
-        _, lhs, op, rhs, _quoted = f
-        lc = F.col(lhs[1:]) if lhs.startswith("?") else F.lit(lhs)
-        rc = F.col(rhs[1:]) if rhs.startswith("?") else F.lit(rhs)
-        return {
-            "=": lc == rc, "!=": lc != rc, "<": lc < rc,
-            ">": lc > rc, "<=": lc <= rc, ">=": lc >= rc,
-        }[op]
-    if tag == "cmp2":
-        # scalar-expression comparison — operand types follow the
-        # expressions (arithmetic is double, string fns string; mixed
-        # sides coerce per Spark rules)
         _, lhs, op, rhs = f
-        lc, rc = _compile_scalar(lhs), _compile_scalar(rhs)
+        lc, rc = _cmp_operands(lhs, rhs, having)
         return {
             "=": lc == rc, "!=": lc != rc, "<": lc < rc,
             ">": lc > rc, "<=": lc <= rc, ">=": lc >= rc,
@@ -1709,7 +1715,7 @@ def _compile_filter(f):
         # unbound (NULL) ?v yields NULL either way and the row drops,
         # matching SPARQL's error-propagation for both polarities
         _, var, items, positive = f
-        c = F.col(var).isin(items)
+        c = F.col(var).isin([_term_col(t) for t in items])
         return c if positive else ~c
     if tag == "regex":
         _, var, pat, flags = f
@@ -1723,10 +1729,7 @@ def _compile_filter(f):
 
 
 def _pattern_vars(patterns) -> set[str]:
-    return {
-        t[1:] for pat in patterns for t in pat
-        if isinstance(t, str) and t.startswith("?")
-    }
+    return {t[1] for pat in patterns for t in pat if t[0] == "var"}
 
 
 def _connected(patterns) -> list[list]:
@@ -1932,8 +1935,10 @@ def _compile_group(
                 fold(*_finish_query(q, *sub(q["where"], None)), what="subquery")
             else:  # values
                 _, vars_, rows = el
-                vdf = triples.sparkSession.createDataFrame(
-                    rows, ", ".join(f"`{v}` string" for v in vars_)
+                vdf = local_frame(
+                    triples.sparkSession,
+                    [tuple(None if c is None else c[1] for c in r) for r in rows],
+                    ", ".join(f"`{v}` string" for v in vars_),
                 )
                 undef = {
                     v for i, v in enumerate(vars_)
@@ -2050,8 +2055,6 @@ def _scalar_vars(ast) -> set[str]:
         return (
             _filter_vars(ast[1]) | _scalar_vars(ast[2]) | _scalar_vars(ast[3])
         )
-    if kind == "dbl":
-        return _scalar_vars(ast[1])
     return set()
 
 
@@ -2065,14 +2068,14 @@ def _filter_vars(f, with_bound: bool = True) -> set[str]:
     if tag == "not":
         return _filter_vars(f[1], with_bound)
     if tag == "cmp":
-        return {t[1:] for t in (f[1], f[3]) if t.startswith("?")}
-    if tag == "cmp2":
         return _scalar_vars(f[1]) | _scalar_vars(f[3])
     if tag == "strtest":
         return _scalar_vars(f[2]) | _scalar_vars(f[3])
+    if tag == "in":
+        return {f[1]} | {t[1] for t in f[2] if t[0] == "var"}
     if tag == "bound" and not with_bound:
         return set()
-    # ("regex", var, ...), ("bound", var, ...), ("in", var, ...)
+    # ("regex", var, ...), ("bound", var, ...)
     return {f[1]}
 
 
@@ -2189,38 +2192,6 @@ _AGG_FNS = {"COUNT": F.count, "SUM": F.sum, "MIN": F.min, "MAX": F.max,
             "AVG": F.avg}
 
 
-def _having_numeric(f):
-    """HAVING numeric coercion: a plain comparison against an UNQUOTED
-    numeric literal compares as DOUBLE on both sides (aggregate columns
-    are typed — long counts, double sums — and ANSI mode refuses e.g.
-    bigint vs '2.5' string casts).  A quoted literal stays a string
-    even when it reads as a number (``?v = "2.5"``), and non-numeric
-    comparisons and the richer atoms pass through unchanged."""
-    tag = f[0]
-    if tag in ("and", "or"):
-        return (tag, _having_numeric(f[1]), _having_numeric(f[2]))
-    if tag == "not":
-        return (tag, _having_numeric(f[1]))
-    if tag != "cmp":
-        return f
-    _, l, op, r, quoted = f
-
-    def side(x, q):
-        if q:
-            return ("lit", x)
-        if x.startswith("?"):
-            return ("var", x[1:])
-        try:
-            return ("num", float(x))
-        except ValueError:
-            return ("lit", x)
-
-    ls, rs = side(l, quoted[0]), side(r, quoted[1])
-    if "num" in (ls[0], rs[0]):
-        return ("cmp2", ("dbl", ls), op, ("dbl", rs))
-    return f
-
-
 def _aggregate(
     out: DataFrame, q: dict, sub_null: set[str]
 ) -> tuple[DataFrame, set[str]]:
@@ -2260,7 +2231,7 @@ def _aggregate(
             raise ValueError(
                 f"HAVING references unknown alias ?{sorted(unknown)[0]}"
             )
-        out = out.filter(_compile_filter(having_ast))
+        out = out.filter(_compile_filter(having_ast, having=True))
     # nullability of the aggregate output (consumed by the subquery
     # join): a group var stays nullable if it was; a value aggregate
     # (SUM/AVG/MIN/MAX/SAMPLE) over a possibly-unbound var can be NULL
@@ -2321,28 +2292,16 @@ def sparql_construct(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     q = _parse_form(text, "construct")
     sols = _finish_query(q, *_solve(triples, q, **bgp_kwargs))[0]
     subj_vars = {
-        pat[0][1:] for pat in _triple_patterns(q["where"])
-        if pat[0].startswith("?")
+        pat[0] for pat in _triple_patterns(q["where"]) if pat[0][0] == "var"
     }
-
-    def term(t, pos):
-        if t.startswith("?"):
-            c = F.col(t[1:])
-            is_node = t[1:] in subj_vars
-        else:
-            c, is_node = F.lit(t), False
-        if pos == "obj":
-            return c, F.lit("node" if t.startswith("?") and is_node else "literal")
-        return c
 
     parts = []
     for s, p, o in q["template"]:
-        oc, ot = term(o, "obj")
         row = sols.select(
-            term(s, "subj").alias("subj"),
-            term(p, "pred").alias("pred"),
-            oc.alias("obj"),
-            ot.alias("obj_type"),
+            _term_col(s).alias("subj"),
+            _term_col(p).alias("pred"),
+            _term_col(o).alias("obj"),
+            F.lit("node" if o in subj_vars else "literal").alias("obj_type"),
         ).filter(
             F.col("subj").isNotNull()
             & F.col("pred").isNotNull()
@@ -2384,8 +2343,8 @@ def sparql_describe(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     table on subj — one hash join, the fact table moves once;
     DESCRIBE of a handful of constants is a pushed isin filter."""
     q = _parse_form(text, "describe")
-    consts = [t for t in q["describe"] if not t.startswith("?")]
-    vars_ = [t[1:] for t in q["describe"] if t.startswith("?")]
+    consts = [t[1] for t in q["describe"] if t[0] != "var"]
+    vars_ = [t[1] for t in q["describe"] if t[0] == "var"]
 
     res: DataFrame | None = None
     if q["where"] is not None:
@@ -2402,8 +2361,6 @@ def sparql_describe(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
         if res is None and not vars_:
             # constants only: a pushed isin filter, no join at all
             return triples.filter(F.col("subj").isin(consts))
-        cdf = triples.sparkSession.createDataFrame(
-            [(c,) for c in consts], "subj string"
-        )
+        cdf = local_frame(triples.sparkSession, [(c,) for c in consts], "subj string")
         res = cdf if res is None else res.unionByName(cdf)
     return triples.join(res.dropDuplicates(), on="subj", how="left_semi")

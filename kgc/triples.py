@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kgc.functions import is_valid_date
+
 # Raw (pre-normalization) per-segment property payload — what the
 # reference's extractProperties parses out of the LLM response.
 PROPS_SCHEMA = T.StructType(
@@ -125,13 +127,6 @@ TRIPLE_STRUCT = (
 _S = F.lit
 
 
-def valid_date(c: Column) -> Column:
-    """isValidDate (converter.go:377-380) — to_date with strict pattern."""
-    return c.isNotNull() & F.try_to_timestamp(c, F.lit("yyyy-MM-dd")).isNotNull() & c.rlike(
-        r"^\d{4}-\d{2}-\d{2}$"
-    )
-
-
 def _triple(subj: Column, pred, obj: Column, obj_type="literal") -> Column:
     p = pred if isinstance(pred, Column) else _S(pred)
     t = obj_type if isinstance(obj_type, Column) else _S(obj_type)
@@ -226,7 +221,7 @@ def props_to_triples(
                             b,
                             "startDate",
                             e["date"],
-                            F.when(valid_date(e["date"]), _S("date")).otherwise(_S("literal")),
+                            F.when(is_valid_date(e["date"]), _S("date")).otherwise(_S("literal")),
                         )
                     ),
                 ).otherwise(empty),
@@ -263,7 +258,7 @@ def props_to_triples(
                             bi,
                             "startDate",
                             e["date"],
-                            F.when(valid_date(e["date"]), _S("date")).otherwise(_S("literal")),
+                            F.when(is_valid_date(e["date"]), _S("date")).otherwise(_S("literal")),
                         )
                     ),
                 ).otherwise(empty),
@@ -341,7 +336,7 @@ def props_to_triples(
         author_t,
         lit_prop(
             "datePublished",
-            F.when(valid_date(P["datePublished"]), P["datePublished"]),
+            F.when(is_valid_date(P["datePublished"]), P["datePublished"]),
             _S("date"),
         ),
     )
@@ -641,7 +636,8 @@ def flatten_jsonld_node(doc_id: str, seg_id: int, node: dict) -> list:
     node @id → subject, {"@id"}-only dicts → node-reference triples,
     dicts with @id + props nest under that id instead of a path blank.
     Pure Python — the per-row kernel of from_jsonld's Arrow batches."""
-    from kgc.golden import _DATE_PREDS, is_valid_date, seg_subject
+    from kgc.golden import _DATE_PREDS, seg_subject
+    from kgc.golden import is_valid_date as is_valid_date_py
 
     rows: list = []
 
@@ -666,7 +662,7 @@ def flatten_jsonld_node(doc_id: str, seg_id: int, node: dict) -> list:
         elif isinstance(o, str):
             if o == "":
                 return
-            t = "date" if p in _DATE_PREDS and is_valid_date(o) else "literal"
+            t = "date" if p in _DATE_PREDS and is_valid_date_py(o) else "literal"
             rows.append((s, p, o, t))
         elif isinstance(o, dict):
             ref_or_blank(s, p, o, f"{s}/{p}")

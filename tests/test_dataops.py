@@ -158,7 +158,7 @@ def test_simhash_stability_and_sensitivity(spark):
         ],
         "doc_id long, text string",
     )
-    h = {r["doc_id"]: r["h"] for r in df.select("doc_id", dedup.simhash60(F.col("text")).alias("h")).collect()}
+    h = {r["doc_id"]: r["h"] for r in dedup.with_simhash(df, out_col="h").collect()}
     ham12 = bin(h[1] ^ h[2]).count("1")
     ham13 = bin(h[1] ^ h[3]).count("1")
     assert h[1] == h[2]  # case-normalized tokens → identical

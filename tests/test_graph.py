@@ -586,9 +586,14 @@ def test_parse_sparql_structure():
     assert q["select"] == ["d", "n"] and q["distinct"]
     # the WHERE group is an ordered algebra element list, in text order
     assert q["where"] == [
-        ("bgp", [("?d", "mentions", "?e"), ("?e", "@type", "Person")]),
-        ("optional", [("bgp", [("?e", "name", "?n")])]),
-        ("filter", ("cmp", "?d", "!=", "doc:9", (False, True))),
+        ("bgp", [
+            (("var", "d"), ("lit", "mentions"), ("var", "e")),
+            (("var", "e"), ("lit", "@type"), ("lit", "Person")),
+        ]),
+        ("optional", [
+            ("bgp", [(("var", "e"), ("lit", "name"), ("var", "n"))]),
+        ]),
+        ("filter", ("cmp", ("var", "d"), "!=", ("lit", "doc:9"))),
     ]
     assert q["order"] == [("d", True), ("n", False)] and q["limit"] == 5
     # aggregates, GROUP BY and HAVING parse into the same dict; a
@@ -601,15 +606,17 @@ def test_parse_sparql_structure():
     assert q["form"] == "select" and q["select"] == ["m"]
     assert q["aggregates"] == [("COUNT", True, ("var", "d"), "n", " ")]
     assert q["group_by"] == ["m"] and q["order"] == [("n", False)]
-    assert q["having"] == (
-        "cmp2", ("dbl", ("var", "n")), ">", ("dbl", ("num", 1.0))
-    )
+    assert q["having"] == ("cmp", ("var", "n"), ">", ("num", "1"))
     (kind, bgp), (sub_kind, sub) = q["where"]
-    assert (kind, bgp) == ("bgp", [("?d", "mentions", "?e")])
+    assert (kind, bgp) == (
+        "bgp", [(("var", "d"), ("lit", "mentions"), ("var", "e"))]
+    )
     assert sub_kind == "subquery" and isinstance(sub, dict)
     assert sub["select"] == ["e"] and sub["group_by"] == ["e"]
     assert sub["aggregates"] == [("MAX", False, ("var", "x"), "m", " ")]
-    assert sub["where"] == [("bgp", [("?e", "name", "?x")])]
+    assert sub["where"] == [
+        ("bgp", [(("var", "e"), ("lit", "name"), ("var", "x"))])
+    ]
 
 
 def test_parse_sparql_union_minus_values():
@@ -622,14 +629,19 @@ def test_parse_sparql_union_minus_values():
         'FILTER (regex(?e, "^ent:", "i")) FILTER (bound(?d)) '
         "FILTER (!bound(?x)) }"
     )
+    d, e, x = ("var", "d"), ("var", "e"), ("var", "x")
     assert q["where"] == [
         ("union", [
-            [("bgp", [("?d", "mentions", "?e")])],
-            [("bgp", [("?d", "locations", "?e")])],
+            [("bgp", [(d, ("lit", "mentions"), e)])],
+            [("bgp", [(d, ("lit", "locations"), e)])],
         ]),
-        ("minus", [("bgp", [("?d", "about", "?x")])]),
-        ("values", ["t"], [("Person",), (None,), ("two words",)]),
-        ("values", ["a", "b"], [("x", "y"), (None, "z")]),
+        ("minus", [("bgp", [(d, ("lit", "about"), x)])]),
+        ("values", ["t"], [
+            (("lit", "Person"),), (None,), (("lit", "two words"),),
+        ]),
+        ("values", ["a", "b"], [
+            (("lit", "x"), ("lit", "y")), (None, ("lit", "z")),
+        ]),
         ("filter", ("regex", "e", "^ent:", "i")),
         ("filter", ("bound", "d", True)),
         ("filter", ("bound", "x", False)),
@@ -1874,8 +1886,8 @@ def test_sparql_graph_sequence_path_stays_in_graph(spark):
 
     q = parse_sparql("SELECT ?g ?n WHERE { GRAPH ?g { ?d mentions/name ?n } }")
     [(kind, gterm, [(bgp, pats)])] = q["where"]
-    assert (kind, gterm, bgp, len(pats)) == ("graph", "?g", "bgp", 2)
-    assert all(len(p) == 4 and p[3] == "?g" for p in pats)
+    assert (kind, gterm, bgp, len(pats)) == ("graph", ("var", "g"), "bgp", 2)
+    assert all(len(p) == 4 and p[3] == ("var", "g") for p in pats)
     rows = sparql_query(
         _quads(spark),
         "SELECT DISTINCT ?g ?n WHERE { GRAPH ?g { ?d mentions/name ?n } } "
@@ -2633,14 +2645,18 @@ def test_parse_sparql_comments_are_tokens():
         "WHERE { ?d label <http://s.org/#t> } # trailing }"
     )
     assert q["select"] == ["d"]
-    assert q["where"] == [("bgp", [("?d", "label", "http://s.org/#t")])]
+    assert q["where"] == [
+        ("bgp", [(("var", "d"), ("lit", "label"), ("lit", "http://s.org/#t"))])
+    ]
     q = parse_sparql("SELECT ?a WHERE { ?a p ?b . ?a q ?c FILTER (?b < 3 && ?c > 1) }")
     assert q["where"][1] == ("filter", (
-        "and", ("cmp", "?b", "<", "3", (False, False)),
-        ("cmp", "?c", ">", "1", (False, False)),
+        "and", ("cmp", ("var", "b"), "<", ("num", "3")),
+        ("cmp", ("var", "c"), ">", ("num", "1")),
     ))
     q = parse_sparql("SELECT ?a WHERE { ?a p ?b FILTER (?b < 3) # not b > 3\n}")
-    assert q["where"][1] == ("filter", ("cmp", "?b", "<", "3", (False, False)))
+    assert q["where"][1] == (
+        "filter", ("cmp", ("var", "b"), "<", ("num", "3"))
+    )
 
 
 def test_sparql_aggregate_grammar_reads_tokens(spark):
@@ -2692,3 +2708,97 @@ def test_sparql_query_forms_take_leading_comments(spark):
         "WHERE { ?d mentions ?e . ?e name \"Ada\" }",
     ).collect()
     assert [(r.subj, r.pred, r.obj) for r in got] == [("doc:1", "cites", "ent:1")]
+
+
+def _kinds_kg(spark):
+    """Objects and predicates whose text looks like SPARQL syntax: a
+    quoted "?x", "sub+" or "p|q" in a query is a literal, nothing else."""
+    return spark.createDataFrame(
+        [
+            ("d1", "label", "?x"), ("d2", "label", "plain"),
+            ("d3", "label", "?__seq0"),
+            ("d1", "val", "x"), ("d3", "val", "?d"),
+            ("a", "sub", "b"), ("b", "sub", "c"), ("a", "sub+", "z"),
+            ("a", "p", "w"), ("a", "p|q", "y"),
+            ("?x", "kind", "quoted-subject"),
+        ],
+        "subj string, pred string, obj string",
+    )
+
+
+def test_sparql_quoted_terms_are_literals(spark):
+    """A quoted literal stays a literal wherever it stands: as a pattern
+    object or predicate, a FILTER side, a CONSTRUCT template term and a
+    DESCRIBE term — never a variable, a path or a reserved name."""
+    from kgc.graph import sparql_construct, sparql_describe, sparql_query
+
+    kg = _kinds_kg(spark)
+
+    def col(text, name):
+        return sorted(r[name] for r in sparql_query(kg, text).collect())
+
+    assert col('SELECT ?d WHERE { ?d label "?x" }', "d") == ["d1"]
+    assert col(
+        'SELECT ?d WHERE { ?d val ?z FILTER (?z = "?d") }', "d"
+    ) == ["d3"]
+    assert col('SELECT ?o WHERE { a "sub+" ?o }', "o") == ["z"]
+    assert col("SELECT ?o WHERE { a sub+ ?o }", "o") == ["b", "c"]
+    assert col('SELECT ?o WHERE { a "p|q" ?o }', "o") == ["y"]
+    assert col('SELECT ?d WHERE { ?d label "?__seq0" }', "d") == ["d3"]
+    got = sparql_construct(
+        kg, 'CONSTRUCT { ?d tag "?z" } WHERE { ?d val ?z }'
+    ).collect()
+    assert sorted((r.subj, r.pred, r.obj, r.obj_type) for r in got) == [
+        ("d1", "tag", "?z", "literal"), ("d3", "tag", "?z", "literal"),
+    ]
+    got = sparql_describe(kg, 'DESCRIBE "?x"').collect()
+    assert [(r.subj, r.pred, r.obj) for r in got] == [
+        ("?x", "kind", "quoted-subject")
+    ]
+
+
+def test_sparql_operators_tokenize_without_whitespace():
+    """Comparison operators split from their operands; "!" before
+    bound( or (, IRIs and p|q alternations keep their tokens."""
+    from kgc.graph import _SPARQL_TOKEN, parse_sparql
+
+    def where(f):
+        return parse_sparql(
+            f"SELECT ?a WHERE {{ ?a p ?y . ?a q ?z FILTER ({f}) }}"
+        )["where"]
+
+    for tight, spaced in [
+        ("?y>1", "?y > 1"), ("?y<=2", "?y <= 2"),
+        ("?y!=?z", "?y != ?z"), ("?a>-1", "?a > -1"),
+    ]:
+        assert where(tight) == where(spaced)
+    assert where("?y>1")[1] == ("filter", ("cmp", ("var", "y"), ">", ("num", "1")))
+    assert _SPARQL_TOKEN.findall(
+        "!bound(?v) !(p|q) <http://x.org/a=b> p|q"
+    ) == ["!bound", "(", "?v", ")", "!", "(", "p|q", ")",
+          "<http://x.org/a=b>", "p|q"]
+
+
+def test_sparql_values_and_describe_tables_are_local(spark):
+    """A VALUES table and DESCRIBE's constants are driver-built local
+    relations (LocalTableScan, no Python-worker job), and an UNDEF cell
+    is NULL."""
+    from kgc.canon import local_frame
+    from kgc.graph import sparql_describe, sparql_query
+
+    # the KG itself a local relation, so any ExistingRDD is the query's
+    kg = local_frame(
+        spark, [tuple(r) for r in _kg(spark).collect()],
+        "subj string, pred string, obj string, obj_type string",
+    )
+    out = sparql_query(
+        kg, "SELECT * WHERE { VALUES (?a ?b) { (x UNDEF) (UNDEF y) } }"
+    )
+    assert "ExistingRDD" not in out._jdf.queryExecution().executedPlan().toString()
+    assert {(r.a, r.b) for r in out.collect()} == {(None, "y"), ("x", None)}
+    out = sparql_describe(kg, 'DESCRIBE ent:2 ?e WHERE { ?e name "Ada" }')
+    assert "ExistingRDD" not in out._jdf.queryExecution().executedPlan().toString()
+    assert sorted((r.subj, r.pred) for r in out.collect()) == [
+        ("ent:1", "@type"), ("ent:1", "name"),
+        ("ent:2", "@type"), ("ent:2", "name"),
+    ]

@@ -187,6 +187,70 @@ class TestSparqlParserTotality:
             pass
 
 
+class TestSparqlTermKinds:
+    """parse_sparql reads each token's kind once: a drawn term of any
+    kind parses to the same (tag, value) wherever a term can stand — a
+    pattern's subject, predicate and object, a VALUES cell, an IN item,
+    a FILTER side, a DESCRIBE term and a CONSTRUCT template term."""
+
+    @staticmethod
+    def _quote(v):
+        return '"' + v.replace("\\", "\\\\").replace('"', '\\"').replace(
+            "\n", "\\n"
+        ).replace("\t", "\\t") + '"'
+
+    _TERMS = st.one_of(
+        st.from_regex(r"[a-z][a-z0-9_]{0,5}", fullmatch=True).map(
+            lambda n: ("?" + n, ("var", n))
+        ),
+        st.from_regex(r"[a-z]{1,4}:[a-z0-9/#._-]{0,8}", fullmatch=True).map(
+            lambda v: ("<" + v + ">", ("lit", v))
+        ),
+        st.text(alphabet='ab ?#+|^/\\"\n\tx', max_size=8).map(
+            lambda v: (TestSparqlTermKinds._quote(v), ("lit", v))
+        ),
+        st.from_regex(r"-?[0-9]{1,4}(\.[0-9]{1,3})?", fullmatch=True).map(
+            lambda v: (v, ("num", v))
+        ),
+        # bare names: prefixed-name style, so no keyword reads as one
+        st.from_regex(r"[a-z]{1,3}:[a-z0-9]{0,4}", fullmatch=True).map(
+            lambda v: (v, ("lit", v))
+        ),
+    )
+
+    @given(_TERMS)
+    @settings(max_examples=200, deadline=None)
+    def test_term_parses_to_its_kind_everywhere(self, drawn):
+        import pytest as _pt
+
+        from kgc.graph import parse_sparql
+
+        text, want = drawn
+        q = parse_sparql(
+            f"SELECT * WHERE {{ {text} ?p ?o . ?s {text} ?o . ?s ?p {text} }}"
+        )
+        (_, pats), = q["where"]
+        assert [pats[0][0], pats[1][1], pats[2][2]] == [want] * 3
+        values = f"SELECT * WHERE {{ ?s ?p ?o VALUES ?o {{ {text} }} }}"
+        if want[0] == "var":
+            with _pt.raises(ValueError, match="VALUES"):
+                parse_sparql(values)
+        else:
+            assert parse_sparql(values)["where"][1] == ("values", ["o"], [(want,)])
+        q = parse_sparql(
+            f"SELECT * WHERE {{ ?s ?p ?o FILTER (?o IN ({text})) "
+            f"FILTER (?o = {text}) }}"
+        )
+        assert q["where"][1:] == [
+            ("filter", ("in", "o", [want], True)),
+            ("filter", ("cmp", ("var", "o"), "=", want)),
+        ]
+        q = parse_sparql(f"DESCRIBE {text} WHERE {{ ?s ?p ?o }}")
+        assert q["describe"] == [want]
+        q = parse_sparql(f"CONSTRUCT {{ ?s ?p {text} }} WHERE {{ ?s ?p ?o }}")
+        assert q["template"] == [(("var", "s"), ("var", "p"), want)]
+
+
 class TestSparqlDifferential:
     """Differential testing of the SPARQL ALGEBRA: random tiny KGs and
     random connected queries, evaluated by the engine (_solve on a
@@ -480,24 +544,35 @@ class TestSparqlDifferential:
         if not rows:
             df = df.filter("subj <> 'zz'")
 
+        def pat(p):
+            # the naive side's "?v" strings as parse_sparql's term tuples
+            return tuple(
+                ("var", t[1:]) if t.startswith("?") else ("lit", t) for t in p
+            )
+
         def tree(kind, arg):
             if kind in ("optional", "minus"):
-                return (kind, [("bgp", [arg])])
+                return (kind, [("bgp", [pat(arg)])])
             if kind == "union":
-                return ("union", [[("bgp", [b])] for b in arg])
+                return ("union", [[("bgp", [pat(b)])] for b in arg])
             if kind == "values":
-                return ("values", *arg)
+                vs, vrows = arg
+                return ("values", vs, [
+                    tuple(c if c is None else ("lit", c) for c in r)
+                    for r in vrows
+                ])
             if kind == "bind":
                 nv, sv, sfx = arg
                 return ("bind", nv, ("fn", "CONCAT", [("var", sv), ("lit", sfx)]))
             if kind == "exists":
-                return ("exists", arg[0], [("bgp", [arg[1]])])
+                return ("exists", arg[0], [("bgp", [pat(arg[1])])])
             v, op, c = arg
-            return ("filter", ("cmp", "?" + v, op, c, (False, True)))
+            return ("filter", ("cmp", ("var", v), op, ("lit", c)))
 
         q = {
             "select": None, "distinct": distinct,
-            "where": [("bgp", required)] + [tree(*el) for el in elements],
+            "where": [("bgp", [pat(p) for p in required])]
+            + [tree(*el) for el in elements],
             "order": [], "limit": None, "offset": None,
         }
         sol, nullable = _solve(df, q)
