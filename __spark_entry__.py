@@ -1139,8 +1139,8 @@ def q_graph_suite(spark, sf_dir):
     co-mention graph (degree-ordered orientation) + a BGP query over
     the constructed KG (kgc.graph.sparql_query: SPARQL-subset TEXT —
     SELECT/DISTINCT/OPTIONAL/FILTER/ORDER/LIMIT/property-path `p+` —
-    parsed and compiled onto bgp_query's selectivity-ordered
-    self-joins; here the 5-pattern person-colocated-with-place
+    parsed and compiled by one recursive algebra compiler whose
+    pattern leaf plans selectivity-ordered self-joins; here the 5-pattern person-colocated-with-place
     chain+star plus a NOT EXISTS negation clause, so the driver row
     pins parser + engine + the anti-join compilation) + the W3C
     N-Triples serialization of the entity-triple table

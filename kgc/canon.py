@@ -169,7 +169,6 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 20,
     salt: int = DEFAULT_SALT,
-    checkpoint: bool = True,
     small_graph_threshold: int = SMALL_GRAPH_THRESHOLD,
     local_finish_threshold: int | None = None,
 ) -> DataFrame:
@@ -220,15 +219,13 @@ def connected_components(
         .union(e.select(F.col("v").alias("node")))
         .distinct()
     )
-    if checkpoint:
-        nodes = nodes.localCheckpoint(eager=True)
+    nodes = nodes.localCheckpoint(eager=True)
 
     prev = None
     for _ in range(max_iter):
         e = _large_star(e, salt)
         e = _small_star(e, salt)
-        if checkpoint:
-            e = e.localCheckpoint(eager=True)
+        e = e.localCheckpoint(eager=True)
         cs = _checksum(e)
         if prev is not None and cs == prev:
             break

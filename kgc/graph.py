@@ -181,7 +181,6 @@ def transitive_closure(
     src: str = "src",
     dst: str = "dst",
     max_depth: int = 16,
-    checkpoint: bool = True,
     small_graph_threshold: int = SMALL_GRAPH_THRESHOLD,
 ) -> DataFrame:
     """(src, dst, depth) — all pairs connected by a directed path of
@@ -234,7 +233,7 @@ def transitive_closure(
             return local_frame(
                 edges.sparkSession, rows, f"`{src}` string, `{dst}` string, depth int"
             )
-    return _closure_doubling(e, src, dst, max_depth, checkpoint)
+    return _closure_doubling(e, src, dst, max_depth)
 
 
 def _closure_bfs(edge_rows, max_depth: int, budget: int):
@@ -276,17 +275,10 @@ def _checkpoint_count(df: DataFrame) -> tuple[DataFrame, int]:
     return df, obs.get["n"]
 
 
-def _closure_doubling(
-    e: DataFrame, src: str, dst: str, max_depth: int, checkpoint: bool
-) -> DataFrame:
+def _closure_doubling(e: DataFrame, src: str, dst: str, max_depth: int) -> DataFrame:
     """Distributed route of transitive_closure: path doubling over the
     distinct (s, d) edge set ``e``."""
-    paths = e.withColumn("depth", F.lit(1))
-    if checkpoint:
-        paths, n = _checkpoint_count(paths)
-    else:
-        paths = paths.persist()
-        n = paths.count()
+    paths, n = _checkpoint_count(e.withColumn("depth", F.lit(1)))
     reach = 1
     while reach < max_depth:
         left, right = paths.alias("l"), paths.alias("r")
@@ -304,12 +296,7 @@ def _closure_doubling(
             .groupBy("s", "d")
             .agg(F.min("depth").alias("depth"))
         )
-        if checkpoint:
-            new_paths, n_new = _checkpoint_count(new_paths)
-        else:
-            n_new = new_paths.count()
-        paths.unpersist()
-        paths = new_paths
+        paths, n_new = _checkpoint_count(new_paths)
         if n_new <= n:
             break
         n = n_new
@@ -451,147 +438,10 @@ def triangle_counts(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFra
     return out
 
 
-def bgp_query(
-    triples: DataFrame,
-    patterns: list[tuple[str, str, str]],
-    optional: list[tuple[str, str, str]] = (),
-    distinct: bool = False,
-    allow_product: bool = False,
-    broadcast_min_consts: int = 2,
-    path_relations: dict[str, DataFrame] | None = None,
-) -> DataFrame:
-    """SPARQL-style basic-graph-pattern query over a (subj, pred, obj)
-    triple table — the downstream query primitive the reference's
-    output format exists FOR (it emits JSON-LD knowledge graphs,
-    internal/jsonld/converter.go:52-94, but ships no query layer; at
-    10^12 triples the consumer needs one that runs ON the warehouse
-    copy of the KG, not in a triple store it can't fit).
-
-    ``patterns`` are (s, p, o) terms; a term starting with ``?`` is a
-    variable, anything else is a constant (parse_sparql's tagged term
-    tuples pass through as they are).  Returns one column per
-    variable.  ``optional`` patterns are SPARQL OPTIONAL: left-joined
-    after the required ones, unmatched bindings NULL.
-
-    Spark-first compilation — each pattern becomes a filtered scan of
-    the SAME triple table (constants pushed into the parquet scan as
-    predicates; Catalyst prunes to the bound columns), and the
-    pattern legs are hash-joined on their shared variables:
-
-      * join ORDER is selectivity-greedy: seed with the most-constant
-        pattern, then repeatedly pick a remaining pattern that shares
-        ≥1 already-bound variable (most constants first) — the classic
-        BGP heuristic, and on Spark it also guarantees every join has
-        an equi-key, so no pattern ever degenerates to a cartesian.
-      * a leg with ≥``broadcast_min_consts`` constants is
-        dimension-sized (e.g. ``(?p, @type, Person)`` is one row per
-        Person entity) and gets an explicit broadcast hint; the
-        fact-sized legs ride the shuffle.
-      * a disconnected pattern (no shared variable with anything
-        bound) is a cross product — refused unless
-        ``allow_product=True``, because at KG scale that is always a
-        query bug, not an intent.
-
-    Variables repeated INSIDE one pattern (``(?x, knows, ?x)``) become
-    a per-leg equality filter.  ``distinct=True`` applies SPARQL
-    SELECT DISTINCT semantics (bag → set).
-
-    ``path_relations`` maps a property-path predicate to its (subj, obj)
-    relation (_path_relations); a leg with that predicate reads the
-    relation instead of the triple table, its predicate counting as one
-    constant for the join order and broadcast hint.
-    """
-
-    def as_term(t):
-        if isinstance(t, tuple):
-            return t
-        if isinstance(t, str) and t.startswith("?"):
-            return ("var", t[1:])
-        return ("lit", t)
-
-    patterns = [tuple(map(as_term, pat)) for pat in patterns]
-    optional = [tuple(map(as_term, pat)) for pat in optional]
-    path_relations = {as_term(k): v for k, v in (path_relations or {}).items()}
-
-    def compile_leg(pat):
-        s, p, o = pat[:3]
-        cols, seen = [], {}
-        if p in path_relations:
-            leg, n_consts = path_relations[p], 1
-            slots = [(s, "subj"), (o, "obj")]
-        else:
-            leg, n_consts = triples, 0
-            slots = [(s, "subj"), (p, "pred"), (o, "obj")]
-        if len(pat) == 4:
-            # quad pattern (from a GRAPH block): the 4th term binds or
-            # filters the reserved provenance column
-            slots.append((pat[3], _GRAPH_COL))
-        for (kind, name), col in slots:
-            if kind == "var":
-                if not name:
-                    raise ValueError(f"empty variable name in pattern {pat}")
-                if name in seen:  # repeated var inside one pattern
-                    leg = leg.filter(F.col(seen[name]) == F.col(col))
-                else:
-                    seen[name] = col
-                    cols.append(F.col(col).alias(name))
-            else:
-                leg = leg.filter(F.col(col) == F.lit(name))
-                n_consts += 1
-        leg = leg.select(*cols)
-        if n_consts >= broadcast_min_consts:
-            leg = F.broadcast(leg)
-        return leg, set(seen), n_consts, pat
-
-    def order_greedy(legs):
-        """Seed = most constants; grow along shared variables."""
-        remaining = list(legs)
-        remaining.sort(key=lambda x: -x[2])  # stable: ties keep input order
-        ordered = [remaining.pop(0)]
-        bound = set(ordered[0][1])
-        while remaining:
-            pick = next(
-                (i for i, leg in enumerate(remaining) if leg[1] & bound), None
-            )
-            if pick is None:
-                if not allow_product:
-                    raise ValueError(
-                        "disconnected pattern group (cross product): "
-                        f"{[leg[3] for leg in remaining]} shares no variable "
-                        "with the bound set; pass allow_product=True if "
-                        "intended"
-                    )
-                pick = 0
-            leg = remaining.pop(pick)
-            ordered.append(leg)
-            bound |= leg[1]
-        return ordered
-
-    if not patterns:
-        raise ValueError("bgp_query needs at least one required pattern")
-    ordered = order_greedy([compile_leg(p) for p in patterns])
-    out, bound = ordered[0][0], set(ordered[0][1])
-    for leg, vars_, _, pat in ordered[1:]:
-        shared = sorted(vars_ & bound)
-        out = out.join(leg, on=shared) if shared else out.crossJoin(leg)
-        bound |= vars_
-    for pat in optional:
-        leg, vars_, _, _ = compile_leg(pat)
-        shared = sorted(vars_ & bound)
-        if not shared:
-            raise ValueError(
-                f"OPTIONAL pattern {pat} shares no variable with the "
-                "required group — its left join would be a cross product"
-            )
-        out = out.join(leg, on=shared, how="left")
-        bound |= vars_
-    return out.dropDuplicates() if distinct else out
-
-
 # ------------------------------------------------------ SPARQL front-end ---
-# A deterministic text front-end for bgp_query: the subset of SPARQL 1.1
-# a warehouse KG consumer actually runs against a (subj, pred, obj)
-# table —
+# A deterministic text front-end over a (subj, pred, obj) table: the
+# subset of SPARQL 1.1 a warehouse KG consumer actually runs against
+# it —
 #
 #   query := head [WHERE] group modifiers    — one token stream, one
 #                                              recursive-descent parser
@@ -658,7 +508,7 @@ def bgp_query(
 # `p/q[/r...]` (bare predicate names — IRI-bracketed steps tokenize
 # apart, same restriction as alternation) is rewritten at parse time
 # into a chain of patterns through fresh `?__seqN` variables —
-# exactly the intermediate-join shape bgp_query already plans — and
+# exactly the intermediate-join shape the pattern leaf plans — and
 # each step may itself be any of the single-step path forms
 # (`mentions/name`, `^mentions/events`, `subClassOf+/label`).  The `__seq` prefix is reserved; the
 # intermediate columns are dropped before projection.  A GROUPED
@@ -667,15 +517,16 @@ def bgp_query(
 # transitive closure — bare-predicate steps, one trailing modifier, no
 # further nesting.
 #
-# No triple store, no dedicated engine: parse → bgp_query → Catalyst.
+# No triple store, no dedicated engine: parse → _compile_group → Catalyst.
 # The reference emits the KG (internal/jsonld/converter.go:52-94) but
 # ships no query layer; this is the missing consumer surface, and at
 # 10^12 triples it must run ON the warehouse copy.
 
 _SPARQL_TOKEN = re.compile(
     r"""\?[A-Za-z_]\w*      # variable
-      | <[^\s<>"{}|^`\\]*>[+*]?  # IRI ref (no spaces: a "<" comparison
-                            #   is not one), optional +/* path
+      | <(?:[^\s<>"{}|^`\\&]|&(?!&))*>[+*]?  # IRI ref (no spaces or
+                            #   "&&": a "<" comparison is not one),
+                            #   optional +/* path
       | "(?:[^"\\]|\\.)*"   # quoted literal
       | \#[^\n]*            # comment, after IRIs and literals so a "#"
                             #   inside one stays text; the parser drops it
@@ -685,7 +536,8 @@ _SPARQL_TOKEN = re.compile(
       | [{}(),.]            # punctuation (comma separates arg/IN lists)
       | [<>!]?=|[<>]        # comparison operator, so "?y>1" splits; "!"
                             #   alone ("!bound", "!(p|q)") stays a term
-      | (?:[^\s{}(),."\#<>=!]|!(?!=))+  # bare term / keyword
+      | &&|\|\|             # boolean operator; a lone "|" stays in "p|q"
+      | (?:[^\s{}(),."\#<>=!&|]|!(?!=)|&(?!&)|\|(?!\|))+  # bare term / keyword
     """,
     re.VERBOSE,
 )
@@ -711,7 +563,7 @@ _SCALAR_FNS = {
 # IF conditions), each one Catalyst predicate
 _STRTEST_FNS = {"CONTAINS", "STRSTARTS", "STRENDS"}
 
-# reserved provenance column bgp_query reads for quad (GRAPH) patterns
+# reserved provenance column _bgp reads for quad (GRAPH) patterns
 _GRAPH_COL = "__g"
 
 
@@ -1060,7 +912,7 @@ def _parse_sparql(text: str) -> dict:
             if p[:2] == ("path", "/"):
                 # sequence property path p/q[/r...] → a chain of
                 # patterns through fresh intermediate variables: the
-                # exact join shape bgp_query plans anyway.  Bare-name
+                # exact join shape _bgp plans anyway.  Bare-name
                 # steps only (IRI-bracketed steps tokenize apart).
                 *steps, last = p[2]
                 for st in steps:
@@ -1562,7 +1414,7 @@ def _parse_sparql(text: str) -> dict:
 def _path_relations(triples: DataFrame, patterns: list) -> dict[tuple, DataFrame]:
     """Property paths as leaf relations: one (subj, obj) DataFrame per
     distinct ("path", op, names) predicate term in ``patterns`` (the
-    parser has validated each), keyed by that term.  bgp_query reads a
+    parser has validated each), keyed by that term.  _bgp reads a
     leg whose predicate is a key from its relation, so no derived edge
     ever reaches a variable-predicate or GRAPH quad leg over the fact
     table.
@@ -1728,21 +1580,17 @@ def _compile_filter(f, having: bool = False):
     return c.isNotNull() if positive else c.isNull()
 
 
-def _pattern_vars(patterns) -> set[str]:
-    return {t[1] for pat in patterns for t in pat if t[0] == "var"}
-
-
 def _connected(patterns) -> list[list]:
     """Split triple patterns into variable-connected parts (text order
     kept within a part)."""
     parts: list[tuple[set, list]] = []
-    for pat in patterns:
-        vars_, pats = _pattern_vars([pat]), [pat]
+    for i, pat in enumerate(patterns):
+        vars_, idx = {t[1] for t in pat if t[0] == "var"}, [i]
         for part in [p for p in parts if p[0] & vars_]:
             parts.remove(part)
-            vars_, pats = vars_ | part[0], part[1] + pats
-        parts.append((vars_, pats))
-    return [pats for _, pats in parts]
+            vars_, idx = vars_ | part[0], part[1] + idx
+        parts.append((vars_, idx))
+    return [[patterns[i] for i in sorted(idx)] for _, idx in parts]
 
 
 def _triple_patterns(group):
@@ -1758,6 +1606,66 @@ def _triple_patterns(group):
             yield from _triple_patterns(el[1]["where"])
         elif el[0] in ("optional", "minus", "graph", "exists"):
             yield from _triple_patterns(el[-1])
+
+
+# a pattern leg with this many constants (e.g. ``?p "@type" Person``:
+# one row per Person entity) is dimension-sized and gets an explicit
+# broadcast hint; the fact-sized legs ride the shuffle
+_BROADCAST_CONSTS = 2
+
+
+def _bgp(triples: DataFrame, paths: dict, patterns: list) -> DataFrame:
+    """The basic-graph-pattern leaf of the compiler: a variable-connected
+    list of parse_sparql triple (or GRAPH quad) patterns → one column per
+    variable.
+
+    Each pattern is a filtered scan of the SAME triple table (constants
+    pushed into the scan as predicates, Catalyst pruning to the bound
+    columns), or of its property path's (subj, obj) relation in
+    ``paths`` (_path_relations), the path predicate counting as one
+    constant.  A variable repeated inside one pattern (``?x sameAs ?x``)
+    is a per-leg equality filter.  The legs are hash-joined on their
+    shared variables in selectivity-greedy order: seed with the
+    most-constant leg, then repeatedly take the first remaining leg
+    (most constants first, ties in text order) that shares a bound
+    variable — the classic BGP heuristic, and on a connected pattern
+    list every join has an equi-key."""
+    legs = []
+    for pat in patterns:
+        s, p, o = pat[:3]
+        cols, seen = [], {}
+        if p in paths:
+            leg, n_consts = paths[p], 1
+            slots = [(s, "subj"), (o, "obj")]
+        else:
+            leg, n_consts = triples, 0
+            slots = [(s, "subj"), (p, "pred"), (o, "obj")]
+        if len(pat) == 4:
+            # quad pattern (from a GRAPH block): the 4th term binds or
+            # filters the reserved provenance column
+            slots.append((pat[3], _GRAPH_COL))
+        for (kind, name), col in slots:
+            if kind != "var":
+                leg = leg.filter(F.col(col) == F.lit(name))
+                n_consts += 1
+            elif name in seen:
+                leg = leg.filter(F.col(seen[name]) == F.col(col))
+            else:
+                seen[name] = col
+                cols.append(F.col(col).alias(name))
+        leg = leg.select(*cols)
+        if n_consts >= _BROADCAST_CONSTS:
+            leg = F.broadcast(leg)
+        legs.append((leg, set(seen), n_consts))
+    legs.sort(key=lambda leg: -leg[2])  # stable: ties keep text order
+    (out, bound, _), rest = legs[0], legs[1:]
+    while rest:
+        leg, vars_, _ = rest.pop(
+            next(i for i, (_, v, _) in enumerate(rest) if v & bound)
+        )
+        out = out.join(leg, on=sorted(vars_ & bound))
+        bound = bound | vars_
+    return out
 
 
 def _join(
@@ -1861,8 +1769,7 @@ def _join(
 
 
 def _compile_group(
-    triples: DataFrame, paths: dict, group: list, where: str | None = None,
-    **bgp_kwargs,
+    triples: DataFrame, paths: dict, group: list, where: str | None = None
 ) -> tuple[DataFrame, set[str]]:
     """Compile one WHERE group (a parse_sparql element list) to
     (solution, nullable vars) by folding its elements in text order, as
@@ -1873,14 +1780,14 @@ def _compile_group(
     filter-scope rule (None: a query's own WHERE).
 
     Joins commute, so a run of inner-join elements that no OPTIONAL,
-    MINUS or BIND interrupts compiles as one bgp_query call over all the
-    run's triple patterns (selectivity-ordered equi-joins, broadcast
-    dimension legs), which the run's other elements then join in text
-    order.  After an earlier element has bound variables, the run's
-    patterns go in one call per variable-connected part, each joined to
-    the solution.  A UNION block NULL-pads its branches to the block's
-    variables and unions them; a VALUES block is an inline literal table,
-    broadcast.  Every join goes through _join.
+    MINUS or BIND interrupts compiles its triple patterns as one _bgp
+    leaf per variable-connected part (selectivity-ordered equi-joins,
+    broadcast dimension legs), each joined to the solution, and the
+    run's other elements then join in text order.  A UNION block
+    NULL-pads its branches to the block's variables and unions them; a
+    VALUES block is an inline literal table, broadcast.  Every join goes
+    through _join, so its cross-product refusal is the only one: a run
+    whose patterns share no variable is refused there.
 
     A group FILTER sees only the group's own bindings (spec).  Inside a
     nested group, a FILTER over a variable the group does not bind means
@@ -1903,15 +1810,11 @@ def _compile_group(
             )
 
     def sub(g, name):
-        return _compile_group(triples, paths, g, name, **bgp_kwargs)
+        return _compile_group(triples, paths, g, name)
 
     def close_run():
-        if run:
-            for pats in [list(run)] if sol is None else _connected(run):
-                fold(
-                    bgp_query(triples, pats, path_relations=paths, **bgp_kwargs),
-                    set(), what=f"pattern group {pats}",
-                )
+        for pats in _connected(run):
+            fold(_bgp(triples, paths, pats), set(), what=f"pattern group {pats}")
         for el in rest:
             if el[0] == "union":
                 parts = [sub(b, "a UNION branch") for b in el[1]]
@@ -2015,7 +1918,7 @@ def _compile_group(
 
 
 def _solve(
-    triples: DataFrame, q: dict, graph_col: str = "doc_id", **bgp_kwargs
+    triples: DataFrame, q: dict, graph_col: str = "doc_id"
 ) -> tuple[DataFrame, set[str]]:
     """A parsed query's WHERE tree → (solution, nullable vars).  Done
     once per query, over every triple pattern the tree holds
@@ -2034,7 +1937,7 @@ def _solve(
         triples = triples.withColumn(_GRAPH_COL, F.col(graph_col))
     paths = _path_relations(triples, pats)
     try:
-        return _compile_group(triples, paths, q["where"], **bgp_kwargs)
+        return _compile_group(triples, paths, q["where"])
     except RecursionError:
         raise ValueError("query nests too deeply to compile") from None
 
@@ -2147,7 +2050,9 @@ def _parse_form(text: str, form: str) -> dict:
     return q
 
 
-def sparql_query(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
+def sparql_query(
+    triples: DataFrame, text: str, graph_col: str = "doc_id"
+) -> DataFrame:
     """Run a SPARQL-subset SELECT query string against a (subj, pred,
     obj[, obj_type]) triple table.  parse_sparql → the WHERE algebra tree →
     property-path relations → _compile_group (one recursive fold, text
@@ -2169,7 +2074,7 @@ def sparql_query(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     it twice.  Use DISTINCT (or COUNT(DISTINCT ...)) for the merged
     default graph's set semantics."""
     q = _parse_form(text, "select")
-    return _finish_query(q, *_solve(triples, q, **bgp_kwargs))[0]
+    return _finish_query(q, *_solve(triples, q, graph_col))[0]
 
 
 # SPARQL aggregates + CONSTRUCT + ASK + DESCRIBE — the rest of the
@@ -2245,7 +2150,9 @@ def _aggregate(
     return _order_slice(out, q), nullable
 
 
-def sparql_aggregate(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
+def sparql_aggregate(
+    triples: DataFrame, text: str, graph_col: str = "doc_id"
+) -> DataFrame:
     """SPARQL GROUP BY aggregation over a triple table: sparql_query for
     a SELECT whose list holds at least one aggregate.  Grammar:
 
@@ -2276,10 +2183,12 @@ def sparql_aggregate(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     q = _parse_form(text, "select")
     if not q["aggregates"]:
         raise ValueError("sparql_aggregate needs at least one (AGG(...) AS ?x)")
-    return _finish_query(q, *_solve(triples, q, **bgp_kwargs))[0]
+    return _finish_query(q, *_solve(triples, q, graph_col))[0]
 
 
-def sparql_construct(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
+def sparql_construct(
+    triples: DataFrame, text: str, graph_col: str = "doc_id"
+) -> DataFrame:
     """SPARQL CONSTRUCT: instantiate a triple template over every
     solution of the WHERE group, returning a derived (subj, pred, obj,
     obj_type) KG (RDF set semantics — deduplicated).  Template terms
@@ -2290,7 +2199,7 @@ def sparql_construct(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     else 'literal' — documented approximation over an untyped triple
     table."""
     q = _parse_form(text, "construct")
-    sols = _finish_query(q, *_solve(triples, q, **bgp_kwargs))[0]
+    sols = _finish_query(q, *_solve(triples, q, graph_col))[0]
     subj_vars = {
         pat[0] for pat in _triple_patterns(q["where"]) if pat[0][0] == "var"
     }
@@ -2314,7 +2223,9 @@ def sparql_construct(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     return out.dropDuplicates(["subj", "pred", "obj"])
 
 
-def sparql_ask(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
+def sparql_ask(
+    triples: DataFrame, text: str, graph_col: str = "doc_id"
+) -> DataFrame:
     """SPARQL ASK: does the WHERE group have at least one solution?
     Grammar: ``ASK [WHERE] { ... }`` (full group algebra).  Returns a
     one-row DataFrame (ask: boolean) — lazily: the plan is
@@ -2323,7 +2234,7 @@ def sparql_ask(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     CollectLimit takes one partition's hit) — an existence probe, not
     a full evaluation."""
     q = _parse_form(text, "ask")
-    sol = _finish_query(q, *_solve(triples, q, **bgp_kwargs))[0]
+    sol = _finish_query(q, *_solve(triples, q, graph_col))[0]
     return (
         sol.select(F.lit(1).alias("_one"))
         .limit(1)
@@ -2331,7 +2242,9 @@ def sparql_ask(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
     )
 
 
-def sparql_describe(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
+def sparql_describe(
+    triples: DataFrame, text: str, graph_col: str = "doc_id"
+) -> DataFrame:
     """SPARQL DESCRIBE: every triple whose SUBJECT is a described
     resource (the minimal symmetric-free Concise Bounded Description —
     subject-outbound edges only, the standard-allowed simple form).
@@ -2348,7 +2261,7 @@ def sparql_describe(triples: DataFrame, text: str, **bgp_kwargs) -> DataFrame:
 
     res: DataFrame | None = None
     if q["where"] is not None:
-        sol = _finish_query(q, *_solve(triples, q, **bgp_kwargs))[0]
+        sol = _finish_query(q, *_solve(triples, q, graph_col))[0]
         missing = [v for v in vars_ if v not in sol.columns]
         if missing:
             raise ValueError(f"DESCRIBE vars not bound by WHERE: {missing}")

@@ -395,17 +395,12 @@ def _toy_kg(spark):
 
 def test_bgp_chain_and_star(spark):
     """Person–name–place chain binds only the docs with ALL patterns."""
-    from kgc.graph import bgp_query
+    from kgc.graph import sparql_query
 
-    out = bgp_query(
+    out = sparql_query(
         _toy_kg(spark),
-        [
-            ("?d", "mentions", "?p"),
-            ("?p", "@type", "Person"),
-            ("?p", "name", "?pname"),
-            ("?d", "locations", "?pl"),
-            ("?pl", "name", "?plname"),
-        ],
+        "SELECT * WHERE { ?d mentions ?p . ?p a Person . ?p name ?pname ."
+        " ?d locations ?pl . ?pl name ?plname }",
     )
     assert sorted(out.columns) == ["d", "p", "pl", "plname", "pname"]
     rows = {tuple(r) for r in out.select("d", "pname", "plname").collect()}
@@ -414,65 +409,71 @@ def test_bgp_chain_and_star(spark):
 
 
 def test_bgp_optional_left_join(spark):
-    """OPTIONAL name: bob (no name triple) survives with NULL."""
-    from kgc.graph import bgp_query
+    """OPTIONAL name: bob (no name triple) survives with NULL.  A second
+    OPTIONAL over the first one's variable is a LeftJoin against the
+    solution so far: an unbound ?n is compatible with every ?n."""
+    from kgc.graph import sparql_query
 
-    out = bgp_query(
-        _toy_kg(spark),
-        [("?e", "@type", "Person")],
-        optional=[("?e", "name", "?n")],
+    out = sparql_query(
+        _toy_kg(spark), "SELECT ?e ?n WHERE { ?e a Person OPTIONAL { ?e name ?n } }"
     )
     got = {(r["e"], r["n"]) for r in out.collect()}
     assert got == {("ent:alice", "Alice"), ("ent:bob", None)}
 
+    kg = spark.createDataFrame(
+        [("e1", "@type", "Person"), ("e2", "@type", "Person"),
+         ("e1", "name", "n1"), ("n1", "label", "L1"), ("n9", "label", "L9")],
+        "subj string, pred string, obj string",
+    )
+    out = sparql_query(
+        kg,
+        "SELECT ?e ?n ?l WHERE { ?e a Person OPTIONAL { ?e name ?n }"
+        " OPTIONAL { ?n label ?l } }",
+    )
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("e1", "n1", "L1"), ("e2", "n1", "L1"), ("e2", "n9", "L9"),
+    ]
+
 
 def test_bgp_repeated_var_and_distinct(spark):
     """(?x, sameAs, ?x) keeps only the self-loop; distinct dedups."""
-    from kgc.graph import bgp_query
+    from kgc.graph import sparql_query
 
     kg = _toy_kg(spark)
-    out = bgp_query(kg, [("?x", "sameAs", "?x")])
+    text = "SELECT %s ?x WHERE { ?x sameAs ?x }"
+    out = sparql_query(kg, text % "")
     assert [r["x"] for r in out.collect()] == ["ent:alice"]
     dup = kg.unionAll(kg)
-    bag = bgp_query(dup, [("?x", "sameAs", "?x")])
-    assert bag.count() == 2
-    assert bgp_query(dup, [("?x", "sameAs", "?x")], distinct=True).count() == 1
+    assert sparql_query(dup, text % "").count() == 2
+    assert sparql_query(dup, text % "DISTINCT").count() == 1
 
 
 def test_bgp_disconnected_refused(spark):
     import pytest as _pt
 
-    from kgc.graph import bgp_query
+    from kgc.graph import sparql_query
 
     kg = _toy_kg(spark)
-    with _pt.raises(ValueError, match="disconnected"):
-        bgp_query(kg, [("?a", "mentions", "?b"), ("?c", "locations", "?d")])
-    # explicit opt-in computes the product
-    n = bgp_query(
-        kg,
-        [("?a", "mentions", "?b"), ("?c", "locations", "?d")],
-        allow_product=True,
-    ).count()
-    assert n == 3 * 2
+    with _pt.raises(ValueError, match="cross product"):
+        sparql_query(kg, "SELECT * WHERE { ?a mentions ?b . ?c locations ?d }")
     with _pt.raises(ValueError, match="OPTIONAL"):
-        bgp_query(kg, [("?a", "mentions", "?b")],
-                  optional=[("?c", "locations", "?d")])
+        sparql_query(
+            kg, "SELECT * WHERE { ?a mentions ?b OPTIONAL { ?c locations ?d } }"
+        )
 
 
 def test_bgp_join_order_and_broadcast_plan(spark):
     """The 2-constant pattern seeds the plan and rides a broadcast."""
-    from kgc.graph import bgp_query
+    from kgc.graph import sparql_query
 
-    out = bgp_query(
+    out = sparql_query(
         _toy_kg(spark),
-        [
-            ("?d", "mentions", "?p"),
-            ("?p", "@type", "Person"),
-            ("?p", "name", "?pname"),
-        ],
+        "SELECT * WHERE { ?d mentions ?p . ?p a Person . ?p name ?pname }",
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
+    qe = out._jdf.queryExecution()
+    # the seed leg is the hinted left side of the first join
+    assert "leftHint=(strategy=broadcast)" in qe.optimizedPlan().toString()
+    assert "BroadcastHashJoin" in qe.executedPlan().toString()
     rows = {(r["d"], r["pname"]) for r in out.collect()}
     assert rows == {("doc:1", "Alice"), ("doc:2", "Alice")}
 
@@ -649,14 +650,16 @@ def test_parse_sparql_union_minus_values():
 
 
 def test_sparql_matches_bgp(spark):
-    from kgc.graph import bgp_query, sparql_query
+    """A two-pattern join equals the same join done in Python."""
+    from kgc.graph import sparql_query
 
     kg = _kg(spark)
-    pats = [("?d", "mentions", "?e"), ("?e", "name", "?n")]
-    want = sorted(
-        (r.d, r.e, r.n)
-        for r in bgp_query(kg, pats, distinct=True).collect()
-    )
+    rows = [(r.subj, r.pred, r.obj) for r in kg.collect()]
+    want = sorted({
+        (d, e, n)
+        for d, p, e in rows if p == "mentions"
+        for e2, q, n in rows if q == "name" and e2 == e
+    })
     got = sorted(
         tuple(r)
         for r in sparql_query(
@@ -2583,7 +2586,10 @@ def test_parse_sparql_deep_nesting_is_value_error():
 def test_sparql_benchmark_shapes_plan_pin(spark):
     """The five query-benchmark shapes keep their join plans: Join,
     Union and Aggregate node counts of each optimized logical plan over
-    _kg, as measured before WHERE groups became an algebra tree."""
+    _kg, as measured before WHERE groups became an algebra tree, and the
+    number of broadcast-hinted joins (two-constant pattern legs, VALUES
+    tables, MINUS keys), as measured before the pattern leaf's
+    broadcast threshold became a constant."""
     import re
 
     from kgc.graph import sparql_aggregate, sparql_query
@@ -2591,22 +2597,22 @@ def test_sparql_benchmark_shapes_plan_pin(spark):
     shapes = {
         "bgp": ("""SELECT DISTINCT ?d ?p ?pl WHERE {
                 ?d mentions ?p . ?p "@type" Person .
-                ?d locations ?pl . ?pl "@type" Place }""", (3, 0, 1)),
+                ?d locations ?pl . ?pl "@type" Place }""", (3, 0, 1, 2)),
         "algebra": ("""SELECT DISTINCT ?d ?p ?t WHERE {
                 { ?d mentions ?p } UNION { ?d locations ?p }
                 ?p "@type" ?t .
                 VALUES ?t { Person Place }
-                MINUS { ?d mentions ent:1 } }""", (4, 1, 3)),
+                MINUS { ?d mentions ent:1 } }""", (4, 1, 3, 3)),
         "scalar": ("""SELECT DISTINCT ?e ?tag WHERE {
                 ?e "@type" ?t . ?e name ?n .
                 FILTER (?t IN ("Person", "Place") && CONTAINS(?n, "1"))
                 BIND (IF(STRLEN(?n) > 8, "long", "short") AS ?tag) }""",
-                   (1, 0, 1)),
+                   (1, 0, 1, 0)),
         "path": ("""SELECT DISTINCT ?d ?c WHERE { ?d mentions/a/subClassOf+ ?c }""",
-                 (2, 0, 1)),
+                 (2, 0, 1, 0)),
         "agg": ("""SELECT ?t (COUNT(DISTINCT ?d) AS ?nd) WHERE {
                 ?d mentions ?e . ?e "@type" ?t }
-              GROUP BY ?t HAVING (?nd > 10)""", (1, 0, 1)),
+              GROUP BY ?t HAVING (?nd > 10)""", (1, 0, 1, 0)),
     }
     kg = _kg(spark)
     for shape, (text, want) in shapes.items():
@@ -2614,7 +2620,7 @@ def test_sparql_benchmark_shapes_plan_pin(spark):
         plan = fn(kg, text)._jdf.queryExecution().optimizedPlan().toString()
         got = tuple(
             len(re.findall(rf"^[\s:+\-|]*{node}\b", plan, re.M))
-            for node in ("Join", "Union", "Aggregate")
+            for node in ("Join", "Union", "Aggregate", r"Join\b.*strategy=broadcast")
         )
         assert got == want, (shape, got, plan)
 
@@ -2770,6 +2776,9 @@ def test_sparql_operators_tokenize_without_whitespace():
     for tight, spaced in [
         ("?y>1", "?y > 1"), ("?y<=2", "?y <= 2"),
         ("?y!=?z", "?y != ?z"), ("?a>-1", "?a > -1"),
+        ("?y>1&&?z<2", "?y > 1 && ?z < 2"),
+        ("?y<=2&&?z>1", "?y <= 2 && ?z > 1"),
+        ("?y<2||?z>1", "?y < 2 || ?z > 1"),
     ]:
         assert where(tight) == where(spaced)
     assert where("?y>1")[1] == ("filter", ("cmp", ("var", "y"), ">", ("num", "1")))
@@ -2777,6 +2786,9 @@ def test_sparql_operators_tokenize_without_whitespace():
         "!bound(?v) !(p|q) <http://x.org/a=b> p|q"
     ) == ["!bound", "(", "?v", ")", "!", "(", "p|q", ")",
           "<http://x.org/a=b>", "p|q"]
+    assert _SPARQL_TOKEN.findall("?s <http://x/?a=1&b=2> ?o") == [
+        "?s", "<http://x/?a=1&b=2>", "?o"
+    ]
 
 
 def test_sparql_values_and_describe_tables_are_local(spark):
