@@ -24,7 +24,7 @@ from kgc.functions import COMMON_TYPES
 
 # Alias dictionary tuned to the testdata vocabulary (deterministic
 # stand-in for the reference's LLM entity surfacing; FIXTURES.md §2).
-from kgc.synth import TESTDATA_ALIASES as ALIAS_ROWS
+from kgc.synth import TESTDATA_ALIASES as ALIAS_ROWS, testdata_alias_df
 
 _ALIAS_SQL_VALUES = ", ".join(
     f"('{a}', '{e}', '{t}', {w})" for a, e, t, w in ALIAS_ROWS
@@ -38,11 +38,6 @@ _TOKS = r"regexp_extract_all(lower(text), '[^\W_]+')"
 
 # score formula must match kgc.link.link_exact
 _SCORE = "weight * (1.0 + 0.1 * (n_toks - 1))"
-
-def _alias_df(spark: SparkSession):
-    return spark.createDataFrame(
-        ALIAS_ROWS, "alias string, entity_id string, entity_type string, weight double"
-    )
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -243,7 +238,7 @@ def q_mentions(spark, sf_dir):
     from kgc.mentions import detect_mentions_ngram
 
     d = _docs(spark, sf_dir).select("doc_id", F.col("text").alias("seg_text"))
-    out = detect_mentions_ngram(d, _alias_df(spark), id_cols=("doc_id",), max_n=2)
+    out = detect_mentions_ngram(d, testdata_alias_df(spark), id_cols=("doc_id",), max_n=2)
     return out.select(
         "doc_id",
         F.col("tok_begin").cast("bigint").alias("tok_begin"),
@@ -258,11 +253,11 @@ def q_link_topk(spark, sf_dir):
     from kgc.mentions import detect_mentions_ngram
 
     d = _docs(spark, sf_dir).select("doc_id", F.col("text").alias("seg_text"))
-    m = detect_mentions_ngram(d, _alias_df(spark), id_cols=("doc_id",), max_n=2)
+    m = detect_mentions_ngram(d, testdata_alias_df(spark), id_cols=("doc_id",), max_n=2)
     m = m.drop("entity_id", "entity_type", "weight").withColumn(
         "surface", F.col("alias")
     )
-    linked = link_exact(m, _alias_df(spark), mention_key=("doc_id", "tok_begin", "n_toks"))
+    linked = link_exact(m, testdata_alias_df(spark), mention_key=("doc_id", "tok_begin", "n_toks"))
     return linked.select(
         "doc_id",
         F.col("tok_begin").cast("bigint").alias("tok_begin"),
@@ -306,7 +301,7 @@ def q_streaming_triples(spark, sf_dir):
         _stage_stream_dir(sf_dir, "documents")
     )
     linked = stream_entity_link(
-        src.select("doc_id", F.col("text").alias("seg_text")), _alias_df(spark)
+        src.select("doc_id", F.col("text").alias("seg_text")), testdata_alias_df(spark)
     )
     drained = run_available_now(
         linked, "kgc_streaming_triples", output_mode="complete"
@@ -373,12 +368,12 @@ def _linked_entities(spark, sf_dir):
     from kgc.mentions import detect_mentions_ngram
 
     d = _docs(spark, sf_dir).select("doc_id", F.col("text").alias("seg_text"))
-    m = detect_mentions_ngram(d, _alias_df(spark), id_cols=("doc_id",), max_n=2)
+    m = detect_mentions_ngram(d, testdata_alias_df(spark), id_cols=("doc_id",), max_n=2)
     m = m.drop("entity_id", "entity_type", "weight").withColumn(
         "surface", F.col("alias")
     )
     linked = link_exact(
-        m, _alias_df(spark), mention_key=("doc_id", "tok_begin", "n_toks")
+        m, testdata_alias_df(spark), mention_key=("doc_id", "tok_begin", "n_toks")
     )
     return linked.select("doc_id", "entity_id")
 
@@ -1593,7 +1588,7 @@ def q_pipeline_triples(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     stages = pipeline.run(
-        spark, docs, alias_df=_alias_df(spark), max_tokens=200
+        spark, docs, alias_df=testdata_alias_df(spark), max_tokens=200
     )
     return stages["triples"]
 
@@ -1616,7 +1611,7 @@ def q_pipeline_triples_sql(spark, sf_dir):
         # doc_id+text only: parser dispatch is pinned to the text path
         # regardless of how `source` is named at a given SF
         _docs(spark, sf_dir).select("doc_id", "text"),
-        alias_df=_alias_df(spark),
+        alias_df=testdata_alias_df(spark),
         max_tokens=200,
     )
     return stages["triples"].select("subj", "pred", "obj", "obj_type")
@@ -1636,7 +1631,7 @@ def q_pipeline_interleaved(spark, sf_dir):
     stages = pipeline.run(
         spark,
         _interleaved_docs(spark, sf_dir),
-        alias_df=_alias_df(spark),
+        alias_df=testdata_alias_df(spark),
         max_tokens=_IL_MAX,
     )
     return stages["triples"].select("subj", "pred", "obj", "obj_type")
@@ -1653,7 +1648,7 @@ def q_link_fuzzy(spark, sf_dir):
     from kgc.link import link_fuzzy
 
     d = _docs(spark, sf_dir).select("doc_id")
-    a = _alias_df(spark)
+    a = testdata_alias_df(spark)
     surf = a.select(
         F.expr("substring(alias, 1, length(alias) - 1)").alias("surface")
     ).distinct()
@@ -1682,7 +1677,7 @@ def q_pipeline_interleaved_media(spark, sf_dir):
 
     docs = _interleaved_docs(spark, sf_dir)
     stages = pipeline.run(
-        spark, docs, alias_df=_alias_df(spark), max_tokens=_IL_MAX
+        spark, docs, alias_df=testdata_alias_df(spark), max_tokens=_IL_MAX
     )
     media = media_triples(decode_media(media_table_from_spans(docs)))
     return (
@@ -1928,7 +1923,7 @@ def q_jsonld_render(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     stages = pipeline.run(
-        spark, docs, alias_df=_alias_df(spark), max_tokens=200
+        spark, docs, alias_df=testdata_alias_df(spark), max_tokens=200
     )
     # doc_triples (doc-scoped dedup): each rendered document is
     # self-contained — entity nodes repeat per referencing doc

@@ -37,7 +37,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kgc.canon import SMALL_GRAPH_THRESHOLD, collect_if_small, local_frame
+from kgc.canon import SMALL_GRAPH_THRESHOLD, collect_if_small
+from kgc.session import local_frame
 
 DEFAULT_SCALE = 10**12
 
@@ -199,7 +200,7 @@ def transitive_closure(
       * at most ``small_graph_threshold`` distinct edges: the probe job
         that counts them brings them to the driver, a depth-capped BFS
         from every source closes them, and the pairs come back as one
-        Arrow-built frame (:func:`kgc.canon.local_frame`) — no per-round
+        Arrow-built frame (:func:`kgc.session.local_frame`) — no per-round
         Spark jobs.  A BFS that would
         relax more than ``DRIVER_PAIR_FACTOR`` × threshold edges gives
         up and the relation takes the distributed route instead.

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kgc.pdf import PdfUnsupportedError, extract_images, png_defilter
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_ref", T.StringType()),
@@ -123,46 +125,6 @@ def decode_wav_py(payload: bytes) -> dict:
     }
 
 
-def _png_defilter(raw: bytes, width: int, height: int, bpp: int) -> bytearray:
-    """Undo PNG scanline filters 0-4 (None/Sub/Up/Average/Paeth)."""
-    stride = width * bpp
-    out = bytearray()
-    pos = 0
-    prev = bytearray(stride)
-    for _ in range(height):
-        if pos >= len(raw):
-            raise MediaDecodeError("PNG: truncated image data")
-        ftype = raw[pos]
-        line = bytearray(raw[pos + 1 : pos + 1 + stride])
-        if len(line) < stride:
-            raise MediaDecodeError("PNG: short scanline")
-        pos += 1 + stride
-        if ftype == 1:  # Sub
-            for i in range(bpp, stride):
-                line[i] = (line[i] + line[i - bpp]) & 0xFF
-        elif ftype == 2:  # Up
-            for i in range(stride):
-                line[i] = (line[i] + prev[i]) & 0xFF
-        elif ftype == 3:  # Average
-            for i in range(stride):
-                a = line[i - bpp] if i >= bpp else 0
-                line[i] = (line[i] + ((a + prev[i]) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            for i in range(stride):
-                a = line[i - bpp] if i >= bpp else 0
-                b = prev[i]
-                c = prev[i - bpp] if i >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                line[i] = (line[i] + pr) & 0xFF
-        elif ftype != 0:
-            raise MediaDecodeError(f"PNG: unknown filter type {ftype}")
-        out += line
-        prev = line
-    return out
-
-
 _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # color type → samples/pixel
 
 
@@ -205,7 +167,10 @@ def decode_png_py(payload: bytes) -> dict:
     except zlib.error as e:
         raise MediaDecodeError(f"PNG: bad IDAT: {e}") from e
     bpp = _PNG_CHANNELS[color_type]
-    px = _png_defilter(raw, width, height, bpp)
+    try:
+        px = png_defilter(raw, width * bpp, bpp, rows=height)
+    except PdfUnsupportedError as e:
+        raise MediaDecodeError(f"PNG: {e}") from e
     return {
         "features": _pixel_features(px, bpp),
         "width": width,
@@ -563,6 +528,11 @@ def decode_mp4_header_py(payload: bytes) -> dict:
     }
 
 
+# what decoders raise on damaged bytes (a TypeError is a bug: it stays loud)
+_DATA_ERRORS = (struct.error, wave.Error, zlib.error, EOFError, ValueError,
+                RuntimeError, LookupError, ArithmeticError)
+
+
 def decode_payload_py(payload: bytes) -> dict:
     """Magic-byte dispatch to the stdlib decoders.
 
@@ -573,21 +543,30 @@ def decode_payload_py(payload: bytes) -> dict:
     formats are recognized and named in the error so quarantine rows
     say exactly which cluster-image dependency would handle them (the
     round-3 strict mode raised NotImplementedError here for
-    everything)."""
+    everything).  Any decoder failure on damaged bytes leaves as a
+    ``MediaDecodeError`` naming the format: a quarantine row, never a
+    failed task."""
     p = payload or b""
     if p[:8] == b"\x89PNG\r\n\x1a\n":
-        return decode_png_py(p)
-    if p[:4] == b"RIFF" and p[8:12] == b"WAVE":
-        return decode_wav_py(p)
-    if p[:3] == b"\xff\xd8\xff":
-        return decode_jpeg_header_py(p)
-    if p[:6] in (b"GIF87a", b"GIF89a"):
-        return decode_gif_py(p)
-    if p[:3] == b"ID3" or p[:2] in (b"\xff\xfb", b"\xff\xf3", b"\xff\xf2"):
-        return decode_mp3_header_py(p)
-    if p[4:8] == b"ftyp":
-        return decode_mp4_header_py(p)
-    raise MediaDecodeError("unrecognized media payload")
+        fmt, decode = "PNG", decode_png_py
+    elif p[:4] == b"RIFF" and p[8:12] == b"WAVE":
+        fmt, decode = "WAV", decode_wav_py
+    elif p[:3] == b"\xff\xd8\xff":
+        fmt, decode = "JPEG", decode_jpeg_header_py
+    elif p[:6] in (b"GIF87a", b"GIF89a"):
+        fmt, decode = "GIF", decode_gif_py
+    elif p[:3] == b"ID3" or p[:2] in (b"\xff\xfb", b"\xff\xf3", b"\xff\xf2"):
+        fmt, decode = "MP3", decode_mp3_header_py
+    elif p[4:8] == b"ftyp":
+        fmt, decode = "MP4", decode_mp4_header_py
+    else:
+        raise MediaDecodeError("unrecognized media payload")
+    try:
+        return decode(p)
+    except MediaDecodeError:
+        raise
+    except _DATA_ERRORS as e:
+        raise MediaDecodeError(f"{fmt}: {type(e).__name__}: {e}") from e
 
 
 def media_table_from_spans(docs: DataFrame) -> DataFrame:
@@ -660,11 +639,9 @@ def pdf_image_media_rows_py(doc_id: str, pdf_bytes: bytes) -> list[dict]:
     other codecs/shapes carry their bytes and quarantine as
     unrecognized.  Ref: the reference's parser is text-only
     (internal/parser/pdf.go:16-58) — this closes the image side."""
-    from kgc.pdf import PdfUnsupportedError, extract_images
-
     try:
         images = extract_images(pdf_bytes)
-    except (PdfUnsupportedError, Exception):
+    except Exception:
         return []
     rows = []
     for im in images:

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kgc.session import local_frame
 from kgc.textops import with_language
 
 
@@ -149,23 +150,10 @@ def stratified_sample(
             F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("|" + salt))), 1, 8
         ).alias("sample_key"),
     )
-    # pure-JVM literal relation (NOT createDataFrame: that routes
-    # through a Python-RDD scan, re-spawning a Python worker on every
-    # materialization of the broadcast side)
-    rate_structs = [
-        F.struct(F.lit(lg).alias("lang"), F.lit(_hex_threshold(r)).alias("thr"))
-        for lg, r in sorted(rates.items())
-    ] or [
-        F.struct(
-            F.lit(None).cast("string").alias("lang"),
-            F.lit(None).cast("string").alias("thr"),
-        )
-    ]
-    rates_df = (
-        df.sparkSession.range(1)
-        .select(F.explode(F.array(*rate_structs)).alias("x"))
-        .select("x.*")
-        .filter(F.col("lang").isNotNull())
+    rates_df = local_frame(
+        df.sparkSession,
+        [(lg, _hex_threshold(r)) for lg, r in sorted(rates.items())],
+        "lang string, thr string",
     )
     return (
         keyed.join(F.broadcast(rates_df), "lang", "left")

@@ -42,7 +42,7 @@ import hashlib
 import re
 import zlib
 
-__all__ = ["PdfUnsupportedError", "extract_pages", "extract_images"]
+__all__ = ["PdfUnsupportedError", "extract_pages", "extract_images", "png_defilter"]
 
 
 class PdfUnsupportedError(ValueError):
@@ -223,26 +223,60 @@ class _Lexer:
         return d[start : self.pos].decode("latin-1")
 
 
-def _png_unpredict(data: bytes, predictor: int, columns: int) -> bytes:
-    if predictor < 10:
-        return data
-    row_len = columns + 1
+def png_defilter(data: bytes, stride: int, bpp: int, rows: int | None = None) -> bytearray:
+    """Undo PNG scanline filters 0-4 (None/Sub/Up/Average/Paeth) over
+    rows of a filter-type byte + ``stride`` bytes, ``bpp`` bytes per
+    pixel; for the PDF predictors and kgc.media's PNG decoder.
+    ``rows=None`` takes every whole row; ``rows`` that ``data`` cannot
+    fill are refused, so a damaged header never sizes an allocation."""
+    if rows is None:
+        rows = len(data) // (stride + 1)
+    elif len(data) < rows * (stride + 1):
+        raise PdfUnsupportedError("truncated PNG-filtered data")
     out = bytearray()
-    prev = bytearray(columns)
-    for r in range(0, len(data) - row_len + 1, row_len):
-        ft = data[r]
-        row = bytearray(data[r + 1 : r + row_len])
-        if ft == 2:  # Up — the only filter xpdf/word writers emit here
-            for i in range(columns):
-                row[i] = (row[i] + prev[i]) & 0xFF
-        elif ft == 1:  # Sub
-            for i in range(1, columns):
-                row[i] = (row[i] + row[i - 1]) & 0xFF
-        elif ft != 0:
-            raise PdfUnsupportedError(f"PNG predictor filter {ft}")
-        out += row
-        prev = row
-    return bytes(out)
+    if not rows:
+        return out
+    prev = bytearray(stride)
+    for r in range(rows):
+        pos = r * (stride + 1)
+        ftype = data[pos]
+        line = bytearray(data[pos + 1 : pos + 1 + stride])
+        if ftype == 1:  # Sub
+            for i in range(bpp, stride):
+                line[i] = (line[i] + line[i - bpp]) & 0xFF
+        elif ftype == 2:  # Up
+            for i in range(stride):
+                line[i] = (line[i] + prev[i]) & 0xFF
+        elif ftype == 3:  # Average
+            for i in range(stride):
+                a = line[i - bpp] if i >= bpp else 0
+                line[i] = (line[i] + ((a + prev[i]) >> 1)) & 0xFF
+        elif ftype == 4:  # Paeth
+            for i in range(stride):
+                a = line[i - bpp] if i >= bpp else 0
+                b = prev[i]
+                c = prev[i - bpp] if i >= bpp else 0
+                p = a + b - c
+                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
+                line[i] = (line[i] + pr) & 0xFF
+        elif ftype != 0:
+            raise PdfUnsupportedError(f"unknown PNG filter type {ftype}")
+        out += line
+        prev = line
+    return out
+
+
+def _unpredict(data: bytes, predictor: int, colors: int, bits: int, columns: int) -> bytes:
+    """Undo a /DecodeParms /Predictor: 1 is none, 10-15 are PNG filters
+    over rows of ceil(colors × bits × columns / 8) bytes; 2 (TIFF) and
+    other values are refused."""
+    if predictor == 1:
+        return data
+    if predictor < 10 or min(colors, bits, columns) < 1:
+        raise PdfUnsupportedError(f"predictor {predictor} ({colors}x{bits}x{columns})")
+    stride = (colors * bits * columns + 7) // 8
+    return bytes(png_defilter(data, stride, max(1, colors * bits // 8)))
 
 
 def _lzw_decode(data: bytes, early: int = 1) -> bytes:
@@ -939,10 +973,12 @@ class _Doc:
             else:  # DCT/JPX/CCITT/JBIG2 are image codecs, never text
                 raise PdfUnsupportedError(f"filter {f}")
             if isinstance(p, dict) and p.get("Predictor"):
-                out = _png_unpredict(
-                    out,
-                    int(self.resolve(p["Predictor"])),
-                    int(self.resolve(p.get("Columns", 1))),
+                def parm(key, default):
+                    return int(self.resolve(p.get(key, default)))
+
+                out = _unpredict(
+                    out, parm("Predictor", 1), parm("Colors", 1),
+                    parm("BitsPerComponent", 8), parm("Columns", 1),
                 )
         return out, None
 

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kgc.dedup import cosine, hyperplane_signature
+from kgc.session import local_frame
 
 
 def topk_bruteforce(
@@ -265,12 +266,7 @@ def train_centroids(
     ]
     spark = corpus.sparkSession
     for _ in range(iters):
-        cdf = F.broadcast(
-            spark.createDataFrame(
-                [(cid, vec) for cid, vec in cents], "cid int, centroid array<double>"
-            )
-        )
-        assigned = _assign(corpus, cdf, c_id, c_vec)
+        assigned = _assign(corpus, _centroid_frame(spark, cents), c_id, c_vec)
         means = (
             assigned.select("cid", F.posexplode(F.col("cv")).alias("dim", "x"))
             .groupBy("cid", "dim")
@@ -283,6 +279,13 @@ def train_centroids(
         # empty clusters keep their previous centroid
         cents = [(cid, by_cid.get(cid, vec)) for cid, vec in cents]
     return cents
+
+
+def _centroid_frame(spark, centroids: list[tuple[int, list[float]]]) -> DataFrame:
+    """The (cid, centroid) broadcast side of every IVF join."""
+    return F.broadcast(
+        local_frame(spark, centroids, "cid int, centroid array<double>")
+    )
 
 
 def _assign(corpus: DataFrame, cdf: DataFrame, c_id: str, c_vec: str) -> DataFrame:
@@ -361,12 +364,7 @@ def topk_ivf(
     broadcast-side, and nothing pairwise ever leaves a cell — the same
     blocked-before-pairwise posture as minhash/simhash dedup.
     """
-    spark = corpus.sparkSession
-    cdf = F.broadcast(
-        spark.createDataFrame(
-            [(cid, vec) for cid, vec in centroids], "cid int, centroid array<double>"
-        )
-    )
+    cdf = _centroid_frame(corpus.sparkSession, centroids)
     lists = _assign(corpus, cdf, c_id, c_vec)
     q = queries.select(F.col(q_id).alias("query_id"), F.col(q_vec).alias("qv"))
     qscored = q.crossJoin(cdf).select(
@@ -423,12 +421,7 @@ def semantic_dedup(
     to 6 dp before the threshold so the verdict is stable across
     partial-agg orders (and replayable by the DuckDB oracle).
     """
-    spark = corpus.sparkSession
-    cdf = F.broadcast(
-        spark.createDataFrame(
-            [(cid, vec) for cid, vec in centroids], "cid int, centroid array<double>"
-        )
-    )
+    cdf = _centroid_frame(corpus.sparkSession, centroids)
     # stage the per-vector norm as an attribute: the in-cell pair scan
     # is the hot loop, and computing cosine() inline there re-derives
     # both norms per PAIR (3× the interpreted-HOF work; 7.8 s → ~3 s at

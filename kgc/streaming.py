@@ -36,6 +36,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.utils import AnalysisException
 
+from kgc.session import local_frame
+
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -412,6 +414,4 @@ def stream_incremental_neardup(
     except AnalysisException:
         # zero micro-batches fired (empty source): no parquet exists to
         # infer a schema from — return the empty frame explicitly.
-        return spark.createDataFrame(
-            [], "new_id bigint, corpus_id bigint, jaccard double"
-        )
+        return local_frame(spark, [], "new_id bigint, corpus_id bigint, jaccard double")

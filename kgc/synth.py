@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgc.session import local_frame
+
 WORDS = [
     "jurisprudence", "loi", "droit", "cour", "juge", "arret", "principe",
     "regle", "texte", "article", "question", "application", "decision",
@@ -195,12 +197,12 @@ def synthetic_kg(spark: SparkSession, scale: int) -> DataFrame:
     )
 
 
+_ALIAS_DDL = "alias string, entity_id string, entity_type string, weight double"
+
+
 def alias_dict_df(spark: SparkSession) -> DataFrame:
     """The broadcast alias dictionary (FIXTURES.md §2 shape)."""
-    return spark.createDataFrame(
-        [(a, e, t, w) for a, e, t, w in ALIASES],
-        "alias string, entity_id string, entity_type string, weight double",
-    )
+    return local_frame(spark, ALIASES, _ALIAS_DDL)
 
 
 # Alias dictionary tuned to the driver's testdata vocabulary
@@ -225,7 +227,4 @@ TESTDATA_ALIASES = [
 
 
 def testdata_alias_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        TESTDATA_ALIASES,
-        "alias string, entity_id string, entity_type string, weight double",
-    )
+    return local_frame(spark, TESTDATA_ALIASES, _ALIAS_DDL)

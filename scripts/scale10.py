@@ -54,6 +54,7 @@ def main() -> None:
     from kgc import pipeline
     from kgc.dedup import minhash_near_duplicates
     from kgc.session import get_spark
+    from kgc.synth import testdata_alias_df
 
     spark = get_spark(
         "kgc-scale10", master=f"local[{cpus}]", shuffle_partitions=max(cpus, 8)
@@ -102,12 +103,12 @@ def main() -> None:
     # dataflow (same protocol + rationale as bench.py)
     jobs: dict[str, object] = {}
     jobs["pipeline_sf01"] = pipeline.run(
-        spark, docs, alias_df=em._alias_df(spark), max_tokens=200
+        spark, docs, alias_df=testdata_alias_df(spark), max_tokens=200
     )["triples"]
     jobs["pipeline_x10"] = pipeline.run(
         spark,
         spark.read.parquet(f"{stage}/pipe10"),
-        alias_df=em._alias_df(spark),
+        alias_df=testdata_alias_df(spark),
         max_tokens=200,
     )["triples"]
     jobs["minhash_sf01"] = minhash_near_duplicates(

@@ -1,8 +1,12 @@
 """Driver-contract invariants: every queries() entry is either
-oracle-checked or on the documented rows-only allowlist, and the
-oracle dict never carries dead keys."""
+oracle-checked or on the documented rows-only allowlist, the oracle
+dict never carries dead keys, and kgc builds driver-row relations one
+way only."""
 
 from __future__ import annotations
+
+import ast
+from pathlib import Path
 
 import __spark_entry__ as E
 
@@ -44,3 +48,27 @@ def test_rows_only_set_stays_small():
     # the correctness story is hash-checks; rows-only must stay the
     # justified exception, not a growth path
     assert len(ROWS_ONLY) <= 5
+
+
+def test_only_local_frame_calls_create_dataframe():
+    """kgc.session.local_frame is the one way kgc builds a relation from
+    driver rows (an Arrow LocalTableScan): no other kgc code calls
+    ``createDataFrame``, whose row-list form plans a Scan ExistingRDD."""
+
+    def calls(tree):
+        return [
+            n for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "createDataFrame"
+        ]
+
+    n_calls, callers = 0, set()
+    for path in sorted((Path(__file__).parents[1] / "kgc").glob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        n_calls += len(calls(tree))
+        callers |= {
+            (path.name, fn.name) for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and calls(fn)
+        }
+    assert (n_calls, callers) == (1, {("session.py", "local_frame")}), callers

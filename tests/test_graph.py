@@ -2795,8 +2795,8 @@ def test_sparql_values_and_describe_tables_are_local(spark):
     """A VALUES table and DESCRIBE's constants are driver-built local
     relations (LocalTableScan, no Python-worker job), and an UNDEF cell
     is NULL."""
-    from kgc.canon import local_frame
     from kgc.graph import sparql_describe, sparql_query
+    from kgc.session import local_frame
 
     # the KG itself a local relation, so any ExistingRDD is the query's
     kg = local_frame(

@@ -526,12 +526,30 @@ def test_resolve_dictionary_drops_punctuation_only_aliases(spark):
     assert got == [("x two", "X2", "Thing", 1.0, "X2")]
 
 
+def _leaf_frame(df, columns):
+    """The leaf relation of ``df``'s analyzed plan whose columns are
+    ``columns``, as a DataFrame of its own."""
+    from pyspark.sql import DataFrame
+
+    spark = df.sparkSession
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if list(leaf.schema().fieldNames()) == columns:
+            dataset = spark._jvm.org.apache.spark.sql.classic.Dataset
+            return DataFrame(dataset.ofRows(spark._jsparkSession, leaf), spark)
+    raise AssertionError(f"no leaf with columns {columns}")
+
+
 def test_driver_built_frames_are_local_scans(spark):
-    """The resolved dictionary and CC's small-graph output are built on
-    the driver as Arrow tables (kgc.canon.local_frame): their plans read
-    a LocalTableScan, not a Scan ExistingRDD whose every read runs a
-    Python-worker job.  An empty dictionary and an all-NULL weight
-    column keep the DDL schema."""
+    """Every relation kgc builds from driver rows is an Arrow table
+    (kgc.session.local_frame): its plan reads a LocalTableScan, not a
+    Scan ExistingRDD whose every read runs a Python-worker job, and it
+    has the rows and schema of a row-list frame of the same data.  An
+    empty dictionary and an all-NULL weight column keep the DDL schema."""
+    from kgc import mix, simsearch, vocab
+    from kgc.session import local_frame
+
     ddl = "alias string, entity_id string, entity_type string, weight double"
     adf = spark.createDataFrame(
         [("Ada", "E2", "Person", None), ("Ada", "E1", "Person", None),
@@ -542,9 +560,47 @@ def test_driver_built_frames_are_local_scans(spark):
     cc = canon.connected_components(
         spark.createDataFrame([("b", "a"), ("b", "c")], "src string, dst string")
     )
+    ns = vocab.SCHEMA_NS
+    type_rows = [(ns + l, l, c, (ns + s) if s else None) for l, c, s in vocab._TYPES]
+    parent = {r[0]: r[3] for r in type_rows}
+    ancestor_rows = []
+    for t in parent:
+        a = t
+        while a is not None:
+            ancestor_rows.append((t, a))
+            a = parent[a]
+    types, props = vocab.builtin_vocab(spark)
+    docs = local_frame(
+        spark, [("d1", "the cat sat on the mat"), ("d2", "le chat est sur le tapis")],
+        "doc_id string, text string",
+    )
+    cents = [(0, [1.0, 0.0]), (1, [0.5, 0.25])]
+    built = [
+        (synth.alias_dict_df(spark), synth.ALIASES, ddl),
+        (synth.testdata_alias_df(spark), synth.TESTDATA_ALIASES, ddl),
+        (types, type_rows,
+         "type_id string, label string, comment string, subclass_of string"),
+        (props,
+         [(ns + l, l, c, ns + d, ns + r, [ns + d]) for l, c, d, r in vocab._PROPERTIES],
+         "prop_id string, label string, comment string, domain string, "
+         "range string, domains array<string>"),
+        (vocab.type_ancestors(types), ancestor_rows, "type_id string, ancestor_id string"),
+        (simsearch._centroid_frame(spark, cents), cents, "cid int, centroid array<double>"),
+        (_leaf_frame(mix.stratified_sample(docs, rates={"en": 0.5, "fr": 0.25}),
+                     ["lang", "thr"]),
+         [("en", mix._hex_threshold(0.5)), ("fr", mix._hex_threshold(0.25))],
+         "lang string, thr string"),
+    ]
+    for df, rows, rows_ddl in built:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan and "LocalTableScan" in plan, plan
+        want = spark.createDataFrame(rows, rows_ddl)
+        assert df.schema == want.schema
+        assert sorted(map(repr, df.collect())) == sorted(map(repr, want.collect()))
     for df in (resolved, cc):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "ExistingRDD" not in plan and "LocalTableScan" in plan, plan
+    assert len(ancestor_rows) == 21
     assert sorted(tuple(r) for r in resolved.collect()) == [
         ("ada", "E1", "Person", None, "E1"), ("ada l", "E2", "Person", None, "E1"),
     ]
@@ -575,9 +631,10 @@ def _plan_nodes(plan, caches=1):
 
 
 def test_pipeline_run_submits_one_job_and_links_by_lookup(spark):
-    """pipeline.run with no store runs one Spark job itself (the
-    dictionary collect) and plans the linked stage as one broadcast
-    join over the mentions: no window, no union, no shuffle."""
+    """pipeline.run with no store and the default dictionary runs no
+    Spark job itself (the dictionary is a local frame, so its collect
+    reads the driver-side table) and plans the linked stage as one
+    broadcast join over the mentions: no window, no union, no shuffle."""
     import uuid
 
     docs = synth.generate_documents(spark, n_docs=20)
@@ -588,7 +645,7 @@ def test_pipeline_run_submits_one_job_and_links_by_lookup(spark):
         stages = pipeline.run(spark, docs, max_tokens=50)
     finally:
         sc._jsc.clearJobGroup()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
     nodes = _plan_nodes(stages["linked"]._jdf.queryExecution().executedPlan())
     assert "BroadcastHashJoin" in nodes, nodes
     assert not {"Window", "Union", "Exchange"} & set(nodes), nodes

@@ -742,6 +742,47 @@ class TestPdfImages:
         assert jpg["codec"] == "DCTDecode"
         assert jpg["payload"].startswith(b"\xff\xd8\xff")  # ready JPEG bytes
 
+    def test_extract_images_undoes_rgb_png_predictors(self):
+        """/Predictor 15 over an RGB image: rows of 1 + 3·Columns bytes,
+        Sub/Average/Paeth reaching back one 3-byte pixel.  /Predictor 2
+        (TIFF) is refused, so that image is skipped."""
+        import zlib
+
+        from kgc.pdf import extract_images
+
+        w, h, bpp = 4, 3, 3
+        samples = bytes((37 * i + 11) % 256 for i in range(w * h * bpp))
+        stride = w * bpp
+        prev, filtered = bytes(stride), b""
+        for y, ftype in enumerate((1, 3, 4)):  # Sub, Average, Paeth
+            line = samples[y * stride : (y + 1) * stride]
+            row = bytearray([ftype])
+            for i, x in enumerate(line):
+                a = line[i - bpp] if i >= bpp else 0
+                b, c = prev[i], prev[i - bpp] if i >= bpp else 0
+                p = a + b - c
+                paeth = min((abs(p - a), 0, a), (abs(p - b), 1, b), (abs(p - c), 2, c))[2]
+                row.append((x - {1: a, 3: (a + b) >> 1, 4: paeth}[ftype]) & 0xFF)
+            filtered += bytes(row)
+            prev = line
+        flate = zlib.compress(filtered)
+        objs = [
+            b"1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n",
+            b"2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n",
+            b"3 0 obj << /Type /Page /Parent 2 0 R /MediaBox [0 0 100 100] "
+            b"/Resources << /XObject << /Im1 4 0 R /Im2 5 0 R >> >> >> endobj\n",
+        ] + [
+            b"%d 0 obj << /Subtype /Image /Width 4 /Height 3 /BitsPerComponent 8 "
+            b"/ColorSpace /DeviceRGB /Filter /FlateDecode /DecodeParms "
+            b"<< /Predictor %d /Colors 3 /Columns 4 >> /Length %d >>\nstream\n"
+            % (num, predictor, len(flate)) + flate + b"\nendstream endobj\n"
+            for num, predictor in ((4, 15), (5, 2))
+        ]
+        pdf = b"%PDF-1.4\n" + b"".join(objs) + b"trailer << /Root 1 0 R >>\n%%EOF"
+        ims = extract_images(pdf)
+        assert [(i["name"], i["codec"]) for i in ims] == [("Im1", "raw")]
+        assert ims[0]["payload"] == samples
+
     def test_extract_images_not_pdf(self):
         import pytest as _pytest
 

@@ -972,3 +972,85 @@ class TestResolvedLinkDifferential:
         old, new = self._both(spark, TESTDATA_ALIASES, texts)
         assert new == old and len(new) == 13
         assert {r[3]: (r[4], r[7]) for r in new}["query"] == ("E12", "E12")
+
+
+def _media_seeds() -> dict[str, bytes]:
+    """One small valid payload per format decode_payload_py recognizes."""
+    import io
+    import struct
+    import wave
+    import zlib
+
+    def chunk(t, data):
+        return (struct.pack(">I", len(data)) + t + data
+                + struct.pack(">I", zlib.crc32(t + data) & 0xFFFFFFFF))
+
+    # 3×4 RGB, one row per filter type: None, Sub, Average, Paeth
+    rows = [bytes([f]) + bytes((7 * f + i) % 256 for i in range(9)) for f in (0, 1, 3, 4)]
+    png = (b"\x89PNG\r\n\x1a\n"
+           + chunk(b"IHDR", struct.pack(">IIBBBBB", 3, 4, 8, 2, 0, 0, 0))
+           + chunk(b"IDAT", zlib.compress(b"".join(rows))) + chunk(b"IEND", b""))
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(2)
+        w.setsampwidth(2)
+        w.setframerate(8000)
+        w.writeframes(b"".join(struct.pack("<hh", 97 * i, -31 * i) for i in range(24)))
+    gif = (b"GIF89a" + struct.pack("<HH", 2, 2) + b"\x80\x00\x00"
+           + b"\x00\x00\x00\xff\xff\xff"
+           + b"\x21\xf9\x04\x00" + struct.pack("<H", 50) + b"\x00\x00"
+           + b"\x2c" + struct.pack("<HHHH", 0, 0, 2, 2) + b"\x00\x02\x03\x0c\x10\x05\x00"
+           + b"\x3b")
+    jpeg = (b"\xff\xd8\xff\xe0" + struct.pack(">H", 4) + b"JF"
+            + b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, 3, 4, 1)
+            + b"\x01\x11\x00\xff\xd9")
+    mp3 = b"ID3\x04\x00\x00\x00\x00\x00\x00\xff\xfb\x90\x00" + bytes(60)
+    mvhd = (struct.pack(">I", 28) + b"mvhd" + bytes(12)
+            + struct.pack(">II", 1000, 2500))
+    tkhd = (struct.pack(">I", 92) + b"tkhd" + bytes(76)
+            + struct.pack(">II", 640 << 16, 360 << 16))
+    trak = struct.pack(">I", 8 + len(tkhd)) + b"trak" + tkhd
+    mp4 = (struct.pack(">I", 16) + b"ftypisom" + bytes(4)
+           + struct.pack(">I", 8 + len(mvhd) + len(trak)) + b"moov" + mvhd + trak)
+    return {"png": png, "wav": buf.getvalue(), "gif": gif, "jpeg": jpeg,
+            "mp3": mp3, "mp4": mp4}
+
+
+_MEDIA_SEEDS = _media_seeds()
+
+
+@st.composite
+def _damaged_media(draw):
+    """A seed payload after 1-4 truncations, byte overwrites and
+    splices, or random bytes behind one of the seeds' magic prefixes."""
+    seed = _MEDIA_SEEDS[draw(st.sampled_from(sorted(_MEDIA_SEEDS)))]
+    if draw(st.booleans()):
+        return seed[:12] + draw(st.binary(max_size=80))
+    b = bytearray(seed)
+    for _ in range(draw(st.integers(1, 4))):
+        i = draw(st.integers(0, len(b)))
+        op = draw(st.sampled_from(["truncate", "overwrite", "splice"]))
+        if op == "truncate":
+            del b[i:]
+        elif op == "overwrite" and i < len(b):
+            b[i] = draw(st.integers(0, 255))
+        else:
+            b[i : i + draw(st.integers(0, 8))] = draw(st.binary(max_size=8))
+    return bytes(b)
+
+
+class TestMediaPoison:
+    """The strict media decode maps every damaged payload to a
+    MediaDecodeError (a quarantine row in decode_media), never to any
+    other exception that would fail the mapInPandas task."""
+
+    @given(st.one_of(_damaged_media(), st.binary(max_size=200)))
+    @settings(max_examples=600, deadline=None, derandomize=True)
+    def test_damaged_payload_decodes_or_quarantines(self, payload):
+        from kgc.media import MediaDecodeError, decode_payload_py
+
+        try:
+            out = decode_payload_py(payload)
+        except MediaDecodeError:
+            return
+        assert isinstance(out, dict)
