@@ -130,13 +130,13 @@ def q_content_roundtrip(spark, sf_dir):
 
 
 def q_token_counts(spark, sf_dir):
-    from kgc.textops import token_count_bpe, token_count_ws
-    from kgc.tokenizer import split_tokens
+    from kgc.textops import token_count_bpe
+    from kgc.tokenizer import count_tokens, split_tokens
 
     d = _docs(spark, sf_dir)
     return d.select(
         "doc_id",
-        token_count_ws("text").cast("bigint").alias("n_ws"),
+        count_tokens("text").cast("bigint").alias("n_ws"),
         F.size(split_tokens("text")).cast("bigint").alias("n_t2"),
         token_count_bpe("text").cast("bigint").alias("n_bpe"),
     )
@@ -2705,6 +2705,61 @@ def _sql_stopword_ratio(lang: str) -> str:
     )
 
 
+_LANG_RATIOS = ", ".join(
+    f"{_sql_stopword_ratio(lang)} AS r_{lang}" for lang in _STOPWORD_SQL
+)
+_LANG_PICK = " ".join(
+    f"WHEN r_{lang} = best AND r_{lang} > 0 THEN '{lang}'" for lang in _STOPWORD_SQL
+)
+
+
+def _text_qa_sql() -> dict[str, str]:
+    """DuckDB twins of kgc.textops' staged text-QA operators over the
+    ``documents`` table (doc_id, text): with_fingerprint (fp),
+    with_language (lang_pred) and with_quality_features."""
+    q: dict[str, str] = {}
+    q["fingerprint"] = f"""
+SELECT doc_id,
+  array_to_string(list_slice(list_sort(list_transform({_sql_shingles('text')}, s -> md5(s))), 1, 4), '') AS fp
+FROM documents"""
+
+    q["langid"] = f"""
+WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents),
+r AS (SELECT doc_id, text, {_LANG_RATIOS} FROM t),
+b AS (SELECT *, greatest(r_en, r_fr, r_de, r_es) AS best FROM r)
+SELECT doc_id,
+  CASE WHEN length(text) > 0
+        AND len(regexp_extract_all(text, '[\\x{{4e00}}-\\x{{9fff}}]'))::DOUBLE
+            / length(text)::DOUBLE > 0.3 THEN 'zh'
+       ELSE CASE {_LANG_PICK} ELSE 'und' END END AS lang_pred
+FROM b"""
+
+    q["quality"] = f"""
+WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents),
+f AS (SELECT doc_id,
+  length(text) AS n_chars,
+  len(toks) AS n_tokens,
+  CASE WHEN length(text) > 0
+       THEN len(regexp_extract_all(text, '[^\\w\\s]'))::DOUBLE / length(text)::DOUBLE
+       ELSE 0.0 END AS punct_ratio,
+  CASE WHEN len(toks) > 0
+       THEN len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE
+       ELSE 0.0 END AS uniq_token_ratio,
+  {_sql_stopword_ratio('en')} AS stopword_ratio_en
+FROM t)
+SELECT doc_id,
+  round(0.25 * least(n_tokens::DOUBLE / 100.0, 1.0)
+      + 0.25 * (1.0 - least(punct_ratio * 5, 1.0))
+      + 0.25 * uniq_token_ratio
+      + 0.25 * least(stopword_ratio_en * 4, 1.0), 6) AS score,
+  n_tokens::BIGINT AS n_tokens,
+  round(punct_ratio, 6) AS punct_ratio,
+  round(uniq_token_ratio, 6) AS uniq_token_ratio,
+  round(stopword_ratio_en, 6) AS stopword_ratio_en
+FROM f"""
+    return q
+
+
 def oracle_sql() -> dict[str, str]:
     type_chain = " ".join(
         f"WHEN contains(resp, '{t}') THEN '{t}'" for t in COMMON_TYPES
@@ -3619,62 +3674,18 @@ SELECT p.a, p.b,
              ELSE 0.0 END, 6) AS jaccard
 FROM pairs p JOIN sh x ON p.a = x.doc_id JOIN sh y ON p.b = y.doc_id"""
 
-    q["fingerprint"] = f"""
-SELECT doc_id,
-  array_to_string(list_slice(list_sort(list_transform({_sql_shingles('text')}, s -> md5(s))), 1, 4), '') AS fp
-FROM documents"""
-
-    ratios = ", ".join(
-        f"{_sql_stopword_ratio(lang)} AS r_{lang}" for lang in _STOPWORD_SQL
-    )
-    lang_pick = " ".join(
-        f"WHEN r_{lang} = best AND r_{lang} > 0 THEN '{lang}'" for lang in _STOPWORD_SQL
-    )
-    q["langid"] = f"""
-WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents),
-r AS (SELECT doc_id, text, {ratios} FROM t),
-b AS (SELECT *, greatest(r_en, r_fr, r_de, r_es) AS best FROM r)
-SELECT doc_id,
-  CASE WHEN length(text) > 0
-        AND len(regexp_extract_all(text, '[\\x{{4e00}}-\\x{{9fff}}]'))::DOUBLE
-            / length(text)::DOUBLE > 0.3 THEN 'zh'
-       ELSE CASE {lang_pick} ELSE 'und' END END AS lang_pred
-FROM b"""
-
-    q["quality"] = f"""
-WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents),
-f AS (SELECT doc_id,
-  length(text) AS n_chars,
-  len(toks) AS n_tokens,
-  CASE WHEN length(text) > 0
-       THEN len(regexp_extract_all(text, '[^\\w\\s]'))::DOUBLE / length(text)::DOUBLE
-       ELSE 0.0 END AS punct_ratio,
-  CASE WHEN len(toks) > 0
-       THEN len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE
-       ELSE 0.0 END AS uniq_token_ratio,
-  {_sql_stopword_ratio('en')} AS stopword_ratio_en
-FROM t)
-SELECT doc_id,
-  round(0.25 * least(n_tokens::DOUBLE / 100.0, 1.0)
-      + 0.25 * (1.0 - least(punct_ratio * 5, 1.0))
-      + 0.25 * uniq_token_ratio
-      + 0.25 * least(stopword_ratio_en * 4, 1.0), 6) AS score,
-  n_tokens::BIGINT AS n_tokens,
-  round(punct_ratio, 6) AS punct_ratio,
-  round(uniq_token_ratio, 6) AS uniq_token_ratio,
-  round(stopword_ratio_en, 6) AS stopword_ratio_en
-FROM f"""
+    q.update(_text_qa_sql())
 
     # shared lang CASE (identical to langid's pick, operating on the
     # ratio columns of a CTE that also keeps toks/text)
     lang_case = f"""CASE WHEN length(text) > 0
         AND len(regexp_extract_all(text, '[\\x{{4e00}}-\\x{{9fff}}]'))::DOUBLE
             / length(text)::DOUBLE > 0.3 THEN 'zh'
-       ELSE CASE {lang_pick} ELSE 'und' END END"""
+       ELSE CASE {_LANG_PICK} ELSE 'und' END END"""
 
     q["corpus_mix"] = f"""
 WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents),
-r AS (SELECT doc_id, text, toks, {ratios} FROM t),
+r AS (SELECT doc_id, text, toks, {_LANG_RATIOS} FROM t),
 b AS (SELECT *, greatest(r_en, r_fr, r_de, r_es) AS best FROM r),
 l AS (SELECT
   {lang_case} AS lang,
@@ -3702,7 +3713,7 @@ FROM cell c JOIN lt USING (lang) CROSS JOIN tot"""
 
     q["stratified_sample"] = f"""
 WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents),
-r AS (SELECT doc_id, text, toks, {ratios} FROM t),
+r AS (SELECT doc_id, text, toks, {_LANG_RATIOS} FROM t),
 b AS (SELECT *, greatest(r_en, r_fr, r_de, r_es) AS best FROM r),
 k AS (SELECT doc_id,
              {lang_case} AS lang,

@@ -1,10 +1,9 @@
 """G8 — resumable stage checkpoints.
 
-On a production cluster each pipeline stage lands as an Iceberg table
-append; a resume reads the last committed snapshot and anti-joins
-already-processed doc_ids.  This module implements the same contract
-over plain parquet + a JSON manifest so the architecture (stage write →
-manifest commit → resume-by-anti-join) is real and tested locally; the
+On a production cluster each pipeline stage lands as an Iceberg table;
+a resume reads the last committed snapshot.  This module implements the
+same contract over plain parquet + a JSON manifest so the architecture
+(stage write → manifest commit → resume) is real and tested locally; the
 Iceberg catalog is a configuration swap (`writeTo(...).append()`), not a
 code change.
 
@@ -18,9 +17,11 @@ deleting the old manifest, so a crash in that window kept a stale
 manifest while the previously committed data was already gone;
 ADVICE r1.)
 
-Manifests carry an optional input ``fingerprint``; ``is_valid`` lets a
-resume detect that the stage was computed from different input and must
-be invalidated instead of silently served stale (ADVICE r1).
+Resume rule: a stage is reread when its manifest ``fingerprint`` (in
+kgc.pipeline.run: the documents, the token limits and, from ``mentions``
+on, the dictionary hash) matches the current inputs, and recomputed
+otherwise — ``is_valid`` is that check, so a stage computed from
+different input is never silently served stale (ADVICE r1).
 """
 
 from __future__ import annotations
@@ -83,22 +84,6 @@ class StageStore:
 
     def manifest(self, stage: str) -> dict:
         return json.loads(self._manifest(stage).read_text())
-
-    def resume_anti_join(
-        self, spark: SparkSession, input_df: DataFrame, stage: str, key: str = "doc_id"
-    ) -> tuple[DataFrame, DataFrame | None]:
-        """(still-to-process rows, already-committed stage output).
-
-        The anti-join is on the stage's distinct keys — at 10^12 docs
-        this is a shuffle on doc_id, but only at restart time; steady
-        state never pays it.
-        """
-        if not self.exists(stage):
-            return input_df, None
-        done = self.read(spark, stage)
-        done_keys = done.select(key).distinct()
-        todo = input_df.join(done_keys, key, "left_anti")
-        return todo, done
 
     def invalidate(self, stage: str) -> None:
         if self._manifest(stage).exists():

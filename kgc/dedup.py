@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kgc.link import jaccard, lsh_band_keys, token_shingles
+from kgc.link import jaccard, lsh_band_keys
 
 
 # ------------------------------------------------------------- exact ------
@@ -436,43 +436,6 @@ def near_duplicate_groups(
     return _pair_groups(pairs, "doc_id")
 
 
-def incremental_near_duplicates(
-    new_df: DataFrame,
-    corpus_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    k: int = 16,
-    bands: int = 4,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Ingest-time dedup: near-dup pairs (new_id, corpus_id, jaccard)
-    between a NEW batch and an EXISTING corpus — the incremental path.
-
-    At 10^12 docs you never re-self-join the whole corpus per ingest:
-    the corpus's LSH band table is a precomputed INDEX (materialize
-    :func:`kgc.link.lsh_band_keys` once, bucketed/partitioned by
-    (band, key)); each arriving batch computes signatures only for its
-    own docs and probes the index with an equi-join.  When the batch is
-    small relative to the corpus — the normal case — AQE broadcasts the
-    batch side, so the corpus index is never shuffled at all.  Same
-    hash family and banding as :func:`minhash_near_duplicates`
-    (md5-replayable in the DuckDB oracle); candidates are verified with
-    exact shingle Jaccard like the batch operator.
-    """
-    sh_corpus, banded_corpus = build_band_index(
-        corpus_df, text_col=text_col, id_col=id_col,
-        shingle_n=shingle_n, k=k, bands=bands,
-    )
-    out = probe_band_index(
-        new_df, (sh_corpus, banded_corpus), text_col=text_col, id_col=id_col,
-        shingle_n=shingle_n, k=k, bands=bands, threshold=threshold,
-    )
-    # released by kgc.pipeline.release (probe pinned sh_new already)
-    out._kgc_pinned = out._kgc_pinned + [sh_corpus, banded_corpus]
-    return out
-
-
 def _staged_shingles(
     d: DataFrame, text_col: str, id_col: str, out_id: str, shingle_n: int
 ) -> DataFrame:
@@ -497,8 +460,10 @@ def build_band_index(
     k: int = 16,
     bands: int = 4,
 ) -> tuple:
-    """The corpus LSH INDEX: (sh_corpus, banded_corpus), both persisted.
+    """The corpus LSH INDEX: (sh_corpus, banded_corpus), both persisted
+    — the ingest-time (incremental) half of near-dup detection.
 
+    At 10^12 docs you never re-self-join the whole corpus per ingest.
     Build once per corpus snapshot, probe many times
     (:func:`probe_band_index`) — per-ingest batches and streaming
     micro-batches never recompute or re-shuffle the corpus side.  In
@@ -529,7 +494,10 @@ def probe_band_index(
     docs → (new_id, corpus_id, jaccard) near-dup pairs.  shingle_n / k /
     bands must match the index build.  The new side is small relative to
     the corpus in the normal ingest case, so AQE broadcasts it and the
-    index is never shuffled."""
+    index is never shuffled.  Same hash family and banding as
+    :func:`minhash_near_duplicates` (md5-replayable in the DuckDB
+    oracle); candidates are verified with exact shingle Jaccard like the
+    batch operator."""
     sh_corpus, banded_corpus = index
     sh_new = _staged_shingles(new_df, text_col, id_col, "new_id", shingle_n)
     banded_new = lsh_band_keys(sh_new, "sh", ["new_id"], k, bands)
@@ -862,7 +830,7 @@ def incremental_duplicated_ngrams(
     EXISTING corpus — the incremental twin of
     :func:`duplicated_ngram_stats`, same output schema.
 
-    Scale posture mirrors ``incremental_near_duplicates``: the corpus
+    Scale posture mirrors :func:`build_band_index`: the corpus
     side reduces to its distinct gram-hash INDEX (one aggregation that
     in production is a materialized table maintained across ingests —
     the corpus is never re-self-joined), and each new batch probes it

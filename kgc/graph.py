@@ -50,7 +50,6 @@ def pagerank(
     iters: int = 8,
     scale: int = DEFAULT_SCALE,
     damping: tuple[int, int] = (85, 100),
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Directed edge list → (node, rank) after ``iters`` rounds.
 
@@ -127,8 +126,8 @@ def pagerank(
                     + F.expr(f"{num} * coalesce(s, 0L) DIV {den}")
                 ).alias("rank"),
             )
-        if checkpoint:
-            ranks = ranks.localCheckpoint(eager=False)
+        # cut the lineage each round: the plan stays one round deep
+        ranks = ranks.localCheckpoint(eager=False)
 
     out = ranks.select(F.col("u").alias("node"), F.col("rank").cast("long"))
     # released by kgc.pipeline.release (propagate the input's pins,

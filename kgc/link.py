@@ -67,14 +67,6 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     )
 
 
-def token_shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (for document-level dedup).
-
-    Column-API convenience; on large scans prefer a two-step select
-    with ``shingles_from_tokens`` (see its docstring)."""
-    return shingles_from_tokens(norm_tokens(col), n)
-
-
 MINHASH_DOC_TYPE = T.StructType(
     [
         T.StructField("sh", T.ArrayType(T.StringType())),

@@ -210,24 +210,14 @@ def _trie_for(bc) -> list:
     return root
 
 
-def make_mention_udf(aliases: list[str], spark=None):
+def make_mention_udf(aliases: list[str]):
     """Arrow-batched scanner.  The alias dictionary ships as a REAL
-    ``sc.broadcast`` (not closure capture): the UDF closure carries only
-    the broadcast handle, so a million-alias dictionary serializes once
-    per worker instead of riding every task batch, and the trie is built
-    lazily once per Python worker process (_trie_for cache).  Falls back
-    to closure capture only when no SparkSession is active (plain-Python
-    unit tests of the scan kernel)."""
-    spark = spark or SparkSession.getActiveSession()
-    if spark is None:
-        root = build_alias_trie(aliases)
-
-        @F.pandas_udf(MENTION_TYPE)
-        def scan(texts: pd.Series) -> pd.Series:
-            return texts.map(lambda t: scan_text_trie(t, root))
-
-        return scan
-
+    ``sc.broadcast`` of the active session (not closure capture): the
+    UDF closure carries only the broadcast handle, so a million-alias
+    dictionary serializes once per worker instead of riding every task
+    batch, and the trie is built lazily once per Python worker process
+    (_trie_for cache)."""
+    spark = SparkSession.active()
     bc = spark.sparkContext.broadcast(list(aliases))
 
     @F.pandas_udf(MENTION_TYPE)
@@ -242,13 +232,11 @@ def detect_mentions(
     df: DataFrame,
     aliases: list[str],
     text_col: str = "seg_text",
-    explode: bool = True,
 ) -> DataFrame:
-    """segments → mentions. Narrow map; exploded form keeps lineage cols."""
+    """segments → mentions, one row per mention.  Narrow map; keeps the
+    lineage columns (every input column but ``text_col``)."""
     udf = make_mention_udf(aliases)
     out = df.withColumn("mentions", udf(F.col(text_col)))
-    if not explode:
-        return out
     keep = [c for c in df.columns if c != text_col]
     # explode_outer + filter: keep the pandas UDF out of JVM predicates
     # (InferFiltersFromGenerate pitfall — see kgc/segment.py).

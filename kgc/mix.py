@@ -132,8 +132,8 @@ def stratified_sample(
 
     The per-language threshold rides a BROADCAST dim table rather than
     an inlined CASE: filtering on ``sample_key < CASE lang ...`` lets
-    predicate pushdown substitute the whole detect_language expression
-    tree into the Filter (the tokenizer regex lands ~40× in one
+    predicate pushdown substitute the whole with_language expression
+    tree (its staged ratio projections collapsed) into the Filter (the tokenizer regex lands ~40× in one
     non-codegen condition — measured 2.5s vs langid's 0.2s at sf0.1);
     with the join, the compare references attributes from both sides,
     cannot be pushed below it, and language detection runs exactly once

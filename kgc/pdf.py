@@ -194,6 +194,8 @@ class _Lexer:
     def _hex_string(self) -> bytes:
         self.pos += 1
         end = self.data.find(b">", self.pos)
+        if end < 0:
+            raise PdfUnsupportedError("unterminated hex string")
         hexs = re.sub(rb"[^0-9A-Fa-f]", b"", self.data[self.pos : end])
         self.pos = end + 1
         if len(hexs) % 2:
@@ -1250,6 +1252,8 @@ def _page_text(doc: _Doc, page: dict) -> str:
             break
         try:
             tok = lex.parse()
+        except PdfUnsupportedError:  # damaged stream: quarantine the doc
+            raise
         except Exception:
             break
         if isinstance(tok, Name) or not isinstance(tok, str):

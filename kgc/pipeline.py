@@ -7,8 +7,10 @@ re-expressed as one staged Spark job — SURVEY §3 lifecycle).
          → triples (+ @context table) → metrics
 
 Each stage optionally lands in a StageStore (parquet + manifest locally,
-Iceberg on a cluster) so a rerun resumes from the last committed stage
-via anti-join on doc_id (G8).
+Iceberg on a cluster) so a rerun resumes (G8): a stage is reread when its
+manifest fingerprint (documents, token limits and, from ``mentions`` on,
+the dictionary hash) matches the current inputs, and recomputed
+otherwise.
 
 Run: ``python -m kgc.pipeline --sf /root/testdata/sf0.001``
 """
@@ -193,8 +195,7 @@ def run(
 
     ``bucket_stages=N`` (needs a store) materializes every stage as a
     table bucketed+sorted on doc_id into N buckets: downstream doc_id
-    joins between stages — and the restart anti-join — run with no
-    shuffle exchange, the Iceberg bucket-partitioning posture
+    joins between stages run with no shuffle exchange, the Iceberg bucket-partitioning posture
     (StageStore.write_bucketed).
     """
     # one driver-side collect of the dictionary; detect_mentions ships

@@ -154,19 +154,16 @@ def segment_documents(
     df: DataFrame,
     spans_col: str = "spans",
     max_tokens: int = DEFAULT_MAX_TOKENS,
-    explode: bool = True,
 ) -> DataFrame:
     """documents(doc_id, spans) → segments(doc_id, seg_id, seg_text, ...).
 
-    Narrow transformation (no shuffle): one Arrow batch per task.  The
-    exploded form carries n_segs so downstream stages never need a
+    Narrow transformation (no shuffle): one Arrow batch per task.  Each
+    segment row carries n_segs so downstream stages never need a
     groupBy to recover 'segment {index}/{total}' metadata
     (converter.go:527-531).
     """
     udf = make_segment_udf(max_tokens)
     out = df.withColumn("segments", udf(F.col(spans_col)))
-    if not explode:
-        return out
     out = out.withColumn("n_segs", F.size("segments"))
     # explode_outer, not explode: InferFiltersFromGenerate would inline the
     # pandas UDF into a JVM-side `size(pack_spans(..)) > 0` predicate, which

@@ -356,9 +356,8 @@ def stream_incremental_neardup(
     """Streaming ingest-time near-dup: micro-batches of NEW documents
     probe the prebuilt static corpus LSH band index
     (kgc.dedup.build_band_index / probe_band_index) — the streaming twin
-    of :func:`kgc.dedup.incremental_near_duplicates`, hash-identical to
-    it on a finite drain (the driver checks it against the SAME DuckDB
-    oracle).
+    of one batch probe, hash-identical to it on a finite drain (the
+    driver checks it against the SAME DuckDB oracle).
 
     Shape: ``foreachBatch`` — the probe is a multi-join (band equi-join
     + exact-Jaccard verify over two persisted sides) that the streaming

@@ -2,9 +2,19 @@
 
 Beyond the reference's own operators (SURVEY §2), a 100 TB corpus
 pipeline needs per-document text QA: language ID, quality scoring,
-token counting, fingerprinting.  All pure Catalyst — whole-stage
-codegen, no Python, and every operator has an ANSI-SQL twin for the
-DuckDB oracle (md5-based hashing so both engines agree bit-for-bit).
+token counting, fingerprinting.  All pure Catalyst — no Python, and
+every operator has an ANSI-SQL twin for the DuckDB oracle (md5-based
+hashing so both engines agree bit-for-bit).
+
+The per-document operators are staged (``with_language``,
+``with_quality_features``, ``with_fingerprint``): each takes a
+DataFrame and materialises the token array as an ATTRIBUTE of an
+intermediate projection that later expressions read.  Their
+higher-order functions run interpreted (no whole-stage codegen, no
+common-subexpression elimination), so an expression that inlined the
+regex tokenizer per reference would re-run it once per lexicon,
+feature or shingle — measured 3.2 s vs 0.4 s (language ID) and 4.8 s
+vs 0.25 s (fingerprint) at sf0.1/local[32].
 """
 
 from __future__ import annotations
@@ -39,19 +49,6 @@ def norm_tokens(col: Column | str) -> Column:
     return F.regexp_extract_all(F.lower(c), F.lit(r"(?U)[^\W_]+"), 0)
 
 
-def token_count_ws(col: Column | str) -> Column:
-    """T1 whitespace token count (tokenizer.go:8-10 semantics).
-
-    Runs of non-whitespace (= Go strings.Fields count): Spark's trim
-    strips only ASCII spaces, so the old split(trim(x)) form kept a
-    phantom '' token on trailing '\\n'/'\\t'.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(
-        F.size(F.regexp_extract_all(c, F.lit(r"(?U)\S+"), 0)), F.lit(0)
-    ).cast("int")
-
-
 def token_count_bpe(col: Column | str) -> Column:
     """BPE-ish subword proxy count: letter runs + digit runs + each
     non-space symbol run counted separately (the GPT-2 pre-tokenizer
@@ -62,48 +59,12 @@ def token_count_bpe(col: Column | str) -> Column:
     ).cast("int")
 
 
-def stopword_ratio(col: Column | str, lang: str) -> Column:
-    """Fraction of tokens in the language's stopword set."""
-    toks = norm_tokens(col)
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    n = F.size(toks)
-    return F.when(n > 0, hits.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
-def detect_language(col: Column | str) -> Column:
-    """Heuristic language ID: argmax of stopword-hit ratio over the four
-    Latin-script lexicons; CJK-dominant text → 'zh'; no signal → 'und'.
-
-    One narrow projection; at 100 TB this is exactly the map-side
-    filter you want before routing documents to per-language stages.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    cjk = F.size(F.regexp_extract_all(c, F.lit(r"[\x{4e00}-\x{9fff}]"), 0))
-    total_chars = F.length(c)
-    scores = [(lang, stopword_ratio(c, lang)) for lang in STOPWORDS]
-    best = F.greatest(*[s for _, s in scores])
-    pick = F.coalesce(
-        *[F.when((s == best) & (s > 0), F.lit(lang)) for lang, s in scores],
-        F.lit("und"),
-    )
-    return F.when(
-        (total_chars > 0) & (cjk.cast("double") / total_chars.cast("double") > 0.3),
-        F.lit("zh"),
-    ).otherwise(pick)
-
-
 def with_language(df, text_col: str = "text", out_col: str = "lang"):
-    """Staged language ID: ``df`` plus an ``out_col`` column, same
-    result as ``detect_language(text_col)`` inline.
+    """Heuristic language ID: ``df`` plus an ``out_col`` column — the
+    argmax of the stopword-hit ratio over the four Latin-script
+    lexicons; CJK-dominant text → 'zh'; no signal → 'und'.
 
-    Use THIS on hot paths.  The single-Column form builds one
-    expression tree that re-inlines the tokenizer per lexicon
-    reference; higher-order functions keep the projection out of
-    whole-stage codegen, and the interpreted evaluator has no
-    common-subexpression elimination, so the regex tokenizer runs
-    ~20× per row (measured 3.2s vs 0.4s at sf0.1/local[32]).  Here
-    tokens and each lexicon ratio are materialised as ATTRIBUTES of
+    Tokens and each lexicon ratio are materialised as ATTRIBUTES of
     intermediate projections — each referenced multiple times
     downstream, which is exactly the condition under which Catalyst's
     CollapseProject leaves the stages alone — so the tokenizer runs
@@ -138,50 +99,16 @@ def with_language(df, text_col: str = "text", out_col: str = "lang"):
     )
 
 
-def quality_features(col: Column | str) -> dict[str, Column]:
-    """Quality-scoring feature family (length / punct / stopword /
-    repetition ratios) — compose into filters per corpus policy."""
-    c = F.col(col) if isinstance(col, str) else col
-    toks = norm_tokens(c)
-    n_toks = F.size(toks)
-    n_chars = F.length(c)
-    n_punct = F.size(F.regexp_extract_all(c, F.lit(r"[^\w\s]"), 0))
-    n_upper = F.size(F.regexp_extract_all(c, F.lit(r"[A-Z]"), 0))
-    uniq_ratio = F.when(
-        n_toks > 0,
-        F.size(F.array_distinct(toks)).cast("double") / n_toks.cast("double"),
-    ).otherwise(F.lit(0.0))
-    mean_tok_len = F.when(
-        n_toks > 0,
-        F.aggregate(toks, F.lit(0).cast("double"), lambda a, t: a + F.length(t))
-        / n_toks.cast("double"),
-    ).otherwise(F.lit(0.0))
-    return {
-        "n_chars": n_chars.cast("int"),
-        "n_tokens": n_toks.cast("int"),
-        "punct_ratio": F.when(
-            n_chars > 0, n_punct.cast("double") / n_chars.cast("double")
-        ).otherwise(F.lit(0.0)),
-        "upper_ratio": F.when(
-            n_chars > 0, n_upper.cast("double") / n_chars.cast("double")
-        ).otherwise(F.lit(0.0)),
-        "uniq_token_ratio": uniq_ratio,
-        "mean_token_len": mean_tok_len,
-        "stopword_ratio_en": stopword_ratio(c, "en"),
-    }
-
-
 def with_quality_features(df, text_col: str = "text"):
-    """Staged :func:`quality_features` + :func:`quality_score`: ``df``
-    plus RAW feature columns (n_chars, n_tokens, punct_ratio,
-    upper_ratio, uniq_token_ratio, mean_token_len, stopword_ratio_en —
-    unrounded; round at the output edge) and ``score`` (rounded 6, the
-    same blend as quality_score).
+    """Quality scoring: ``df`` plus RAW feature columns (n_chars,
+    n_tokens, punct_ratio, upper_ratio, uniq_token_ratio,
+    mean_token_len, stopword_ratio_en — unrounded; round at the output
+    edge) and ``score``, a [0,1] linear blend rounded to 6 places so
+    the DuckDB twin matches bit-for-bit: well-formed prose scores high,
+    word soup / symbol soup low.
 
-    Use THIS on hot paths: the Column forms re-inline the tokenizer
-    regex per feature reference (~8× per row) under interpreted HOF
-    eval; here tokens ride once as an attribute, then the score reads
-    the feature ATTRIBUTES.
+    Tokens ride once as an attribute, then the score reads the feature
+    ATTRIBUTES.
     """
     c = F.col(text_col)
     t = df.withColumn("_q_toks", norm_tokens(c))
@@ -229,36 +156,6 @@ def with_quality_features(df, text_col: str = "text"):
     return r.withColumn("score", F.round(raw, 6)).drop("_q_toks")
 
 
-def quality_score(col: Column | str) -> Column:
-    """Scalar [0,1] quality score: well-formed prose scores high, word
-    soup / symbol soup scores low.  Deterministic linear blend, rounded
-    to 6 decimals so the DuckDB twin matches bit-for-bit."""
-    f = quality_features(col)
-    raw = (
-        F.lit(0.25) * F.least(f["n_tokens"].cast("double") / F.lit(100.0), F.lit(1.0))
-        + F.lit(0.25) * (F.lit(1.0) - F.least(f["punct_ratio"] * 5, F.lit(1.0)))
-        + F.lit(0.25) * f["uniq_token_ratio"]
-        + F.lit(0.25) * F.least(f["stopword_ratio_en"] * 4, F.lit(1.0))
-    )
-    return F.round(raw, 6)
-
-
-def fingerprint(col: Column | str, shingle_n: int = 3, k: int = 4) -> Column:
-    """Document fingerprint: bottom-k sketch over token-shingle md5s.
-
-    Sort the md5 hashes of all word n-gram shingles, concatenate the k
-    smallest — a compact, containment-stable document signature
-    (winnowing-family; bottom-k sketch of the shingle set).  Identical
-    text → identical fingerprint; engine-portable via md5.
-    """
-    from kgc.link import token_shingles
-
-    hashes = F.array_sort(
-        F.transform(token_shingles(col, shingle_n), lambda s: F.md5(s))
-    )
-    return F.array_join(F.slice(hashes, 1, k), "")
-
-
 def with_fingerprint(
     df,
     text_col: str = "text",
@@ -266,22 +163,25 @@ def with_fingerprint(
     shingle_n: int = 3,
     k: int = 4,
 ):
-    """Staged :func:`fingerprint`: ``df`` plus an ``out_col`` column.
+    """Document fingerprint: ``df`` plus an ``out_col`` column, the
+    bottom-k sketch over token-shingle md5s.
 
-    Use THIS on hot paths: the single-Column form inlines the tokenizer
-    into the shingle transform, whose gram lambda slices its input once
-    per gram — interpreted (HOFs are not codegen-able) and without
-    common-subexpression elimination that re-runs the regex O(n_tokens)
-    times per row (measured 4.8s vs 0.25s at sf0.1/local[32]).  Tokens
-    and shingles are materialised as attributes of intermediate
-    projections instead (the shingles_from_tokens contract).
+    Sort the md5 hashes of all word n-gram shingles, concatenate the k
+    smallest — a compact, containment-stable document signature
+    (winnowing-family).  Identical text → identical fingerprint;
+    engine-portable via md5; a document with no token has no shingle
+    and a NULL fingerprint.  Tokens and shingles are materialised as
+    attributes of intermediate projections (the shingles_from_tokens
+    contract): the gram lambda slices its input once per gram, so an
+    inlined tokenizer would re-run O(n_tokens) times per row.
     """
     from kgc.link import shingles_from_tokens
 
     t = df.withColumn("_fp_toks", norm_tokens(text_col))
     s = t.withColumn("_fp_sh", shingles_from_tokens(F.col("_fp_toks"), shingle_n))
     hashes = F.array_sort(F.transform(F.col("_fp_sh"), lambda x: F.md5(x)))
-    return s.withColumn(out_col, F.array_join(F.slice(hashes, 1, k), "")).drop(
+    fp = F.array_join(F.slice(hashes, 1, k), "")
+    return s.withColumn(out_col, F.when(F.size("_fp_sh") > 0, fp)).drop(
         "_fp_toks", "_fp_sh"
     )
 

@@ -1,7 +1,8 @@
 """Driver-contract invariants: every queries() entry is either
 oracle-checked or on the documented rows-only allowlist, the oracle
-dict never carries dead keys, and kgc builds driver-row relations one
-way only."""
+dict never carries dead keys, kgc builds driver-row relations one way
+only, and every public kgc function has a non-test caller or a
+documented reason to exist."""
 
 from __future__ import annotations
 
@@ -72,3 +73,52 @@ def test_only_local_frame_calls_create_dataframe():
             if isinstance(fn, ast.FunctionDef) and calls(fn)
         }
     assert (n_calls, callers) == (1, {("session.py", "local_frame")}), callers
+
+
+# public kgc functions that only tests call: a labelled twin a test
+# compares against, or the subject of a test that must keep its name
+TEST_ONLY = {
+    "split_tokens_py": "T2 golden twin of tokenizer.split_tokens",
+    "from_ntriples": "round-trip reference parser for triples.to_ntriples",
+    "pdf_media_table": "test_pdf_images_to_media_strict_decode",
+    "dup_line_fraction": "test_dup_line_fraction",
+    "topk_bruteforce_pandas": "test_pandas_ann_matches_catalyst",
+    "frame_sample": "test_media_pipeline",
+    "media_quarantine": "test_media_pipeline and two strict-decode tests",
+    "stream_documents": "test_stream_documents_matches_batch",
+    "kg_diff_stats": "test_graph's two kg_diff tests",
+    "release_vocab": "drops the schema.org memo in test_graph's vocab tests",
+}
+
+def test_no_test_only_library_surface():
+    """Every public top-level function in kgc/ (the fixture module
+    kgc/golden.py aside) is referenced from kgc/, __spark_entry__.py,
+    bench.py, scripts/ or kgbench/, or is on TEST_ONLY with a reason —
+    a second form that only tests call is dead weight, not a feature."""
+    root = Path(__file__).parents[1]
+    lib = [p for p in sorted((root / "kgc").glob("*.py")) if p.name != "golden.py"]
+    sources = lib + [root / "__spark_entry__.py", root / "bench.py"]
+    sources += sorted((root / "scripts").rglob("*.py"))
+    sources += sorted((root / "kgbench").rglob("*.py"))
+
+    public = {
+        fn.name: path.name
+        for path in lib
+        for fn in ast.parse(path.read_text(), str(path)).body
+        if isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_")
+    }
+    referenced = set()
+    for path in sources:
+        for n in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(n, ast.Name):
+                referenced.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                referenced.add(n.attr)
+            elif isinstance(n, ast.alias):
+                referenced.add(n.name.rsplit(".", 1)[-1])
+    unreferenced = set(public) - referenced
+    assert unreferenced == set(TEST_ONLY), (
+        "test-only library functions (delete, or allowlist with a reason): "
+        f"{sorted(f'{public[n]}:{n}' for n in unreferenced - set(TEST_ONLY))}; "
+        f"stale allowlist entries: {sorted(set(TEST_ONLY) - unreferenced)}"
+    )

@@ -189,7 +189,7 @@ def test_langid_french_english(spark):
         ],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r["l"] for r in df.select("doc_id", textops.detect_language("text").alias("l")).collect()}
+    out = {r["doc_id"]: r["l"] for r in textops.with_language(df, out_col="l").collect()}
     assert out[1] == "en" and out[2] == "fr" and out[3] == "de"
     assert out[4] == "zh" and out[5] == "und"
 
@@ -203,15 +203,15 @@ def test_quality_orders_prose_above_soup(spark):
         ],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r["q"] for r in df.select("doc_id", textops.quality_score("text").alias("q")).collect()}
+    out = {r["doc_id"]: r["score"] for r in textops.with_quality_features(df).collect()}
     assert out[1] > out[2] > out[3]
 
 
 def test_fingerprint_stable_and_distinct(spark, docs):
-    fp = docs.select("doc_id", textops.fingerprint("text").alias("fp"))
+    fp = textops.with_fingerprint(docs.select("doc_id", "text")).select("doc_id", "fp")
     n = fp.count()
     assert fp.select("fp").distinct().count() > n * 0.9
-    fp2 = docs.select("doc_id", textops.fingerprint("text").alias("fp"))
+    fp2 = textops.with_fingerprint(docs.select("doc_id", "text")).select("doc_id", "fp")
     assert fp.exceptAll(fp2).count() == 0
 
 

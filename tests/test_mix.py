@@ -169,45 +169,50 @@ def test_embedding_dedup_groups_transitive(spark):
 
 
 def test_staged_forms_match_column_forms(spark):
-    """The staged hot-path operators (with_language / with_fingerprint /
-    with_quality_features) must stay bit-identical to their Column-form
-    twins — the oracle SQL is derived from the Column-form semantics."""
-    from kgc.textops import (
-        detect_language,
-        fingerprint,
-        quality_score,
-        with_fingerprint,
-        with_language,
-        with_quality_features,
-    )
+    """The staged text operators (with_language / with_fingerprint /
+    with_quality_features) must stay bit-identical to their DuckDB
+    twins, the "langid" / "fingerprint" / "quality" SQL that the driver's
+    oracle suites hash-check at scale, on edge rows:
+    empty text, one token, stopwords only, symbol soup."""
+    import duckdb
 
-    df = _docs(
-        spark,
-        [
-            (1, PROSE_EN),
-            (2, PROSE_FR),
-            (3, ""),
-            (4, "word"),
-            (5, "der die das und in den von zu mit sich"),
-            (6, "!!! ??? ..." ),
-        ],
-    )
-    col_form = df.select(
+    import __spark_entry__ as E
+    from kgc.textops import with_fingerprint, with_language, with_quality_features
+
+    rows = [
+        (1, PROSE_EN),
+        (2, PROSE_FR),
+        (3, ""),
+        (4, "word"),
+        (5, "der die das und in den von zu mit sich"),
+        (6, "!!! ??? ..." ),
+    ]
+    with duckdb.connect() as con:
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+        twin = {
+            name: sorted(con.sql(sql).fetchall())
+            for name, sql in E._text_qa_sql().items()
+        }
+
+    df = _docs(spark, rows)
+    langs = with_language(df, out_col="lang_pred").select("doc_id", "lang_pred")
+    assert sorted(map(tuple, langs.collect())) == twin["langid"]
+    fps = with_fingerprint(df).select("doc_id", "fp")
+    assert sorted(map(tuple, fps.collect())) == twin["fingerprint"]
+    quality = with_quality_features(df).select(
         "doc_id",
-        detect_language("text").alias("lang"),
-        fingerprint("text").alias("fp"),
-        quality_score("text").alias("score"),
-    ).collect()
-    staged = (
-        with_quality_features(with_fingerprint(with_language(df)), "text")
-        .select("doc_id", "lang", "fp", "score")
-        .collect()
+        "score",
+        F.col("n_tokens").cast("bigint"),
+        F.round("punct_ratio", 6),
+        F.round("uniq_token_ratio", 6),
+        F.round("stopword_ratio_en", 6),
     )
-    assert sorted(map(tuple, col_form)) == sorted(map(tuple, staged))
+    assert sorted(map(tuple, quality.collect())) == twin["quality"]
 
 
 def test_incremental_dedup_probes_corpus_index(spark):
-    from kgc.dedup import incremental_near_duplicates
+    from kgc.dedup import build_band_index, probe_band_index
 
     base = (
         "alpha bravo charlie delta echo foxtrot golf hotel india juliet "
@@ -224,7 +229,8 @@ def test_incremental_dedup_probes_corpus_index(spark):
             (101, "fresh unique text with no counterpart in the corpus at all"),
         ],
     )
-    out = incremental_near_duplicates(new_batch, corpus, k=16, bands=4, threshold=0.5).collect()
+    index = build_band_index(corpus, k=16, bands=4)
+    out = probe_band_index(new_batch, index, k=16, bands=4, threshold=0.5).collect()
     assert [(r["new_id"], r["corpus_id"]) for r in out] == [(100, 1)]
     assert out[0]["jaccard"] >= 0.5
 

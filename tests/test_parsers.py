@@ -363,6 +363,47 @@ class TestPdfRobustness:
         assert [s["text"] for s in healthy["good_txt"]] == ["plain text line"]
 
 
+def test_unterminated_hex_string_quarantines(spark):
+    """A content stream ending in ``<41`` (a hex string with no closing
+    ``>``, one damaged byte) must raise PdfUnsupportedError and land in
+    the parse quarantine — the lexer used to jump back to offset 0 and
+    re-lex the stream forever."""
+    import signal
+
+    import pytest
+
+    from kgc.parsers import parse_documents
+    from kgc.pdf import PdfUnsupportedError, extract_pages
+    from kgc.pipeline import quarantine_table
+
+    class Hang(BaseException):
+        """Not an Exception: the content-stream loop swallows those."""
+
+    def timeout(signum, frame):
+        raise Hang("extract_pages did not return within 3 s")
+
+    pdf = _classic_pdf(b"BT /F1 12 Tf 72 720 Td <41")
+    old = signal.signal(signal.SIGALRM, timeout)
+    signal.alarm(3)
+    try:
+        with pytest.raises(PdfUnsupportedError, match="unterminated hex string"):
+            extract_pages(pdf)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
+
+    df = spark.createDataFrame(
+        [("d1", "", "damaged.pdf", bytearray(pdf))],
+        "doc_id string, text string, source string, payload binary")
+    docs = parse_documents(df, source_col="source", pdf_col="payload")
+    empty_segs = spark.createDataFrame(
+        [], "doc_id string, seg_id int, seg_text string, n_tokens int, ok boolean")
+    (row,) = quarantine_table(docs, empty_segs, 512).collect()
+    assert (row["doc_id"], row["stage"], row["reason"]) == (
+        "d1", "parse", "pdf_unsupported")
+    assert "unterminated hex string" in row["detail"]
+
+
 def _lzw_encode(data: bytes) -> bytes:
     """Test-only PDF LZW encoder, written against the decoder's
     pdfminer-parity width schedule: the decoder widens AFTER its table

@@ -469,7 +469,7 @@ def test_stream_incremental_neardup_equals_batch(spark, tmp_path):
     """The foreachBatch corpus-index probe, drained over 3 micro-batches,
     must equal the one-shot batch probe row-for-row — including a
     near-dup pair split across different micro-batches."""
-    from kgc.dedup import incremental_near_duplicates
+    from kgc.dedup import build_band_index, probe_band_index
 
     corpus = spark.createDataFrame(
         [(i, f"the quick brown fox jumps over lazy dog number {i} "
@@ -487,8 +487,8 @@ def test_stream_incremental_neardup_equals_batch(spark, tmp_path):
 
     expected = sorted(
         (r["new_id"], r["corpus_id"], r["jaccard"])
-        for r in incremental_near_duplicates(new, corpus, k=16, bands=4,
-                                             threshold=0.3).collect()
+        for r in probe_band_index(new, build_band_index(corpus, k=16, bands=4),
+                                  k=16, bands=4, threshold=0.3).collect()
     )
     assert expected, "fixture must produce near-dup pairs"
 
