@@ -356,7 +356,7 @@ def q_pagerank_entities(spark, sf_dir):
     from kgc.graph import comention_edges, pagerank
 
     edges = comention_edges(_linked_entities(spark, sf_dir))
-    return pagerank(edges, iters=8).select(
+    return pagerank(edges).select(
         F.col("node").alias("entity_id"), "rank"
     )
 
@@ -364,18 +364,7 @@ def q_pagerank_entities(spark, sf_dir):
 def _linked_entities(spark, sf_dir):
     """(doc_id, entity_id) top-1 links over the whole corpus — the
     shared edge source for pagerank_entities and entity_triangles."""
-    from kgc.link import link_exact
-    from kgc.mentions import detect_mentions_ngram
-
-    d = _docs(spark, sf_dir).select("doc_id", F.col("text").alias("seg_text"))
-    m = detect_mentions_ngram(d, testdata_alias_df(spark), id_cols=("doc_id",), max_n=2)
-    m = m.drop("entity_id", "entity_type", "weight").withColumn(
-        "surface", F.col("alias")
-    )
-    linked = link_exact(
-        m, testdata_alias_df(spark), mention_key=("doc_id", "tok_begin", "n_toks")
-    )
-    return linked.select("doc_id", "entity_id")
+    return q_link_topk(spark, sf_dir).select("doc_id", "entity_id")
 
 
 def q_entity_triangles(spark, sf_dir):
@@ -546,7 +535,7 @@ def _band_index(spark, sf_dir):
 
         d = tempfile.mkdtemp(prefix="kgc_band_index_")
         sh, banded = build_band_index(
-            _docs(spark, sf_dir).select("doc_id", "text"), k=16, bands=4
+            _docs(spark, sf_dir).select("doc_id", "text")
         )
         sh.write.parquet(f"{d}/shingles")
         banded.write.parquet(f"{d}/bands")
@@ -569,7 +558,7 @@ def q_dedup_incremental_batch(spark, sf_dir):
 
     return probe_band_index(
         _new_batch(spark, sf_dir), _band_index(spark, sf_dir),
-        k=16, bands=4, threshold=0.5,
+        threshold=0.5,
     )
 
 
@@ -598,7 +587,7 @@ def q_stream_dedup_incremental(spark, sf_dir):
         src, _docs(spark, sf_dir).select("doc_id", "text"),
         tempfile.mkdtemp(prefix="kgc_neardup_out_"),
         tempfile.mkdtemp(prefix="kgc_neardup_ck_"),
-        k=16, bands=4, threshold=0.5,
+        threshold=0.5,
     )
 
 
@@ -823,7 +812,6 @@ def q_stratified_sample(spark, sf_dir):
     return stratified_sample(
         _docs(spark, sf_dir).select("doc_id", "text"),
         rates={"en": 0.25},
-        default_rate=1.0,
     )
 
 
@@ -831,7 +819,7 @@ def q_simhash(spark, sf_dir):
     from kgc.dedup import with_simhash
 
     d = _docs(spark, sf_dir).select("doc_id", "text")
-    return with_simhash(d, "text", "simhash").select("doc_id", "simhash")
+    return with_simhash(d).select("doc_id", "simhash")
 
 
 def q_simhash_pairs(spark, sf_dir):
@@ -906,7 +894,7 @@ def q_ann_topk(spark, sf_dir):
 
     e = _read(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 20)
-    out = topk_bruteforce(q, e, k=5)
+    out = topk_bruteforce(q, e)
     return out.select(
         "query_id", "neighbor_id", "cosine", F.col("rank").cast("bigint").alias("rank")
     )
@@ -930,7 +918,7 @@ def q_embed_neardup(spark, sf_dir):
             (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
         )
     )
-    return embedding_near_duplicates(aug, threshold=0.95, planes=16)
+    return embedding_near_duplicates(aug)
 
 
 def q_embed_dedup_groups(spark, sf_dir):
@@ -946,7 +934,7 @@ def q_embed_dedup_groups(spark, sf_dir):
             (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
         )
     )
-    return embedding_dedup_groups(aug, threshold=0.95, planes=16)
+    return embedding_dedup_groups(aug)
 
 
 def q_events_rollup(spark, sf_dir):
@@ -1518,7 +1506,7 @@ def q_dup_ngrams(spark, sf_dir):
     cross-document duplicated grams at every SF."""
     from kgc.dedup import duplicated_ngram_stats
 
-    return duplicated_ngram_stats(_aug_docs(spark, sf_dir), n=5)
+    return duplicated_ngram_stats(_aug_docs(spark, sf_dir))
 
 
 def q_dup_ngrams_incremental(spark, sf_dir):
@@ -1533,7 +1521,7 @@ def q_dup_ngrams_incremental(spark, sf_dir):
         (F.col("doc_id") + 100000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" freshly appended ingest tail")).alias("text"),
     )
-    return incremental_duplicated_ngrams(new_batch, d, n=5)
+    return incremental_duplicated_ngrams(new_batch, d)
 
 
 def q_dup_ngrams_suite(spark, sf_dir):
@@ -1576,7 +1564,7 @@ def q_semantic_dedup(spark, sf_dir):
         )
     )
     cents = train_centroids(aug, n_centroids=16, iters=2)
-    return semantic_dedup(aug, cents, tau=0.95).select(
+    return semantic_dedup(aug, cents).select(
         "vec_id", F.col("cid").cast("bigint").alias("cid"), "kept"
     )
 
@@ -1838,7 +1826,7 @@ def q_ann_ivf(spark, sf_dir):
     e = _read(spark, sf_dir, "embeddings")
     cents = train_centroids(e, n_centroids=16, iters=2)
     q = e.filter(F.col("vec_id") < 20)
-    out = topk_ivf(q, e, cents, k=5, n_probe=4)
+    out = topk_ivf(q, e, cents)
     return out.select(
         "query_id", "neighbor_id", "cosine", F.col("rank").cast("bigint").alias("rank")
     )
@@ -1891,7 +1879,7 @@ def q_ann_pandas(spark, sf_dir):
         (r["vec_id"], list(r["embedding"]))
         for r in e.filter(F.col("vec_id") < 20).collect()
     ]
-    out = topk_blocked_pandas(q_rows, e, k=5)
+    out = topk_blocked_pandas(q_rows, e)
     return out.select(
         "query_id", "neighbor_id", "cosine", F.col("rank").cast("bigint").alias("rank")
     )
@@ -1907,7 +1895,7 @@ def q_ann_lsh(spark, sf_dir):
 
     e = _read(spark, sf_dir, "embeddings")
     qdf = e.filter(F.col("vec_id") < 20)
-    out = topk_lsh(qdf, e, k=5, planes=12, probe_hamming=1)
+    out = topk_lsh(qdf, e, planes=12)
     return out.select(
         "query_id", "neighbor_id", "cosine", F.col("rank").cast("bigint").alias("rank")
     )
@@ -2527,7 +2515,7 @@ def q_streaming_rollup(spark, sf_dir):
     from kgc.streaming import run_available_now, stream_event_rollup
 
     roll = stream_event_rollup(
-        spark, _stage_stream_dir(sf_dir, "events"), window="1 hour"
+        spark, _stage_stream_dir(sf_dir, "events")
     )
     out = run_available_now(roll, "kgc_streaming_rollup", output_mode="complete")
     return out.select(

@@ -265,37 +265,23 @@ def main() -> None:
         (F.pmod(F.xxhash64(F.col("id") + 7), F.lit(650_000)) + 1).alias("dst"),
     )
     cc_edges = hub.unionByName(tails).unionByName(ring)
-    for _ in range(2):
-        tot0, st0 = read_stat()
-        t0 = time.time()
-        cc = connected_components(cc_edges, small_graph_threshold=0)
-        cc.write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        tot1, st1 = read_stat()
-        passes.setdefault("cc_skewed", []).append(round(dt, 3))
-        steal.setdefault("cc_skewed", []).append(
-            round(100.0 * (st1 - st0) / max(tot1 - tot0, 1), 2)
-        )
-    timings["cc_skewed"] = min(passes["cc_skewed"])
-    # hybrid tail (local_finish_threshold): the same graph, but once an
-    # iteration's contracted edge set fits the driver budget the tail
-    # finishes with union-find — the production shape (bulk distributed
-    # + salted, scheduler-bound confirmation iterations skipped).
-    # Output equality vs the pure run is pytest-pinned.
-    for _ in range(2):
-        tot0, st0 = read_stat()
-        t0 = time.time()
-        cc = connected_components(
+    cc_legs = {
+        "cc_skewed": lambda: connected_components(cc_edges, small_graph_threshold=0),
+        # hybrid tail (local_finish_threshold): the same graph, but once an
+        # iteration's contracted edge set fits the driver budget the tail
+        # finishes with union-find — the production shape (bulk distributed
+        # + salted, scheduler-bound confirmation iterations skipped).
+        # Output equality vs the pure run is pytest-pinned.
+        "cc_skewed_hybrid": lambda: connected_components(
             cc_edges, small_graph_threshold=0, local_finish_threshold=1_000_000
-        )
-        cc.write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        tot1, st1 = read_stat()
-        passes.setdefault("cc_skewed_hybrid", []).append(round(dt, 3))
-        steal.setdefault("cc_skewed_hybrid", []).append(
-            round(100.0 * (st1 - st0) / max(tot1 - tot0, 1), 2)
-        )
-    timings["cc_skewed_hybrid"] = min(passes["cc_skewed_hybrid"])
+        ),
+    }
+    for name, build in cc_legs.items():
+        for _ in range(2):
+            dt, pct = timed_pass(build)
+            passes.setdefault(name, []).append(round(dt, 3))
+            steal.setdefault(name, []).append(pct)
+        timings[name] = min(passes[name])
     run_control("cc_skewed")
 
     total = round(sum(timings.values()), 3)

@@ -162,7 +162,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 20,
-    salt: int = DEFAULT_SALT,
     small_graph_threshold: int = SMALL_GRAPH_THRESHOLD,
     local_finish_threshold: int | None = None,
 ) -> DataFrame:
@@ -211,8 +210,8 @@ def connected_components(
 
     prev = mapping = None
     for _ in range(max_iter):
-        e = _large_star(e, salt)
-        e = _small_star(e, salt)
+        e = _large_star(e, DEFAULT_SALT)
+        e = _small_star(e, DEFAULT_SALT)
         e = e.localCheckpoint(eager=True)
         cs = _checksum(e)
         if prev is not None and cs == prev:
@@ -243,8 +242,6 @@ def connected_components(
 def incremental_components(
     assignments: DataFrame,
     new_edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     **kwargs,
 ) -> DataFrame:
     """Fold a NEW edge batch into an EXISTING (node, component)
@@ -260,13 +257,13 @@ def incremental_components(
     scale the historical edge set is never re-read: the assignment
     table (itself the previous call's output) is the only state carried
     between ingests.  kwargs forward to connected_components
-    (max_iter, salt, small_graph_threshold, ...).
+    (max_iter, small_graph_threshold, ...).
     """
     star = assignments.select(
-        F.col("node").alias(src), F.col("component").alias(dst)
+        F.col("node").alias("src"), F.col("component").alias("dst")
     )
     merged = connected_components(
-        star.unionByName(new_edges.select(src, dst)), src=src, dst=dst, **kwargs
+        star.unionByName(new_edges.select("src", "dst")), **kwargs
     )
     # Singleton preservation: a prior (n, n) assignment row is a self
     # edge, which connected_components drops (u != v) — without this
@@ -282,11 +279,7 @@ def incremental_components(
     )
 
 
-def canonicalize_entities(
-    linked: DataFrame,
-    alias_df: DataFrame,
-    salt: int = DEFAULT_SALT,
-) -> DataFrame:
+def canonicalize_entities(linked: DataFrame, alias_df: DataFrame) -> DataFrame:
     """linked mentions → add canonical_id per entity_id.
 
     Edges: (1) dictionary structure — aliases sharing an entity_id are
@@ -309,7 +302,6 @@ def canonicalize_entities(
         shared.union(
             a.select(F.col("entity_id").alias("src"), F.col("entity_id").alias("dst"))
         ),
-        salt=salt,
     )
     return linked.join(
         F.broadcast(comps.withColumnRenamed("node", "entity_id")), "entity_id", "left"

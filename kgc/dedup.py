@@ -47,9 +47,6 @@ def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
 # ----------------------------------------------------------- minhash ------
 def minhash_near_duplicates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
     k: int = 32,
     bands: int = 8,
     threshold: float = 0.6,
@@ -95,10 +92,10 @@ def minhash_near_duplicates(
     # (measured: THREE ArrowEvalPython nodes, 0.84 s → 4.2 s), so field
     # access must read a materialized cache, not the live expression.
     mh = (
-        df.repartition(nparts, F.col(id_col))
+        df.repartition(nparts, F.col("doc_id"))
         .select(
-            F.col(id_col).alias("doc_id"),
-            make_shingle_band_udf(shingle_n, k, bands)(F.col(text_col)).alias("_mh"),
+            "doc_id",
+            make_shingle_band_udf(k, bands)(F.col("text")).alias("_mh"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -136,13 +133,7 @@ def minhash_near_duplicates(
     return out
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    candidate_pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame, candidate_pairs: DataFrame) -> DataFrame:
     """Exact n-gram Jaccard for given candidate (a, b) pairs — the
     verification primitive, usable after any blocking scheme.
 
@@ -153,10 +144,8 @@ def ngram_jaccard_pairs(
     from kgc.link import shingles_from_tokens
     from kgc.textops import norm_tokens
 
-    sh = df.select(
-        F.col(id_col).alias("doc_id"), norm_tokens(text_col).alias("_toks")
-    ).select(
-        "doc_id", shingles_from_tokens(F.col("_toks"), shingle_n).alias("sh")
+    sh = df.select("doc_id", norm_tokens("text").alias("_toks")).select(
+        "doc_id", shingles_from_tokens(F.col("_toks"), 3).alias("sh")
     )
     return (
         candidate_pairs.join(sh.withColumnRenamed("doc_id", "a").withColumnRenamed("sh", "sh_a"), "a")
@@ -184,12 +173,7 @@ def _pow2_60() -> Column:
     return F.array(*[F.lit(1 << i).cast("bigint") for i in range(60)])
 
 
-def with_simhash(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "simhash",
-    id_cols: tuple[str, ...] | list[str] = ("doc_id",),
-) -> DataFrame:
+def with_simhash(df: DataFrame, out_col: str = "simhash") -> DataFrame:
     """DataFrame-level simhash — the scale path.
 
     Round-2 rewrite: tokens are exploded, hashed once each (one md5
@@ -200,25 +184,24 @@ def with_simhash(
     into one giant projection; see VERDICT r1 "Performance").  Values
     are bit-identical to round 1 / the DuckDB oracle.
 
-    ``id_cols`` must uniquely identify rows (the tallies join back on
+    ``doc_id`` must uniquely identify rows (the tallies join back on
     it); rows with zero tokens get simhash 0 via the left join.
     """
-    ids = list(id_cols)
     from kgc.textops import norm_tokens
 
-    toks = df.select(*ids, norm_tokens(text_col).alias("_toks"))
-    hashed = toks.select(*ids, F.explode("_toks").alias("_tok")).select(
-        *ids, _tok_hash60(F.col("_tok")).alias("_h")
+    toks = df.select("doc_id", norm_tokens("text").alias("_toks"))
+    hashed = toks.select("doc_id", F.explode("_toks").alias("_tok")).select(
+        "doc_id", _tok_hash60(F.col("_tok")).alias("_h")
     )
     bits = hashed.select(
-        *ids, "_h", F.explode(F.sequence(F.lit(0), F.lit(59))).alias("_bit")
+        "doc_id", "_h", F.explode(F.sequence(F.lit(0), F.lit(59))).alias("_bit")
     )
-    tallies = bits.groupBy(*ids, "_bit").agg(
+    tallies = bits.groupBy("doc_id", "_bit").agg(
         F.sum(
             F.when(F.bit_get(F.col("_h"), F.col("_bit")) == 1, 1).otherwise(-1)
         ).alias("_t")
     )
-    sim = tallies.groupBy(*ids).agg(
+    sim = tallies.groupBy("doc_id").agg(
         F.sum(
             F.when(
                 F.col("_t") > 0,
@@ -227,7 +210,7 @@ def with_simhash(
         ).alias("_simhash")
     )
     return (
-        df.join(sim, ids, "left")
+        df.join(sim, ["doc_id"], "left")
         .withColumn(out_col, F.coalesce(F.col("_simhash"), F.lit(0).cast("bigint")))
         .drop("_simhash")
     )
@@ -235,8 +218,6 @@ def with_simhash(
 
 def simhash_near_duplicates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_hamming: int = 3,
     bands: int = 4,
 ) -> DataFrame:
@@ -263,9 +244,8 @@ def simhash_near_duplicates(
     # persisted: the banded self-join reads this twice
     sh = (
         with_simhash(
-            df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
-            "text",
-            "h",
+            df.select("doc_id", "text"),
+            out_col="h",
         )
         .select("doc_id", "h")
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -316,28 +296,22 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
 
 
-def embedding_near_duplicates(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.95,
-    planes: int = 16,
-) -> DataFrame:
+def embedding_near_duplicates(df: DataFrame) -> DataFrame:
     """Embedding near-dup pairs via random-hyperplane LSH + cosine verify.
 
     Signature bit i = sign(v · h_i) with hyperplane components h_i[j] ∈
     {−1,+1} derived from md5(i|j) — deterministic, engine-portable, no
     stored model.  Pairs sharing the full 16-bit sketch are candidates
     (for near-DUPLICATES the sketch collides with very high
-    probability); verified with exact cosine ≥ threshold.
+    probability); verified with exact cosine ≥ 0.95.
     """
     from pyspark import StorageLevel
 
-    sig = hyperplane_signature(F.col(vec_col), planes)
+    sig = hyperplane_signature(F.col("embedding"))
     # persist: both sides of the self-join read s — without the
     # materialization each side recomputes the signature scan.
     s = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), sig.alias("sig")
+        F.col("vec_id").alias("id"), F.col("embedding").alias("v"), sig.alias("sig")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     pairs = (
         s.alias("x")
@@ -349,7 +323,7 @@ def embedding_near_duplicates(
             F.round(cosine(F.col("x.v"), F.col("y.v")), 6).alias("cosine"),
         )
     )
-    out = pairs.filter(F.col("cosine") >= threshold)
+    out = pairs.filter(F.col("cosine") >= 0.95)
     out._kgc_pinned = [s]  # released by kgc.pipeline.release
     return out
 
@@ -365,11 +339,11 @@ def _plane_sign(i: int, j: int) -> float:
     return 1.0 if hashlib.md5(f"{i}|{j}".encode()).hexdigest()[0] < "8" else -1.0
 
 
-def hyperplane_signature(vec: Column, planes: int = 16, dim: int = 64) -> Column:
+def hyperplane_signature(vec: Column, planes: int = 16) -> Column:
     """Random-hyperplane sketch as a bigint: bit i = 1 iff v·h_i > 0.
 
-    ``dim`` must cover the vector length (extra literals are ignored by
-    zip_with's null-padding → 0 contribution).
+    The 64 plane components must cover the vector length (extra literals
+    are ignored by zip_with's null-padding → 0 contribution).
 
     Planes ride as DATA: the sign matrix is a nested array literal
     (constant-folded by Catalyst into one Literal — zero per-row
@@ -379,7 +353,7 @@ def hyperplane_signature(vec: Column, planes: int = 16, dim: int = 64) -> Column
     × 64 literals each — part of the JIT code-cache footprint)."""
     mat = F.array(
         *[
-            F.array(*[F.lit(_plane_sign(i, j)) for j in range(dim)])
+            F.array(*[F.lit(_plane_sign(i, j)) for j in range(64)])
             for i in range(planes)
         ]
     )
@@ -409,9 +383,6 @@ def hyperplane_signature(vec: Column, planes: int = 16, dim: int = 64) -> Column
 # ------------------------------------------------------ near-dup groups ---
 def near_duplicate_groups(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
     k: int = 32,
     bands: int = 8,
     threshold: float = 0.6,
@@ -429,37 +400,25 @@ def near_duplicate_groups(
     of each cluster is deterministic.  Only docs that belong to some
     pair appear; singletons are by definition not duplicates.
     """
-    pairs = minhash_near_duplicates(
-        df, text_col=text_col, id_col=id_col,
-        shingle_n=shingle_n, k=k, bands=bands, threshold=threshold,
-    )
+    pairs = minhash_near_duplicates(df, k=k, bands=bands, threshold=threshold)
     return _pair_groups(pairs, "doc_id")
 
 
-def _staged_shingles(
-    d: DataFrame, text_col: str, id_col: str, out_id: str, shingle_n: int
-) -> DataFrame:
+def _staged_shingles(d: DataFrame, out_id: str) -> DataFrame:
     from pyspark import StorageLevel
 
     from kgc.link import shingles_from_tokens
     from kgc.textops import norm_tokens
 
     return (
-        d.select(F.col(id_col).alias(out_id), norm_tokens(text_col).alias("_toks"))
+        d.select(F.col("doc_id").alias(out_id), norm_tokens("text").alias("_toks"))
         .filter(F.size("_toks") > 0)
-        .select(out_id, shingles_from_tokens(F.col("_toks"), shingle_n).alias("sh"))
+        .select(out_id, shingles_from_tokens(F.col("_toks"), 3).alias("sh"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
 
-def build_band_index(
-    corpus_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    k: int = 16,
-    bands: int = 4,
-) -> tuple:
+def build_band_index(corpus_df: DataFrame) -> tuple:
     """The corpus LSH INDEX: (sh_corpus, banded_corpus), both persisted
     — the ingest-time (incremental) half of near-dup detection.
 
@@ -473,8 +432,8 @@ def build_band_index(
     """
     from pyspark import StorageLevel
 
-    sh_corpus = _staged_shingles(corpus_df, text_col, id_col, "corpus_id", shingle_n)
-    banded_corpus = lsh_band_keys(sh_corpus, "sh", ["corpus_id"], k, bands).persist(
+    sh_corpus = _staged_shingles(corpus_df, "corpus_id")
+    banded_corpus = lsh_band_keys(sh_corpus, "sh", ["corpus_id"], 16, 4).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     return sh_corpus, banded_corpus
@@ -483,24 +442,19 @@ def build_band_index(
 def probe_band_index(
     new_df: DataFrame,
     index: tuple,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    k: int = 16,
-    bands: int = 4,
     threshold: float = 0.5,
 ) -> DataFrame:
     """Probe a :func:`build_band_index` corpus index with a batch of NEW
-    docs → (new_id, corpus_id, jaccard) near-dup pairs.  shingle_n / k /
-    bands must match the index build.  The new side is small relative to
+    docs → (new_id, corpus_id, jaccard) near-dup pairs, with the index
+    build's 3-word shingles and 16 lanes in 4 bands.  The new side is small relative to
     the corpus in the normal ingest case, so AQE broadcasts it and the
     index is never shuffled.  Same hash family and banding as
     :func:`minhash_near_duplicates` (md5-replayable in the DuckDB
     oracle); candidates are verified with exact shingle Jaccard like the
     batch operator."""
     sh_corpus, banded_corpus = index
-    sh_new = _staged_shingles(new_df, text_col, id_col, "new_id", shingle_n)
-    banded_new = lsh_band_keys(sh_new, "sh", ["new_id"], k, bands)
+    sh_new = _staged_shingles(new_df, "new_id")
+    banded_new = lsh_band_keys(sh_new, "sh", ["new_id"], 16, 4)
     pairs = (
         banded_new.join(banded_corpus, ["band", "key"])
         .select("new_id", "corpus_id")
@@ -536,31 +490,17 @@ def _pair_groups(pairs: DataFrame, id_name: str) -> DataFrame:
     return out
 
 
-def embedding_dedup_groups(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.95,
-    planes: int = 16,
-) -> DataFrame:
+def embedding_dedup_groups(df: DataFrame) -> DataFrame:
     """Semantic near-dup CLUSTERS: (vec_id, group_id, group_size) over
     the transitive closure of embedding-cosine near-dup pairs — the
     embedding-space twin of :func:`near_duplicate_groups` (textual
     minhash), for dedup that must catch paraphrases sharing no
     shingles.  Pairs come from :func:`embedding_near_duplicates`
     (hyperplane-LSH blocked, cosine-verified)."""
-    pairs = embedding_near_duplicates(
-        df, vec_col=vec_col, id_col=id_col, threshold=threshold, planes=planes
-    )
-    return _pair_groups(pairs, id_col)
+    return _pair_groups(embedding_near_duplicates(df), "vec_id")
 
 
-def dedup_survivors(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    **minhash_kwargs,
-) -> DataFrame:
+def dedup_survivors(df: DataFrame, **minhash_kwargs) -> DataFrame:
     """The deduplicated corpus decision table: every input doc with a
     keep/drop verdict — kept iff it is in no near-dup cluster, or is
     its cluster's canonical (min-id) member.
@@ -575,11 +515,9 @@ def dedup_survivors(
     AQE-broadcastable in the common case; worst case it is one
     shuffle on doc_id — uniform by construction.
     """
-    groups = near_duplicate_groups(
-        df, text_col=text_col, id_col=id_col, **minhash_kwargs
-    )
+    groups = near_duplicate_groups(df, **minhash_kwargs)
     out = (
-        df.select(F.col(id_col).alias("doc_id"))
+        df.select("doc_id")
         .join(groups, "doc_id", "left")
         .select(
             "doc_id",
@@ -597,8 +535,6 @@ def dedup_survivors(
 def decontaminate(
     train: DataFrame,
     eval_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_n: int = 8,
 ) -> DataFrame:
     """Benchmark decontamination: training docs that share at least one
@@ -625,7 +561,7 @@ def decontaminate(
         # gram lambda slices its input once per gram, so the tokenizer
         # must be a materialised attribute, not an inlined expression
         toks = d.select(
-            F.col(id_col).alias(out_id), norm_tokens(text_col).alias("_toks")
+            F.col("doc_id").alias(out_id), norm_tokens("text").alias("_toks")
         )
         return toks.select(
             out_id,
@@ -642,21 +578,15 @@ def decontaminate(
     )
 
 
-def paragraph_dedup(
-    docs: DataFrame,
-    para_col: str = "paragraphs",
-    id_col: str = "doc_id",
-    min_count: int = 30,
-    sep: str = "\n",
-) -> DataFrame:
+def paragraph_dedup(docs: DataFrame, min_count: int = 30) -> DataFrame:
     """CCNet-style paragraph-level dedup: drop every paragraph whose
     exact text occurs in ≥ ``min_count`` documents corpus-wide (shared
     boilerplate — headers, footers, cookie banners), keep the rest in
     original order.
 
-    Input: (id_col, para_col array<string>).  Output one row per doc:
+    Input: (doc_id, paragraphs array<string>).  Output one row per doc:
     (doc_id, kept_text, n_kept, n_removed) — kept_text is the surviving
-    paragraphs rejoined with ``sep`` (empty string if everything was
+    paragraphs rejoined with newlines (empty string if everything was
     boilerplate).  Docs whose paragraph array is EMPTY are omitted
     (nothing to dedup — filter them out upstream with the quality
     gates).
@@ -674,8 +604,7 @@ def paragraph_dedup(
     (pos, para) structs; no window.
     """
     p = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.col(para_col)).alias("pos", "para"),
+        "doc_id", F.posexplode("paragraphs").alias("pos", "para")
     ).withColumn("ph", F.md5("para"))
     boiler = (
         p.groupBy("ph")
@@ -691,7 +620,7 @@ def paragraph_dedup(
                 F.array_sort(F.collect_list(kept_struct)),
                 lambda s: s["para"],
             ),
-            sep,
+            "\n",
         ).alias("kept_text"),
         F.sum(F.when(F.col("_boiler").isNull(), 1).otherwise(0))
         .cast("bigint")
@@ -702,13 +631,8 @@ def paragraph_dedup(
     )
 
 
-def duplicated_ngram_stats(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 5,
-) -> DataFrame:
-    """Exact-substring duplication signal at fixed width ``n`` — the
+def duplicated_ngram_stats(docs: DataFrame) -> DataFrame:
+    """Exact-substring duplication signal at fixed width 5 — the
     cross-document n-gram criterion of Lee et al. 2022 ("Deduplicating
     Training Data Makes Language Models Better", arXiv:2107.06499),
     where a token span occurring verbatim in ≥ 2 distinct documents is
@@ -717,11 +641,11 @@ def duplicated_ngram_stats(
 
     Output one row per doc:
       (doc_id, n_toks, n_grams, n_dup_grams, covered_toks)
-    where n_dup_grams counts this doc's n-grams that also occur in at
+    where n_dup_grams counts this doc's 5-grams that also occur in at
     least one OTHER document, and covered_toks counts the distinct
     token positions covered by such grams (the span a masking pass
     would redact; covered_toks/n_toks is the doc's duplication
-    fraction).  Docs with fewer than ``n`` tokens have zero grams.
+    fraction).  Docs with fewer than 5 tokens have zero grams.
 
     Scale shape: grams carry (doc_id, pos, md5(gram)) only — never the
     text; the corpus-wide gram frequency is one map-side-combined
@@ -732,7 +656,7 @@ def duplicated_ngram_stats(
     groupBy on doc_id.  Three bounded shuffles total, all on uniform
     keys.
     """
-    base, grams = _gram_tables(docs, text_col, id_col, n)
+    base, grams = _gram_tables(docs, 5)
     grams = grams.persist()  # consumed twice: frequency agg + dup join
     dup = (
         grams.groupBy("gh")
@@ -740,21 +664,19 @@ def duplicated_ngram_stats(
         .filter(F.col("ndocs") >= 2)
         .select("gh")
     )
-    out = _dup_stats(base, grams.join(dup, "gh"), n)
+    out = _dup_stats(base, grams.join(dup, "gh"), 5)
     out._kgc_pinned = [grams]  # released by kgc.pipeline.release
     return out
 
 
-def _gram_tables(docs, text_col: str, id_col: str, n: int):
+def _gram_tables(docs, n: int):
     """(base, grams) — the staged token→gram build shared by the batch
     and incremental exact-substring operators.  base = (doc_id, n_toks,
     grams array<struct<pos,gh>>); grams = the exploded (doc_id, pos,
     gh) rows, NOT persisted (callers pin when multi-consumed)."""
     from kgc.textops import norm_tokens
 
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), norm_tokens(text_col).alias("toks")
-    )
+    toks = docs.select("doc_id", norm_tokens("text").alias("toks"))
     # staged projection: materialize the token array once before the
     # HOF gram build (interpreted eval has no CSE; see BASELINE.md)
     base = toks.select(
@@ -818,15 +740,9 @@ def _dup_stats(base, dup_grams, n: int):
     )
 
 
-def incremental_duplicated_ngrams(
-    new_batch: DataFrame,
-    corpus: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 5,
-) -> DataFrame:
+def incremental_duplicated_ngrams(new_batch: DataFrame, corpus: DataFrame) -> DataFrame:
     """Ingest-time exact-substring check: per NEW document, how much of
-    it already exists verbatim (width-``n`` grams) anywhere in the
+    it already exists verbatim (width-5 grams) anywhere in the
     EXISTING corpus — the incremental twin of
     :func:`duplicated_ngram_stats`, same output schema.
 
@@ -838,7 +754,7 @@ def incremental_duplicated_ngrams(
     duplication is deliberately NOT counted here (run the batch
     operator for that); a gram counts as duplicated only if the CORPUS
     already has it."""
-    base_new, grams_new = _gram_tables(new_batch, text_col, id_col, n)
-    _, grams_corpus = _gram_tables(corpus, text_col, id_col, n)
+    base_new, grams_new = _gram_tables(new_batch, 5)
+    _, grams_corpus = _gram_tables(corpus, 5)
     index = grams_corpus.select("gh").distinct()
-    return _dup_stats(base_new, grams_new.join(index, "gh"), n)
+    return _dup_stats(base_new, grams_new.join(index, "gh"), 5)

@@ -43,18 +43,12 @@ from kgc.session import local_frame
 DEFAULT_SCALE = 10**12
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "u",
-    dst: str = "v",
-    iters: int = 8,
-    scale: int = DEFAULT_SCALE,
-    damping: tuple[int, int] = (85, 100),
-) -> DataFrame:
-    """Directed edge list → (node, rank) after ``iters`` rounds.
+def pagerank(edges: DataFrame) -> DataFrame:
+    """Directed (u, v) edge list → (node, rank) after 8 rounds.
 
-    ``rank`` is BIGINT fixed-point (units of 1/``scale``); the true
-    PageRank value is rank/scale.  Dangling nodes (out-degree 0) do
+    ``rank`` is BIGINT fixed-point (units of 1/scale, scale =
+    DEFAULT_SCALE); the true PageRank value is rank/scale.  Damping is
+    num/den = 85/100.  Dangling nodes (out-degree 0) do
     NOT leak mass: their rank is redistributed uniformly each round,
     per the standard formulation (VERDICT r2 'What's wrong' #2 —
     round 2 documented the leak instead of guarding it).  Unweighted,
@@ -72,11 +66,11 @@ def pagerank(
     """
     from pyspark import StorageLevel
 
-    num, den = damping
-    base = scale * (den - num) // den
+    num, den = 85, 100
+    base = DEFAULT_SCALE * (den - num) // den
 
     e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select("u", "v")
         .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -96,8 +90,8 @@ def pagerank(
     has_dangling = not dangling.isEmpty()
     n_nodes = nodes.count() if has_dangling else 0  # loop-invariant
 
-    ranks = nodes.select("u", F.lit(scale).cast("long").alias("rank"))
-    for _ in range(iters):
+    ranks = nodes.select("u", F.lit(DEFAULT_SCALE).cast("long").alias("rank"))
+    for _ in range(8):
         contrib = (
             e.join(ranks, "u")
             .join(deg, "u")
@@ -136,19 +130,18 @@ def pagerank(
     return out
 
 
-def comention_edges(doc_entities: DataFrame, doc_col: str = "doc_id",
-                    ent_col: str = "entity_id") -> DataFrame:
+def comention_edges(doc_entities: DataFrame) -> DataFrame:
     """(doc, entity) pairs → symmetric distinct co-mention edge list.
 
     Two entities are adjacent iff some document mentions both.  The
-    self-join shuffles on ``doc_col`` (uniform at corpus scale: a doc
+    self-join shuffles on ``doc_id`` (uniform at corpus scale: a doc
     mentions O(10) entities, so per-key fan-out is bounded); DISTINCT
     collapses repeat co-mentions across documents.
     """
     from pyspark import StorageLevel
 
     de = (
-        doc_entities.select(F.col(doc_col).alias("_d"), F.col(ent_col).alias("_e"))
+        doc_entities.select(F.col("doc_id").alias("_d"), F.col("entity_id").alias("_e"))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )  # self-joined below: without the pin the (possibly expensive)
@@ -308,12 +301,7 @@ def _closure_doubling(e: DataFrame, src: str, dst: str, max_depth: int) -> DataF
     return out
 
 
-def entity_cocitation(
-    doc_entities: DataFrame,
-    doc_col: str = "doc_id",
-    ent_col: str = "entity_id",
-    df_cap: int = 1000,
-) -> DataFrame:
+def entity_cocitation(doc_entities: DataFrame, df_cap: int = 1000) -> DataFrame:
     """(doc_a, doc_b, n_shared) — document pairs related through the
     constructed KG: two docs are co-cited when the entity linker
     resolved at least one common canonical entity in both, n_shared
@@ -330,7 +318,7 @@ def entity_cocitation(
     self-join shuffles on the entity key only.
     """
     de = (
-        doc_entities.select(F.col(doc_col).alias("_d"), F.col(ent_col).alias("_e"))
+        doc_entities.select(F.col("doc_id").alias("_d"), F.col("entity_id").alias("_e"))
         .distinct()
         .persist()  # consumed 3× (df count, hub filter, both join sides)
     )
@@ -353,7 +341,7 @@ def entity_cocitation(
     return out
 
 
-def triangle_counts(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts + local clustering coefficient over an
     undirected graph given as a SYMMETRIC edge list (both directions
     present, no self-loops, no duplicates — comention_edges' contract).
@@ -380,9 +368,7 @@ def triangle_counts(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFra
     # upstream can be an expensive derivation (the mention-scan chain
     # for the co-mention graph) — pin it first or every consumer
     # replays that chain
-    und = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    und = edges.select("u", "v").persist(StorageLevel.MEMORY_AND_DISK)
     deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("deg")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -2150,9 +2136,7 @@ def _aggregate(
     return _order_slice(out, q), nullable
 
 
-def sparql_aggregate(
-    triples: DataFrame, text: str, graph_col: str = "doc_id"
-) -> DataFrame:
+def sparql_aggregate(triples: DataFrame, text: str) -> DataFrame:
     """SPARQL GROUP BY aggregation over a triple table: sparql_query for
     a SELECT whose list holds at least one aggregate.  Grammar:
 
@@ -2174,8 +2158,8 @@ def sparql_aggregate(
     variable must be a GROUP BY variable; the output is the group vars,
     then the aggregates in SELECT order.  The WHERE
     group runs through the full group algebra, so GRAPH blocks
-    compose with aggregation (pass graph_col= for a non-doc_id
-    provenance column).  SUM/AVG
+    compose with aggregation (``sparql_query``'s graph_col= names a
+    non-doc_id provenance column).  SUM/AVG
     cast the (string-typed) binding to double — the caller owns numeric
     determinism, same as SQL.  HAVING compares aggregate ALIASES
     (unquoted numeric literals compare as doubles, anything else as
@@ -2183,12 +2167,10 @@ def sparql_aggregate(
     q = _parse_form(text, "select")
     if not q["aggregates"]:
         raise ValueError("sparql_aggregate needs at least one (AGG(...) AS ?x)")
-    return _finish_query(q, *_solve(triples, q, graph_col))[0]
+    return _finish_query(q, *_solve(triples, q))[0]
 
 
-def sparql_construct(
-    triples: DataFrame, text: str, graph_col: str = "doc_id"
-) -> DataFrame:
+def sparql_construct(triples: DataFrame, text: str) -> DataFrame:
     """SPARQL CONSTRUCT: instantiate a triple template over every
     solution of the WHERE group, returning a derived (subj, pred, obj,
     obj_type) KG (RDF set semantics — deduplicated).  Template terms
@@ -2199,7 +2181,7 @@ def sparql_construct(
     else 'literal' — documented approximation over an untyped triple
     table."""
     q = _parse_form(text, "construct")
-    sols = _finish_query(q, *_solve(triples, q, graph_col))[0]
+    sols = _finish_query(q, *_solve(triples, q))[0]
     subj_vars = {
         pat[0] for pat in _triple_patterns(q["where"]) if pat[0][0] == "var"
     }
@@ -2223,9 +2205,7 @@ def sparql_construct(
     return out.dropDuplicates(["subj", "pred", "obj"])
 
 
-def sparql_ask(
-    triples: DataFrame, text: str, graph_col: str = "doc_id"
-) -> DataFrame:
+def sparql_ask(triples: DataFrame, text: str) -> DataFrame:
     """SPARQL ASK: does the WHERE group have at least one solution?
     Grammar: ``ASK [WHERE] { ... }`` (full group algebra).  Returns a
     one-row DataFrame (ask: boolean) — lazily: the plan is
@@ -2234,7 +2214,7 @@ def sparql_ask(
     CollectLimit takes one partition's hit) — an existence probe, not
     a full evaluation."""
     q = _parse_form(text, "ask")
-    sol = _finish_query(q, *_solve(triples, q, graph_col))[0]
+    sol = _finish_query(q, *_solve(triples, q))[0]
     return (
         sol.select(F.lit(1).alias("_one"))
         .limit(1)
@@ -2242,9 +2222,7 @@ def sparql_ask(
     )
 
 
-def sparql_describe(
-    triples: DataFrame, text: str, graph_col: str = "doc_id"
-) -> DataFrame:
+def sparql_describe(triples: DataFrame, text: str) -> DataFrame:
     """SPARQL DESCRIBE: every triple whose SUBJECT is a described
     resource (the minimal symmetric-free Concise Bounded Description —
     subject-outbound edges only, the standard-allowed simple form).
@@ -2261,7 +2239,7 @@ def sparql_describe(
 
     res: DataFrame | None = None
     if q["where"] is not None:
-        sol = _finish_query(q, *_solve(triples, q, graph_col))[0]
+        sol = _finish_query(q, *_solve(triples, q))[0]
         missing = [v for v in vars_ if v not in sol.columns]
         if missing:
             raise ValueError(f"DESCRIBE vars not bound by WHERE: {missing}")

@@ -35,17 +35,17 @@ from kgc.textops import norm_tokens
 
 
 # ------------------------------------------------------------- shingles ---
-def char_shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct character n-grams of lower(col), as an array<string>.
+def char_shingles(col: Column | str) -> Column:
+    """Distinct character 3-grams of lower(col), as an array<string>.
 
     Pure Catalyst: transform over a sequence of start offsets.  Strings
-    shorter than n yield the whole string as a single shingle.
+    shorter than 3 yield the whole string as a single shingle.
     """
     c = F.lower(F.col(col) if isinstance(col, str) else col)
     ln = F.length(c)
     grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(ln - (n - 1), F.lit(1))),
-        lambda i: c.substr(i, F.lit(n)),
+        F.sequence(F.lit(1), F.greatest(ln - 2, F.lit(1))),
+        lambda i: c.substr(i, F.lit(3)),
     )
     return F.array_distinct(F.when(ln > 0, grams).otherwise(F.array().cast("array<string>")))
 
@@ -85,7 +85,7 @@ MINHASH_DOC_TYPE = T.StructType(
 )
 
 
-def make_shingle_band_udf(n: int = 3, k: int = 32, bands: int = 8):
+def make_shingle_band_udf(k: int = 32, bands: int = 8):
     """Arrow-batched twin of shingles + :func:`lsh_band_keys` in ONE
     per-doc pass: text → (sh, [(band, key)]).
 
@@ -130,11 +130,11 @@ def make_shingle_band_udf(n: int = 3, k: int = 32, bands: int = 8):
                 shs.append([])
                 bnds.append([])
                 continue
-            m = len(toks) - (n - 1)
+            m = len(toks) - 2
             if m < 1:
                 m = 1
             sh = list(dict.fromkeys(
-                " ".join(toks[i : i + n]) for i in range(m)
+                " ".join(toks[i : i + 3]) for i in range(m)
             ))
             enc = [s.encode("utf-8") for s in sh]
             mins = [
@@ -263,9 +263,6 @@ def link_exact(
 def link_fuzzy(
     unmatched: DataFrame,
     alias_df: DataFrame,
-    surface_col: str = "surface",
-    k: int = 32,
-    bands: int = 8,
     threshold: float = 0.5,
     mention_key: tuple[str, ...] = ("doc_id", "seg_id", "tok_begin"),
 ) -> DataFrame:
@@ -276,11 +273,11 @@ def link_fuzzy(
     mention side computes band keys via :func:`lsh_band_keys` (lanes as
     data — O(1) codegen, map-side-combined min; round-2 rewrite of the
     round-1 k-wide unrolled projection that thrashed the JIT code
-    cache).  rows = k//bands.
+    cache).  32 lanes in 8 bands of 4 rows.
     """
-    m_base = unmatched.withColumn("_sh", char_shingles(surface_col))
+    m_base = unmatched.withColumn("_sh", char_shingles("surface"))
     mb = lsh_band_keys(
-        m_base.select(*mention_key, "_sh"), "_sh", mention_key, k, bands
+        m_base.select(*mention_key, "_sh"), "_sh", mention_key, 32, 8
     ).select(*mention_key, F.col("band").alias("_band"), F.col("key").alias("_key"))
     # join band keys back onto the full mention rows (mention_key is the
     # unique mention identity — same key the top-1 window partitions on)
@@ -289,10 +286,7 @@ def link_fuzzy(
     a_base = alias_df.withColumn("_sh_a", char_shingles("alias"))
     ab = lsh_band_keys(
         a_base.select("alias", "_sh_a").dropDuplicates(["alias"]),
-        "_sh_a",
-        ["alias"],
-        k,
-        bands,
+        "_sh_a", ["alias"], 32, 8,
     ).select("alias", F.col("band").alias("_band"), F.col("key").alias("_key"))
     a = (
         a_base.join(ab, "alias")

@@ -228,16 +228,12 @@ def make_mention_udf(aliases: list[str]):
     return scan
 
 
-def detect_mentions(
-    df: DataFrame,
-    aliases: list[str],
-    text_col: str = "seg_text",
-) -> DataFrame:
+def detect_mentions(df: DataFrame, aliases: list[str]) -> DataFrame:
     """segments → mentions, one row per mention.  Narrow map; keeps the
-    lineage columns (every input column but ``text_col``)."""
+    lineage columns (every input column but ``seg_text``)."""
     udf = make_mention_udf(aliases)
-    out = df.withColumn("mentions", udf(F.col(text_col)))
-    keep = [c for c in df.columns if c != text_col]
+    out = df.withColumn("mentions", udf(F.col("seg_text")))
+    keep = [c for c in df.columns if c != "seg_text"]
     # explode_outer + filter: keep the pandas UDF out of JVM predicates
     # (InferFiltersFromGenerate pitfall — see kgc/segment.py).
     return (
@@ -259,7 +255,6 @@ def detect_mentions(
 def detect_mentions_ngram(
     df: DataFrame,
     alias_df: DataFrame,
-    text_col: str = "seg_text",
     id_cols: tuple[str, ...] = ("doc_id", "seg_id"),
     max_n: int = 4,
 ) -> DataFrame:
@@ -271,7 +266,7 @@ def detect_mentions_ngram(
     rows by max_n — acceptable for the oracle path; the UDF scanner is
     the 100 TB path.
     """
-    toks = norm_tokens(text_col)
+    toks = norm_tokens("seg_text")
     t = df.select(*id_cols, toks.alias("toks"))
     t = t.select(
         *id_cols,

@@ -35,11 +35,7 @@ from kgc.session import local_frame
 from kgc.textops import with_language
 
 
-def corpus_mix(
-    df: DataFrame,
-    text_col: str = "text",
-    n_buckets: int = 5,
-) -> DataFrame:
+def corpus_mix(df: DataFrame) -> DataFrame:
     """Corpus composition per (lang, q_bucket): doc/token counts, the
     stratum's share of all tokens, and the upsampling weight that would
     equalise token mass across languages.
@@ -59,11 +55,9 @@ def corpus_mix(
     """
     from kgc.textops import with_quality_features
 
-    feats = with_quality_features(
-        with_language(df.select(text_col), text_col), text_col
-    ).select(
+    feats = with_quality_features(with_language(df.select("text"))).select(
         "lang",
-        F.least(F.floor(F.col("score") * n_buckets), F.lit(n_buckets - 1))
+        F.least(F.floor(F.col("score") * 5), F.lit(4))
         .cast("int")
         .alias("q_bucket"),
         F.col("n_tokens").cast("bigint").alias("n_toks"),
@@ -114,10 +108,7 @@ def _hex_threshold(rate: float) -> str:
 
 def stratified_sample(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     rates: dict[str, float] | None = None,
-    default_rate: float = 1.0,
     salt: str = "strat",
 ) -> DataFrame:
     """Deterministic per-language sampling: keep a row iff the first 8
@@ -141,7 +132,7 @@ def stratified_sample(
     """
     rates = {} if rates is None else rates
     keyed = with_language(
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text")),
+        df.select("doc_id", F.col("text").alias("_text")),
         "_text",
     ).select(
         "doc_id",
@@ -159,18 +150,13 @@ def stratified_sample(
         keyed.join(F.broadcast(rates_df), "lang", "left")
         .filter(
             F.col("sample_key")
-            < F.coalesce(F.col("thr"), F.lit(_hex_threshold(default_rate)))
+            < F.coalesce(F.col("thr"), F.lit(_hex_threshold(1.0)))
         )
         .select("doc_id", "lang", "sample_key")
     )
 
 
-def source_caps(
-    docs: DataFrame,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    cap: int = 20,
-) -> DataFrame:
+def source_caps(docs: DataFrame, cap: int = 20) -> DataFrame:
     """Per-source document cap — the per-domain balancing step of
     web-corpus curation (FineWeb / Dolma keep at most K pages per
     registered domain so mega-sites cannot dominate the training mix).
@@ -187,11 +173,11 @@ def source_caps(
     the skew a plain window would concentrate on one reducer is capped
     at the source.
     """
-    w = Window.partitionBy(source_col).orderBy(
-        F.md5(F.col(id_col).cast("string")).asc(), F.col(id_col).asc()
+    w = Window.partitionBy("source").orderBy(
+        F.md5(F.col("doc_id").cast("string")).asc(), F.col("doc_id").asc()
     )
     return (
-        docs.select(F.col(id_col).alias("doc_id"), F.col(source_col).alias("source"))
+        docs.select("doc_id", "source")
         .withColumn("rk", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rk") <= cap)
     )

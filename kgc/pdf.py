@@ -49,6 +49,13 @@ class PdfUnsupportedError(ValueError):
     """Raised for PDF features outside the supported subset."""
 
 
+def _pdf_int(v, what: str) -> int:
+    """A resolved PDF number as an int; any other object is damage."""
+    if not isinstance(v, (int, float)):
+        raise PdfUnsupportedError(f"{what} is not a number")
+    return int(v)
+
+
 class Name(str):
     """A /Name token — distinct from bare operator keywords so the
     content-stream interpreter can tell `/F1` (operand) from `Tf`
@@ -695,8 +702,8 @@ class _Doc:
             raise PdfUnsupportedError(
                 f"encryption handler {self.resolve(e.get('Filter'))!r}"
             )
-        v = int(self.resolve(e.get("V", 0)) or 0)
-        r = int(self.resolve(e.get("R", 2)))
+        v = _pdf_int(self.resolve(e.get("V")) or 0, "/V")
+        r = _pdf_int(self.resolve(e.get("R", 2)), "/R")
         o = self.resolve(e.get("O"))
         u = self.resolve(e.get("U"))
         if not (isinstance(o, bytes) and isinstance(u, bytes)):
@@ -707,7 +714,9 @@ class _Doc:
         if v not in (1, 2, 4) or r not in (2, 3, 4):
             raise PdfUnsupportedError(f"encryption V={v} R={r} unsupported")
         self._crypt_mode = "rc4"
-        n = 5 if r == 2 else max(5, int(self.resolve(e.get("Length", 40))) // 8)
+        n = 5
+        if r != 2:
+            n = max(5, _pdf_int(self.resolve(e.get("Length", 40)), "/Length") // 8)
         if v == 4:
             # crypt filters: the default stream filter (/StmF) names an
             # entry of /CF whose /CFM picks the cipher
@@ -726,9 +735,11 @@ class _Doc:
                 self._crypt_mode, n = "aes128", 16
             elif cfm != "V2":
                 raise PdfUnsupportedError(f"crypt filter method {cfm!r}")
-        p = int(self.resolve(e.get("P", -1)))
+        p = _pdf_int(self.resolve(e.get("P", -1)), "/P")
         ids = self.resolve(self.trailer.get("ID"))
-        id0 = ids[0] if isinstance(ids, list) and ids else b""
+        id0 = self.resolve(ids[0]) if isinstance(ids, list) and ids else b""
+        if not isinstance(id0, bytes):
+            raise PdfUnsupportedError("malformed /ID entry")
         meta = self.resolve(e.get("EncryptMetadata", True))
         key = _std_file_key(b"", o, p, id0, r, n, encrypt_metadata=bool(meta))
         if not _check_user_pw(key, u, id0, min(r, 3)):
@@ -960,7 +971,7 @@ class _Doc:
             elif f in ("LZWDecode", "LZW"):
                 early = 1
                 if isinstance(p, dict) and p.get("EarlyChange") is not None:
-                    early = int(self.resolve(p["EarlyChange"]))
+                    early = _pdf_int(self.resolve(p["EarlyChange"]), "/EarlyChange")
                 out = _lzw_decode(out, early)
             elif f in ("ASCIIHexDecode", "AHx"):
                 out = _ahx_decode(out)
@@ -976,7 +987,7 @@ class _Doc:
                 raise PdfUnsupportedError(f"filter {f}")
             if isinstance(p, dict) and p.get("Predictor"):
                 def parm(key, default):
-                    return int(self.resolve(p.get(key, default)))
+                    return _pdf_int(self.resolve(p.get(key, default)), f"/{key}")
 
                 out = _unpredict(
                     out, parm("Predictor", 1), parm("Colors", 1),
@@ -1010,17 +1021,22 @@ class _Doc:
             raise PdfUnsupportedError("no /Catalog")
         out: list[dict] = []
 
-        def walk(node):
+        def walk(node, above: frozenset):
             node = self.resolve(node)
             if not isinstance(node, dict):
                 return
+            if id(node) in above:
+                raise PdfUnsupportedError("/Kids cycle in the page tree")
             if node.get("Type") == "Page":
                 out.append(node)
                 return
-            for kid in self.resolve(node.get("Kids", [])) or []:
-                walk(kid)
+            kids = self.resolve(node.get("Kids", [])) or []
+            if not isinstance(kids, list):
+                raise PdfUnsupportedError("malformed /Kids entry")
+            for kid in kids:
+                walk(kid, above | {id(node)})
 
-        walk(root.get("Pages"))
+        walk(root.get("Pages"), frozenset())
         return out
 
 
@@ -1190,7 +1206,9 @@ def _simple_decoder(encoding, differences=None) -> "callable":
 
 def _font_decoders(doc: _Doc, page: dict) -> dict[str, "callable"]:
     res = doc.resolve(page.get("Resources")) or {}
-    fonts = doc.resolve(res.get("Font")) or {}
+    fonts = (doc.resolve(res.get("Font")) or {}) if isinstance(res, dict) else None
+    if not isinstance(fonts, dict):
+        raise PdfUnsupportedError("malformed /Resources or /Font entry")
     out: dict[str, "callable"] = {}
     for name, fref in fonts.items():
         f = doc.resolve(fref)

@@ -150,11 +150,7 @@ def make_segment_udf(max_tokens: int = DEFAULT_MAX_TOKENS):
     return pack_spans
 
 
-def segment_documents(
-    df: DataFrame,
-    spans_col: str = "spans",
-    max_tokens: int = DEFAULT_MAX_TOKENS,
-) -> DataFrame:
+def segment_documents(df: DataFrame, max_tokens: int = DEFAULT_MAX_TOKENS) -> DataFrame:
     """documents(doc_id, spans) → segments(doc_id, seg_id, seg_text, ...).
 
     Narrow transformation (no shuffle): one Arrow batch per task.  Each
@@ -163,7 +159,7 @@ def segment_documents(
     (converter.go:527-531).
     """
     udf = make_segment_udf(max_tokens)
-    out = df.withColumn("segments", udf(F.col(spans_col)))
+    out = df.withColumn("segments", udf(F.col("spans")))
     out = out.withColumn("n_segs", F.size("segments"))
     # explode_outer, not explode: InferFiltersFromGenerate would inline the
     # pandas UDF into a JVM-side `size(pack_spans(..)) > 0` predicate, which
@@ -185,7 +181,7 @@ def segment_documents(
     return out
 
 
-def token_guard(df: DataFrame, max_tokens: int, text_col: str = "seg_text") -> DataFrame:
+def token_guard(df: DataFrame, max_tokens: int) -> DataFrame:
     """E6 token-limit guard (converter.go:487-503) as a routing column.
 
     Violations are quarantined (ok=false) instead of failing the job —
@@ -193,4 +189,4 @@ def token_guard(df: DataFrame, max_tokens: int, text_col: str = "seg_text") -> D
     """
     from kgc.tokenizer import count_tokens
 
-    return df.withColumn("ok", count_tokens(F.col(text_col)) <= F.lit(max_tokens))
+    return df.withColumn("ok", count_tokens(F.col("seg_text")) <= F.lit(max_tokens))

@@ -1,13 +1,14 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, same contract (query id → top-k neighbor ids by cosine):
+Two paths, same contract (query id → top-k neighbor ids by cosine,
+k = 5):
 
 * ``topk_bruteforce`` — exact baseline.  Pure Catalyst cosine over a
-  (queries × corpus) join; correct at any k, quadratic in corpus size.
+  (queries × corpus) join; quadratic in corpus size.
   At cluster scale you only ever run this INSIDE a blocking bucket.
 * ``topk_lsh`` — the scale path.  Random-hyperplane sketches bucket the
   corpus; a query probes its own bucket plus all buckets within
-  hamming ≤ r of its sketch (multi-probe), then exact cosine + window
+  hamming ≤ 1 of its sketch (multi-probe), then exact cosine + window
   top-k inside the probed set.  The corpus side shuffles once on the
   bucket key; probe fan-out is the explode of a tiny neighbor-mask
   array.
@@ -31,19 +32,11 @@ from kgc.dedup import cosine, hyperplane_signature
 from kgc.session import local_frame
 
 
-def topk_bruteforce(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    q_id: str = "vec_id",
-    q_vec: str = "embedding",
-    c_id: str = "vec_id",
-    c_vec: str = "embedding",
-) -> DataFrame:
+def topk_bruteforce(queries: DataFrame, corpus: DataFrame) -> DataFrame:
     """(query_id, neighbor_id, cosine, rank) — exact top-k, self-match
     excluded.  Tie-break on neighbor id (deterministic)."""
-    q = queries.select(F.col(q_id).alias("query_id"), F.col(q_vec).alias("qv"))
-    c = corpus.select(F.col(c_id).alias("neighbor_id"), F.col(c_vec).alias("cv"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"))
     scored = (
         q.crossJoin(F.broadcast(c))
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -58,46 +51,30 @@ def topk_bruteforce(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
     )
 
 
-def topk_lsh(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    planes: int = 12,
-    probe_hamming: int = 1,
-    q_id: str = "vec_id",
-    q_vec: str = "embedding",
-    c_id: str = "vec_id",
-    c_vec: str = "embedding",
-) -> DataFrame:
+def topk_lsh(queries: DataFrame, corpus: DataFrame, planes: int = 12) -> DataFrame:
     """Approximate top-k: hyperplane bucket + multi-probe.
 
-    Recall knob = planes (fewer → bigger buckets) × probe_hamming
-    (probe all buckets whose sketch differs in ≤ r bits: 1 + planes
-    buckets at r=1).  Candidates then exact-scored; output shape equals
+    Recall knob = planes (fewer → bigger buckets); each query probes
+    every bucket whose sketch differs in ≤ 1 bit (1 + planes buckets).
+    Candidates then exact-scored; output shape equals
     the brute-force contract so the two are drop-in interchangeable.
     """
     c = corpus.select(
-        F.col(c_id).alias("neighbor_id"),
-        F.col(c_vec).alias("cv"),
-        hyperplane_signature(F.col(c_vec), planes).alias("bucket"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cv"),
+        hyperplane_signature(F.col("embedding"), planes).alias("bucket"),
     )
     q = queries.select(
-        F.col(q_id).alias("query_id"),
-        F.col(q_vec).alias("qv"),
-        hyperplane_signature(F.col(q_vec), planes).alias("sig"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
+        hyperplane_signature(F.col("embedding"), planes).alias("sig"),
     )
-    # probe masks: sketch itself + each single-bit flip (r=1), etc.
-    masks = [0]
-    if probe_hamming >= 1:
-        masks += [1 << i for i in range(planes)]
-    if probe_hamming >= 2:
-        masks += [
-            (1 << i) | (1 << j) for i in range(planes) for j in range(i + 1, planes)
-        ]
+    # probe masks: sketch itself + each single-bit flip
+    masks = [0] + [1 << i for i in range(planes)]
     probes = F.array(*[F.lit(m).cast("bigint") for m in masks])
     qp = q.select(
         "query_id", "qv",
@@ -112,7 +89,7 @@ def topk_lsh(
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 5)
 
 
 def topk_bruteforce_pandas(
@@ -170,13 +147,7 @@ def topk_bruteforce_pandas(
     return q.mapInPandas(score, out_schema)
 
 
-def topk_blocked_pandas(
-    query_rows: list[tuple],
-    corpus: DataFrame,
-    k: int = 5,
-    c_id: str = "vec_id",
-    c_vec: str = "embedding",
-) -> DataFrame:
+def topk_blocked_pandas(query_rows: list[tuple], corpus: DataFrame) -> DataFrame:
     """Exact top-k with the broadcast side FLIPPED: the (small) query
     set ships to every executor; the (huge) corpus streams through
     mapInPandas in Arrow batches and never leaves its partitions.
@@ -217,7 +188,7 @@ def topk_blocked_pandas(
             for qi in range(S.shape[0]):
                 s, ids = S[qi], cids
                 mask = ids != bqids[qi]
-                order = np.lexsort((ids[mask], -s[mask]))[:k]
+                order = np.lexsort((ids[mask], -s[mask]))[:5]
                 yield pd.DataFrame(
                     {
                         "query_id": bqids[qi],
@@ -227,14 +198,14 @@ def topk_blocked_pandas(
                 )
 
     c = corpus.select(
-        F.col(c_id).cast("long").alias("neighbor_id"), F.col(c_vec).alias("cv")
+        F.col("vec_id").cast("long").alias("neighbor_id"), F.col("embedding").alias("cv")
     )
     partial = c.mapInPandas(partial_topk, out_schema)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
     return partial.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+        F.col("rank") <= 5
     )
 
 
@@ -243,8 +214,6 @@ def train_centroids(
     corpus: DataFrame,
     n_centroids: int = 16,
     iters: int = 3,
-    c_id: str = "vec_id",
-    c_vec: str = "embedding",
 ) -> list[tuple[int, list[float]]]:
     """Deterministic k-means coarse quantizer, pure DataFrame ops.
 
@@ -257,16 +226,16 @@ def train_centroids(
     reach the driver.  Means are rounded to 6 dp so assignment is
     stable across partial-aggregation orders.
     """
-    dim = len(corpus.select(c_vec).first()[0])
+    dim = len(corpus.select("embedding").first()[0])
     cents = [
-        (i, [round(float(x), 6) for x in r[c_vec]])
+        (i, [round(float(x), 6) for x in r["embedding"]])
         for i, r in enumerate(
-            corpus.select(c_vec).orderBy(F.col(c_id).asc()).limit(n_centroids).collect()
+            corpus.select("embedding").orderBy("vec_id").limit(n_centroids).collect()
         )
     ]
     spark = corpus.sparkSession
     for _ in range(iters):
-        assigned = _assign(corpus, _centroid_frame(spark, cents), c_id, c_vec)
+        assigned = _assign(corpus, _centroid_frame(spark, cents))
         means = (
             assigned.select("cid", F.posexplode(F.col("cv")).alias("dim", "x"))
             .groupBy("cid", "dim")
@@ -288,11 +257,9 @@ def _centroid_frame(spark, centroids: list[tuple[int, list[float]]]) -> DataFram
     )
 
 
-def _assign(corpus: DataFrame, cdf: DataFrame, c_id: str, c_vec: str) -> DataFrame:
+def _assign(corpus: DataFrame, cdf: DataFrame) -> DataFrame:
     """(cid, neighbor_id, cv): nearest centroid per vector by cosine."""
-    c = corpus.select(
-        F.col(c_id).alias("neighbor_id"), F.col(c_vec).alias("cv")
-    )
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"))
     scored = c.crossJoin(cdf).select(
         "neighbor_id", "cv", "cid",
         F.round(cosine(F.col("cv"), F.col("centroid")), 6).alias("sim"),
@@ -347,15 +314,9 @@ def topk_ivf(
     queries: DataFrame,
     corpus: DataFrame,
     centroids: list[tuple[int, list[float]]],
-    k: int = 5,
-    n_probe: int = 4,
-    q_id: str = "vec_id",
-    q_vec: str = "embedding",
-    c_id: str = "vec_id",
-    c_vec: str = "embedding",
 ) -> DataFrame:
     """IVF approximate top-k: the corpus shuffles ONCE onto its coarse
-    cell (inverted lists); each query probes its n_probe nearest cells
+    cell (inverted lists); each query probes its 4 nearest cells
     and exact-scores only those lists.  Same output contract as
     topk_bruteforce / topk_lsh (query_id, neighbor_id, cosine, rank).
 
@@ -365,8 +326,8 @@ def topk_ivf(
     blocked-before-pairwise posture as minhash/simhash dedup.
     """
     cdf = _centroid_frame(corpus.sparkSession, centroids)
-    lists = _assign(corpus, cdf, c_id, c_vec)
-    q = queries.select(F.col(q_id).alias("query_id"), F.col(q_vec).alias("qv"))
+    lists = _assign(corpus, cdf)
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
     qscored = q.crossJoin(cdf).select(
         "query_id", "qv", "cid",
         F.round(cosine(F.col("qv"), F.col("centroid")), 6).alias("sim"),
@@ -376,7 +337,7 @@ def topk_ivf(
     )
     probes = (
         qscored.withColumn("r", F.row_number().over(wq))
-        .filter(F.col("r") <= n_probe)
+        .filter(F.col("r") <= 4)
         .select("query_id", "qv", "cid")
     )
     cand = probes.join(lists, "cid").filter(
@@ -389,26 +350,23 @@ def topk_ivf(
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 5)
 
 
 def semantic_dedup(
     corpus: DataFrame,
     centroids: list[tuple[int, list[float]]],
-    c_id: str = "vec_id",
-    c_vec: str = "embedding",
-    tau: float = 0.95,
     max_cell_factor: float | None = 16.0,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): k-means-cluster
     the embedding space, then within each cluster drop every vector
-    that has a LOWER-id in-cluster neighbor with cosine ≥ ``tau`` —
+    that has a LOWER-id in-cluster neighbor with cosine ≥ 0.95 —
     semantic near-duplicates that survive lexical dedup (paraphrases,
     templated rewrites).  The lowest id of each near-dup set is the
     deterministic survivor (greedy-by-id, the SemDeDup keep-one rule
     with a reproducible tie-break).
 
-    Output: (c_id, cid, kept boolean) for EVERY corpus vector.
+    Output: (vec_id, cid, kept boolean) for EVERY corpus vector.
 
     Scale shape: identical blocking to ``topk_ivf`` — centroids ride
     as broadcast DATA, assignment is one window argmax, and nothing
@@ -428,7 +386,7 @@ def semantic_dedup(
     # sf0.1).  dot/(na·nb) with per-vector na is the identical float
     # expression the DuckDB twin evaluates (_sql_dot_norms/_SQL_COSINE).
     assigned = (
-        _assign(corpus, cdf, c_id, c_vec)
+        _assign(corpus, cdf)
         .withColumn(
             "nv",
             F.sqrt(
@@ -467,14 +425,14 @@ def semantic_dedup(
             (F.col("a.cid") == F.col("b.cid"))
             & (F.col("a.neighbor_id") < F.col("b.neighbor_id")),
         )
-        .filter(F.round(cos, 6) >= tau)
+        .filter(F.round(cos, 6) >= 0.95)
         .select(F.col("b.neighbor_id").alias("_dropped"))
         .distinct()
     )
     out = (
         assigned.join(dropped, assigned.neighbor_id == dropped._dropped, "left")
         .select(
-            F.col("neighbor_id").alias(c_id),
+            F.col("neighbor_id").alias("vec_id"),
             "cid",
             F.col("_dropped").isNull().alias("kept"),
         )

@@ -94,13 +94,11 @@ def stream_documents(
 def stream_event_rollup(
     spark: SparkSession,
     path: str,
-    window: str = "1 hour",
-    slide: str | None = None,
-    watermark: str = "2 hours",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Watermarked windowed aggregation (the streaming twin of the batch
-    events_rollup query).  Late events beyond the watermark are dropped
+    events_rollup query): 1-hour tumbling windows under a 2-hour
+    watermark.  Late events beyond the watermark are dropped
     deterministically; state size is bounded by watermark horizon ×
     event-type cardinality.  max_files_per_trigger splits a finite drain
     into multiple micro-batches so the watermark actually advances
@@ -109,9 +107,9 @@ def stream_event_rollup(
     if max_files_per_trigger is not None:
         rd = rd.option("maxFilesPerTrigger", max_files_per_trigger)
     src = rd.parquet(path)
-    w = F.window(F.col("ts"), window, slide or window)
+    w = F.window(F.col("ts"), "1 hour", "1 hour")
     return (
-        src.withWatermark("ts", watermark)
+        src.withWatermark("ts", "2 hours")
         .groupBy(F.col("event_type"), w.alias("win"))
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -253,7 +251,7 @@ def stream_exact_dedup(
 
 
 def run_available_now(
-    df: DataFrame, name: str, timeout_sec: int = 300, output_mode: str = "append"
+    df: DataFrame, name: str, output_mode: str = "append"
 ) -> DataFrame:
     """Drain a streaming DF into a memory sink with availableNow.
 
@@ -278,7 +276,7 @@ def run_available_now(
     # available, every input batch is committed.
     import time
 
-    deadline = time.time() + timeout_sec
+    deadline = time.time() + 300
     stable = 0
     while q.isActive and time.time() < deadline:
         st = q.status
@@ -303,11 +301,7 @@ def run_available_now(
     return df.sparkSession.sql(f"SELECT * FROM {name}")
 
 
-def stream_entity_link(
-    docs: DataFrame,
-    alias_df: DataFrame,
-    text_col: str = "seg_text",
-) -> DataFrame:
+def stream_entity_link(docs: DataFrame, alias_df: DataFrame) -> DataFrame:
     """Streaming twin of the batch mention→link path
     (kgc.mentions.detect_mentions_ngram + kgc.link.link_exact): the
     n-gram scan and the broadcast dictionary join are stateless and run
@@ -325,14 +319,11 @@ def stream_entity_link(
     result must equal the batch link table bit-exactly (the driver
     checks it against the SAME DuckDB oracle as entity_triples).
     """
+    from kgc.link import exact_score
     from kgc.mentions import detect_mentions_ngram
 
-    m = detect_mentions_ngram(docs, alias_df, text_col=text_col,
-                              id_cols=("doc_id",), max_n=2)
-    scored = m.withColumn(
-        "score",
-        F.col("weight") * (F.lit(1.0) + F.lit(0.1) * (F.col("n_toks") - 1)),
-    )
+    m = detect_mentions_ngram(docs, alias_df, id_cols=("doc_id",), max_n=2)
+    scored = m.withColumn("score", exact_score())
     pick = scored.groupBy("doc_id", "tok_begin", "n_toks").agg(
         F.min_by(
             F.struct("alias", "entity_id", "entity_type", "score"),
@@ -347,11 +338,7 @@ def stream_incremental_neardup(
     corpus_df: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    shingle_n: int = 3,
-    k: int = 16,
-    bands: int = 4,
     threshold: float = 0.5,
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """Streaming ingest-time near-dup: micro-batches of NEW documents
     probe the prebuilt static corpus LSH band index
@@ -377,15 +364,10 @@ def stream_incremental_neardup(
     from kgc.dedup import build_band_index, probe_band_index
 
     spark = new_docs.sparkSession
-    index = build_band_index(
-        corpus_df, shingle_n=shingle_n, k=k, bands=bands
-    )
+    index = build_band_index(corpus_df)
 
     def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = probe_band_index(
-            batch_df, index, shingle_n=shingle_n, k=k,
-            bands=bands, threshold=threshold,
-        )
+        out = probe_band_index(batch_df, index, threshold=threshold)
         (
             out.withColumn("ingest_batch", F.lit(batch_id))
             .write.mode("overwrite")
@@ -403,7 +385,7 @@ def stream_incremental_neardup(
         .start()
     )
     try:
-        q.awaitTermination(timeout_sec)
+        q.awaitTermination(300)
     finally:
         q.stop()
     for df in index:

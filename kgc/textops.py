@@ -99,7 +99,7 @@ def with_language(df, text_col: str = "text", out_col: str = "lang"):
     )
 
 
-def with_quality_features(df, text_col: str = "text"):
+def with_quality_features(df):
     """Quality scoring: ``df`` plus RAW feature columns (n_chars,
     n_tokens, punct_ratio, upper_ratio, uniq_token_ratio,
     mean_token_len, stopword_ratio_en — unrounded; round at the output
@@ -110,7 +110,7 @@ def with_quality_features(df, text_col: str = "text"):
     Tokens ride once as an attribute, then the score reads the feature
     ATTRIBUTES.
     """
-    c = F.col(text_col)
+    c = F.col("text")
     t = df.withColumn("_q_toks", norm_tokens(c))
     toks = F.col("_q_toks")
     n_toks = F.size(toks)
@@ -156,18 +156,12 @@ def with_quality_features(df, text_col: str = "text"):
     return r.withColumn("score", F.round(raw, 6)).drop("_q_toks")
 
 
-def with_fingerprint(
-    df,
-    text_col: str = "text",
-    out_col: str = "fp",
-    shingle_n: int = 3,
-    k: int = 4,
-):
-    """Document fingerprint: ``df`` plus an ``out_col`` column, the
-    bottom-k sketch over token-shingle md5s.
+def with_fingerprint(df):
+    """Document fingerprint: ``df`` plus an ``fp`` column, the
+    bottom-4 sketch over token-shingle md5s.
 
-    Sort the md5 hashes of all word n-gram shingles, concatenate the k
-    smallest — a compact, containment-stable document signature
+    Sort the md5 hashes of all word 3-gram shingles of ``text``,
+    concatenate the 4 smallest — a compact, containment-stable document signature
     (winnowing-family).  Identical text → identical fingerprint;
     engine-portable via md5; a document with no token has no shingle
     and a NULL fingerprint.  Tokens and shingles are materialised as
@@ -177,11 +171,11 @@ def with_fingerprint(
     """
     from kgc.link import shingles_from_tokens
 
-    t = df.withColumn("_fp_toks", norm_tokens(text_col))
-    s = t.withColumn("_fp_sh", shingles_from_tokens(F.col("_fp_toks"), shingle_n))
+    t = df.withColumn("_fp_toks", norm_tokens("text"))
+    s = t.withColumn("_fp_sh", shingles_from_tokens(F.col("_fp_toks"), 3))
     hashes = F.array_sort(F.transform(F.col("_fp_sh"), lambda x: F.md5(x)))
-    fp = F.array_join(F.slice(hashes, 1, k), "")
-    return s.withColumn(out_col, F.when(F.size("_fp_sh") > 0, fp)).drop(
+    fp = F.array_join(F.slice(hashes, 1, 4), "")
+    return s.withColumn("fp", F.when(F.size("_fp_sh") > 0, fp)).drop(
         "_fp_toks", "_fp_sh"
     )
 
@@ -215,22 +209,15 @@ def _full_grams(toks: Column, w: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def ngram_repetition(
-    df,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_w: int = 2,
-    dup_w: int = 3,
-    top_frac_max: float = 0.2,
-    dup_frac_max: float = 0.3,
-):
+def ngram_repetition(df):
     """Gopher-style repetition filter signals per doc:
 
     (doc_id, top_ngram_frac, dup_ngram_frac, repetitive) where
-    top_ngram_frac = occurrences of the most frequent ``top_w``-gram /
-    total ``top_w``-grams, dup_ngram_frac = fraction of ``dup_w``-gram
+    top_ngram_frac = occurrences of the most frequent 2-gram /
+    total 2-grams, dup_ngram_frac = fraction of 3-gram
     occurrences that belong to a gram seen more than once, and
-    ``repetitive`` flags docs over either threshold (Rae et al. 2021,
+    ``repetitive`` flags docs with top_ngram_frac > 0.2 or
+    dup_ngram_frac > 0.3 (Rae et al. 2021,
     "Scaling Language Models" §A1.1 uses the same family of signals;
     thresholds are corpus policy).
 
@@ -245,11 +232,7 @@ def ngram_repetition(
     doc_id shuffle when the corpus-sized metric table can't broadcast;
     either way the heavy text column doesn't ride it).
     """
-    if top_w == dup_w:
-        raise ValueError("top_w and dup_w must differ (width tags the gram rows)")
-    toks = df.select(
-        F.col(id_col).alias("doc_id"), norm_tokens(text_col).alias("_toks")
-    )
+    toks = df.select("doc_id", norm_tokens("text").alias("_toks"))
 
     def tagged(w: int) -> Column:
         return F.transform(
@@ -259,11 +242,11 @@ def ngram_repetition(
 
     grams = toks.select(
         "doc_id",
-        F.explode(F.concat(tagged(top_w), tagged(dup_w))).alias("x"),
+        F.explode(F.concat(tagged(2), tagged(3))).alias("x"),
     ).select("doc_id", F.col("x.w").alias("w"), F.col("x.g").alias("g"))
     counts = grams.groupBy("doc_id", "w", "g").agg(F.count(F.lit(1)).alias("c"))
-    is_top = F.col("w") == top_w
-    is_dup = F.col("w") == dup_w
+    is_top = F.col("w") == 2
+    is_dup = F.col("w") == 3
     per_doc = counts.groupBy("doc_id").agg(
         F.round(
             F.max(F.when(is_top, F.col("c"))).cast("double")
@@ -276,9 +259,9 @@ def ngram_repetition(
             6,
         ).alias("dup_ngram_frac"),
     )
-    base = df.select(F.col(id_col).alias("doc_id"))
     return (
-        base.join(per_doc, "doc_id", "left")
+        df.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
             "doc_id",
             F.coalesce("top_ngram_frac", F.lit(0.0)).alias("top_ngram_frac"),
@@ -286,19 +269,13 @@ def ngram_repetition(
         )
         .withColumn(
             "repetitive",
-            (F.col("top_ngram_frac") > top_frac_max)
-            | (F.col("dup_ngram_frac") > dup_frac_max),
+            (F.col("top_ngram_frac") > 0.2) | (F.col("dup_ngram_frac") > 0.3),
         )
     )
 
 
 # ------------------------------------------------------------- tf-idf -----
-def tfidf_top_terms(
-    df,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-):
+def tfidf_top_terms(df, k: int = 5):
     """Per-document top-k TF-IDF terms: (doc_id, term, tf, df, tfidf, rk).
 
     tfidf = tf · ln((N+1)/(df+1)), rounded to 6 places BEFORE ranking so
@@ -315,7 +292,7 @@ def tfidf_top_terms(
     """
     from pyspark.sql import Window
 
-    d = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))
+    d = df.select("doc_id", F.col("text").alias("_text"))
     tf = (
         d.select("doc_id", F.explode(norm_tokens("_text")).alias("term"))
         .groupBy("doc_id", "term")
@@ -369,7 +346,7 @@ def _tag_kind(kind: str):
     return lambda h: F.struct(F.lit(kind).alias("kind"), h.alias("hit"))
 
 
-def pii_hits(df, text_col: str = "text", id_col: str = "doc_id"):
+def pii_hits(df):
     """(doc_id, kind, hit) — one row per PII match in the document.
 
     Single pass over the text: all patterns are extracted in ONE
@@ -380,30 +357,30 @@ def pii_hits(df, text_col: str = "text", id_col: str = "doc_id"):
     """
     per_kind = [
         F.transform(
-            F.regexp_extract_all(F.col(text_col), F.lit(pat), 0),
+            F.regexp_extract_all(F.col("text"), F.lit(pat), 0),
             _tag_kind(kind),
         )
         for kind, pat in PII_PATTERNS.items()
     ]
     return df.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.explode(F.flatten(F.array(*per_kind))).alias("m"),
     ).select("doc_id", F.col("m.kind").alias("kind"), F.col("m.hit").alias("hit"))
 
 
-def pii_redact(df, text_col: str = "text", out_col: str = "redacted"):
+def pii_redact(df):
     """Replace every PII match with its <KIND> placeholder — the
     masking pass a training-data pipeline runs before tokenization.
     Chained regexp_replace in PII_PATTERNS order (email → ipv4 →
     phone); one projection, codegen'd, zero shuffles."""
-    c = F.col(text_col)
+    c = F.col("text")
     for kind, pat in PII_PATTERNS.items():
         c = F.regexp_replace(c, pat, f"<{kind.upper()}>")
-    return df.withColumn(out_col, c)
+    return df.withColumn("redacted", c)
 
 
 # --------------------------------------------------------- bigram LM -----
-def bigram_lm_scores(df, text_col: str = "text", id_col: str = "doc_id"):
+def bigram_lm_scores(df):
     """CCNet-style LM quality signal: an add-one-smoothed bigram
     language model trained on the corpus itself, then every document
     scored by its average bigram log-probability — low scores flag
@@ -426,9 +403,7 @@ def bigram_lm_scores(df, text_col: str = "text", id_col: str = "doc_id"):
     cheaper path when the model must stay small.  Docs with < 2 tokens
     have no bigram and are omitted.
     """
-    d = df.select(
-        F.col(id_col).alias("doc_id"), norm_tokens(text_col).alias("_toks")
-    )
+    d = df.select("doc_id", norm_tokens("text").alias("_toks"))
     bg = d.select("doc_id", F.explode(_full_grams(F.col("_toks"), 2)).alias("g"))
     c12 = bg.groupBy("g").agg(F.count(F.lit(1)).alias("c12"))
     w1 = F.split(F.col("g"), " ").getItem(0)

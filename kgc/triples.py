@@ -146,18 +146,12 @@ def _nonempty(c: Column) -> Column:
     return c.isNotNull() & (c != "")
 
 
-def props_to_triples(
-    df: DataFrame,
-    doc_col: str = "doc_id",
-    seg_col: str = "seg_id",
-    main_type_col: str = "main_type",
-    props_col: str = "props",
-) -> DataFrame:
+def props_to_triples(df: DataFrame) -> DataFrame:
     """segments(doc_id, seg_id, main_type, props:PROPS_SCHEMA)
        → triples(doc_id, seg_id, subj, pred, obj, obj_type)."""
-    doc = F.col(doc_col)
-    seg = F.col(seg_col).cast("int")
-    P = F.col(props_col)
+    doc = F.col("doc_id")
+    seg = F.col("seg_id").cast("int")
+    P = F.col("props")
     subj = F.concat(_S("seg:"), doc, _S("#"), seg.cast("string"))
     empty = F.array().cast(f"array<{TRIPLE_STRUCT}>")
 
@@ -321,7 +315,7 @@ def props_to_triples(
     )
 
     all_triples = F.concat(
-        _opt(F.col(main_type_col).isNotNull(), _triple(subj, "@type", F.col(main_type_col))),
+        _opt(F.col("main_type").isNotNull(), _triple(subj, "@type", F.col("main_type"))),
         lit_prop("abstract", P["abstract"]),
         lit_prop("description", P["description"]),
         lit_prop("genre", P["genre"]),
@@ -374,9 +368,9 @@ def dedup_triples(df: DataFrame) -> DataFrame:
     )
 
 
-def parse_props_json(df: DataFrame, json_col: str = "props_json") -> DataFrame:
+def parse_props_json(df: DataFrame) -> DataFrame:
     """Extraction-store JSON → typed props struct (permissive)."""
-    return df.withColumn("props", F.from_json(F.col(json_col), PROPS_SCHEMA))
+    return df.withColumn("props", F.from_json(F.col("props_json"), PROPS_SCHEMA))
 
 
 # ------------------------------------------------------------- rendering ---
@@ -681,9 +675,7 @@ def flatten_jsonld_node(doc_id: str, seg_id: int, node: dict) -> list:
     return rows
 
 
-def from_jsonld(
-    docs: DataFrame, doc_col: str = "doc_id", json_col: str = "jsonld"
-) -> DataFrame:
+def from_jsonld(docs: DataFrame) -> DataFrame:
     """JSON-LD ingestion — the inverse of render_jsonld_nested, and the
     migration source for a reference user's EXISTING corpus: the Go CLI
     emitted one `{"@context": "https://schema.org", "@graph": [...]}`
@@ -735,7 +727,7 @@ def from_jsonld(
     def _parse(batches):
         for pdf in batches:
             rows = []
-            for did, txt in zip(pdf[doc_col], pdf[json_col]):
+            for did, txt in zip(pdf["doc_id"], pdf["jsonld"]):
                 try:
                     data = _json.loads(txt)
                 except (ValueError, TypeError):
@@ -755,7 +747,7 @@ def from_jsonld(
             yield pd.DataFrame(rows, columns=cols)
 
     return docs.select(
-        F.col(doc_col).cast("string").alias(doc_col), json_col
+        F.col("doc_id").cast("string").alias("doc_id"), "jsonld"
     ).mapInPandas(_parse, out_schema)
 
 
@@ -887,30 +879,26 @@ def _nt_unescape(c: Column) -> Column:
     return F.array_join(F.transform(F.split(c, r"\\\\", -1), piece), "\\")
 
 
-def to_ntriples(
-    triples: DataFrame,
-    node_ns: str = _NT_NODE_NS,
-    pred_ns: str = _NT_PRED_NS,
-) -> DataFrame:
+def to_ntriples(triples: DataFrame) -> DataFrame:
     """Serialize (subj, pred, obj, obj_type) → one N-Triples line per
     row, column ``nt``.  Mapping (documented, deterministic):
 
-      * subjects are always nodes → ``<{node_ns}{subj}>``
+      * subjects are always nodes → ``<{_NT_NODE_NS}{subj}>``
       * pred ``@type`` → the rdf:type IRI; every other predicate is a
-        schema.org term → ``<{pred_ns}{pred}>``
-      * obj_type 'node' → ``<{node_ns}{obj}>``; otherwise a quoted
+        schema.org term → ``<{_NT_PRED_NS}{pred}>``
+      * obj_type 'node' → ``<{_NT_NODE_NS}{obj}>``; otherwise a quoted
         STRING_LITERAL_QUOTE with grammar-exact escaping.
 
     ``df.write.text(path)`` on the result is the bulk sink (one .nt
     shard per partition — the splittable load format triple stores
     expect).  Round-trips bit-exactly through from_ntriples (pytest)."""
-    subj = F.concat(F.lit("<" + node_ns), F.col("subj"), F.lit(">"))
+    subj = F.concat(F.lit("<" + _NT_NODE_NS), F.col("subj"), F.lit(">"))
     pred = F.when(
         F.col("pred") == "@type", F.lit("<" + _RDF_TYPE_IRI + ">")
-    ).otherwise(F.concat(F.lit("<" + pred_ns), F.col("pred"), F.lit(">")))
+    ).otherwise(F.concat(F.lit("<" + _NT_PRED_NS), F.col("pred"), F.lit(">")))
     obj = F.when(
         F.col("obj_type") == "node",
-        F.concat(F.lit("<" + node_ns), F.col("obj"), F.lit(">")),
+        F.concat(F.lit("<" + _NT_NODE_NS), F.col("obj"), F.lit(">")),
     ).otherwise(F.concat(F.lit('"'), _nt_escape(F.col("obj")), F.lit('"')))
     return triples.select(
         F.concat_ws(" ", subj, pred, obj, F.lit(".")).alias("nt")

@@ -258,9 +258,7 @@ def lookup_properties(df: DataFrame, props_df: DataFrame, name_col: str) -> Data
     ).drop("_k")
 
 
-def suggest_properties(
-    segments: DataFrame, props_df: DataFrame, text_col: str = "seg_text"
-) -> DataFrame:
+def suggest_properties(segments: DataFrame, props_df: DataFrame) -> DataFrame:
     """V3 SuggestProperties (schema.go:165-183): keep properties whose
     lowercased label occurs in the lowercased content — a substring
     theta-join, executed as broadcast nested loop (props side is tiny).
@@ -271,13 +269,11 @@ def suggest_properties(
     """
     p = F.broadcast(props_df.select("prop_id", "label"))
     return segments.crossJoin(p).filter(
-        F.contains(F.lower(F.col(text_col)), F.lower(F.col("label")))
+        F.contains(F.lower(F.col("seg_text")), F.lower(F.col("label")))
     )
 
 
-def suggest_properties_prejoin(
-    segments: DataFrame, props_df: DataFrame, text_col: str = "seg_text"
-) -> DataFrame:
+def suggest_properties_prejoin(segments: DataFrame, props_df: DataFrame) -> DataFrame:
     """V3 at beyond-broadcast dictionary sizes: the token-prejoin.
 
     Plan shape: segments explode to DISTINCT lowercased word tokens
@@ -304,7 +300,7 @@ def suggest_properties_prejoin(
     toks = segments.withColumn(
         "_tok",
         F.explode(
-            F.array_distinct(norm_tokens(text_col))
+            F.array_distinct(norm_tokens("seg_text"))
         ),
     )
     p = props_df.select(
@@ -315,19 +311,19 @@ def suggest_properties_prejoin(
     ).filter(F.col("_tok") != "")
     return (
         toks.join(p, "_tok")
-        .filter(F.contains(F.lower(F.col(text_col)), F.lower(F.col("label"))))
+        .filter(F.contains(F.lower(F.col("seg_text")), F.lower(F.col("label"))))
         .select(*seg_cols, "prop_id", "label")
     )
 
 
-def type_ancestors(types_df: DataFrame, max_depth: int = 12) -> DataFrame:
+def type_ancestors(types_df: DataFrame) -> DataFrame:
     """(type_id, ancestor_id) — reflexive-transitive closure of
     subclass_of.  The type hierarchy is a broadcast-sized DIMENSION
     (~900 rows for the full schema.org dump, fixed regardless of
     corpus scale), so the closure is computed driver-side in one
     collect and shipped back as a ~5k-row DataFrame that use sites
     broadcast — the fact table never joins it more than once.
-    ``max_depth`` bounds cycle-safe chain walking (schema.org's tree
+    A depth cap of 12 bounds cycle-safe chain walking (schema.org's tree
     is ≤~10 deep)."""
     parent = {
         r["type_id"]: r["subclass_of"]
@@ -336,7 +332,7 @@ def type_ancestors(types_df: DataFrame, max_depth: int = 12) -> DataFrame:
     rows = []
     for t in parent:
         a, depth = t, 0
-        while a is not None and depth <= max_depth:
+        while a is not None and depth <= 12:
             rows.append((t, a))
             a = parent.get(a)
             depth += 1
@@ -347,8 +343,6 @@ def suggest_properties_domain(
     segments: DataFrame,
     props_df: DataFrame,
     types_df: DataFrame,
-    text_col: str = "seg_text",
-    type_col: str = "main_type",
 ) -> DataFrame:
     """Domain-validated V3 (VERDICT r2 'Next round' #5): keep a
     suggestion only when the property's domainIncludes intersects the
@@ -366,14 +360,14 @@ def suggest_properties_domain(
     base = segments.withColumn(
         "_type_iri",
         F.when(
-            F.col(type_col).startswith(SCHEMA_NS), F.col(type_col)
-        ).otherwise(F.concat(F.lit(SCHEMA_NS), F.col(type_col))),
+            F.col("main_type").startswith(SCHEMA_NS), F.col("main_type")
+        ).otherwise(F.concat(F.lit(SCHEMA_NS), F.col("main_type"))),
     )
     p = F.broadcast(
         props_df.select("prop_id", "label", F.explode("domains").alias("_dom"))
     )
     hits = base.crossJoin(p).filter(
-        F.contains(F.lower(F.col(text_col)), F.lower(F.col("label")))
+        F.contains(F.lower(F.col("seg_text")), F.lower(F.col("label")))
     )
     valid = hits.join(
         F.broadcast(anc),

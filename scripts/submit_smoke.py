@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Cluster launch-path smoke: run the KG chain with kgc imported from
-the --py-files zip only (repo cwd stripped from sys.path).
+"""Cluster launch-path smoke: run the KG pipeline with kgc imported from
+the --py-files zip only (the checkout root stripped from sys.path).
 
     scripts/package.sh && spark-submit --master 'local[8]' \
         --py-files dist/kgc.zip --conf spark.sql.shuffle.partitions=16 \
@@ -14,27 +14,23 @@ the session here is whatever spark-submit built.
 """
 
 import json
+import os
 import sys
 
-# kgc must come from the --py-files zip, not the repo checkout
-sys.path = [p for p in sys.path if p not in ("", "/root/repo")]
+# kgc must come from the --py-files zip, not the checkout
+_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path = [p for p in sys.path if p not in ("", _root)]
 
-from pyspark.sql import SparkSession, functions as F  # noqa: E402
+from pyspark.sql import SparkSession  # noqa: E402
 
 spark = SparkSession.builder.getOrCreate()
 
 import kgc  # noqa: E402
-from kgc import synth  # noqa: E402
-from kgc.link import link_exact  # noqa: E402
-from kgc.mentions import detect_mentions  # noqa: E402
-from kgc.pipeline import entity_triples  # noqa: E402
-from kgc.segment import segment_documents  # noqa: E402
+from kgc import pipeline, synth  # noqa: E402
 
 assert "kgc.zip" in kgc.__file__, f"kgc not loaded from zip: {kgc.__file__}"
 
 docs = synth.generate_documents(spark, n_docs=2000, n_parts=8)
-alias_df = synth.alias_dict_df(spark)
-segs = segment_documents(docs, max_tokens=60)
-men = detect_mentions(segs, [a for a, *_ in synth.ALIASES], text_col="seg_text")
-linked = link_exact(men, alias_df).withColumn("canonical_id", F.col("entity_id"))
-print(json.dumps({"kgc_from": kgc.__file__, "triples": entity_triples(linked).count()}))
+stages = pipeline.run(spark, docs, max_tokens=60)
+print(json.dumps({"kgc_from": kgc.__file__, "triples": stages["triples"].count()}))
+pipeline.release(stages)

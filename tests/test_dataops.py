@@ -41,7 +41,7 @@ def test_shingle_udf_equals_catalyst_twin(spark, docs):
         "doc_id", norm_tokens("text").alias("_t")
     ).select("doc_id", shingles_from_tokens(F.col("_t"), 3).alias("sh"))
     udf = d.select(
-        "doc_id", make_shingle_band_udf(3, 16, 4)(F.col("text")).alias("_mh")
+        "doc_id", make_shingle_band_udf(16, 4)(F.col("text")).alias("_mh")
     )
     a = {r["doc_id"]: r["sh"] for r in cat.collect()}
     b = {r["doc_id"]: r["_mh"]["sh"] for r in udf.collect()}
@@ -65,7 +65,7 @@ def test_shingle_band_udf_equals_lsh_band_keys(spark, docs):
     ref = {(r["doc_id"], r["band"], r["key"])
            for r in lsh_band_keys(sh, "sh", ["doc_id"], k=16, bands=4).collect()}
     mh = d.select(
-        "doc_id", make_shingle_band_udf(3, 16, 4)(F.col("text")).alias("_mh")
+        "doc_id", make_shingle_band_udf(16, 4)(F.col("text")).alias("_mh")
     ).collect()
     got = {(r["doc_id"], b["band"], b["key"])
            for r in mh for b in r["_mh"]["bands"]}
@@ -172,7 +172,7 @@ def test_embedding_neardup_exact_copies(spark, emb):
             (F.col("vec_id") + 9000).alias("vec_id"), "embedding"
         )
     )
-    pairs = dedup.embedding_near_duplicates(aug, threshold=0.99).collect()
+    pairs = dedup.embedding_near_duplicates(aug).collect()
     found = {(r["a"], r["b"]) for r in pairs}
     assert {(i, i + 9000) for i in range(5)} <= found
 
@@ -238,8 +238,8 @@ def test_lsh_ann_recall_vs_bruteforce(spark):
             rows.append((c * 100 + m, v))
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = corpus.filter(F.col("vec_id") % 100 == 0)
-    exact = simsearch.topk_bruteforce(q, corpus, k=5)
-    approx = simsearch.topk_lsh(q, corpus, k=5, planes=8, probe_hamming=1)
+    exact = simsearch.topk_bruteforce(q, corpus)
+    approx = simsearch.topk_lsh(q, corpus, planes=8)
     e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     recall = len(e & a) / len(e)
@@ -252,7 +252,7 @@ def test_lsh_ann_recall_vs_bruteforce(spark):
 
 def test_pandas_ann_matches_catalyst(spark, emb):
     q = emb.filter(F.col("vec_id") < 10)
-    exact = simsearch.topk_bruteforce(q, emb, k=5)
+    exact = simsearch.topk_bruteforce(q, emb)
     corpus = [(r["vec_id"], list(r["embedding"])) for r in emb.collect()]
     pnd = simsearch.topk_bruteforce_pandas(q, corpus, k=5)
     e = sorted((r["query_id"], r["neighbor_id"], r["rank"]) for r in exact.collect())
@@ -269,9 +269,9 @@ def test_blocked_ann_matches_catalyst(spark, emb):
         (r["vec_id"], list(r["embedding"]))
         for r in emb.filter(F.col("vec_id") < 10).collect()
     ]
-    blocked = simsearch.topk_blocked_pandas(q_rows, emb.repartition(7), k=5)
+    blocked = simsearch.topk_blocked_pandas(q_rows, emb.repartition(7))
     exact = simsearch.topk_bruteforce(
-        emb.filter(F.col("vec_id") < 10), emb, k=5
+        emb.filter(F.col("vec_id") < 10), emb
     )
     e = sorted(
         (r["query_id"], r["neighbor_id"], r["cosine"], r["rank"])
@@ -285,7 +285,7 @@ def test_blocked_ann_matches_catalyst(spark, emb):
 
 
 def test_ivf_ann_recall_vs_bruteforce(spark):
-    """IVF (k-means cells + n_probe lists): on a planted-cluster corpus
+    """IVF (k-means cells, 4 probed lists): on a planted-cluster corpus
     the quantizer recovers the clusters, so probing the top cells finds
     essentially all true neighbors."""
     import math
@@ -305,13 +305,13 @@ def test_ivf_ann_recall_vs_bruteforce(spark):
     q = corpus.filter(F.col("vec_id") % 100 == 0)
     cents = simsearch.train_centroids(corpus, n_centroids=10, iters=3)
     assert len(cents) == 10 and all(len(v) == dim for _, v in cents)
-    exact = simsearch.topk_bruteforce(q, corpus, k=5)
-    approx = simsearch.topk_ivf(q, corpus, cents, k=5, n_probe=2)
+    exact = simsearch.topk_bruteforce(q, corpus)
+    approx = simsearch.topk_ivf(q, corpus, cents)
     e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     recall = len(e & a) / len(e)
     # a cluster's members land in the same cell (intra-cluster cosine
-    # ~0.99 vs ~0 across clusters); probing 2 cells out of 10 must
+    # ~0.99 vs ~0 across clusters); probing 4 cells out of 10 must
     # recover nearly every within-cluster neighbor
     assert recall >= 0.9, recall
 

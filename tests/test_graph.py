@@ -35,7 +35,7 @@ def test_pagerank_matches_python_replay(spark):
     und = [(1, 2), (2, 1), (1, 3), (3, 1), (2, 3), (3, 2),
            (3, 4), (4, 3), (4, 5), (5, 4)]
     e = spark.createDataFrame(und, "u long, v long")
-    got = {r["node"]: r["rank"] for r in pagerank(e, iters=8).collect()}
+    got = {r["node"]: r["rank"] for r in pagerank(e).collect()}
     assert got == _pagerank_py(und)
 
 
@@ -43,7 +43,7 @@ def test_pagerank_symmetry_and_hub_order(spark):
     # star: hub 0 ↔ leaves 1..4; hub must outrank the (equal) leaves
     und = [(0, i) for i in range(1, 5)] + [(i, 0) for i in range(1, 5)]
     e = spark.createDataFrame(und, "u long, v long")
-    r = {x["node"]: x["rank"] for x in pagerank(e, iters=8).collect()}
+    r = {x["node"]: x["rank"] for x in pagerank(e).collect()}
     assert len({r[i] for i in range(1, 5)}) == 1  # leaves identical
     assert r[0] > r[1]
     assert r == _pagerank_py(und)
@@ -57,7 +57,7 @@ def test_pagerank_dangling_mass_redistributed(spark):
     (VERDICT r2 'What's wrong' #2)."""
     edges = [(1, 2), (2, 3), (1, 3)]  # 3 is dangling
     e = spark.createDataFrame(edges, "u long, v long")
-    got = {r["node"]: r["rank"] for r in pagerank(e, iters=8).collect()}
+    got = {r["node"]: r["rank"] for r in pagerank(e).collect()}
     exp = _pagerank_py(edges)
     assert got == exp
     # conservation: with redistribution, total stays ~n*scale (each

@@ -369,7 +369,7 @@ def test_entity_triples_on_uncached_expression_lineage(spark):
     docs = synth.generate_documents(spark, n_docs=200, n_parts=4)
     segs = segment.segment_documents(docs, max_tokens=60)
     aliases = [a for a, *_ in synth.ALIASES]
-    men = mentions.detect_mentions(segs, aliases, text_col="seg_text")
+    men = mentions.detect_mentions(segs, aliases)
     linked = link.link_exact(men, synth.alias_dict_df(spark)).withColumn(
         "canonical_id", F.col("entity_id")
     )

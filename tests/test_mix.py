@@ -229,8 +229,8 @@ def test_incremental_dedup_probes_corpus_index(spark):
             (101, "fresh unique text with no counterpart in the corpus at all"),
         ],
     )
-    index = build_band_index(corpus, k=16, bands=4)
-    out = probe_band_index(new_batch, index, k=16, bands=4, threshold=0.5).collect()
+    index = build_band_index(corpus)
+    out = probe_band_index(new_batch, index, threshold=0.5).collect()
     assert [(r["new_id"], r["corpus_id"]) for r in out] == [(100, 1)]
     assert out[0]["jaccard"] >= 0.5
 
@@ -250,7 +250,7 @@ def test_duplicated_ngram_stats_cross_doc_only(spark):
         ],
         "doc_id int, text string",
     )
-    got = {r["doc_id"]: r.asDict() for r in duplicated_ngram_stats(docs, n=5).collect()}
+    got = {r["doc_id"]: r.asDict() for r in duplicated_ngram_stats(docs).collect()}
     assert got[1]["n_toks"] == 6 and got[1]["n_grams"] == 2
     assert got[1]["n_dup_grams"] == 1 and got[1]["covered_toks"] == 5
     assert got[2]["n_dup_grams"] == 1 and got[2]["covered_toks"] == 5
@@ -338,7 +338,7 @@ def test_incremental_duplicated_ngrams_probes_corpus_only(spark):
         "doc_id int, text string",
     )
     got = {r["doc_id"]: r.asDict()
-           for r in incremental_duplicated_ngrams(batch, corpus, n=5).collect()}
+           for r in incremental_duplicated_ngrams(batch, corpus).collect()}
     assert got[100]["n_dup_grams"] == 1 and got[100]["covered_toks"] == 5
     assert got[101]["n_dup_grams"] == 0 and got[102]["n_dup_grams"] == 0
     assert set(got) == {100, 101, 102}

@@ -404,6 +404,32 @@ def test_unterminated_hex_string_quarantines(spark):
     assert "unterminated hex string" in row["detail"]
 
 
+def test_font_entry_not_a_dict_is_unsupported():
+    """A page whose /Font resolves to an integer is damage the decoder
+    names (PdfUnsupportedError), not an AttributeError from ``.items``."""
+    import pytest
+
+    from kgc.pdf import PdfUnsupportedError, extract_pages
+
+    pdf = _classic_pdf(font=b"42").replace(
+        b"/Font << /F1 5 0 R >>", b"/Font 5 0 R")
+    with pytest.raises(PdfUnsupportedError, match="/Font"):
+        extract_pages(pdf)
+
+
+def test_page_tree_kids_cycle_is_unsupported():
+    """A page-tree node whose /Kids points back at its parent is refused
+    with PdfUnsupportedError instead of recursing until RecursionError."""
+    import pytest
+
+    from kgc.pdf import PdfUnsupportedError, extract_pages
+
+    pdf = _classic_pdf().replace(
+        b"/Type /Page /Parent 2 0 R", b"/Type /Pages /Kids [2 0 R] /Parent 2 0 R")
+    with pytest.raises(PdfUnsupportedError, match="cycle"):
+        extract_pages(pdf)
+
+
 def _lzw_encode(data: bytes) -> bytes:
     """Test-only PDF LZW encoder, written against the decoder's
     pdfminer-parity width schedule: the decoder widens AFTER its table

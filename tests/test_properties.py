@@ -1020,10 +1020,10 @@ _MEDIA_SEEDS = _media_seeds()
 
 
 @st.composite
-def _damaged_media(draw):
+def _damaged(draw, seeds):
     """A seed payload after 1-4 truncations, byte overwrites and
     splices, or random bytes behind one of the seeds' magic prefixes."""
-    seed = _MEDIA_SEEDS[draw(st.sampled_from(sorted(_MEDIA_SEEDS)))]
+    seed = seeds[draw(st.sampled_from(sorted(seeds)))]
     if draw(st.booleans()):
         return seed[:12] + draw(st.binary(max_size=80))
     b = bytearray(seed)
@@ -1044,7 +1044,7 @@ class TestMediaPoison:
     MediaDecodeError (a quarantine row in decode_media), never to any
     other exception that would fail the mapInPandas task."""
 
-    @given(st.one_of(_damaged_media(), st.binary(max_size=200)))
+    @given(st.one_of(_damaged(_MEDIA_SEEDS), st.binary(max_size=200)))
     @settings(max_examples=600, deadline=None, derandomize=True)
     def test_damaged_payload_decodes_or_quarantines(self, payload):
         from kgc.media import MediaDecodeError, decode_payload_py
@@ -1054,3 +1054,77 @@ class TestMediaPoison:
         except MediaDecodeError:
             return
         assert isinstance(out, dict)
+
+
+# ------------------------------------------------------- parser poison ---
+_MARKUP_SEEDS = [
+    "# Title\n\nalpha *beta* `gamma`\n\n- item\n- [link](http://x)\n\nSetext\n---\n",
+    "<html><body><h1>T</h1><p>one <b>two</b> &amp;</p><ul><li>x</li></ul>"
+    "<script>var a = '<p>';</script><!-- c --></body></html>",
+    "plain line\n\n  second line\r\nthird\tcol\x00\n",
+]
+
+
+@st.composite
+def _damaged_text(draw):
+    """A markup seed after 1-4 truncations, character overwrites and
+    splices."""
+    s = list(draw(st.sampled_from(_MARKUP_SEEDS)))
+    for _ in range(draw(st.integers(1, 4))):
+        i = draw(st.integers(0, len(s)))
+        op = draw(st.sampled_from(["truncate", "overwrite", "splice"]))
+        if op == "truncate":
+            del s[i:]
+        elif op == "overwrite" and i < len(s):
+            s[i] = draw(st.characters())
+        else:
+            s[i : i + draw(st.integers(0, 8))] = draw(st.text(max_size=8))
+    return "".join(s)
+
+
+def _pdf_seeds():
+    from test_parsers import _classic_pdf, _encrypted_pdf, _image_pdf
+
+    return {"classic": _classic_pdf(), "rc4": _encrypted_pdf(r=3),
+            "image": _image_pdf()}
+
+
+class TestParserPoison:
+    """The document parsers turn damaged input into spans or, for a PDF,
+    a PdfUnsupportedError (a ``pdf_unsupported`` quarantine row), never
+    into any other exception that would fail the parse task."""
+
+    @given(st.one_of(_damaged_text(), st.text(max_size=200)))
+    @settings(max_examples=400, deadline=None, derandomize=True)
+    def test_damaged_text_parses_to_spans(self, text):
+        from kgc.parsers import parse_html_py, parse_markdown_py, parse_text_py
+
+        for spans in (parse_text_py(text), parse_markdown_py(text),
+                      parse_html_py(text)[0]):
+            assert isinstance(spans, list)
+            assert all(isinstance(s["text"], str) for s in spans)
+
+    @given(st.one_of(_damaged(_pdf_seeds()), st.binary(max_size=200)))
+    @settings(max_examples=400, deadline=None, derandomize=True)
+    def test_damaged_pdf_parses_or_is_unsupported(self, payload):
+        import signal
+
+        from kgc.parsers import parse_pdf_py
+        from kgc.pdf import PdfUnsupportedError
+
+        class Hang(BaseException):
+            """Not an Exception: the content-stream loop swallows those."""
+
+        def timeout(signum, frame):
+            raise Hang("parse_pdf_py did not return within 3 s")
+
+        old = signal.signal(signal.SIGALRM, timeout)
+        signal.alarm(3)
+        try:
+            spans = parse_pdf_py(payload)
+        except PdfUnsupportedError:
+            return
+        finally:
+            signal.alarm(0)
+            signal.signal(signal.SIGALRM, old)
+        assert all(s["kind"] == "page" for s in spans)

@@ -28,7 +28,7 @@ def documents_dir(sf_dir, tmp_path_factory):
 
 
 def test_stream_event_rollup_matches_batch(spark, events_dir):
-    roll = streaming.stream_event_rollup(spark, events_dir, window="1 hour")
+    roll = streaming.stream_event_rollup(spark, events_dir)
     got = streaming.run_available_now(roll, "rollup_test", output_mode="complete")
     batch = (
         spark.read.parquet(events_dir)
@@ -95,7 +95,7 @@ def test_watermark_drops_late_events(spark, tmp_path):
         now - 40,
     )
     roll = streaming.stream_event_rollup(
-        spark, str(d), window="1 hour", watermark="2 hours", max_files_per_trigger=1
+        spark, str(d), max_files_per_trigger=1
     )
     got = streaming.run_available_now(roll, "late_drop_test", output_mode="append")
     rows = {(r["win_start"].hour, r["n"]) for r in got.collect()}
@@ -487,8 +487,8 @@ def test_stream_incremental_neardup_equals_batch(spark, tmp_path):
 
     expected = sorted(
         (r["new_id"], r["corpus_id"], r["jaccard"])
-        for r in probe_band_index(new, build_band_index(corpus, k=16, bands=4),
-                                  k=16, bands=4, threshold=0.3).collect()
+        for r in probe_band_index(new, build_band_index(corpus),
+                                  threshold=0.3).collect()
     )
     assert expected, "fixture must produce near-dup pairs"
 
@@ -499,7 +499,7 @@ def test_stream_incremental_neardup_equals_batch(spark, tmp_path):
     )
     got = streaming.stream_incremental_neardup(
         src, corpus, str(tmp_path / "neardup_out"),
-        str(tmp_path / "neardup_ckpt"), k=16, bands=4, threshold=0.3,
+        str(tmp_path / "neardup_ckpt"), threshold=0.3,
     )
     assert sorted(
         (r["new_id"], r["corpus_id"], r["jaccard"]) for r in got.collect()
@@ -521,7 +521,7 @@ def test_stream_incremental_neardup_empty_source(spark, tmp_path):
     )
     got = streaming.stream_incremental_neardup(
         src, corpus, str(tmp_path / "empty_out"),
-        str(tmp_path / "empty_ckpt"), k=16, bands=4, threshold=0.3,
+        str(tmp_path / "empty_ckpt"), threshold=0.3,
     )
     assert got.columns == ["new_id", "corpus_id", "jaccard"]
     assert got.count() == 0
@@ -552,7 +552,7 @@ def test_stream_incremental_neardup_restart_resume(spark, tmp_path):
             .parquet(str(src_dir))
         )
         return streaming.stream_incremental_neardup(
-            src, corpus, out, ckpt, k=16, bands=4, threshold=0.3,
+            src, corpus, out, ckpt, threshold=0.3,
         )
 
     batch_df([0, 1]).coalesce(1).write.mode("append").parquet(str(src_dir))
