@@ -2394,7 +2394,7 @@ def q_md_spans(spark, sf_dir):
     emitted span sequence against expectations derived in pure SQL —
     fence content skipped, tight items dropped, loose items and quote
     inners emitted as paragraphs (markdown.go:28-50 semantics)."""
-    from kgc.parsers import markdown_to_spans
+    from kgc.parsers import markup_to_spans
 
     id_s = F.col("doc_id").cast("string")
     f1, f2 = _doc_frag(1), _doc_frag(101)
@@ -2425,7 +2425,7 @@ def q_md_spans(spark, sf_dir):
         F.lit("- l2"),
     )
     parsed = _docs(spark, sf_dir).select(
-        "doc_id", markdown_to_spans(md).alias("spans")
+        "doc_id", markup_to_spans(md, F.lit("markdown")).alias("spans")
     )
     # explode_outer + isNotNull: plain explode after a pandas-UDF array
     # trips InferFiltersFromGenerate (UDF inlined into a JVM predicate).
@@ -2448,7 +2448,7 @@ def q_html_spans(spark, sf_dir):
     span sequence — per-tag direct-text concatenation ('x'+'y' around a
     nested span joins to 'xy'), children before parents (html.go:26-47)
     — against expectations derived in pure SQL."""
-    from kgc.parsers import html_to_spans
+    from kgc.parsers import markup_to_spans
 
     id_s = F.col("doc_id").cast("string")
     f1, f2 = _doc_frag(1), _doc_frag(101)
@@ -2463,7 +2463,9 @@ def q_html_spans(spark, sf_dir):
         f2,
         F.lit("</span>y</div></body></html>"),
     )
-    parsed = _docs(spark, sf_dir).select("doc_id", html_to_spans(html).alias("spans"))
+    parsed = _docs(spark, sf_dir).select(
+        "doc_id", markup_to_spans(html, F.lit("html")).alias("spans")
+    )
     return (
         parsed.select("doc_id", F.posexplode_outer("spans").alias("pos", "span"))
         .filter(F.col("span").isNotNull())

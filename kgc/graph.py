@@ -1596,11 +1596,44 @@ def _triple_patterns(group):
 
 # a pattern leg with this many constants (e.g. ``?p "@type" Person``:
 # one row per Person entity) is dimension-sized and gets an explicit
-# broadcast hint; the fact-sized legs ride the shuffle
+# broadcast hint.  The fact-sized legs get none, but Catalyst
+# broadcasts any leg whose size estimate is under
+# spark.sql.autoBroadcastJoinThreshold (every leg of a few-MB KG is),
+# so the joins run as broadcast hash joins in the partitions of _bgp's
+# stream leg: on a one-split table, in one task unless _bgp
+# hash-partitions that leg
 _BROADCAST_CONSTS = 2
 
 
-def _bgp(triples: DataFrame, paths: dict, patterns: list) -> DataFrame:
+def _splits(plan) -> float:
+    """How many partitions a physical plan yields, read off the plan
+    alone, so no Spark job runs (``df.rdd.getNumPartitions()`` runs the
+    shuffle stages of an adaptive or cached-adaptive plan): a scan's
+    splits are listed on the driver, a cached relation counts its
+    cached plan's, an adaptive plan its initial plan's, a reused
+    exchange (a non-adaptive plan's repeated subtree) the exchange it
+    reuses, a node with several inputs sums them (a union's count, an
+    upper bound otherwise), a coalesce caps them.  A plan that holds a
+    shuffle is already spread (inf)."""
+    name = plan.nodeName()
+    if name == "Exchange":
+        return float("inf")
+    if name == "AdaptiveSparkPlan":
+        return _splits(plan.initialPlan())
+    if name == "ReusedExchange":
+        return _splits(plan.child())
+    if name == "InMemoryTableScan":
+        return _splits(plan.relation().cachedPlan())
+    kids = plan.children()
+    if kids.isEmpty():
+        return plan.execute().getNumPartitions()
+    n = sum(_splits(kids.apply(i)) for i in range(kids.size()))
+    return min(n, plan.numPartitions()) if name == "Coalesce" else n
+
+
+def _bgp(
+    triples: DataFrame, paths: dict, patterns: list, hash_stream: bool
+) -> DataFrame:
     """The basic-graph-pattern leaf of the compiler: a variable-connected
     list of parse_sparql triple (or GRAPH quad) patterns → one column per
     variable.
@@ -1615,7 +1648,17 @@ def _bgp(triples: DataFrame, paths: dict, patterns: list) -> DataFrame:
     most-constant leg, then repeatedly take the first remaining leg
     (most constants first, ties in text order) that shares a bound
     variable — the classic BGP heuristic, and on a connected pattern
-    list every join has an equi-key."""
+    list every join has an equi-key.
+
+    The stream leg is the first leg in join order that is fact-sized
+    (fewer than _BROADCAST_CONSTS constants) and scans the triple
+    table.  With ``hash_stream`` (the table arrives in fewer partitions
+    than the session has cores, _solve) it is hash-repartitioned on its
+    first variable (the subject when that is a variable), with no
+    partition count, so the exchange follows
+    ``spark.sql.shuffle.partitions`` and AQE coalesces it.  The joins
+    broadcast into it then run on every core, and a DISTINCT or GROUP
+    BY over that variable needs no exchange of its own."""
     legs = []
     for pat in patterns:
         s, p, o = pat[:3]
@@ -1642,15 +1685,20 @@ def _bgp(triples: DataFrame, paths: dict, patterns: list) -> DataFrame:
         leg = leg.select(*cols)
         if n_consts >= _BROADCAST_CONSTS:
             leg = F.broadcast(leg)
-        legs.append((leg, set(seen), n_consts))
+        # a stream-leg candidate carries the variable it would hash on
+        fact = n_consts < _BROADCAST_CONSTS and p not in paths
+        key = next(iter(seen)) if fact else None
+        legs.append((leg, set(seen), n_consts, key))
     legs.sort(key=lambda leg: -leg[2])  # stable: ties keep text order
-    (out, bound, _), rest = legs[0], legs[1:]
-    while rest:
-        leg, vars_, _ = rest.pop(
-            next(i for i, (_, v, _) in enumerate(rest) if v & bound)
+    out, bound = None, set()
+    while legs:
+        leg, vars_, _, key = legs.pop(
+            next(i for i, (_, v, _, _) in enumerate(legs) if out is None or v & bound)
         )
-        out = out.join(leg, on=sorted(vars_ & bound))
-        bound = bound | vars_
+        if hash_stream and key:
+            leg, hash_stream = leg.repartition(key), False
+        out = leg if out is None else out.join(leg, on=sorted(vars_ & bound))
+        bound |= vars_
     return out
 
 
@@ -1755,7 +1803,11 @@ def _join(
 
 
 def _compile_group(
-    triples: DataFrame, paths: dict, group: list, where: str | None = None
+    triples: DataFrame,
+    paths: dict,
+    hash_stream: bool,
+    group: list,
+    where: str | None = None,
 ) -> tuple[DataFrame, set[str]]:
     """Compile one WHERE group (a parse_sparql element list) to
     (solution, nullable vars) by folding its elements in text order, as
@@ -1763,7 +1815,8 @@ def _compile_group(
     and subqueries, LeftJoin for OPTIONAL, Minus, Extend for BIND; the
     group's FILTER and EXISTS elements apply at its end.  Nested groups
     compile with this same function; ``where`` names one for the
-    filter-scope rule (None: a query's own WHERE).
+    filter-scope rule (None: a query's own WHERE).  ``hash_stream``
+    passes _solve's one-split decision to every _bgp leaf.
 
     Joins commute, so a run of inner-join elements that no OPTIONAL,
     MINUS or BIND interrupts compiles its triple patterns as one _bgp
@@ -1796,11 +1849,15 @@ def _compile_group(
             )
 
     def sub(g, name):
-        return _compile_group(triples, paths, g, name)
+        return _compile_group(triples, paths, hash_stream, g, name)
 
     def close_run():
         for pats in _connected(run):
-            fold(_bgp(triples, paths, pats), set(), what=f"pattern group {pats}")
+            fold(
+                _bgp(triples, paths, pats, hash_stream),
+                set(),
+                what=f"pattern group {pats}",
+            )
         for el in rest:
             if el[0] == "union":
                 parts = [sub(b, "a UNION branch") for b in el[1]]
@@ -1910,9 +1967,14 @@ def _solve(
     once per query, over every triple pattern the tree holds
     (subqueries included): GRAPH quad patterns expose the caller-named
     provenance column under the reserved name the quad legs read, and
-    every property path gets its leaf relation (_path_relations).  Like
-    parse_sparql, it raises ValueError on a tree nested too deeply for
-    the recursive compiler (every query form comes through here)."""
+    every property path gets its leaf relation (_path_relations).  It
+    also reads once, off the physical plan and without a Spark job,
+    whether the triple table arrives in fewer partitions than
+    ``sparkContext.defaultParallelism`` (a one-split parquet file, a
+    coalesced frame); if so, every _bgp leaf hash-partitions its stream
+    leg.  Like parse_sparql, it raises ValueError on a tree nested too
+    deeply for the recursive compiler (every query form comes through
+    here)."""
     pats = list(_triple_patterns(q["where"]))
     if any(len(pat) > 3 for pat in pats):
         if graph_col not in triples.columns:
@@ -1922,8 +1984,12 @@ def _solve(
             )
         triples = triples.withColumn(_GRAPH_COL, F.col(graph_col))
     paths = _path_relations(triples, pats)
+    hash_stream = (
+        _splits(triples._jdf.queryExecution().executedPlan())
+        < triples.sparkSession.sparkContext.defaultParallelism
+    )
     try:
-        return _compile_group(triples, paths, q["where"])
+        return _compile_group(triples, paths, hash_stream, q["where"])
     except RecursionError:
         raise ValueError("query nests too deeply to compile") from None
 

@@ -351,14 +351,22 @@ def parse_pdf_py(payload: bytes) -> list[dict]:
 
 
 # ------------------------------------------------------------ spark UDFs ---
-@F.pandas_udf(SPAN_TYPE)
-def markdown_to_spans(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: parse_markdown_py(t) if t is not None else [])
+_MARKUP_PARSERS = {
+    "markdown": parse_markdown_py,
+    "html": lambda t: parse_html_py(t)[0],
+}
 
 
 @F.pandas_udf(SPAN_TYPE)
-def html_to_spans(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: parse_html_py(t)[0] if t is not None else [])
+def markup_to_spans(texts: pd.Series, kinds: pd.Series) -> pd.Series:
+    """Markdown or HTML text → spans, by each row's file type ('markdown'
+    or 'html'); a row of any other type (or no text) gets no spans.  One
+    UDF for both formats, so a CASE WHEN over them plans one Python
+    evaluation per row, not one per format."""
+    return pd.Series([
+        _MARKUP_PARSERS[k](t) if t is not None and k in _MARKUP_PARSERS else []
+        for t, k in zip(texts, kinds)
+    ])
 
 
 #: sentinel span kind carrying a parse failure out of the Arrow batch —
@@ -417,8 +425,8 @@ def parse_documents(
     if source_col is None:
         return df.withColumn("spans", text_to_spans(text_col))
     ft = file_type(source_col)
-    spans = F.when(ft == "markdown", markdown_to_spans(F.col(text_col))).when(
-        ft == "html", html_to_spans(F.col(text_col))
+    spans = F.when(
+        ft.isin("markdown", "html"), markup_to_spans(F.col(text_col), ft)
     )
     if pdf_col is None:
         return df.withColumn("spans", spans.otherwise(text_to_spans(text_col)))

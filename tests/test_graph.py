@@ -2625,6 +2625,120 @@ def test_sparql_benchmark_shapes_plan_pin(spark):
         assert got == want, (shape, got, plan)
 
 
+def _exchanges(df):
+    """(hash keys, kind) of every hash Exchange in a frame's physical
+    plan (before execution), expression ids and partition counts cut."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sorted(
+        (re.sub(r"#\d+", "", keys), kind)
+        for keys, kind in re.findall(
+            r"Exchange hashpartitioning\((.*?), \d+\), (\w+)", plan
+        )
+    )
+
+
+def test_sparql_one_split_hash_partitions_stream_leg(spark, tmp_path):
+    """A triple table in fewer splits than the session has cores (a
+    coalesced frame, a one-file parquet KG) gets one REPARTITION_BY_COL
+    exchange on the stream leg, hashing its first variable.  When the
+    other legs broadcast into it (the parquet KG has size statistics; a
+    row-list frame has none, so its joins plan as sort-merge until AQE
+    sees the rows), the path shape's DISTINCT and the agg shape's
+    (?t, ?d) dedup plan no exchange of their own.  The 8-split _kg plans
+    no REPARTITION_BY_COL exchange, and every table gives the same
+    rows."""
+    from kgc.graph import sparql_aggregate, sparql_query
+
+    path = "SELECT DISTINCT ?d ?c WHERE { ?d mentions/a/subClassOf+ ?c }"
+    agg = """SELECT ?t (COUNT(DISTINCT ?d) AS ?nd) WHERE {
+        ?d mentions ?e . ?e "@type" ?t } GROUP BY ?t"""
+    kg = _kg(spark)
+    kg.coalesce(1).write.parquet(str(tmp_path / "kg"))
+    one_file = spark.read.parquet(str(tmp_path / "kg"))
+    repart = [("d", "REPARTITION_BY_COL")]
+
+    def run(t):
+        p, a = sparql_query(t, path), sparql_aggregate(t, agg)
+        planned = _exchanges(p), _exchanges(a)  # before AQE re-plans
+        rows = (
+            sorted(tuple(r) for r in p.collect()),
+            sorted(tuple(r) for r in a.collect()),
+        )
+        return *planned, rows
+
+    p_ex, a_ex, want = run(kg)
+    assert not [e for e in p_ex + a_ex if e[1] == "REPARTITION_BY_COL"]
+    p_ex, a_ex, rows = run(kg.coalesce(1))
+    assert rows == want
+    assert [e for e in p_ex if e[1] == "REPARTITION_BY_COL"] == repart
+    assert [e for e in a_ex if e[1] == "REPARTITION_BY_COL"] == repart
+    p_ex, a_ex, rows = run(one_file)
+    assert rows == want
+    assert p_ex == repart
+    assert a_ex == [*repart, ("t", "ENSURE_REQUIREMENTS")]
+
+
+def test_sparql_split_gate_runs_no_job(spark):
+    """Whether the triple table arrives in one split is read off its
+    physical plan: compiling a query over a shuffled (dropDuplicates)
+    table and over persisted ones submits no Spark job.  A shuffled
+    table counts as spread; a persisted coalesced one as one split."""
+    import uuid
+
+    from kgc.graph import sparql_query
+
+    text = 'SELECT DISTINCT ?d ?t WHERE { ?d mentions ?e . ?e "@type" ?t }'
+    kg = _kg(spark)
+    persisted = [kg.dropDuplicates().persist(), kg.coalesce(1).persist()]
+    for t in persisted:
+        t.count()
+    tables = [kg.dropDuplicates(["subj", "pred", "obj"]), *persisted]
+    sc = spark.sparkContext
+    group = f"sparql-gate-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "compile")
+    try:
+        sols = [sparql_query(t, text) for t in tables]
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert [
+        any(kind == "REPARTITION_BY_COL" for _, kind in _exchanges(s))
+        for s in sols
+    ] == [False, False, True]
+    want = sorted(tuple(r) for r in sparql_query(kg, text).collect())
+    assert all(sorted(tuple(r) for r in s.collect()) == want for s in sols)
+    for t in persisted:
+        t.unpersist()
+
+
+def test_sparql_split_gate_reads_reused_exchange(spark):
+    """Without adaptive execution a repeated subtree of the triple
+    table's plan is a ReusedExchange leaf, which cannot be executed on
+    its own when it reuses a broadcast: the split gate counts it as the
+    exchange it reuses.  A self-union of a one-split table joined to a
+    broadcast dimension compiles and answers as the rows it holds."""
+    from pyspark.sql import functions as F
+
+    from kgc.graph import sparql_query
+
+    kg = _kg(spark).coalesce(1)
+    keep = kg.select("pred").distinct().filter(F.col("pred") == "mentions")
+    half = kg.join(F.broadcast(keep), "pred").select("subj", "pred", "obj")
+    text = "SELECT ?d ?e WHERE { ?d mentions ?e }"
+    want = sorted(tuple(r) for r in sparql_query(half, text).collect())
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        doubled = half.union(half)
+        plan = doubled._jdf.queryExecution().executedPlan().toString()
+        assert "ReusedExchange" in plan
+        got = sorted(tuple(r) for r in sparql_query(doubled, text).collect())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert got == sorted(want + want)
+
+
 def test_sparql_hash_inside_literal_is_text(spark):
     """A "#" inside a quoted literal is part of the literal, not the
     start of a comment."""

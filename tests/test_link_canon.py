@@ -432,7 +432,7 @@ def test_pipeline_quarantine_and_release(spark):
     def parser_caches(df):
         plan = df._jdf.queryExecution().executedPlan()
         return [c for text, c in _python_evals(plan)
-                if "markdown_to_spans" in text or "html_to_spans" in text]
+                if "markup_to_spans" in text]
 
     assert stages["documents"].storageLevel.useMemory
     (own,) = parser_caches(stages["documents"])

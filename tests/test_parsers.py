@@ -92,6 +92,41 @@ class TestHTML:
         assert "html" in kinds and "body" in kinds and "head" in kinds
 
 
+def test_parse_documents_one_python_udf(spark):
+    """A mixed Markdown/HTML/text batch plans one Python UDF evaluation
+    per row: the parse node holds the one markup UDF, not one per
+    format, and each row still gets its own format's spans."""
+    from kgc.parsers import parse_documents
+
+    md, html = "# T\n\nbody", "<p>x <b>y</b></p>"
+    df = spark.createDataFrame(
+        [("1", "a.md", md), ("2", "b.html", html), ("3", "c.txt", "l1\nl2")],
+        "doc_id string, source string, text string",
+    )
+    out = parse_documents(df, source_col="source")
+
+    def evals(plan):
+        found = [plan] if plan.nodeName() == "ArrowEvalPython" else []
+        kids = plan.children()
+        for i in range(kids.size()):
+            found += evals(kids.apply(i))
+        return found
+
+    (node,) = evals(out._jdf.queryExecution().executedPlan())
+    assert node.udfs().size() == 1
+    assert node.udfs().apply(0).name() == "markup_to_spans"
+
+    def strip(spans):
+        return [(s["kind"], s["text"], s["offset"]) for s in spans]
+
+    got = {r.doc_id: strip(r.spans) for r in out.collect()}
+    assert got == {
+        "1": strip(parse_markdown_py(md)),
+        "2": strip(parse_html_py(html)[0]),
+        "3": strip(parse_text_py("l1\nl2")),
+    }
+
+
 class TestMarkdownBlocks:
     """Parity with the reference's goldmark walk (markdown.go:28-50) on
     the block types round 1 left uncovered: lists, blockquotes, fenced

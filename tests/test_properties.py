@@ -263,7 +263,9 @@ class TestSparqlDifferential:
     planner's selectivity reorder, left joins, UNION padding, the
     compatibility join over possibly-unbound shared variables, BIND
     over a not-yet-bound variable, and FILTER error-propagation
-    (unbound → drop)."""
+    (unbound → drop).  The triple table arrives as created or coalesced
+    to one split, so the pattern leaves' stream-leg hash partitioning
+    is compared too."""
 
     _SUBS = ["s0", "s1", "s2"]
     _PREDS = ["p0", "p1"]
@@ -543,6 +545,9 @@ class TestSparqlDifferential:
         )
         if not rows:
             df = df.filter("subj <> 'zz'")
+        if draw(st.booleans()):
+            # one split: each pattern group hash-partitions its stream leg
+            df = df.coalesce(1)
 
         def pat(p):
             # the naive side's "?v" strings as parse_sparql's term tuples
@@ -597,11 +602,12 @@ class TestSparqlDifferential:
 
 class TestPathDifferential:
     """Differential testing of the property-path expansion: every path
-    form evaluated by the engine (sparql_query text → _expand_property_
-    paths) AND by a naive closure/composition evaluator, compared as
-    solution MULTISETS (closure forms are distinct-pair per SPARQL ALP
-    semantics; bag forms — inverse/alternation/negation/sequences —
-    preserve input multiplicity)."""
+    form evaluated by the engine (sparql_query text → _path_relations)
+    AND by a naive closure/composition evaluator, compared as solution
+    MULTISETS (closure forms are distinct-pair per SPARQL ALP semantics;
+    bag forms — inverse/alternation/negation/sequences — preserve input
+    multiplicity), over a triple table as created or coalesced to one
+    split."""
 
     _SUBS = ["s0", "s1", "s2"]
     _PREDS = ["p0", "p1"]
@@ -691,6 +697,8 @@ class TestPathDifferential:
         )
         if not rows:
             df = df.filter("subj <> 'zz'")
+        if draw(st.booleans()):
+            df = df.coalesce(1)  # one split: the stream leg is repartitioned
         sol = sparql_query(
             df, f"SELECT * WHERE {{ {s_t} {path_txt} {o_t} }}"
         )
@@ -762,7 +770,8 @@ class TestAggregateDifferential:
     """Differential testing of sparql_aggregate: random rows, one
     grouped pattern, the full aggregate menu (incl. COUNT DISTINCT,
     sorted GROUP_CONCAT with separator, an expression aggregate, and
-    HAVING) vs a naive per-group evaluator."""
+    HAVING) vs a naive per-group evaluator, over a triple table as
+    created or coalesced to one split."""
 
     @given(
         st.lists(
@@ -774,9 +783,10 @@ class TestAggregateDifferential:
             min_size=0, max_size=12,
         ),
         st.booleans(),
+        st.booleans(),
     )
     @settings(max_examples=30, deadline=None)
-    def test_aggregate_engine_equals_naive(self, spark, rows, having):
+    def test_aggregate_engine_equals_naive(self, spark, rows, having, one_split):
         from kgc.graph import sparql_aggregate
 
         df = spark.createDataFrame(
@@ -785,6 +795,8 @@ class TestAggregateDifferential:
         )
         if not rows:
             df = df.filter("subj <> 'zz'")
+        if one_split:
+            df = df.coalesce(1)  # the grouped leg is hash-partitioned
         text = (
             "SELECT ?g (COUNT(?v) AS ?n) (COUNT(DISTINCT ?v) AS ?nd) "
             "(MIN(?v) AS ?mn) (MAX(?v) AS ?mx) "
